@@ -246,11 +246,23 @@ REGISTRY_ROWS = {
     "part": 2000, "orders": 15000, "lineitem": 60000, "events": 10000,
     "documents": 150, "embeddings": 250,
 }
+# The shape of the registry's test tables, as ``perfbench/shape.py``
+# measures it on the sf0.01 parquet the queries are tested on (README,
+# "Registry table shape"). Only the documents and embeddings row counts
+# above differ from sf0.01 (500 each there).
 _VOCAB = (
     "a agg batch big column customer data fast filter group hash join key "
     "line merge order part query row scan slow small sort spark stream "
     "table the value vector window"
-).split()
+).split()  # drawn uniformly
+DOC_WORDS = (10, 100)  # words per document, uniform over [lo, hi)
+DOC_DUP_EVERY = 20  # n // 20 documents become another document's text + " dup"
+DOC_LANGS = (("en", 0.4), ("de", 0.15), ("es", 0.15), ("fr", 0.15), ("zh", 0.15))
+DOC_SOURCES = 20  # source is src<doc_id % 20>
+EVENT_USERS_PER_1000 = 15  # distinct users per thousand events
+EVENT_VALUE_MEAN = 50.0  # event values are exponential, in cents, >= 0.01
+PART_ADJ = ("blue", "cold", "hot", "large", "new", "old", "red", "small")
+PART_NOUN = ("anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget")
 _DAY_US = 86_400_000_000
 
 
@@ -308,16 +320,14 @@ def write_registry_tables(data_dir: str, seed: int) -> int:
         "s_acctbal": money(-999.99, 9999.99, k),
     })
     k = n["part"]
-    adj = ["large", "hot", "blue", "old", "cold", "small", "red", "shiny"]
-    noun = ["ring", "bolt", "plate", "gear", "nut", "pipe", "valve", "spring"]
     tables["part"] = pa.table({
         "p_partkey": np.arange(k, dtype=np.int64),
-        "p_name": [f"{a} {b}" for a, b in zip(pick(adj, k), pick(noun, k))],
+        "p_name": [f"{a} {b}" for a, b in zip(pick(PART_ADJ, k), pick(PART_NOUN, k))],
         "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, k)],
         "p_type": pick(["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL",
                         "STANDARD"], k),
         "p_size": pa.array(rng.integers(1, 51, k), pa.int32()),
-        "p_retailprice": money(900.0, 999.9, k),
+        "p_retailprice": 900.0 + (np.arange(k) % 1000) / 10.0,
     })
     k = n["orders"]
     tables["orders"] = pa.table({
@@ -349,26 +359,27 @@ def write_registry_tables(data_dir: str, seed: int) -> int:
         "event_id": np.arange(k, dtype=np.int64),
         "ts": pa.array(np.sort(jan + rng.integers(0, 30 * _DAY_US, k)),
                        pa.timestamp("us")),
-        "user_id": rng.integers(0, max(1, k // 60), k),
+        "user_id": rng.integers(0, max(1, k * EVENT_USERS_PER_1000 // 1000), k),
         "event_type": pick(["click", "error", "purchase", "signup", "view"], k),
-        "value": money(0.0, 560.0, k),
+        "value": np.maximum(np.round(rng.exponential(EVENT_VALUE_MEAN, k), 2), 0.01),
         "props": [f'{{"k": {v}}}' for v in rng.integers(0, 100, k)],
     })
     k = n["documents"]
-    texts: list[str] = []
-    for i in range(k):
-        if i > 10 and rng.random() < 0.05:  # near-duplicate of an earlier doc
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        else:
-            texts.append(" ".join(pick(_VOCAB, int(rng.integers(8, 100)))))
+    texts = [" ".join(pick(_VOCAB, int(w))) for w in rng.integers(*DOC_WORDS, k)]
+    # in place, so a copy of a document that is itself replaced later
+    # keeps the old text, and two copies of one document are exact duplicates
+    for i in rng.choice(k, k // DOC_DUP_EVERY, replace=False):
+        texts[i] = texts[int(rng.integers(0, k))] + " dup"
+    langs, weights = zip(*DOC_LANGS)
     tables["documents"] = pa.table({
         "doc_id": np.arange(k, dtype=np.int64),
         "text": texts,
-        "lang": pick(["en", "en", "de", "es", "fr", "zh"], k),
-        "source": [f"src{s}" for s in rng.integers(0, 20, k)],
+        "lang": np.asarray(langs, dtype=object)[rng.choice(len(langs), k, p=weights)],
+        "source": [f"src{i % DOC_SOURCES}" for i in range(k)],
         "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
     })
     k = n["embeddings"]
+    # unit vectors in uniformly random directions, labels independent of them
     vec = rng.standard_normal((k, 64)).astype(np.float32)
     vec /= np.linalg.norm(vec, axis=1, keepdims=True)
     tables["embeddings"] = pa.table({

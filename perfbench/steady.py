@@ -2,7 +2,7 @@
 end-to-end metric, and compare two sets of runs against the bounds in
 BENCHMARK.json.
 
-    python3 perfbench/steady.py run --workload xml_flat_scan --runs 10 --out a.jsonl
+    python3 perfbench/steady.py run --workload xml_ingest --runs 10 --out a.jsonl
     python3 perfbench/steady.py summary a.jsonl
     python3 perfbench/steady.py compare a.jsonl b.jsonl
 
@@ -52,8 +52,8 @@ def report(path: str, b: dict) -> bool:
     for name, (q1, med, q3) in summarise(runs).items():
         spread = (q3 - q1) / med
         limit = b[name]["bound"]
-        flag = "" if name == "setup_s" or spread < limit / 3 else "  SPREAD ABOVE BOUND/3"
-        ok &= name == "setup_s" or spread <= limit
+        flag = "" if spread < limit / 3 else "  SPREAD ABOVE BOUND/3"
+        ok &= spread <= limit
         print(f"  {name:<14} median {med:12.6g}  q1 {q1:12.6g}  q3 {q3:12.6g}"
               f"  spread {spread:6.3f} (bound {limit}){flag}")
     return ok

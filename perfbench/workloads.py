@@ -11,11 +11,10 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-import numpy as np
-
 from perfbench import inputs
 
 FLAT_OPS = ("scan_groupby", "scan_filter", "scan_project")
+FILTER_COLUMNS = ("kind", "cat", "val")  # scan_filter's columns= projection
 NESTED_OPS = ("xsd_explode", "infer_agg", "avro_write", "avro_read")
 # ann_join_topk first: the run's first op pays the Python worker boot
 REGISTRY_PYTHON = (
@@ -43,40 +42,26 @@ NESTED_ORDERS_PER_FILE = 300
 @dataclass(frozen=True)
 class Spec:
     name: str
-    kinds: tuple[str, ...]  # the first pass's order; kinds[0] is the first op
-    # about how long one pass takes on a 4-core host; sizes the run to --seconds
-    nominal_pass_s: float
+    # a pass runs each op once, in this order; kinds[0] is the run's first
+    # op. The first pass meets every op's code cold, so the order is fixed:
+    # which op pays a first-in-process cost does not depend on the seed.
+    kinds: tuple[str, ...]
     scan_kinds: tuple[str, ...]  # ops whose time scan_mb_s divides by
+    # with 2, a second, warm pass repeats every op, and the later-op
+    # metrics come from it: an op's first run in a process pays one-time
+    # costs whose size varies from run to run far more than the op itself
+    passes: int
 
 
 WORKLOADS = {
     s.name: s
     for s in (
-        Spec("xml_ingest", FLAT_OPS + NESTED_OPS, 14.0,
-             FLAT_OPS + ("xsd_explode", "infer_agg")),
-        Spec("registry_mix", REGISTRY_PYTHON + REGISTRY_JVM, 22.0,
-             REGISTRY_PYTHON + REGISTRY_JVM),
+        Spec("xml_ingest", FLAT_OPS + NESTED_OPS,
+             FLAT_OPS + ("xsd_explode", "infer_agg"), 2),
+        Spec("registry_mix", REGISTRY_PYTHON + REGISTRY_JVM,
+             REGISTRY_PYTHON + REGISTRY_JVM, 1),
     )
 }
-
-
-def schedule(spec: Spec, seed: int, seconds: float) -> list[str]:
-    """One pass in the declared order, then more passes in seeded orders;
-    every pass runs each op kind once. The first pass meets every kind
-    cold, so its order is fixed: which op pays a first-in-process cost
-    does not depend on the seed. An Avro read always follows the write it
-    reads back. The pass count is fixed by ``seconds``, so a slower
-    program takes longer rather than doing less work."""
-    passes = max(1, round(seconds / spec.nominal_pass_s))
-    rng = np.random.default_rng([seed, 9])
-    out = list(spec.kinds)
-    for _ in range(passes - 1):
-        order = [spec.kinds[i] for i in rng.permutation(len(spec.kinds))]
-        if "avro_read" in order:
-            i, j = sorted((order.index("avro_write"), order.index("avro_read")))
-            order[i], order[j] = "avro_write", "avro_read"
-        out += order
-    return out
 
 
 # ----------------------------------------------------------- launcher side
@@ -115,6 +100,16 @@ def prepare(name: str, run_dir: str, seed: int) -> dict:
 
 
 # ----------------------------------------------------- measured-process side
+
+
+def flat_filter():
+    """The filters Spark pushes to the source for ``scan_filter``,
+    the ``IsNotNull`` constraints it infers included."""
+    from pyspark.sql.datasource import EqualTo, IsNotNull, LessThan
+
+    return [IsNotNull(("val",)), IsNotNull(("kind",)),
+            LessThan(("val",), inputs.FLAT_FILTER_VAL),
+            EqualTo(("kind",), inputs.FLAT_FILTER_KIND)]
 
 
 def flat_schema():
@@ -163,7 +158,7 @@ def make_ops(name: str, spark, ctx: dict, tr) -> dict:
                 F.sum(F.round(F.col("price") * 100).cast("long")).alias("sum_cents"),
                 F.sum(F.length("note")).alias("sum_note_len"))),
             "scan_filter": lambda: collect(
-                scan(columns=["kind", "cat", "val"])
+                scan(columns=list(FILTER_COLUMNS))
                 .filter((F.col("val") < inputs.FLAT_FILTER_VAL)
                         & (F.col("kind") == inputs.FLAT_FILTER_KIND))
                 .groupBy("cat").agg(F.count(F.lit(1)).alias("n_kept"),
