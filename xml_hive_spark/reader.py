@@ -52,6 +52,7 @@ import logging
 import os
 import re
 import xml.etree.ElementTree as ET
+from collections import Counter
 from datetime import date, datetime
 from decimal import Decimal
 from pathlib import Path
@@ -812,7 +813,9 @@ def parse_record_safe(record_bytes: bytes, struct: StructType, mode: str):
 def plan_splits(
     paths: list[str], partition_bytes: int = DEFAULT_PARTITION_BYTES
 ) -> list[tuple[str, int, int]]:
-    """(file, start, end) byte-range splits — one Spark task each.
+    """(file, start, end) byte-range splits. ``read_xml`` gives each split
+    of a multi-split file its own task and packs whole-file splits into
+    shared tasks (:func:`pack_small_files`).
 
     At 100 TB this is what keeps parallelism = data size / partition_bytes
     rather than = file count (the reference is one task per HDFS split but
@@ -824,7 +827,7 @@ def plan_splits(
             continue
         if p.endswith(_COMPRESSED_SUFFIXES):
             # non-splittable codec → whole-member split, scanner runs
-            # to EOF (parallelism = file count for compressed inputs)
+            # to EOF
             splits.append((p, 0, GZIP_SPLIT_END))
             continue
         n = max(1, (size + partition_bytes - 1) // partition_bytes)
@@ -988,6 +991,38 @@ def plan_annotated_splits(
         if need:  # only multi-split plans are worth persisting
             _plan_disk_store(cache_key, out)
     return out
+
+
+def pack_small_files(spark: SparkSession, items: list, partition_bytes: int) -> list[list]:
+    """Group ``items`` — ``(item, nbytes, whole_file)`` triples in read
+    order — into read tasks by Spark's small-file rule
+    (``FilePartition.getFilePartitions``): each file costs its size plus
+    ``spark.sql.files.openCostInBytes``, and runs of whole files are
+    packed next-fit up to ``min(partition_bytes, max(open_cost,
+    total / defaultParallelism))``. Items that are not whole files
+    (byte-range splits) stay one per task. Order is kept, so the rows of
+    the packed read come out in the unpacked order."""
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    total = sum(n + open_cost for _, n, _ in items)
+    max_bytes = min(
+        partition_bytes,
+        max(open_cost, total // spark.sparkContext.defaultParallelism),
+    )
+    groups: list[list] = []
+    run: list = []
+    run_bytes = 0
+    for item, nbytes, whole_file in items:
+        if run and (not whole_file or run_bytes + nbytes > max_bytes):
+            groups.append(run)
+            run, run_bytes = [], 0
+        if not whole_file:
+            groups.append([item])
+            continue
+        run.append(item)
+        run_bytes += nbytes + open_cost
+    if run:
+        groups.append(run)
+    return groups
 
 
 def strip_file_uri(s: str) -> str:
@@ -1168,12 +1203,18 @@ def read_xml(
             register = None
         if register is not None:
             register(spark)
+            splits_per_file = Counter(s[0] for s in splits)
+            tasks = pack_small_files(spark, [
+                (s, os.path.getsize(s[0]) if s[2] == GZIP_SPLIT_END else s[2] - s[1],
+                 splits_per_file[s[0]] == 1)
+                for s in splits
+            ], partition_bytes)
             return (
                 spark.read.format("xmlhive")
                 .schema(schema)
                 .option("rowTag", row_tag)
                 .option("mode", mode)
-                .option("splits", json.dumps(splits))
+                .option("splits", json.dumps(tasks))
                 .load()
             )
 

@@ -1,10 +1,11 @@
 """SparkSession factory with scale-oriented defaults.
 
-Defaults chosen for the driver environment (local[32], 128 GiB) but the
-same knobs are what you'd set on a 1000-executor cluster: AQE on (runtime
-re-planning, skew-join handling, partition coalescing), Arrow for any
-Python↔JVM batch transfer, UTC session time so timestamp semantics don't
-depend on cluster locale.
+Runs at ``local[<CPUs this process may use>]`` unless ``cpus`` or
+``SPARK_GRAFT_CPUS`` says otherwise. The other knobs are what you'd set
+on a 1000-executor cluster: AQE on (runtime re-planning, skew-join
+handling, partition coalescing), Arrow for any Python↔JVM batch
+transfer, UTC session time so timestamp semantics don't depend on
+cluster locale.
 """
 
 from __future__ import annotations
@@ -42,7 +43,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+        cpus = int(env_cpus) if env_cpus else len(os.sched_getaffinity(0))
     if shuffle_partitions is None:
         # local mode: one shuffle partition per core; on a real cluster this
         # would be ~2-3x total cores, with AQE coalescing small partitions.

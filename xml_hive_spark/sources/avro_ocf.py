@@ -491,14 +491,19 @@ def write_avro_ocf(
 
 
 def read_avro_ocf(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """Distributed Avro source: one task per file."""
+    """Distributed Avro source: small part files are packed into tasks by
+    the reader's small-file rule, read in file order."""
     files = sorted(
         os.path.join(path, f) for f in os.listdir(path) if f.endswith(".avro")
     ) if os.path.isdir(path) else [path]
+    from xml_hive_spark.reader import DEFAULT_PARTITION_BYTES, pack_small_files
     from xml_hive_spark.sources.xml_datasource import ship_package
 
     ship_package(spark)
-    rdd = spark.sparkContext.parallelize(files, max(1, len(files))).flatMap(
-        lambda p: read_ocf_file(p, schema)
+    groups = pack_small_files(
+        spark, [(f, os.path.getsize(f), True) for f in files], DEFAULT_PARTITION_BYTES
+    )
+    rdd = spark.sparkContext.parallelize(groups, max(1, len(groups))).flatMap(
+        lambda group: (rec for p in group for rec in read_ocf_file(p, schema))
     )
     return spark.createDataFrame(rdd, schema)

@@ -47,13 +47,12 @@ from xml_hive_spark.reader import (
 
 @dataclass
 class XmlInputPartition(InputPartition):
-    path: str
-    start: int
-    end: int
-    # incoming lexer state + row-tag depth from the two-phase split
-    # reconciliation (reader.py phase A/B); (TEXT, 0) at a record boundary
-    state: str = "TEXT"
-    depth: int = 0
+    # annotated splits (path, start, end, state, depth), read in order:
+    # one byte-range split, or a run of small whole files packed into one
+    # task. (state, depth) is the split's incoming lexer state and
+    # row-tag depth from the two-phase reconciliation (reader.py phase
+    # A/B); (TEXT, 0) at a record boundary
+    splits: tuple
 
 
 def _opt(options, *names, default=None):
@@ -122,10 +121,17 @@ class XmlHiveReader(DataSourceReader):
         self._row_tag = _opt(options, "rowTag", "rowtag")
         if not self._row_tag:
             raise ValueError("xmlhive: rowTag option is required")
-        # pre-annotated splits from read_xml (phase A ran as a Spark job)
+        # pre-annotated splits from read_xml (phase A ran as a Spark job):
+        # one entry per read task, either a list of annotated splits (a
+        # packed run of small files) or a bare annotated split
         raw_splits = _opt(options, "splits")
-        self._splits = json.loads(raw_splits) if raw_splits else None
-        if self._splits is None:
+        self._tasks = None
+        if raw_splits:
+            self._tasks = [
+                tuple(map(tuple, t)) if isinstance(t[0], list) else (tuple(t),)
+                for t in json.loads(raw_splits)
+            ]
+        else:
             raw_paths = _opt(options, "paths") or _opt(options, "path")
             if not raw_paths:
                 raise ValueError("xmlhive: no input path given")
@@ -174,24 +180,22 @@ class XmlHiveReader(DataSourceReader):
         return unsupported
 
     def partitions(self):
-        if self._splits is not None:
-            splits = self._splits
-        else:
+        tasks = self._tasks
+        if tasks is None:
             # bare .format("xmlhive") use: phase A runs driver-side (the
-            # scale path is read_xml, which distributes it as a Spark job)
-            splits = plan_annotated_splits(
+            # scale path is read_xml, which distributes it as a Spark job
+            # and packs small files)
+            tasks = [(s,) for s in plan_annotated_splits(
                 self._paths, self._row_tag, self._partition_bytes
-            )
-        parts = [XmlInputPartition(*s) for s in splits]
+            )]
         # Spark requires at least one partition (all-empty inputs would
         # otherwise surface as read(None) on the executor)
-        return parts or [XmlInputPartition("", 0, 0)]
+        return [XmlInputPartition(t) for t in tasks] or [XmlInputPartition(())]
 
     def read(self, partition: XmlInputPartition):
-        if partition is None or partition.end <= partition.start:
+        splits = [s for s in partition.splits if s[2] > s[1]]
+        if not splits:
             return
-        split = (partition.path, partition.start, partition.end,
-                 partition.state, partition.depth)
         # flat scalar schemas take the columnar regex fast path and ship
         # Arrow RecordBatches straight through the DataSource worker;
         # nested schemas yield tuples (worker converts per value)
@@ -203,25 +207,26 @@ class XmlHiveReader(DataSourceReader):
 
         keep = compile_conjunction(self._pushed)
         asm = FlatAssembler.try_create(self._schema, self._mode)
-        if asm is not None:
-            # fused scan: template matched against the split buffer in
-            # place — no per-record slice/fullmatch on uniform runs.
-            # Pushed filters ride the columnar kernel as one vectorized
-            # Kleene mask per batch when every filter arrow-compiles.
-            arrow_keep = (
-                compile_conjunction_arrow(self._pushed_raw, self._schema)
-                if keep is not None else None
-            )
-            yield from asm.fused_split_batches(
-                split, self._row_tag, predicate=keep,
-                arrow_predicate=arrow_keep,
-            )
-        elif keep is None:
-            yield from _read_split(split, self._row_tag, self._schema, self._mode)
-        else:
-            for row in _read_split(split, self._row_tag, self._schema, self._mode):
-                if keep(row):
-                    yield row
+        # fused scan: template matched against the split buffer in
+        # place — no per-record slice/fullmatch on uniform runs. Pushed
+        # filters ride the columnar kernel as one vectorized Kleene mask
+        # per batch when every filter arrow-compiles.
+        arrow_keep = (
+            compile_conjunction_arrow(self._pushed_raw, self._schema)
+            if asm is not None and keep is not None else None
+        )
+        for split in splits:
+            if asm is not None:
+                yield from asm.fused_split_batches(
+                    split, self._row_tag, predicate=keep,
+                    arrow_predicate=arrow_keep,
+                )
+            elif keep is None:
+                yield from _read_split(split, self._row_tag, self._schema, self._mode)
+            else:
+                for row in _read_split(split, self._row_tag, self._schema, self._mode):
+                    if keep(row):
+                        yield row
 
 
 _REGISTERED_SESSIONS: set[int] = set()
@@ -233,18 +238,31 @@ def ship_package(spark) -> None:
     the driver process's cwd/sys.path: the DataSource class is pickled by
     reference, so the data-source worker must be able to import the
     package. ``addPyFile`` puts the zipped package on every worker's
-    path (idempotent per session)."""
+    path (idempotent per session). The zip is named by a hash of the
+    package sources and published with an atomic rename, so concurrent
+    processes running different checkouts never ship each other's code
+    or a half-written zip."""
     global _PKG_ZIP
+    import hashlib
+    import os
     import tempfile
     import zipfile
     from pathlib import Path
 
     if _PKG_ZIP is None:
         pkg_root = Path(__file__).resolve().parent.parent
-        zpath = Path(tempfile.gettempdir()) / "xml_hive_spark_pkg.zip"
-        with zipfile.ZipFile(zpath, "w") as z:
-            for p in sorted(pkg_root.rglob("*.py")):
-                z.write(p, "xml_hive_spark/" + str(p.relative_to(pkg_root)))
+        sources = [(p, "xml_hive_spark/" + str(p.relative_to(pkg_root)))
+                   for p in sorted(pkg_root.rglob("*.py"))]
+        digest = hashlib.sha256()
+        for p, name in sources:
+            digest.update(name.encode() + b"\0" + p.read_bytes() + b"\0")
+        zpath = Path(tempfile.gettempdir()) / (
+            f"xml_hive_spark_pkg_{digest.hexdigest()[:16]}.zip")
+        tmp = zpath.with_name(f"{zpath.name}.tmp{os.getpid()}")
+        with zipfile.ZipFile(tmp, "w") as z:
+            for p, name in sources:
+                z.write(p, name)
+        os.replace(tmp, zpath)
         _PKG_ZIP = str(zpath)
     try:
         spark.sparkContext.addPyFile(_PKG_ZIP)

@@ -35,19 +35,26 @@ def write_xml(
     )
 
 
-def avro_available(spark) -> bool:
-    """The Avro source is an external Spark module (spark-avro jar);
-    absent from this container's distribution. Probe by resolving the
-    format on an empty write plan (cheap, no data movement)."""
-    from xml_hive_spark.session import scratch_dir
+_AVRO_AVAILABLE: dict[str, bool] = {}
 
-    try:
-        spark.createDataFrame([], "a int").write.format("avro").mode(
-            "overwrite"
-        ).save(scratch_dir("avro-probe-") + "/p")
-        return True
-    except Exception:
-        return False
+
+def avro_available(spark) -> bool:
+    """The Avro source is an external Spark module (spark-avro jar),
+    absent from plain pyspark distributions. Probe by resolving the
+    format on an empty write plan (no data movement), once per Spark
+    application: its classpath does not change while it runs."""
+    app = spark.sparkContext.applicationId
+    if app not in _AVRO_AVAILABLE:
+        from xml_hive_spark.session import scratch_dir
+
+        try:
+            spark.createDataFrame([], "a int").write.format("avro").mode(
+                "overwrite"
+            ).save(scratch_dir("avro-probe-") + "/p")
+            _AVRO_AVAILABLE[app] = True
+        except Exception:
+            _AVRO_AVAILABLE[app] = False
+    return _AVRO_AVAILABLE[app]
 
 
 def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
