@@ -1,6 +1,7 @@
 """Round-14 optimization pins: each test freezes an equivalence or plan
 property a specific r14 change relies on, so a regression that re-breaks
 the optimization fails loudly rather than silently losing the win."""
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -67,15 +68,16 @@ def test_curation_packed_encoding_domain_guards_raise(spark, sf_dir):
     assert got == {(1, "zh-日", 5), (2, "pt-BR56", 7)}
 
 
-def test_ann_sideload_kernel_matches_join_kernel(spark, sf_dir):
-    """r14 change 2: the side-loaded ANN scoring kernel (ids-only Arrow
-    crossing + per-task parquet vector load) must be BIT-identical to
-    the join-attached kernel on the full bench corpus — both paths stay
-    live (the guard falls back to the join beyond _SIDELOAD_CAP), so
-    equivalence is pinned value-for-value."""
-    from pyspark.sql import functions as F
-
-    from xml_hive_spark.operators import payload_side, table_rows
+@pytest.mark.parametrize(
+    "reducer", [{"threshold": 0.25}, {"k": 5}], ids=["threshold", "topk"]
+)
+def test_cosine_kernel_sources_bit_identical(spark, sf_dir, reducer):
+    """Each reducer of the cosine pair kernel must give BIT-identical
+    rows under both vector sources (side-load: ids-only Arrow crossing +
+    per-task parquet vector load; attach: vectors joined onto every
+    pair) on the full bench corpus. Both sources stay live: attach runs
+    beyond _SIDELOAD_CAP and for in-memory inputs."""
+    from xml_hive_spark.operators import table_rows
     from xml_hive_spark.operators import similarity as S
 
     emb = t(spark, sf_dir, "embeddings")
@@ -94,29 +96,24 @@ def test_ann_sideload_kernel_matches_join_kernel(spark, sf_dir):
         .filter(F.col("qid") < F.col("nid"))
         .select("qid", "nid").distinct()
     )
-    vecs = payload_side(emb.select("vec_id", "embedding"), n * 600)
-    joined = uniq.join(
-        vecs.select(F.col("vec_id").alias("qid"),
-                    F.col("embedding").alias("qe")), "qid"
-    ).join(
-        vecs.select(F.col("vec_id").alias("nid"),
-                    F.col("embedding").alias("ne")), "nid"
+    attach = S.score_candidates(
+        uniq, emb.select("vec_id", "embedding"), n, None, **reducer
     )
-    old = S.cosine_partial_topk(joined, 5, symmetric=True)
-    new = S.cosine_partial_topk_sideload(
-        uniq, 5, f"{sf_dir}/embeddings.parquet", symmetric=True
+    side = S.cosine_pair_kernel(
+        uniq, vec_path=f"{sf_dir}/embeddings.parquet", **reducer
     )
+
     # partial top-k is partition-dependent; compare after the same
-    # deterministic global cut both callers apply
+    # deterministic global cut ann_join_topk applies
     def cut(df):
-        from pyspark.sql import Window
-        w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), "nid")
+        if "k" not in reducer:
+            return df
+        w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "nid")
         return (df.withColumn("rank", F.row_number().over(w))
                 .filter(F.col("rank") <= 5)
-                .select("qid", "nid", F.round("adc", 4), "rank"))
-    assert sorted(map(tuple, cut(old).collect())) == sorted(
-        map(tuple, cut(new).collect())
-    )
+                .select("qid", "nid", F.round("cos_sim", 4), "rank"))
+    got = sorted(map(tuple, cut(side).collect()))
+    assert got and got == sorted(map(tuple, cut(attach).collect()))
     sigs.unpersist()
 
 
@@ -128,25 +125,6 @@ def test_ann_join_ships_ids_only_into_arrow(spark, sf_dir):
     i = plan.index("MapInArrow")
     line = plan[i:].splitlines()[0]
     assert "qe" not in line and "ne" not in line and "embedding" not in line, line
-
-
-def test_embedding_cosine_sideload_matches_attach(spark, sf_dir):
-    """r14 change 3: dedup_embedding_cosine's side-loaded verify must be
-    value-identical to the attach-join formulation (vec_path=None keeps
-    the old path live for synthetic inputs and the over-cap regime)."""
-    from xml_hive_spark.operators import table_rows
-    from xml_hive_spark.operators.similarity import embedding_cosine_pairs
-
-    emb = t(spark, sf_dir, "embeddings")
-    n = table_rows(spark, sf_dir, "embeddings")
-    old = embedding_cosine_pairs(emb, "vec_id", "embedding", 0.25, n=n)
-    new = embedding_cosine_pairs(
-        emb, "vec_id", "embedding", 0.25, n=n,
-        vec_path=f"{sf_dir}/embeddings.parquet",
-    )
-    assert sorted(map(tuple, old.collect())) == sorted(
-        map(tuple, new.collect())
-    )
 
 
 def test_embedding_cosine_sideload_slims_signature_cache(spark, sf_dir):

@@ -14,7 +14,6 @@ from xml_hive_spark.reader import (
     parse_record,
     plan_splits,
     read_xml,
-    read_xml_rdd,
 )
 from xml_hive_spark.xsd import xsd_to_struct
 
@@ -138,19 +137,6 @@ class TestSparkReader:
             ("Streaming", 42.0, 1),
             ("Systems", 24.88, 2),
         ]
-
-    def test_rdd_fallback_matches(self, spark, fixtures_dir):
-        st = xsd_to_struct(fixtures_dir / "books" / "schema.xsd", "bookType")
-        a = read_xml(
-            spark, str(fixtures_dir / "books" / "data.xml"), "book", schema=st
-        )
-        b = read_xml_rdd(
-            spark, str(fixtures_dir / "books" / "data.xml"), "book", st
-        )
-        key = lambda t: repr(t)  # noqa: E731 — rows contain None
-        assert sorted(map(tuple, a.collect()), key=key) == sorted(
-            map(tuple, b.collect()), key=key
-        )
 
     def test_split_safety_large_file(self, spark, tmp_path):
         """Many tiny partitions over one file: every record exactly once —

@@ -3,6 +3,8 @@ and LSH recall measured against the brute-force baseline on real data."""
 
 from __future__ import annotations
 
+import pytest
+
 from xml_hive_spark.operators import all_queries
 
 
@@ -233,6 +235,65 @@ class TestEmbeddingDedupLSH:
         # dense regime on the same plan: output superlinear (≈ quadratic;
         # cross-copy noise cosines exceed 0.25 at ~2σ rate)
         assert counts["dense3"] > 5 * counts["dense1"]
+
+
+class TestCosinePairKernel:
+    """Bad vector input to the shared cosine pair kernel must raise and
+    name the problem, under both reducers, never score a pair against
+    the wrong vector."""
+
+    REDUCERS = pytest.mark.parametrize(
+        "reducer", [{"threshold": -1.0}, {"k": 5}], ids=["threshold", "topk"]
+    )
+
+    @staticmethod
+    def _vec_table(tmp_path, ids):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        vecs = np.random.default_rng(3).standard_normal((len(ids), 64))
+        path = str(tmp_path / "vecs.parquet")
+        pq.write_table(pa.table({
+            "vec_id": pa.array(ids, pa.int64()),
+            "embedding": pa.array([v.tolist() for v in vecs],
+                                  pa.list_(pa.float32())),
+        }), path)
+        return path
+
+    @REDUCERS
+    def test_sideload_missing_id_raises(self, spark, tmp_path, reducer):
+        from xml_hive_spark.operators.similarity import cosine_pair_kernel
+
+        path = self._vec_table(tmp_path, [0, 2, 4])
+        pairs = spark.createDataFrame([(0, 1), (2, 4)], "a long, b long")
+        with pytest.raises(Exception, match="no vector for id 1"):
+            cosine_pair_kernel(pairs.coalesce(1), vec_path=path,
+                               **reducer).collect()
+
+    @REDUCERS
+    def test_sideload_duplicate_vec_id_raises(self, spark, tmp_path, reducer):
+        from xml_hive_spark.operators.similarity import cosine_pair_kernel
+
+        path = self._vec_table(tmp_path, [0, 1, 1, 2])
+        pairs = spark.createDataFrame([(0, 1), (0, 2)], "a long, b long")
+        with pytest.raises(Exception, match="duplicate vec_id 1"):
+            cosine_pair_kernel(pairs.coalesce(1), vec_path=path,
+                               **reducer).collect()
+
+    @REDUCERS
+    def test_attach_ragged_batch_raises(self, spark, reducer):
+        """63 + 65 values sum to two 64-rows: the batch must raise, not
+        reshape values across the row boundary."""
+        from xml_hive_spark.operators.similarity import cosine_pair_kernel
+
+        rows = [(0, 1, [0.5] * 63, [0.25] * 64),
+                (2, 3, [0.5] * 65, [0.25] * 64)]
+        pairs = spark.createDataFrame(
+            rows, "a long, b long, va array<float>, vb array<float>"
+        ).coalesce(1)
+        with pytest.raises(Exception, match="non-null and 64 long"):
+            cosine_pair_kernel(pairs, **reducer).collect()
 
 
 class TestPQ:

@@ -424,7 +424,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     entries, and the verify cosine is a ratio of exact integer
     aggregates — every stage replays verbatim in SQL, so the driver
     hash-checks candidate generation AND the verify (see
-    banded_signatures / cosine_threshold_pairs).
+    banded_signatures / cosine_pair_kernel).
 
     Round-8 reshape (measured 6.38 → 2.32 s at sf0.1, identical rows):
     the candidate phase moves IDS ONLY — the earlier version carried
@@ -435,7 +435,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     is persisted (double-sided self-join would otherwise run the
     signature UDF once per side — the signature-store pattern), and the
     exact-cosine verify is one numpy einsum per Arrow batch
-    (:func:`cosine_threshold_pairs`) instead of a ~200-step interpreted
+    (:func:`cosine_pair_kernel`) instead of a ~200-step interpreted
     JVM fold per pair.
 
     Skewed buckets (near-constant corpora) can salt the bucket id with a
@@ -481,183 +481,182 @@ def embedding_cosine_pairs(
     ``n``: caller-supplied corpus count (r13: the registry entry passes
     the parquet footer count — no scheduled job); None → count().
 
-    ``vec_path`` (r14): the corpus parquet path, REQUIRED to be the
-    exact source of ``emb`` with (vec_id, embedding) columns (only the
-    registry entry passes it). While the vector table provably fits a
-    per-worker load, the verify ships (id_a, id_b) only (~16 B/row vs
-    ~528 B/row with both vectors attached — at θ = 0.25 the candidate
-    set is quadratic-output-bound, the single largest Arrow crossing
-    in the registry) and each task side-loads the vectors once
-    (:func:`cosine_partial_topk_sideload` discipline); the persisted
-    signature store also drops ``vec`` (~10× smaller, the
-    ann_join_topk r13 slimming). Beyond the cap, or for synthetic
-    inputs (vec_path=None), the attach-join shape is unchanged."""
+    ``vec_path``: the corpus parquet path, which must be the exact
+    source of ``emb`` with (vec_id, embedding) columns (only the
+    registry entry passes it); it lets :func:`score_candidates` side-load
+    the vectors instead of attaching them to every candidate pair."""
     if n is None:
-        n = emb.count()  # sizes the attach-side broadcast guard
-    import os as _os
-
-    sideload = (
-        vec_path is not None
-        and n * 600 <= _SIDELOAD_CAP
-        and _os.path.exists(vec_path)
-        and (id_col, vec_col) == ("vec_id", "embedding")
-    )
-    sigs = banded_signatures(emb, id_col, vec_col,
-                             bands=bands, rows_per_band=rows_per_band)
-    if sideload:
-        sigs = sigs.select("id", "sig")  # verify never reads vec
-    sigs = sigs.persist()
+        n = emb.count()  # sizes the vector source
+    sigs = banded_signatures(emb, id_col, vec_col, bands=bands,
+                             rows_per_band=rows_per_band) \
+        .select("id", "sig").persist()
     cand = sigs.select("id", F.posexplode("sig").alias("band", "bucket"))
     a = cand.select("band", "bucket", F.col("id").alias("id_a"))
     b = cand.select("band", "bucket", F.col("id").alias("id_b"))
     pairs = a.join(b, ["band", "bucket"]).filter(F.col("id_a") < F.col("id_b"))
     uniq = pairs.select("id_a", "id_b").distinct()
-    if sideload:
-        return cosine_threshold_pairs_sideload(uniq, threshold, vec_path)
-    # ~600 B/row vector payload: broadcast only while provably small
-    vecs = payload_side(sigs.select("id", "vec"), n * 600)
-    attached = (
-        uniq.join(
-            vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("ea")),
-            "id_a",
-        )
-        .join(
-            vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("eb")),
-            "id_b",
-        )
-        .select("id_a", "id_b", "ea", "eb")
-    )
-    return cosine_threshold_pairs(attached, threshold)
+    return score_candidates(uniq, emb.select(id_col, vec_col), n, vec_path,
+                            threshold=threshold)
 
 
-def cosine_threshold_pairs(pairs: DataFrame, threshold: float,
-                           dim: int = 64) -> DataFrame:
-    """Exact-cosine verify for candidate pairs (id_a, id_b, ea, eb):
-    one numpy einsum per Arrow batch, threshold filter applied inside
-    the batch — the ALL-pairs-above-θ counterpart of
-    :func:`cosine_partial_topk` (which keeps top-k instead). No
-    exchange: mapInArrow preserves the attach-join's partitioning, and
-    only surviving (id_a, id_b, cos) triples cross the boundary."""
+#: Byte ceiling for the side-loaded vector table of
+#: :func:`cosine_pair_kernel`. Every concurrent Python worker holds its
+#: own copy, so peak memory is the cap times the worker count: 64 MB × 4
+#: workers = 256 MB at local[4], one ``_ATTACH_BROADCAST_CAP`` broadcast.
+_SIDELOAD_CAP = 64 << 20
+
+
+def cosine_pair_kernel(pairs: DataFrame, *, threshold: float | None = None,
+                       k: int | None = None,
+                       vec_path: str | None = None) -> DataFrame:
+    """Exact quantized cosine of candidate pairs, one mapInArrow pass with
+    no exchange. ``pairs`` starts with two id columns (a, b); the output
+    is (a, b, cos_sim) with the input's id names and types.
+
+    Vector source:
+
+    - ``vec_path=None`` (attach): columns 3 and 4 carry the two 64-float
+      vectors, joined onto every pair;
+    - ``vec_path`` (side-load): only the ids cross the boundary, and each
+      task reads the parquet table's (vec_id, embedding) once, after its
+      first non-empty batch. A missing id or a duplicate vec_id raises.
+
+    Reducer (exactly one):
+
+    - ``threshold``: keep the pairs with cos_sim > threshold;
+    - ``k``: pairs are undirected; each is folded into BOTH endpoints'
+      partition-local top-k (cosine is symmetric), phase one of the
+      two-phase top-k of :func:`partial_topk_per_query`.
+
+    Bytes: attach ships ~528 B per pair, because a vector crosses the
+    JVM→Python boundary once per pair it is in; side-load ships ~16 B
+    per pair plus one table read per task, bounded by
+    :data:`_SIDELOAD_CAP`.
+
+    Bit identity: both sources quantize the same float32 values through
+    float64 (``t()`` pins the column to array<float>, and the side-load
+    casts the parquet column to float32), so the 2^20-quantized int64
+    vectors are equal. Dot products and squared norms are exact int64
+    sums, and the per-row einsum/sqrt/divide expressions are the same in
+    both, so every cos_sim is the same double, and the same double the
+    DuckDB oracles compute."""
     import numpy as np
     import pyarrow as pa
-    from typing import Iterator
 
-    sel = pairs.select("id_a", "id_b", "ea", "eb")
-    id_types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
-    out_schema = f"id_a {id_types[0]}, id_b {id_types[1]}, cos_sim double"
+    if (threshold is None) == (k is None):
+        raise ValueError("cosine_pair_kernel: pass exactly one of threshold, k")
+    cols = pairs.columns[:2] if vec_path is not None else pairs.columns[:4]
+    sel = pairs.select(*cols)
+    names = [*cols[:2], "cos_sim"]
+    types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
+    out_schema = f"{names[0]} {types[0]}, {names[1]} {types[1]}, cos_sim double"
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+    def fn(batches):
+        table = None
+        acc: dict = {}
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            ea = fixed_dim_matrix(batch.column("ea"), dim)
-            eb = fixed_dim_matrix(batch.column("eb"), dim)
-            if ea is None or eb is None:  # ragged/null rows: exact slow path
-                ea = np.stack([
-                    np.asarray(v, dtype=np.float64)
-                    for v in batch.column("ea").to_pylist()
-                ])
-                eb = np.stack([
-                    np.asarray(v, dtype=np.float64)
-                    for v in batch.column("eb").to_pylist()
-                ])
-            # QUANTIZED cosine (r9): dot and squared norms are exact
-            # int64 sums of floor(v·2^20) entries, so the final two
-            # sqrts and one division produce BIT-IDENTICAL doubles in
-            # numpy and SQL regardless of summation order — the float
-            # einsum's last-ulp order sensitivity was the one thing
-            # keeping this family's oracles unreachable. Error vs the
-            # float cosine is O(2^-20) — invisible at the 1e-4 output
-            # grain.
-            qa, qb = _quantize20(ea), _quantize20(eb)
-            cos = np.einsum("ij,ij->i", qa, qb).astype(np.float64) / (
-                np.sqrt(np.einsum("ij,ij->i", qa, qa).astype(np.float64))
-                * np.sqrt(np.einsum("ij,ij->i", qb, qb).astype(np.float64))
-            )
-            m = cos > threshold
-            if m.any():
+            ca, cb = batch.column(0), batch.column(1)
+            xa = ca.to_numpy(zero_copy_only=False)
+            xb = cb.to_numpy(zero_copy_only=False)
+            if vec_path is None:
+                qa = _quantize20(_vector_matrix(batch.column(2), cols[2]))
+                qb = _quantize20(_vector_matrix(batch.column(3), cols[3]))
+                na = np.sqrt(np.einsum("ij,ij->i", qa, qa).astype(np.float64))
+                nb = np.sqrt(np.einsum("ij,ij->i", qb, qb).astype(np.float64))
+            else:
+                if table is None:
+                    table = _sideload_vectors(vec_path)
+                vid, vmat, vnorm = table
+                ia = _rows_of(vid, xa, vec_path)
+                ib = _rows_of(vid, xb, vec_path)
+                qa, qb, na, nb = vmat[ia], vmat[ib], vnorm[ia], vnorm[ib]
+            cos = np.einsum("ij,ij->i", qa, qb).astype(np.float64) / (na * nb)
+            if k is not None:
+                _topk_accumulate(acc, xa, xb, cos, k)
+                _topk_accumulate(acc, xb, xa, cos, k)
+                arrow_types = (ca.type, cb.type, pa.float64())
+            elif (m := cos > threshold).any():
                 keep = pa.array(m)
                 yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column("id_a").filter(keep),
-                        batch.column("id_b").filter(keep),
-                        pa.array(cos[m]),
-                    ],
-                    names=["id_a", "id_b", "cos_sim"],
+                    [ca.filter(keep), cb.filter(keep), pa.array(cos[m])],
+                    names=names,
                 )
+        if acc:
+            yield _topk_batch(acc, arrow_types, names)
 
     return sel.mapInArrow(fn, out_schema)
 
 
-def cosine_threshold_pairs_sideload(pairs: DataFrame, threshold: float,
-                                    vec_path: str) -> DataFrame:
-    """:func:`cosine_threshold_pairs` with the vectors SIDE-LOADED per
-    task instead of joined onto every candidate pair — the threshold
-    counterpart of :func:`cosine_partial_topk_sideload` (see there for
-    the byte accounting and the bit-identity argument; the parquet
-    column is float32, the same dtype the attach join ships, so
-    float32→float64→quantize is the identical chain). Input is
-    (id_a, id_b) ids only; output (id_a, id_b, cos_sim) for pairs
-    above the threshold, exactly as the attach formulation."""
+def _vector_matrix(col, what: str):
+    """(n, 64) float64 matrix of an Arrow list column; raises on null,
+    ragged or wrong-length rows (see :func:`fixed_dim_matrix`)."""
+    m = fixed_dim_matrix(col, 64)
+    if m is None:
+        raise ValueError(f"{what}: every vector must be non-null and 64 long")
+    return m
+
+
+def _sideload_vectors(vec_path: str):
+    """(vec_id sorted, quantized vectors, their norms) of the parquet
+    table at ``vec_path``; raises on a duplicate vec_id, which the attach
+    join would have emitted once per copy."""
     import numpy as np
-    import pyarrow as pa
-    from typing import Iterator
+    import pyarrow.dataset as ds
 
-    sel = pairs.select("id_a", "id_b")
-    id_types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
-    out_schema = f"id_a {id_types[0]}, id_b {id_types[1]}, cos_sim double"
+    tab = ds.dataset(vec_path).to_table(columns=["vec_id", "embedding"])
+    vid = np.asarray(tab.column("vec_id").to_numpy(zero_copy_only=False),
+                     dtype=np.int64)
+    m = _vector_matrix(tab.column("embedding").combine_chunks(), vec_path)
+    vmat = _quantize20(m.astype(np.float32))
+    order = np.argsort(vid, kind="stable")
+    vid, vmat = vid[order], vmat[order]
+    dup = vid[1:][vid[1:] == vid[:-1]]
+    if len(dup):
+        raise ValueError(f"{vec_path}: duplicate vec_id {dup[0]}")
+    vnorm = np.sqrt(np.einsum("ij,ij->i", vmat, vmat).astype(np.float64))
+    return vid, vmat, vnorm
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        import pyarrow.dataset as _ds
 
-        vid = vmat = vnorm = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if vmat is None:  # once per task, after the first real batch
-                tab = _ds.dataset(vec_path).to_table(
-                    columns=["vec_id", "embedding"]
-                )
-                vid = np.asarray(
-                    tab.column("vec_id").to_numpy(zero_copy_only=False),
-                    dtype=np.int64,
-                )
-                flat = np.asarray(
-                    tab.column("embedding").combine_chunks().flatten()
-                    .to_numpy(zero_copy_only=False),
-                    dtype=np.float32,
-                )
-                vmat = _quantize20(
-                    flat.astype(np.float64).reshape(len(vid), -1)
-                )
-                order = np.argsort(vid, kind="stable")
-                vid, vmat = vid[order], vmat[order]
-                vnorm = np.sqrt(
-                    np.einsum("ij,ij->i", vmat, vmat).astype(np.float64)
-                )
-            ia = np.searchsorted(
-                vid, batch.column(0).to_numpy(zero_copy_only=False)
-            )
-            ib = np.searchsorted(
-                vid, batch.column(1).to_numpy(zero_copy_only=False)
-            )
-            qa, qb = vmat[ia], vmat[ib]
-            cos = np.einsum("ij,ij->i", qa, qb).astype(np.float64) / (
-                vnorm[ia] * vnorm[ib]
-            )
-            m = cos > threshold
-            if m.any():
-                keep = pa.array(m)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        batch.column(0).filter(keep),
-                        batch.column(1).filter(keep),
-                        pa.array(cos[m]),
-                    ],
-                    names=["id_a", "id_b", "cos_sim"],
-                )
+def _rows_of(vid, ids, vec_path: str):
+    """Row positions of ``ids`` in the sorted id array ``vid``; raises
+    naming the first id that has no row."""
+    import numpy as np
 
-    return sel.mapInArrow(fn, out_schema)
+    pos = np.searchsorted(vid, ids)
+    hit = pos < len(vid)
+    hit[hit] = vid[pos[hit]] == ids[hit]
+    if not hit.all():
+        raise ValueError(f"{vec_path}: no vector for id {ids[~hit][0]}")
+    return pos
+
+
+def score_candidates(pairs: DataFrame, vecs: DataFrame, n: int,
+                     vec_path: str | None, *, threshold: float | None = None,
+                     k: int | None = None) -> DataFrame:
+    """:func:`cosine_pair_kernel` over id pairs (a, b), with the vector
+    source picked from the corpus size: side-load from ``vec_path`` while
+    the table fits :data:`_SIDELOAD_CAP` (~600 B per vector) and the
+    file is readable by tasks; otherwise attach (id, vector) rows of
+    ``vecs`` to both ends, broadcast while small and sort-merge beyond
+    (:func:`payload_side`). ``vec_path`` must hold exactly the rows of
+    ``vecs`` as (vec_id, embedding); None forces attach."""
+    import os
+
+    if (vec_path is not None and vecs.columns == ["vec_id", "embedding"]
+            and n * 600 <= _SIDELOAD_CAP and os.path.exists(vec_path)):
+        return cosine_pair_kernel(pairs, threshold=threshold, k=k,
+                                  vec_path=vec_path)
+    a, b = pairs.columns
+    vid, vec = vecs.columns
+    side = payload_side(vecs, n * 600)
+    attached = pairs.join(
+        side.select(F.col(vid).alias(a), F.col(vec).alias("va")), a
+    ).join(
+        side.select(F.col(vid).alias(b), F.col(vec).alias("vb")), b
+    ).select(a, b, "va", "vb")
+    return cosine_pair_kernel(attached, threshold=threshold, k=k)
 
 
 @query(
@@ -1466,173 +1465,21 @@ def _topk_accumulate(acc: dict, qid, nid, adc, k: int) -> None:
         acc[q] = (a, nn)
 
 
-def cosine_partial_topk(pairs: DataFrame, k: int,
-                        symmetric: bool = False) -> DataFrame:
-    """Score candidate pairs (qid, nid, qe, ne) with a VECTORIZED numpy
-    cosine and reduce to a partition-local top-``k`` per query in the
-    same mapInArrow pass — no exchange, no per-pair interpreted JVM fold
-    (the higher-order ``aggregate`` lambda evaluates per element; at
-    millions of candidate pairs that is ~200 interpreted steps each,
-    vs one BLAS einsum per Arrow batch here). Output (qid, nid, adc)
-    feeds the same global merge window as :func:`partial_topk_per_query`;
-    the cut is exact for the same reason.
-
-    ``symmetric=True`` takes UNDIRECTED pairs (each unordered candidate
-    exactly once) and accumulates both directions into the per-query
-    heaps — cosine is symmetric, so scoring (u,v) once serves u's and
-    v's top-k alike. Callers then shuffle/score HALF the candidate rows
-    of the directed formulation for the identical result."""
+def _topk_batch(acc: dict, types, names):
+    """Arrow batch of a per-query top-k accumulator (see
+    :func:`_topk_accumulate`): one (qid, nid, score) row per kept
+    neighbour, typed ``types``."""
     import numpy as np
     import pyarrow as pa
-    from typing import Iterator
 
-    sel = pairs.select("qid", "nid", "qe", "ne")
-    id_types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
-    out_schema = f"qid {id_types[0]}, nid {id_types[1]}, adc double"
-
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        acc: dict = {}
-        id_arrow = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            id_arrow = (batch.schema.field(0).type, batch.schema.field(1).type)
-            qid = batch.column(0).to_numpy(zero_copy_only=False)
-            nid = batch.column(1).to_numpy(zero_copy_only=False)
-            # ListArray -> (n, dim): flatten() honors slice offsets
-            qm = _quantize20(np.asarray(
-                batch.column(2).flatten().to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            ).reshape(batch.num_rows, -1))
-            nm = _quantize20(np.asarray(
-                batch.column(3).flatten().to_numpy(zero_copy_only=False),
-                dtype=np.float64,
-            ).reshape(batch.num_rows, -1))
-            # quantized cosine — exact int64 sums, bit-identical doubles
-            # in any engine (see cosine_threshold_pairs)
-            adc = np.einsum("ij,ij->i", qm, nm).astype(np.float64) / (
-                np.sqrt(np.einsum("ij,ij->i", qm, qm).astype(np.float64))
-                * np.sqrt(np.einsum("ij,ij->i", nm, nm).astype(np.float64))
-            )
-            _topk_accumulate(acc, qid, nid, adc, k)
-            if symmetric:
-                _topk_accumulate(acc, nid, qid, adc, k)
-        if acc:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.concatenate(
-                            [np.full(len(v[0]), q) for q, v in acc.items()]
-                        ),
-                        type=id_arrow[0],
-                    ),
-                    pa.array(
-                        np.concatenate([v[1] for v in acc.values()]),
-                        type=id_arrow[1],
-                    ),
-                    pa.array(np.concatenate([v[0] for v in acc.values()])),
-                ],
-                names=["qid", "nid", "adc"],
-            )
-
-    return sel.mapInArrow(fn, out_schema)
-
-
-#: byte ceiling for the worker-side vector-table load of
-#: :func:`cosine_partial_topk_sideload`. Tighter than
-#: ``_ATTACH_BROADCAST_CAP`` (256 MB) because every CONCURRENT Python
-#: worker holds its own copy (cores-per-node copies vs one broadcast
-#: per executor JVM); 64 MB × 32 local workers = 2 GB peak, same order
-#: as the broadcast the join path builds.
-_SIDELOAD_CAP = 64 << 20
-
-
-def cosine_partial_topk_sideload(pairs: DataFrame, k: int, vec_path: str,
-                                 symmetric: bool = False) -> DataFrame:
-    """:func:`cosine_partial_topk` with the vectors SIDE-LOADED in the
-    Python task instead of joined onto every pair (guide §4.1/§8: the
-    ids decide, the payload moves once). The join formulation ships
-    (qid, nid, qe, ne) ≈ 528 B per candidate pair across the
-    JVM→Python boundary — the vectors are serialized once per PAIR, so
-    a vector in 300 candidates crosses 300 times. Here the mapInArrow
-    input is (qid, nid) ≈ 16 B/row (~33× less Arrow traffic) and each
-    task reads the corpus vector table ONCE from parquet (bounded by
-    :data:`_SIDELOAD_CAP` — broadcast-equivalent bytes, loaded lazily
-    so empty partitions never read), then gathers (qe, ne) by id with
-    numpy. Bit-identical scores: the parquet column is float32 (and
-    ``t()`` pins that dtype), so float32→float64→quantize is the same
-    chain the Arrow-shipped path runs; the per-row einsum/sqrt/divide
-    expressions are unchanged. NOT a cache: the read happens inside
-    the task, per execution, from the query's input table."""
-    import numpy as np
-    import pyarrow as pa
-    from typing import Iterator
-
-    sel = pairs.select("qid", "nid")
-    id_types = [f.dataType.simpleString() for f in sel.schema.fields[:2]]
-    out_schema = f"qid {id_types[0]}, nid {id_types[1]}, adc double"
-
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        import pyarrow.dataset as _ds
-
-        vid = vmat = vnorm = None
-        acc: dict = {}
-        id_arrow = None
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            if vmat is None:  # once per task, after the first real batch
-                tab = _ds.dataset(vec_path).to_table(
-                    columns=["vec_id", "embedding"]
-                )
-                vid = np.asarray(
-                    tab.column("vec_id").to_numpy(zero_copy_only=False),
-                    dtype=np.int64,
-                )
-                flat = np.asarray(
-                    tab.column("embedding").combine_chunks().flatten()
-                    .to_numpy(zero_copy_only=False),
-                    dtype=np.float32,
-                )
-                vmat = _quantize20(
-                    flat.astype(np.float64).reshape(len(vid), -1)
-                )
-                order = np.argsort(vid, kind="stable")
-                vid, vmat = vid[order], vmat[order]
-                vnorm = np.sqrt(
-                    np.einsum("ij,ij->i", vmat, vmat).astype(np.float64)
-                )
-            id_arrow = (batch.schema.field(0).type, batch.schema.field(1).type)
-            qid = batch.column(0).to_numpy(zero_copy_only=False)
-            nid = batch.column(1).to_numpy(zero_copy_only=False)
-            qi = np.searchsorted(vid, qid)
-            ni = np.searchsorted(vid, nid)
-            qm, nm = vmat[qi], vmat[ni]
-            adc = np.einsum("ij,ij->i", qm, nm).astype(np.float64) / (
-                vnorm[qi] * vnorm[ni]
-            )
-            _topk_accumulate(acc, qid, nid, adc, k)
-            if symmetric:
-                _topk_accumulate(acc, nid, qid, adc, k)
-        if acc:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.concatenate(
-                            [np.full(len(v[0]), q) for q, v in acc.items()]
-                        ),
-                        type=id_arrow[0],
-                    ),
-                    pa.array(
-                        np.concatenate([v[1] for v in acc.values()]),
-                        type=id_arrow[1],
-                    ),
-                    pa.array(np.concatenate([v[0] for v in acc.values()])),
-                ],
-                names=["qid", "nid", "adc"],
-            )
-
-    return sel.mapInArrow(fn, out_schema)
+    cols = (
+        np.concatenate([np.full(len(v[0]), q) for q, v in acc.items()]),
+        np.concatenate([v[1] for v in acc.values()]),
+        np.concatenate([v[0] for v in acc.values()]),
+    )
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=ty) for c, ty in zip(cols, types)], names=names
+    )
 
 
 def partial_topk_per_query(scored: DataFrame, k: int) -> DataFrame:
@@ -1649,16 +1496,12 @@ def partial_topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     exact: the global top-k is a subset of the union of per-partition
     top-k's, with the same (adc desc, nid asc) total order on both
     phases."""
-    import numpy as np
-    import pyarrow as pa
-    from typing import Iterator
-
     sel = scored.select("qid", "nid", "adc")
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in sel.schema.fields
     )
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
+    def fn(batches):
         acc: dict = {}  # qid -> (adc desc-sorted np arrays, nid)
         arrow_schema = None
         for batch in batches:
@@ -1670,25 +1513,7 @@ def partial_topk_per_query(scored: DataFrame, k: int) -> DataFrame:
         if acc:
             # input dtypes pass through unchanged (qid may be int or long
             # depending on the caller)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.concatenate(
-                            [np.full(len(v[0]), q) for q, v in acc.items()]
-                        ),
-                        type=arrow_schema.field(0).type,
-                    ),
-                    pa.array(
-                        np.concatenate([v[1] for v in acc.values()]),
-                        type=arrow_schema.field(1).type,
-                    ),
-                    pa.array(
-                        np.concatenate([v[0] for v in acc.values()]),
-                        type=arrow_schema.field(2).type,
-                    ),
-                ],
-                names=["qid", "nid", "adc"],
-            )
+            yield _topk_batch(acc, arrow_schema.types, arrow_schema.names)
 
     return sel.mapInArrow(fn, out_schema)
 
@@ -2031,7 +1856,7 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     This is where the two-phase top-k earns its keep: candidate pairs
     come from banded-LSH buckets (O(sum bucket^2), never all-pairs),
     deduped across bands BEFORE scoring so each surviving pair pays the
-    dot product once, then ``partial_topk_per_query`` reduces each
+    dot product once, then the kernel's top-k reducer cuts each
     partition to <= N x k rows with NO exchange before the single global
     merge window — a per-query ranking window over the raw candidate
     set would funnel every candidate of a query into one reducer.
@@ -2039,10 +1864,11 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     The candidate phase moves IDS ONLY, and only UNDIRECTED pairs: the
     band self-join keeps qid < nid, the cross-band dedupe shuffles one
     (qid, nid) row (~16 B) per unordered pair, and the two 64-float
-    vectors (~512 B) are joined back exactly once per SURVIVING pair for
-    the cosine — scored once and folded into BOTH endpoints' top-k heaps
-    (cosine is symmetric), halving dedupe/attach/score volume vs the
-    directed formulation for an identical result. At 100 TB the
+    vectors reach the cosine only for SURVIVING pairs (side-loaded or
+    attached, :func:`score_candidates`) — scored once and folded into
+    BOTH endpoints' top-k heaps (cosine is symmetric), halving
+    dedupe/attach/score volume vs the directed formulation for an
+    identical result. At 100 TB the
     candidate shuffles are the dominant network cost and this keeps them
     ~60x slimmer than carrying vectors through directed pairs
     (plan-pinned: no vector column below the dedupe exchange,
@@ -2066,7 +1892,7 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     moderate-similarity recall decays as r grows, which is the
     documented LSH precision/recall dial (floor asserted in tests at
     the SFs the tests run, where r=5). Scoring + phase-one top-k
-    are FUSED in one mapInArrow (:func:`cosine_partial_topk`): one BLAS
+    are FUSED in one mapInArrow (:func:`cosine_pair_kernel`): one BLAS
     einsum per Arrow batch instead of an interpreted ~200-step JVM
     aggregate lambda per pair.
     FULL value oracle since r9: md5-Rademacher planes over quantized
@@ -2107,45 +1933,17 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     # pairs (band collision is symmetric, cosine is symmetric): the
     # dedupe shuffle, the vector-attach joins, and the einsum all touch
     # HALF the rows of the directed formulation; the fused partial top-k
-    # (symmetric=True) folds each scored pair into both endpoints'
-    # heaps, so the directed result is identical — still ids-only
+    # folds each scored pair into both endpoints' heaps, so the directed
+    # result is identical — still ids-only
     uniq = pairs.select("qid", "nid").distinct()
-    # r14 (guide §4.1/§8): while the vector table provably fits a
-    # per-worker load (and the corpus parquet is task-readable), score
-    # with the SIDE-LOADED kernel — the mapInArrow ships (qid, nid)
-    # ids only (~16 B/row) instead of (qid, nid, qe, ne) (~528 B/row,
-    # every vector re-serialized once per surviving pair; this query
-    # ships ~25× more Arrow rows than any other headline entry, so the
-    # pair-attached crossing dominated its cost). Beyond the cap the
-    # r11-r13 shape is unchanged: broadcast the vector table while
-    # provably small, pin sort-merge beyond the broadcast cap
-    # (corpus-sized broadcast is the r11 probe's failure class).
-    import os as _os
-
-    vec_path = f"{sf}/embeddings.parquet"
-    if n * 600 <= _SIDELOAD_CAP and _os.path.exists(vec_path):
-        scored = cosine_partial_topk_sideload(
-            uniq, 5, vec_path, symmetric=True
-        )
-    else:
-        # ~600 B per row (64 floats + ids + array overhead)
-        vecs = payload_side(emb.select("vec_id", "embedding"), n * 600)
-        uniq = uniq.join(
-            vecs.select(F.col("vec_id").alias("qid"),
-                        F.col("embedding").alias("qe")),
-            "qid",
-        ).join(
-            vecs.select(F.col("vec_id").alias("nid"),
-                        F.col("embedding").alias("ne")),
-            "nid",
-        )
-        scored = cosine_partial_topk(uniq, 5, symmetric=True)
-    w = Window.partitionBy("qid").orderBy(F.col("adc").desc(), "nid")
+    scored = score_candidates(uniq, emb.select("vec_id", "embedding"), n,
+                              f"{sf}/embeddings.parquet", k=5)
+    w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "nid")
     return (
         scored
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 5)
-        .select("qid", "nid", F.round("adc", 4).alias("cos_sim"), "rank")
+        .select("qid", "nid", F.round("cos_sim", 4).alias("cos_sim"), "rank")
     )
 
 

@@ -1131,7 +1131,6 @@ def read_xml(
     ns: str | None = None,
     rich_types: bool = False,
     partition_bytes: int = DEFAULT_PARTITION_BYTES,
-    use_datasource: bool = True,
     mode: str = "FAILFAST",
     corrupt_column: str | None = None,
     columns: list[str] | None = None,
@@ -1193,55 +1192,20 @@ def read_xml(
     paths = resolve_paths(path)
     splits = plan_annotated_splits(paths, row_tag, partition_bytes, spark=spark)
 
-    if use_datasource:
-        # narrow availability probe only — a genuine reader bug must
-        # surface, not silently switch execution paths
-        try:
-            from xml_hive_spark.sources.xml_datasource import register
-        except ImportError:
-            log.warning("Python DataSource API unavailable; using RDD reader")
-            register = None
-        if register is not None:
-            register(spark)
-            splits_per_file = Counter(s[0] for s in splits)
-            tasks = pack_small_files(spark, [
-                (s, os.path.getsize(s[0]) if s[2] == GZIP_SPLIT_END else s[2] - s[1],
-                 splits_per_file[s[0]] == 1)
-                for s in splits
-            ], partition_bytes)
-            return (
-                spark.read.format("xmlhive")
-                .schema(schema)
-                .option("rowTag", row_tag)
-                .option("mode", mode)
-                .option("splits", json.dumps(tasks))
-                .load()
-            )
+    from xml_hive_spark.sources.xml_datasource import register
 
-    return _read_xml_rdd_splits(spark, splits, row_tag, schema, mode)
-
-
-def _read_xml_rdd_splits(spark, splits, row_tag, schema, mode):
-    from xml_hive_spark.sources.xml_datasource import ship_package
-
-    ship_package(spark)  # executors unpickle _read_split by module reference
-    sc = spark.sparkContext
-    rdd = sc.parallelize(splits, max(1, len(splits))).flatMap(
-        lambda s: _read_split(s, row_tag, schema, mode)
+    register(spark)
+    splits_per_file = Counter(s[0] for s in splits)
+    tasks = pack_small_files(spark, [
+        (s, os.path.getsize(s[0]) if s[2] == GZIP_SPLIT_END else s[2] - s[1],
+         splits_per_file[s[0]] == 1)
+        for s in splits
+    ], partition_bytes)
+    return (
+        spark.read.format("xmlhive")
+        .schema(schema)
+        .option("rowTag", row_tag)
+        .option("mode", mode)
+        .option("splits", json.dumps(tasks))
+        .load()
     )
-    return spark.createDataFrame(rdd, schema)
-
-
-def read_xml_rdd(
-    spark: SparkSession,
-    path: str | list[str],
-    row_tag: str,
-    schema: StructType,
-    partition_bytes: int = DEFAULT_PARTITION_BYTES,
-    mode: str = "FAILFAST",
-) -> DataFrame:
-    """Fallback reader: parallelized byte-range splits + per-partition
-    record scan. Same split protocol as the DataSource path."""
-    paths = resolve_paths(path)
-    splits = plan_annotated_splits(paths, row_tag, partition_bytes, spark=spark)
-    return _read_xml_rdd_splits(spark, splits, row_tag, schema, mode)
