@@ -6,6 +6,8 @@ diverge."""
 
 from __future__ import annotations
 
+import io
+
 import pytest
 from pyspark.sql.types import (
     BooleanType,
@@ -18,7 +20,7 @@ from pyspark.sql.types import (
 )
 
 from xml_hive_spark.flat import FlatAssembler
-from xml_hive_spark.reader import parse_record_safe
+from xml_hive_spark.reader import iter_record_spans, parse_record_safe
 
 
 def _schema():
@@ -81,7 +83,7 @@ def test_fast_equals_slow(rec):
     if fast is not None:
         assert fast == slow, rec
     else:
-        # fallback records are handled by the exact path inside batches();
+        # fallback records are handled by the exact path inside the scan;
         # just pin that the exact path can process them
         assert isinstance(slow, tuple)
 
@@ -105,12 +107,35 @@ def test_malformed_modes():
     assert parse_record_safe(bad, st, "PERMISSIVE") == (None,) * 5
 
 
-def test_batches_roundtrip():
+def _doc(records):
+    return b"<root>\n" + b"\n".join(records) + b"\n</root>\n"
+
+
+def _scan_batches(asm, tmp_path, records, batch_rows, predicate=None):
+    """fused_split_batches over the records written one per line inside
+    a root element; the exact span scan must find exactly these records."""
+    data = _doc(records)
+    spans = [rec for _, rec in iter_record_spans(io.BytesIO(data), "r", 0,
+                                                 len(data))]
+    assert spans == list(records)
+    p = tmp_path / "recs.xml"
+    p.write_bytes(data)
+    return list(asm.fused_split_batches((str(p), 0, len(data), "TEXT", 0),
+                                        "r", batch_rows=batch_rows,
+                                        predicate=predicate))
+
+
+def _batch_rows(batches):
+    return [tuple(r.values()) for b in batches for r in b.to_pylist()]
+
+
+def test_batches_roundtrip(tmp_path):
     import pyarrow as pa
 
     st = _schema()
     asm = FlatAssembler.try_create(st, "DROPMALFORMED")
-    out = list(asm.batches(iter(RECORDS), batch_rows=4))
+    assert not asm._columnar_ok  # the bool column: per-row conversion
+    out = _scan_batches(asm, tmp_path, RECORDS, batch_rows=4)
     assert all(isinstance(b, pa.RecordBatch) for b in out)
     total = sum(b.num_rows for b in out)
     slow_rows = [
@@ -149,7 +174,7 @@ def test_template_learns_and_matches_uniform_records():
     assert tmpl.extract(empty) == parse_record_safe(empty, st, "FAILFAST")
 
 
-def test_batches_with_mixed_layouts_equals_slow_path():
+def test_batches_with_mixed_layouts_equals_slow_path(tmp_path):
     """A stream where most records share one layout (template path) and
     oddballs interleave (guards/fallbacks) must equal the exact path
     record-for-record — order preserved."""
@@ -164,7 +189,7 @@ def test_batches_with_mixed_layouts_equals_slow_path():
         stream.append(u)
         if i % 7 == 0:
             stream.append(RECORDS[i % len(RECORDS)])
-    out = list(asm.batches(iter(stream), batch_rows=16))
+    out = _scan_batches(asm, tmp_path, stream, batch_rows=16)
     flat = [tuple(col[i].as_py() for col in b.columns)
             for b in out for i in range(b.num_rows)]
     slow = [
@@ -172,6 +197,63 @@ def test_batches_with_mixed_layouts_equals_slow_path():
         if r is not None
     ]
     assert flat == slow
+
+
+# the guard records, also with a score: every one fails fast_row
+GUARDED = [rec for rec in RECORDS
+           if b"<![" in rec or b"<!--" in rec or b"<?" in rec or b"wrap" in rec]
+GUARDED += [rec.replace(b"</r>", b"<score>1.5</score></r>") for rec in GUARDED]
+
+
+@pytest.mark.parametrize("pushed", [False, True])
+def test_batches_with_no_template_learned(tmp_path, pushed):
+    """A split whose records all fail fast_row never learns a template:
+    every batch holds exact rows only and takes the per-row branch (the
+    bool column), with and without a row predicate (a float In has no
+    Arrow twin). Rows equal the exact span path."""
+    from pyspark.sql.datasource import In
+
+    from tests.test_fused_scan import _span_path_rows
+    from xml_hive_spark.sources.pushdown import (
+        compile_conjunction,
+        compile_conjunction_arrow,
+        compile_filter,
+    )
+
+    st = _schema()
+    asm = FlatAssembler.try_create(st, "PERMISSIVE")
+    assert all(asm.fast_row(rec) is None for rec in GUARDED)
+    keep = None
+    if pushed:
+        flts = [In(("score",), (1.5,))]
+        assert compile_conjunction_arrow(flts, st) is None
+        keep = compile_conjunction([compile_filter(f, st) for f in flts])
+    out = _scan_batches(asm, tmp_path, GUARDED, batch_rows=3, predicate=keep)
+    data = _doc(GUARDED)
+    want = _span_path_rows(asm, data, "r", [("", 0, len(data))])
+    if keep is not None:
+        want = [r for r in want if keep(r)]
+    assert len(want) == (4 if pushed else 8)
+    assert all(b.num_rows for b in out)
+    assert _batch_rows(out) == want
+
+
+def test_stream_read_with_no_template_learned(tmp_path):
+    """The streaming read() of the bool schema over records that all
+    fail fast_row equals the exact span path."""
+    from tests.test_fused_scan import _span_path_rows
+    from xml_hive_spark.sources.xml_stream import XmlStreamReader
+
+    st = _schema()
+    data = _doc(GUARDED)
+    (tmp_path / "g.xml").write_bytes(data)
+    rd = XmlStreamReader(st, {"path": str(tmp_path), "rowtag": "r",
+                              "mode": "PERMISSIVE"})
+    parts = rd.partitions(rd.initialOffset(), rd.latestOffset())
+    got = _batch_rows(b for pt in parts for b in rd.read(pt))
+    asm = FlatAssembler.try_create(st, "PERMISSIVE")
+    want = _span_path_rows(asm, data, "r", [("", 0, len(data))])
+    assert len(got) == 8 and got == want
 
 
 def test_nested_schema_not_eligible():

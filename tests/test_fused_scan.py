@@ -1,8 +1,9 @@
-"""Fused-scan exactness: FlatAssembler.iter_split_rows (template matched
-in place against the split buffer, exact token machinery on any
-mismatch) must produce EXACTLY the rows of the span-then-extract path —
-over generated documents, full cut sweeps, and every guard class the
-flat fast path defends against."""
+"""Fused-scan exactness: FlatAssembler.fused_split_batches (template
+matched in place against the split buffer, exact token machinery on any
+mismatch, columnar or per-row batch conversion) must produce EXACTLY the
+rows of the exact span path (iter_record_spans + fast_row /
+parse_record_safe) — over generated documents, full cut sweeps, and
+every guard class the flat fast path defends against."""
 
 from __future__ import annotations
 
@@ -64,13 +65,15 @@ def _span_path_rows(asm, data: bytes, row_tag: str, splits) -> list:
     return out
 
 
-def _fused_rows(asm, tmp_path, data: bytes, row_tag: str, splits) -> list:
+def _fused_rows(asm, tmp_path, data: bytes, row_tag: str, splits,
+                batch_rows: int = 32768) -> list:
     p = tmp_path / "doc.xml"
     p.write_bytes(data)
     out = []
     for sp in splits:
         full = (str(p), sp[1], sp[2]) + tuple(sp[3:])
-        out += [tuple(v) for v in asm.iter_split_rows(full, row_tag)]
+        for b in asm.fused_split_batches(full, row_tag, batch_rows=batch_rows):
+            out += [tuple(r.values()) for r in b.to_pylist()]
     return out
 
 
@@ -216,26 +219,34 @@ def _int_schema():
     )
 
 
+def _reference_table(asm, rows):
+    """Arrow table of row tuples under the assembler's Arrow schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from xml_hive_spark.flat import strip_metadata
+
+    aschema = to_arrow_schema(strip_metadata(asm.struct))
+    return pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(aschema)],
+        schema=aschema,
+    )
+
+
 def _tables(asm, tmp_path, data: bytes, row_tag: str, splits, batch_rows):
-    """(columnar table, row-path table) over the same splits."""
+    """(fused-scan table, exact span-path table) over the same splits."""
     import pyarrow as pa
 
     p = tmp_path / "doc.xml"
     p.write_bytes(data)
-    new, old = [], []
+    new = []
     for sp in splits:
         full = (str(p), sp[1], sp[2]) + tuple(sp[3:])
         new += list(asm.fused_split_batches(full, row_tag,
                                             batch_rows=batch_rows))
-        old += list(asm._rows_to_batches(
-            asm.iter_split_rows(full, row_tag), batch_rows, None))
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from xml_hive_spark.flat import strip_metadata
-
-    aschema = to_arrow_schema(strip_metadata(asm.struct))
-    tn = pa.Table.from_batches(new, schema=aschema)
-    to_ = pa.Table.from_batches(old, schema=aschema)
-    return tn, to_
+    ref = _reference_table(asm, _span_path_rows(asm, data, row_tag, splits))
+    return pa.Table.from_batches(new, schema=ref.schema), ref
 
 
 # every row here drives a different columnar-safety decision: entities,
@@ -464,10 +475,10 @@ def test_fused_equals_span_with_heavy_comments(tmp_path):
 
 
 def test_run_batched_rejects_reread_within_runs(tmp_path):
-    """Run-batched raw scan (rx_multi + findall): records whose captures
+    """Run-batched scan (rx_multi + findall): records whose captures
     fail conversion INSIDE a multi-record run must re-read their span
     and take the exact path, with everything else staying columnar —
-    equality with the row path across flush boundaries proves the
+    equality with the span path across flush boundaries proves the
     run-span bookkeeping (count, start, end) maps rows back correctly."""
     recs = []
     for i in range(300):
@@ -504,8 +515,7 @@ def test_run_batched_emits_multi_record_runs(tmp_path):
     asm = FlatAssembler.try_create(_int_schema(), "PERMISSIVE")
     runs = []
     with open(p, "rb") as f:
-        for item in asm._fused_scan(f, "rec", 0, len(data), "TEXT", 0,
-                                    raw=True):
+        for item in asm._fused_scan(f, "rec", 0, len(data), "TEXT", 0):
             if type(item) is list and type(item[0]) is list:
                 runs.append(len(item[0]))
     assert runs and max(runs) > 1
@@ -531,8 +541,8 @@ def _two_writer_doc(n_a=300, n_b=300):
 
 def test_layout_drift_relearns_template(tmp_path):
     """After the writer-A block ends, the scan must adopt a writer-B
-    template (not pay the exact path for the whole B block), and both
-    the row and columnar paths must equal the reference pipeline."""
+    template (not pay the exact path for the whole B block), and the
+    fused scan must equal the reference pipeline."""
     from xml_hive_spark import flat as flat_mod
 
     data = _two_writer_doc()
@@ -561,7 +571,7 @@ def test_layout_drift_relearns_template(tmp_path):
 
 def test_layout_drift_columnar_equals_row_path(tmp_path):
     """The mid-batch template switch must flush caps under the template
-    that produced them (the _TmplChange sentinel): columnar == row path
+    that produced them (the _TmplChange sentinel): columnar == span path
     across batch sizes that put the switch mid-batch and at edges."""
     data = _two_writer_doc()
     asm = FlatAssembler.try_create(_int_schema(), "PERMISSIVE")
@@ -572,6 +582,38 @@ def test_layout_drift_columnar_equals_row_path(tmp_path):
             tn, to_ = _tables(asm, tmp_path, data, "rec", splits, batch_rows)
             assert tn.equals(to_), f"fence={fence} batch_rows={batch_rows}"
             assert tn.num_rows == 600
+
+
+def test_one_assembler_across_splits_with_row_path_batch(tmp_path):
+    """One assembler reads split A (layout 1), then split B (layout 2)
+    whose first batch an '&' sends to per-row conversion: B's captures
+    must be mapped with B's template, not one left over from A."""
+    a = ("<ds>\n" + "\n".join(
+        f'<rec id="{i}"><cat>c{i % 5}</cat><val>{i}</val></rec>'
+        for i in range(50)) + "\n</ds>").encode()
+    b = ("<ds>\n" + "\n".join(
+        f'<rec src="b" id="{i}"><val>{i * 3}</val>'
+        f'<cat>{"x&amp;y" if i == 2 else f"b{i}"}</cat></rec>'
+        for i in range(40)) + "\n</ds>").encode()
+    asm = FlatAssembler.try_create(_int_schema(), "PERMISSIVE")
+    row_batches = []
+    run_rows = asm._run_rows
+
+    def spy(caps, spans, reread, tmpl):
+        row_batches.append(len(caps))
+        return run_rows(caps, spans, reread, tmpl)
+
+    asm._run_rows = spy
+    for name, data, per_row in (("a", a, False), ("b", b, True)):
+        d = tmp_path / name
+        d.mkdir()
+        splits = [("", 0, len(data), "TEXT", 0)]
+        want = _span_path_rows(asm, data, "rec", splits)
+        row_batches.clear()
+        got = _fused_rows(asm, d, data, "rec", splits, batch_rows=16)
+        assert got == want
+        assert bool(row_batches) == per_row, name
+    assert (2, "x&y", 6) in got
 
 
 def test_alternating_layouts_do_not_thrash(tmp_path):

@@ -177,6 +177,83 @@ class TestBoundedCompressedRead:
         total = sum(getattr(b, "num_rows", 1) for b in rows)
         assert total == 20
 
+    def test_stream_read_fused_scan_honours_raw_limit(self, tmp_path):
+        """The streaming read() of a flat schema (fused scan) over an
+        .xml.gz with entity-bearing records and a member appended after
+        admission: rows equal the exact path bounded at the admitted
+        size, and the appended member's records are absent."""
+        from xml_hive_spark.reader import _read_split
+        from xml_hive_spark.sources.xml_stream import XmlStreamReader
+
+        recs = "\n".join(
+            f'<rec id="{i}"><cat>{"a&amp;b" if i % 9 == 0 else f"c{i}"}'
+            f'</cat><val>{"12e" if i % 50 == 7 else i * 3}</val></rec>'
+            for i in range(300)
+        )
+        m1 = gzip.compress(("<ds>\n" + recs + "\n</ds>\n").encode())
+        p = tmp_path / "s.xml.gz"
+        p.write_bytes(m1)
+        rd = XmlStreamReader(SCHEMA, {"path": str(tmp_path), "rowtag": "rec",
+                                      "mode": "PERMISSIVE"})
+        parts = rd.partitions(rd.initialOffset(), rd.latestOffset())
+        assert len(parts) == 1 and parts[0].raw_limit == len(m1)
+        p.write_bytes(m1 + gzip.compress(
+            b'<ds><rec id="9999"><cat>late</cat><val>1</val></rec></ds>'))
+
+        got = [tuple(r.values()) for b in rd.read(parts[0])
+               for r in b.to_pylist()]
+        pt = parts[0]
+        want = list(_read_split((pt.path, pt.start, pt.end, pt.state,
+                                 pt.depth), "rec", SCHEMA, "PERMISSIVE",
+                                raw_limit=pt.raw_limit))
+        assert got == want and len(got) == 300
+        assert (9, "a&b", 27) in got and (None, None, None) in got
+        assert all(r[0] != 9999 for r in got)
+
+    def test_span_reread_is_one_forward_handle(self, tmp_path, monkeypatch):
+        """Rejected captures in many batches of one .xml.gz split are
+        re-read through ONE extra handle whose seeks only move forward,
+        so the member is decompressed twice in total, not once more per
+        batch from byte 0."""
+        import xml_hive_spark.reader as reader_mod
+        from xml_hive_spark.flat import FlatAssembler
+        from xml_hive_spark.reader import _read_split
+
+        recs = "\n".join(
+            f'<rec id="{i}"><cat>c{i}</cat>'
+            f'<val>{"12e" if i % 40 == 7 else i}</val></rec>'
+            for i in range(400)
+        )
+        p = tmp_path / "r.xml.gz"
+        p.write_bytes(gzip.compress(("<ds>\n" + recs + "\n</ds>\n").encode()))
+        opened, seeks = [], []  # seeks: offsets on the re-read handle
+        real_open = reader_mod.open_xml
+
+        def spy_open(path, raw_limit=None):
+            fh = real_open(path, raw_limit=raw_limit)
+            real_seek = fh.seek
+
+            def seek(off, whence=0):
+                if whence == 0 and len(opened) == 2 and fh is opened[1]:
+                    seeks.append(off)
+                return real_seek(off, whence)
+
+            fh.seek = seek
+            opened.append(fh)
+            return fh
+
+        monkeypatch.setattr(reader_mod, "open_xml", spy_open)
+        split = (str(p), 0, GZIP_SPLIT_END, "TEXT", 0)
+        asm = FlatAssembler.try_create(SCHEMA, "PERMISSIVE")
+        got = [tuple(r.values())
+               for b in asm.fused_split_batches(split, "rec", batch_rows=32)
+               for r in b.to_pylist()]
+        monkeypatch.undo()
+        assert got == list(_read_split(split, "rec", SCHEMA, "PERMISSIVE"))
+        assert sum(r[2] is None for r in got) == 10
+        assert len(opened) == 2
+        assert len(seeks) >= 5 and seeks == sorted(set(seeks))
+
     def test_stream_partition_carries_raw_limit(self, tmp_path):
         """The streaming source records the admitted size as the
         partition's raw cap and absorbs checkpointed offsets into the

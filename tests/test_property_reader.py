@@ -226,9 +226,11 @@ class TestScannerNeverCrashes:
         p.write_bytes(blob)
         asm = FlatAssembler.try_create(sch, "PERMISSIVE")
         split = (str(p), 0, len(blob), "TEXT", 0)
-        fused = [tuple(v) for v in asm.iter_split_rows(split, "rec")]
+        from tests.test_fused_scan import _span_path_rows
+
+        want = _span_path_rows(asm, blob, "rec", [split])
         batches = list(asm.fused_split_batches(split, "rec", batch_rows=7))
         from_batches = [
             tuple(r.values()) for b in batches for r in b.to_pylist()
         ]
-        assert from_batches == fused
+        assert from_batches == want

@@ -383,18 +383,26 @@ def test_float32_rounding_matches_catalyst(spark, tmp_path):
         assert got == want, (cond, got, want)
 
 
+def _canon(rows):
+    """Row tuples with NaN made comparable."""
+    import math
+
+    return [tuple("NaN" if isinstance(v, float) and math.isnan(v) else v
+                  for v in r) for r in rows]
+
+
+def _batch_rows(batches):
+    return [tuple(r.values()) for b in batches for r in b.to_pylist()]
+
+
 def test_columnar_filtered_equals_row_filtered(tmp_path):
     """fused_split_batches(arrow_predicate=...) must yield exactly the
-    rows of the row path with the equivalent tri-valued predicate —
-    including on batches the columnar bulk checks punt to per-row
-    conversion (entities, bad casts)."""
-    import pyarrow as pa
-
+    rows of the exact span path filtered by the equivalent tri-valued
+    row predicate — including on batches the columnar bulk checks punt
+    to per-row conversion (entities, bad casts)."""
+    from tests.test_fused_scan import _span_path_rows
     from xml_hive_spark.flat import FlatAssembler
-    from xml_hive_spark.sources.pushdown import (
-        compile_conjunction,
-        compile_conjunction_arrow,
-    )
+    from xml_hive_spark.sources.pushdown import compile_conjunction_arrow
 
     recs = []
     for i in range(800):
@@ -406,18 +414,9 @@ def test_columnar_filtered_equals_row_filtered(tmp_path):
     data = ("<cat>\n" + "\n".join(recs) + "\n</cat>").encode()
     p = tmp_path / "d.xml"
     p.write_bytes(data)
-    sch = StructType(
-        [
-            StructField("id", IntegerType(), True,
-                        metadata={"xmlKind": "attribute", "xmlName": "id"}),
-            StructField("name", StringType(), True,
-                        metadata={"xmlKind": "element", "xmlName": "name"}),
-            StructField("score", DoubleType(), True,
-                        metadata={"xmlKind": "element", "xmlName": "score"}),
-        ]
-    )
-    asm = FlatAssembler.try_create(sch, "PERMISSIVE")
+    asm = FlatAssembler.try_create(SCHEMA, "PERMISSIVE")
     split = (str(p), 0, len(data), "TEXT", 0)
+    ref = _span_path_rows(asm, data, "row", [split])
     cases = [
         [GreaterThan(("id",), 100), StringStartsWith(("name",), "a")],
         [GreaterThan(("score",), 1.0)],          # NaN rows must survive
@@ -425,27 +424,53 @@ def test_columnar_filtered_equals_row_filtered(tmp_path):
         [IsNull(("score",)), LessThanOrEqual(("id",), 700)],
     ]
     for flts in cases:
-        keep = compile_conjunction([compile_filter(f, sch) for f in flts])
-        accept = compile_conjunction_arrow(flts, sch)
+        keep = compile_conjunction([compile_filter(f, SCHEMA) for f in flts])
+        accept = compile_conjunction_arrow(flts, SCHEMA)
         assert accept is not None, flts
         col = list(asm.fused_split_batches(split, "row", batch_rows=64,
                                            predicate=keep,
                                            arrow_predicate=accept))
-        row = list(asm.fused_split_batches(split, "row", batch_rows=64,
-                                           predicate=keep))
-        def canon(tables):
-            import math
+        want = [r for r in ref if keep(r)]
+        assert _canon(_batch_rows(col)) == _canon(want), flts
 
-            out = []
-            for t in tables:
-                for r in t.to_pylist():
-                    out.append(tuple(
-                        "NaN" if isinstance(v, float) and math.isnan(v)
-                        else v for v in r.values()
-                    ))
-            return out
 
-        assert canon(col) == canon(row), flts
+def test_row_predicate_without_arrow_twin(tmp_path):
+    """A pushed filter with no arrow compilation (float In) filters the
+    per-row-converted tuples: rows equal the filtered span path across
+    entity-bearing batches and a mid-file layout drift, and no batch
+    that the filter empties is yielded."""
+    from tests.test_fused_scan import _span_path_rows
+    from xml_hive_spark.flat import FlatAssembler
+    from xml_hive_spark.sources.pushdown import compile_conjunction_arrow
+
+    recs = []
+    for i in range(600):
+        name = "a&amp;b" if 100 <= i < 110 or i == 500 else f"n{i % 7}"
+        # rows 192..319 fill two whole 64-row batches the filter empties
+        score = "9.0" if 192 <= i < 320 else ["1.5", "2.25", "3.0"][i % 3]
+        if i < 400:
+            recs.append(f'<row id="{i}"><name>{name}</name>'
+                        f'<score>{score}</score></row>')
+        else:  # a second writer: elements swapped
+            recs.append(f'<row id="{i}"><score>{score}</score>'
+                        f'<name>{name}</name></row>')
+    data = ("<cat>\n" + "\n".join(recs) + "\n</cat>").encode()
+    p = tmp_path / "d.xml"
+    p.write_bytes(data)
+    asm = FlatAssembler.try_create(SCHEMA, "PERMISSIVE")
+    assert asm._columnar_ok
+    split = (str(p), 0, len(data), "TEXT", 0)
+    flts = [In(("score",), (1.5, 3.0))]
+    assert compile_conjunction_arrow(flts, SCHEMA) is None
+    keep = compile_conjunction([compile_filter(f, SCHEMA) for f in flts])
+    got = list(asm.fused_split_batches(split, "row", batch_rows=64,
+                                       predicate=keep))
+    assert all(b.num_rows for b in got)
+    want = [r for r in _span_path_rows(asm, data, "row", [split]) if keep(r)]
+    assert _batch_rows(got) == want
+    assert len(want) == 600 - 128 - len(
+        [i for i in range(600) if not 192 <= i < 320 and i % 3 == 1])
+    assert (500, "a&b", 3.0) in want
 
 
 def test_upstream_plan_reuse_leaks_pushed_filters(spark, tmp_path):

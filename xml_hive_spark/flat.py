@@ -18,12 +18,17 @@ a construct the regexes can't prove flat — CDATA/comments/PI/DOCTYPE
 (``<!``/``<?``), quotes inside a non-root tag (attributes on child
 elements), nested elements, residual ``&`` after entity substitution,
 non-UTF8 bytes, or a coercion failure — is re-parsed by the exact
-ElementTree path for that record only. A cross-path equivalence test
-(tests/test_flat_fastpath.py) pins fast == slow on every guard class.
+ElementTree path for that record only. tests/test_flat_fastpath.py pins
+fast_row == the ElementTree path on every guard class, and
+tests/test_fused_scan.py pins the batches of :meth:`FlatAssembler.
+fused_split_batches` to the exact span scan (``reader.iter_record_spans``
++ ``fast_row``/``parse_record_safe``).
 """
 
 from __future__ import annotations
 
+import contextlib
+import operator
 import re
 from datetime import date
 from decimal import Decimal
@@ -333,13 +338,12 @@ class _Template:
             # inter-record comments, so decoy comments no longer break a
             # uniform run into exact-token steps. The empty group ()
             # marks where the RECORD ends (group len(groups)+1): the
-            # columnar raw path re-reads [start, record_end) on
-            # rejection, and absorbed comments must not be part of that
-            # span. An incomplete comment (terminator beyond the
-            # buffered window) simply isn't absorbed — the optional
-            # group matches zero comments and the next anchored record
-            # match fails into the exact machinery, which handles
-            # refills.
+            # batch sink re-reads [start, record_end) on rejection, and
+            # absorbed comments must not be part of that span. An
+            # incomplete comment (terminator beyond the buffered window)
+            # simply isn't absorbed — the optional group matches zero
+            # comments and the next anchored record match fails into the
+            # exact machinery, which handles refills.
             run_src = bytes(pat) + b"()(?:[ \t\r\n]*<!--.*?-->)*[ \t\r\n]*"
             rx_run = re.compile(run_src, re.DOTALL)
             # multi-record form: one C-level match consumes a RUN of up
@@ -379,12 +383,6 @@ class _Template:
             return None
         return self.extract_groups(m.groups())
 
-    def extract_match(self, m: "re.Match") -> tuple | None:
-        """Values from an already-anchored template match (the fused scan
-        matches the template against the split buffer in place — no
-        record slice, no fullmatch; see FlatAssembler.iter_split_rows)."""
-        return self.extract_groups(m.groups())
-
     def _extract_groups_generic(self, groups_raw) -> tuple | None:
         """Reference implementation of the capture→row pipeline; the
         compiled ``extract_groups`` must be observationally identical
@@ -406,8 +404,8 @@ class _Template:
 
 
 class _TmplChange:
-    """Raw-mode scan sentinel: the active template changed (first learn
-    or a drift re-learn). The columnar sink must flush caps accumulated
+    """Scan sentinel: the active template changed (first learn
+    or a drift re-learn). The batch sink must flush caps accumulated
     under the PREVIOUS template before interpreting any further run
     captures — capture group order is template-specific."""
 
@@ -475,9 +473,8 @@ class FlatAssembler:
         self.mode = mode
         self.fields = fields
         self._n_fields = len(fields)
-        self._scan_tmpl: "_Template | None" = None
         # columnar batch conversion covers string/int/float targets;
-        # bool/decimal/date keep the (rare) per-row path
+        # batches of a bool/decimal/date schema convert per row
         self._columnar_ok = all(
             isinstance(
                 f.dataType,
@@ -543,16 +540,16 @@ class FlatAssembler:
 
     # --------------------------------------------------------- fused scan
 
-    def iter_split_rows(self, split: tuple, row_tag: str):
-        """Phase C + assembly FUSED: yield row tuples for one annotated
-        split without materializing per-record byte slices.
-
-        At every depth-0 record boundary the learned template is matched
-        DIRECTLY against the split buffer (``rx.match(buf, pos)``): for a
-        run of uniform records this replaces the windowed token scan, the
-        record slice, and the per-record fullmatch with a single C-level
-        anchored match per record (measured ~2.5x end-to-end on the 1 GiB
-        bench scan vs the span-then-extract pipeline).
+    def _fused_scan(self, f, row_tag: str, start: int, end: int,
+                    state: str, depth: int):
+        """Phase C + assembly FUSED over one split of ``f``. At every
+        depth-0 record boundary the learned template is matched DIRECTLY
+        against the split buffer: a run of uniform records yields
+        ``[captures, abs_start, abs_end]`` items (captures is a list of
+        tuples for an ``rx_multi`` run) with no per-record byte slice;
+        every other record yields its value tuple from the exact path,
+        and a ``_TmplChange`` precedes the first capture of each new
+        template.
 
         EXACTNESS: the template is anchored at the scan cursor, so it can
         only consume bytes that ARE a complete uniform record starting
@@ -566,18 +563,6 @@ class FlatAssembler:
         the span-based path is pinned property-style in
         tests/test_fused_scan.py over generated documents and full cut
         sweeps."""
-        from xml_hive_spark.reader import ST_TEXT
-
-        path, a, b = split[0], split[1], split[2]
-        state = split[3] if len(split) > 3 else ST_TEXT
-        depth = split[4] if len(split) > 4 else 0
-        from xml_hive_spark.reader import open_xml
-
-        with open_xml(path) as f:
-            yield from self._fused_scan(f, row_tag, a, b, state, depth)
-
-    def _fused_scan(self, f, row_tag: str, start: int, end: int,
-                    state: str, depth: int, raw: bool = False):
         from xml_hive_spark.reader import (
             ST_TEXT,
             _Buf,
@@ -608,8 +593,8 @@ class FlatAssembler:
         tmpl: _Template | None = None
         learn_budget = 8
         miss_streak = 0
-        tmpl_epoch = 0  # bumped on every (re)learn; raw mode emits a
-        sent_epoch = 0  # _TmplChange sentinel when they diverge
+        tmpl_epoch = 0  # bumped on every (re)learn; a _TmplChange
+        sent_epoch = 0  # sentinel is yielded when they diverge
         fast_row = self.fast_row
         search_from = pos  # proven token-free below this (refill re-scans)
 
@@ -624,9 +609,6 @@ class FlatAssembler:
                 if tmpl is None:
                     learn_budget -= 1
                     tmpl = _Template.learn(rec, self.fields)
-                    # the columnar sink reads the learned template to map
-                    # run-match captures back to schema fields
-                    self._scan_tmpl = tmpl
                     if tmpl is not None:
                         tmpl_epoch += 1
                 else:
@@ -647,7 +629,6 @@ class FlatAssembler:
                         nt = _Template.learn(rec, self.fields)
                         if nt is not None:
                             tmpl = nt
-                            self._scan_tmpl = nt
                             tmpl_epoch += 1
             if vals is None:
                 vals = parse_record_safe(rec, self.struct, self.mode)
@@ -673,61 +654,49 @@ class FlatAssembler:
                     # pattern also consumes the inter-record whitespace
                     # and complete comments (record ends at end_group)
                     run_match = tmpl.rx_run.match
-                    extract = tmpl.extract_groups
                     end_group = tmpl.end_group
                     rel = pos - base
                     lo_guard = (avail - LOOKAHEAD) - base if not buf.eof \
                         else len(data)
                     end_rel = end - base
                     advanced = False
-                    if raw:
-                        # run-BATCHED fast path: rx_multi consumes up to
-                        # 64 uniform records in ONE C match; findall
-                        # re-extracts every record's captures over that
-                        # proven span in one more C call — zero
-                        # per-record Python dispatch. Runs that would
-                        # cross the split end or the buffered-lookahead
-                        # guard are left to the per-record loop below,
-                        # which owns boundary exactness unchanged.
-                        multi_match = tmpl.rx_multi.match
-                        run_findall = tmpl.rx_run.findall
-                        hi = end_rel if end_rel < lo_guard else lo_guard
-                        while rel < hi:
-                            mm = multi_match(data, rel)
-                            if mm is None:
-                                break
-                            e = mm.end()
-                            if e > hi:
-                                break
-                            yield [run_findall(data, rel, e),
-                                   base + rel, base + e]
-                            rel = e
-                            advanced = True
+                    # run-BATCHED fast path: rx_multi consumes up to 64
+                    # uniform records in ONE C match; findall re-extracts
+                    # every record's captures over that proven span in
+                    # one more C call — zero per-record Python dispatch.
+                    # Runs that would cross the split end or the
+                    # buffered-lookahead guard are left to the per-record
+                    # loop below, which owns boundary exactness unchanged.
+                    multi_match = tmpl.rx_multi.match
+                    run_findall = tmpl.rx_run.findall
+                    hi = end_rel if end_rel < lo_guard else lo_guard
+                    while rel < hi:
+                        mm = multi_match(data, rel)
+                        if mm is None:
+                            break
+                        e = mm.end()
+                        if e > hi:
+                            break
+                        yield [run_findall(data, rel, e), base + rel, base + e]
+                        rel = e
+                        advanced = True
                     while rel < end_rel:
                         if rel > lo_guard:
                             break  # too close to the tail to trust a miss
                         m = run_match(data, rel)
                         if m is None:
                             break
-                        if raw:
-                            # columnar mode: capture values are extracted
-                            # EAGERLY (groups() copies out of the live
-                            # bytearray buffer — compaction mutates it in
-                            # place, so deferred reads would see shifted
-                            # content) but validated/converted by the
-                            # batch sink. Advancing is safe — the
-                            # anchored match consumed exactly one
-                            # well-formed record, the same bytes the
-                            # exact path would consume; a value the sink
-                            # later rejects re-reads [abs start, abs end)
-                            # from the file with identical row semantics.
-                            yield [m.groups(), base + rel,
-                                   base + m.end(end_group)]
-                        else:
-                            vals = extract(m.groups())
-                            if vals is None:
-                                break
-                            yield vals
+                        # capture values are extracted EAGERLY (groups()
+                        # copies out of the live bytearray buffer —
+                        # compaction mutates it in place, so deferred
+                        # reads would see shifted content) but validated
+                        # and converted by the batch sink. Advancing is
+                        # safe — the anchored match consumed exactly one
+                        # well-formed record, the same bytes the exact
+                        # path would consume; a value the sink later
+                        # rejects re-reads [abs start, abs end) from the
+                        # file with identical row semantics.
+                        yield [m.groups(), base + rel, base + m.end(end_group)]
                         rel = m.end()
                         advanced = True
                     if advanced:
@@ -781,7 +750,7 @@ class FlatAssembler:
                     d -= 1
                     if d == 0 and rec_start is not None:
                         vals = emit(buf.slice(rec_start, ne))
-                        if raw and tmpl_epoch != sent_epoch:
+                        if tmpl_epoch != sent_epoch:
                             sent_epoch = tmpl_epoch
                             yield _TmplChange(tmpl)
                         if vals is not None:
@@ -795,7 +764,7 @@ class FlatAssembler:
                 if self_closing:
                     if d == 0:
                         vals = emit(buf.slice(s, after))
-                        if raw and tmpl_epoch != sent_epoch:
+                        if tmpl_epoch != sent_epoch:
                             sent_epoch = tmpl_epoch
                             yield _TmplChange(tmpl)
                         if vals is not None:
@@ -811,48 +780,54 @@ class FlatAssembler:
 
     def fused_split_batches(self, split: tuple, row_tag: str,
                             batch_rows: int = 32768, predicate=None,
-                            arrow_predicate=None):
-        """Arrow batches straight from the fused scan (the DataSource
-        read path for flat schemas). Same batch contract as
-        :meth:`batches`.
+                            arrow_predicate=None, raw_limit=None):
+        """Arrow batches (schema = Spark's Arrow image of the StructType,
+        so the DataSource worker passes them through) for one annotated
+        split — the one read path of every flat schema, batch and
+        streaming. ``raw_limit`` caps the compressed bytes read
+        (``reader.open_xml``).
 
-        With a string/int/float schema, run captures are converted
-        COLUMNAR (``_flush_columnar``): the hot loop yields raw match
-        objects and pyarrow compute does the utf8-validate/trim/cast per
-        column in C — per-row Python conversion only runs for batches
-        the bulk checks flag (entities, information-separator
-        whitespace, cast failures, '<' inside an attribute value),
-        keeping value semantics bit-identical to the row path
-        (equivalence property-tested in test_fused_scan.py).
+        Run captures are converted COLUMNAR (``_flush_columnar``): pyarrow
+        compute does the utf8-validate/trim/cast per column in C. A batch
+        is converted per row (``_run_rows``) instead when the bulk checks
+        flag it (entities, information-separator whitespace, cast
+        failures, '<' inside an attribute value), when the schema has a
+        bool/decimal/date field, or when a pushed ``predicate`` has no
+        ``arrow_predicate`` twin (``pushdown.compile_conjunction_arrow``);
+        then the tri-valued row predicate filters the tuples. Otherwise a
+        pushed filter is one vectorized Kleene mask per converted batch.
+        Empty batches are not yielded. Equivalence with the exact span
+        path is property-tested in tests/test_fused_scan.py.
 
-        Pushed predicates keep the columnar kernel when they have an
-        arrow compilation (``pushdown.compile_conjunction_arrow``): each
-        converted batch is filtered with one vectorized Kleene mask.
-        Only when a pushed filter has NO arrow twin (bool/decimal/date
-        columns, float set-membership) does the scan drop to the row
-        path with the tri-valued Python ``predicate``."""
-        if self._columnar_ok and (predicate is None
-                                  or arrow_predicate is not None):
-            it = self._fused_batches_columnar(split, row_tag, batch_rows)
-            if predicate is None:
-                yield from it
-                return
-            for batch in it:
-                kept = batch.filter(arrow_predicate(batch))
-                if kept.num_rows:
-                    yield kept
-            return
-        yield from self._rows_to_batches(
-            self.iter_split_rows(split, row_tag), batch_rows, predicate
-        )
+        32k-row batches measured ~14% faster end-to-end than 8k on the
+        1 GiB bench (fewer pa.array calls + fewer worker→JVM frames)."""
+        row_pred = predicate if arrow_predicate is None else None
+        for batch in self._scan_batches(split, row_tag, batch_rows,
+                                        row_pred, raw_limit):
+            if arrow_predicate is not None:
+                batch = batch.filter(arrow_predicate(batch))
+            if batch.num_rows:
+                yield batch
 
-    def _fused_batches_columnar(self, split: tuple, row_tag: str,
-                                batch_rows: int):
-        from xml_hive_spark.reader import ST_TEXT
+    def _scan_batches(self, split: tuple, row_tag: str, batch_rows: int,
+                      predicate, raw_limit):
+        from xml_hive_spark.reader import ST_TEXT, open_xml
 
         path, a, b = split[0], split[1], split[2]
         state = split[3] if len(split) > 3 else ST_TEXT
         depth = split[4] if len(split) > 4 else 0
+        stack = contextlib.ExitStack()
+        fhs: list = []
+
+        def reread():
+            # one span re-read handle per split, opened on first use: span
+            # offsets only increase, so a codec file's seeks move forward
+            # and never decompress the member again from byte 0
+            if not fhs:
+                fhs.append(stack.enter_context(
+                    open_xml(path, raw_limit=raw_limit)))
+            return fhs[0]
+
         caps: list = []    # capture tuples, one per template row
         spans: list = []   # (row_count, abs_start, abs_end): count==1 →
         # one record's byte span; count>1 → a RUN of count contiguous
@@ -860,18 +835,17 @@ class FlatAssembler:
         exacts: list = []  # (row_idx_within_batch, value tuple)
         n = 0
         cur_tmpl = None  # the template that produced the pending caps
-        from xml_hive_spark.reader import open_xml
 
-        with open_xml(path) as f:
-            for item in self._fused_scan(f, row_tag, a, b, state, depth,
-                                         raw=True):
+        with stack, open_xml(path, raw_limit=raw_limit) as f:
+            for item in self._fused_scan(f, row_tag, a, b, state, depth):
                 if type(item) is _TmplChange:
                     # capture order is template-specific: anything
                     # accumulated under the previous template must flush
                     # before runs of the new one land in the same batch
                     if caps:
                         yield self._flush_columnar(
-                            caps, spans, exacts, n, path, cur_tmpl
+                            caps, spans, exacts, n, reread, cur_tmpl,
+                            predicate,
                         )
                         caps, spans, exacts, n = [], [], [], 0
                     cur_tmpl = item.tmpl
@@ -891,12 +865,12 @@ class FlatAssembler:
                         n += 1
                 if n >= batch_rows:
                     yield self._flush_columnar(
-                        caps, spans, exacts, n, path, cur_tmpl
+                        caps, spans, exacts, n, reread, cur_tmpl, predicate
                     )
                     caps, spans, exacts, n = [], [], [], 0
             if n:
                 yield self._flush_columnar(
-                    caps, spans, exacts, n, path, cur_tmpl
+                    caps, spans, exacts, n, reread, cur_tmpl, predicate
                 )
 
     def _arrow_schema(self):
@@ -913,35 +887,40 @@ class FlatAssembler:
         return cached
 
     def _flush_columnar(self, caps: list, spans: list, exacts: list,
-                        n: int, path: str, tmpl=None):
+                        n: int, reread, tmpl, predicate):
+        """One batch from the pending captures and exact-path rows.
+        ``reread()`` returns the split's handle for span re-reads; a row
+        ``predicate`` forces per-row conversion and filters the tuples."""
         import numpy as np
         import pyarrow as pa
 
-        if tmpl is None:
-            tmpl = self._scan_tmpl
         aschema, atypes = self._arrow_schema()
-        idx_exact = np.fromiter(
-            (i for i, _ in exacts), dtype=np.int64, count=len(exacts)
-        )
         try:
+            if not self._columnar_ok or predicate is not None:
+                raise _NeedRowPath
             run_cols = self._convert_run_columns(caps, atypes, tmpl)
         except _NeedRowPath:
-            # something in this batch needs exact per-row semantics:
             # convert run matches row-wise (with record re-parse fallback
             # for rejected rows) and merge with the exact rows by index
-            run_global = np.setdiff1d(np.arange(n), idx_exact)
-            tuples = [
-                (int(run_global[j]), vals)
-                for j, vals in self._run_rows(caps, spans, path, tmpl)
-            ] + exacts
-            tuples.sort()
-            return self._tuples_to_batch(
-                [v for _, v in tuples], aschema, atypes
-            )
+            rows = self._run_rows(caps, spans, reread, tmpl)
+            if exacts:
+                slots = [None] * n
+                for i, v in exacts:
+                    slots[i] = v
+                run = iter(rows)
+                rows = [next(run) if v is None else v for v in slots]
+            if None in rows:
+                rows = [v for v in rows if v is not None]
+            if predicate is not None:
+                rows = list(filter(predicate, rows))
+            return self._tuples_to_batch(rows, aschema, atypes)
 
         if not exacts:
             return pa.RecordBatch.from_arrays(run_cols, schema=aschema)
         # stitch: [run values..., exact values...] permuted into order
+        idx_exact = np.fromiter(
+            (i for i, _ in exacts), dtype=np.int64, count=len(exacts)
+        )
         take = np.empty(n, dtype=np.int64)
         is_exact = np.zeros(n, dtype=bool)
         is_exact[idx_exact] = True
@@ -954,7 +933,7 @@ class FlatAssembler:
             cols.append(pa.concat_arrays([run_arr, exact_arr]).take(take_arr))
         return pa.RecordBatch.from_arrays(cols, schema=aschema)
 
-    def _run_rows(self, caps: list, spans: list, path: str, tmpl=None):
+    def _run_rows(self, caps: list, spans: list, reread, tmpl):
         """Per-row conversion of template captures — the exact-path
         fallback for batches the columnar checks flag. Mirrors emit():
         template-capture extraction first; a rejected row re-reads its
@@ -963,63 +942,49 @@ class FlatAssembler:
         run-batched spans (count > 1) the per-record byte spans are
         recovered by re-matching ``rx_run`` over the re-read run bytes —
         the same pattern over the same bytes reproduces the same
-        decomposition."""
-        out = []
-        fh = None
-        if tmpl is None:
-            tmpl = self._scan_tmpl
-
-        def reparse(rec: bytes):
-            vals = self.fast_row(rec)
-            if vals is None:
-                vals = parse_record_safe(rec, self.struct, self.mode)
-            return vals  # None → DROPMALFORMED drop
-
-        try:
-            j = 0
-            for count, a, b in spans:
-                # count==1 deliberately shares the run logic: a length-1
-                # rx_multi run's span end includes absorbed trailing
-                # whitespace/comments (mm.end(), not end_group), so the
-                # re-read must re-derive the clean record span via rx_run
-                # exactly like longer runs — otherwise the reparsed (and
-                # corrupt-captured) text would differ by batch shape
-                vlist = [
-                    tmpl.extract_groups(caps[j + i]) for i in range(count)
+        decomposition. Returns one value tuple per capture, None where
+        the record is dropped (DROPMALFORMED). A batch of exact rows
+        only (no template learned yet) has no captures and no ``tmpl``."""
+        if not caps:
+            return []
+        out = list(map(tmpl.extract_groups, caps))
+        if None not in out:
+            return out
+        j = 0
+        for count, a, b in spans:
+            # count==1 deliberately shares the run logic: a length-1
+            # rx_multi run's span end includes absorbed trailing
+            # whitespace/comments (mm.end(), not end_group), so the
+            # re-read must re-derive the clean record span via rx_run
+            # exactly like longer runs — otherwise the reparsed (and
+            # corrupt-captured) text would differ by batch shape
+            if None in out[j:j + count]:
+                fh = reread()
+                fh.seek(a)
+                blob = fh.read(b - a)
+                rel_spans = [
+                    (m.start(), m.end(tmpl.end_group))
+                    for m in tmpl.rx_run.finditer(blob)
                 ]
-                if any(v is None for v in vlist):
-                    if fh is None:
-                        from xml_hive_spark.reader import open_xml
-
-                        fh = open_xml(path)
-                    fh.seek(a)
-                    blob = fh.read(b - a)
-                    rel_spans = [
-                        (m.start(), m.end(tmpl.end_group))
-                        for m in tmpl.rx_run.finditer(blob)
-                    ]
-                    for i, v in enumerate(vlist):
-                        if v is not None:
-                            continue
-                        # i < len(rel_spans) always holds for an
-                        # unchanged file; an empty rec (file rewritten
-                        # underneath) flows through the malformed policy
-                        rec = (
-                            blob[rel_spans[i][0]:rel_spans[i][1]]
-                            if i < len(rel_spans)
-                            else b""
-                        )
-                        vlist[i] = reparse(rec)
-                for i, v in enumerate(vlist):
-                    if v is not None:
-                        out.append((j + i, v))
-                j += count
-        finally:
-            if fh is not None:
-                fh.close()
+                for i in range(count):
+                    if out[j + i] is not None:
+                        continue
+                    # i < len(rel_spans) always holds for an unchanged
+                    # file; an empty rec (file rewritten underneath)
+                    # flows through the malformed policy
+                    rec = (
+                        blob[rel_spans[i][0]:rel_spans[i][1]]
+                        if i < len(rel_spans)
+                        else b""
+                    )
+                    vals = self.fast_row(rec)
+                    if vals is None:  # None here = DROPMALFORMED drop
+                        vals = parse_record_safe(rec, self.struct, self.mode)
+                    out[j + i] = vals
+            j += count
         return out
 
-    def _convert_run_columns(self, caps: list, atypes: list, tmpl=None):
+    def _convert_run_columns(self, caps: list, atypes: list, tmpl):
         """Bulk-convert run-match captures with pyarrow compute; raises
         :class:`_NeedRowPath` whenever a bulk check cannot PROVE the
         columnar result equals the per-row pipeline:
@@ -1043,8 +1008,6 @@ class FlatAssembler:
         R = len(caps)
         if R == 0:  # batch of exact-path rows only (e.g. pre-template)
             return [pa.nulls(0, t) for t in atypes]
-        if tmpl is None:
-            tmpl = self._scan_tmpl
         covered = {}
         for gi, (fi, _conv, is_elem) in enumerate(tmpl.groups):
             covered[fi] = (gi, is_elem)
@@ -1099,77 +1062,10 @@ class FlatAssembler:
     def _tuples_to_batch(self, tuples: list, aschema, atypes):
         import pyarrow as pa
 
-        cols: list[list] = [[] for _ in range(self._n_fields)]
-        for vals in tuples:
-            for c, v in zip(cols, vals):
-                c.append(v)
+        # one itemgetter pass per column: no iterator built per row
+        cols = [list(map(operator.itemgetter(i), tuples))
+                for i in range(self._n_fields)]
         return pa.RecordBatch.from_arrays(
             [pa.array(c, type=t) for c, t in zip(cols, atypes)],
             schema=aschema,
         )
-
-    # ------------------------------------------------------------- batching
-
-    def _rows_to_batches(self, rows, batch_rows: int, predicate):
-        """Shared tuple-iterator → ``pyarrow.RecordBatch`` accumulation
-        (schema = Spark's Arrow image of the StructType, so the
-        DataSource worker passes batches through) used by both
-        :meth:`batches` and :meth:`fused_split_batches`.
-
-        ``predicate`` (pushed-filter conjunction, pushdown.py) is applied
-        to each row tuple before it is appended — filtered records never
-        reach Arrow or the JVM."""
-        import pyarrow as pa
-
-        aschema, atypes = self._arrow_schema()
-        cols: list[list] = [[] for _ in range(self._n_fields)]
-        n = 0
-        for vals in rows:
-            if predicate is not None and not predicate(vals):
-                continue
-            for c, v in zip(cols, vals):
-                c.append(v)
-            n += 1
-            if n >= batch_rows:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c, type=t) for c, t in zip(cols, atypes)],
-                    schema=aschema,
-                )
-                cols = [[] for _ in range(self._n_fields)]
-                n = 0
-        if n:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=t) for c, t in zip(cols, atypes)],
-                schema=aschema,
-            )
-
-    def batches(self, record_iter, batch_rows: int = 32768, predicate=None):
-        """``record_iter`` yields record byte strings; yields
-        ``pyarrow.RecordBatch`` (see :meth:`_rows_to_batches`).
-
-        32k-row batches measured ~14% faster end-to-end than 8k on the
-        1 GiB bench (fewer pa.array calls + fewer worker→JVM frames);
-        memory per batch stays a few MB for flat scalar schemas."""
-
-        def rows():
-            fast_row = self.fast_row
-            # whole-record template: learned from the first few records
-            # that pass the flatness guards; extracts all fields in ONE
-            # fullmatch for the (dominant) uniform-layout case, rejects
-            # into the per-field path on any structural difference
-            tmpl: _Template | None = None
-            learn_budget = 8
-            for rec in record_iter:
-                vals = tmpl.extract(rec) if tmpl is not None else None
-                if vals is None:
-                    vals = fast_row(rec)
-                    if vals is not None and tmpl is None and learn_budget > 0:
-                        learn_budget -= 1
-                        tmpl = _Template.learn(rec, self.fields)
-                if vals is None:
-                    vals = parse_record_safe(rec, self.struct, self.mode)
-                    if vals is None:  # DROPMALFORMED
-                        continue
-                yield vals
-
-        yield from self._rows_to_batches(rows(), batch_rows, predicate)

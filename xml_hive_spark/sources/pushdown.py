@@ -279,8 +279,10 @@ _PA_INTS = {IntegerType: "int32", LongType: "int64",
 def compile_filter_arrow(f: Filter, schema: StructType):
     """Compile one pushed filter to a Kleene mask function
     ``RecordBatch -> BooleanArray`` (null = SQL NULL), or None when
-    this shape/type has no columnar compilation (caller keeps the row
-    path; acceptance is still decided by :func:`compile_filter`)."""
+    this shape/type has no columnar compilation (the flat scan then
+    converts the batch per row and filters the tuples with
+    :func:`compile_filter`'s predicate, which decides acceptance either
+    way)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -301,8 +303,8 @@ def compile_filter_arrow(f: Filter, schema: StructType):
     is_int = type(dtype) in _PA_INTS
     is_flt = isinstance(dtype, (FloatType, DoubleType))
     if not (is_str or is_int or is_flt):
-        # bool/decimal/date columns never take the columnar scan anyway
-        # (FlatAssembler._columnar_ok) — don't bother compiling
+        # bool/decimal/date columns are converted per row anyway
+        # (FlatAssembler._columnar_ok), so the row predicate filters them
         return None
 
     def lit_ok(lit):
@@ -344,7 +346,7 @@ def compile_filter_arrow(f: Filter, schema: StructType):
     if isinstance(f, In):
         lits = f.value
         if lits is None or is_flt:
-            # float set-membership stays on the row path: is_in would
+            # float set-membership filters per-row tuples: is_in would
             # cast the value set to the column's float32, changing which
             # literals are representable
             return None

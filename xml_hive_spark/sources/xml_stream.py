@@ -51,7 +51,6 @@ from xml_hive_spark.reader import (
     _read_split,
     _reject_utf16,
     chain_splits,
-    iter_split_record_bytes,
 )
 from xml_hive_spark.sources.xml_datasource import _opt
 from xml_hive_spark.xsd import xsd_to_struct
@@ -219,9 +218,8 @@ class XmlStreamReader(DataSourceStreamReader):
         limit = partition.raw_limit or None
         asm = FlatAssembler.try_create(self._schema, self._mode)
         if asm is not None:
-            yield from asm.batches(
-                iter_split_record_bytes(split, self._row_tag, raw_limit=limit)
-            )
+            yield from asm.fused_split_batches(split, self._row_tag,
+                                               raw_limit=limit)
         else:
             yield from _read_split(split, self._row_tag, self._schema,
                                    self._mode, raw_limit=limit)
