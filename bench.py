@@ -4,10 +4,7 @@ Runs the headline queries from the registry at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints
 
     {"metric": "headline_total_sec", "value": N, "unit": "sec",
-     "queries": {name: sec, ...}, "med": {name: sec, ...},
-     "sf": 0.1, "calib_sec": C, "calib_ref_sec": R,
-     "calib_py_sec": P, "calib_py_ref_sec": PR,
-     "value_calibrated": N*R/C}
+     "queries": {name: sec, ...}, "med": {name: sec, ...}, "sf": 0.1}
 
 The per-query band is (min, med) of the 3 timed samples: ``queries``
 IS the min (it always was), ``med`` carries the median. r10's verbose
@@ -15,40 +12,14 @@ IS the min (it always was), ``med`` carries the median. r10's verbose
 line past the driver's 2000-char stdout tail capture — BENCH_r10's
 artifact lost its head and failed to parse (VERDICT r10 item 5). The
 line is now compact-separated and length-asserted < 1900 chars so the
-committed artifact always parses from the tail alone.
+committed artifact always parses from the tail alone. A hot box shows
+med >> min on unchanged-code queries; a real regression moves min
+itself.
 
 Each query is fully executed (count() on the result — forces every
 exchange/agg; results are small so no collect overhead distortion).
-
-Calibration (round 8): a PINNED, code-independent JVM workload
-(whole-stage-codegen xxhash64 fold over spark.range — no disk, no
-Python, no shuffle beyond one scalar agg) is timed min-of-5 per run.
-Its runtime moves with machine load exactly like the headline's JVM
-work but never with this repo's code, so
-``value_calibrated = value * calib_ref_sec / calib_sec`` separates
-environment drift from algorithmic change across rounds (the r4 and r7
-episodes: every query drifting 1.2-1.5x in lockstep with unchanged
-plans). ``calib_ref_sec`` is the idle-box reference recorded in
-SCALE.md §"Bench calibration"; cross-round comparisons should use
-``value_calibrated``, single-round absolute numbers remain ``value``.
-
-Round 10 (r9 verdict item #1 — make the artifact self-defending):
-the JVM-only probe demonstrably under-corrects contention on
-Python-worker-heavy queries (r9: pure-JVM q18 moved 1.03x in the hot
-driver session while pandas-UDF queries moved 1.7-2.2x, yet calib_sec
-moved only +7.6%). Two additions:
-
-* ``calib_py_sec`` — a second pinned workload through the
-  Python/Arrow worker path (mapInPandas numpy fold over spark.range,
-  16 concurrent workers; no repo code). Its idle reference
-  ``calib_py_ref_sec`` is derived in SCALE.md §"Bench calibration".
-  A round whose calib_py_sec/calib_py_ref_sec ratio far exceeds
-  calib_sec/calib_ref_sec is a box with Python-worker contention the
-  JVM probe cannot see — exactly the r9 signature.
-* per-query bands — min (= ``queries``) and median (``med``) of the 3
-  timed samples. A hot box shows med >> min on unchanged-code queries;
-  a real regression moves min itself. This makes a load episode
-  explainable from the committed artifact alone.
+Cross-revision comparisons use an interleaved A/B in one session on
+one host, not this artifact (SCALE.md §"Bench calibration").
 """
 
 from __future__ import annotations
@@ -115,79 +86,6 @@ HEADLINE = [
 ]
 
 
-# Idle-box reference for the calibration workload (min-of-5, recorded
-# round 8 on an otherwise-quiet local[32] box; see SCALE.md §"Bench
-# calibration"). Update ONLY alongside a re-derivation note in SCALE.md.
-CALIB_REF_SEC = 0.38  # idle-box COLD-SESSION value (bench's context):
-#   first-call calibrate() in a fresh JVM measured 0.341-0.421 s across
-#   repeats on a quiet box (2026-08-14 round 8); fully C2-warmed
-#   steady state reaches 0.277. See SCALE.md §"Bench calibration".
-
-# Idle reference for the Python-worker probe. RE-DERIVED round 11 on
-# a genuinely quiet box (JVM probe 0.37-0.42, i.e. at/below its own
-# idle ref — the precondition the r10 note required): cold-session
-# first-call values measured 0.299 / 0.315 / 0.324 across three fresh
-# sessions (a fourth read 1.18 immediately after a bench teardown —
-# the Python-worker contention episode the probe exists to flag, so
-# excluded). 0.31 = mid-range, same convention as CALIB_REF_SEC. The
-# r10 value (0.41) was derived under Rj = 1.21 load and was ~30% high,
-# which under-reported Python-side contention ratios in r10 artifacts.
-# See SCALE.md §"Bench calibration".
-CALIB_PY_REF_SEC = 0.31
-
-
-def calibrate(spark) -> float:
-    """Min-of-5 timing of a fixed JVM-only workload: fold xxhash64 over
-    2^31 rows of spark.range into one sum. Whole-stage codegen end to
-    end — no disk, no Python workers, no repo code — so it measures the
-    machine, not the engine under test."""
-    import time as _t
-
-    q = lambda: spark.range(1 << 31).selectExpr(  # noqa: E731
-        "bit_xor(xxhash64(id)) AS h"  # overflow-free under ANSI mode
-    ).collect()
-    for _ in range(3):  # warm: C2 JIT needs several passes to converge
-        q()
-    best = float("inf")
-    for _ in range(5):
-        t0 = _t.perf_counter()
-        q()
-        best = min(best, _t.perf_counter() - t0)
-    return round(best, 4)
-
-
-def calibrate_py(spark) -> float:
-    """Min-of-5 timing of a fixed PYTHON-WORKER workload: mapInPandas
-    numpy fold over spark.range — Arrow serde + pandas batch iteration +
-    numpy arithmetic across 16 concurrent Python workers, no repo code,
-    no disk. Mirrors the cost structure of the headline's Pandas-UDF
-    stages (codec, einsum verify, signature build) so Python-side box
-    contention — invisible to the JVM-only probe — shows up here."""
-    import time as _t
-
-    import numpy as np
-    import pandas as pd
-
-    def fold(batches):
-        acc = 0.0
-        for pdf in batches:
-            v = pdf["id"].to_numpy(dtype=np.float64)
-            acc += float(np.sqrt(v + 1.0).sum())
-        yield pd.DataFrame({"s": [acc]})
-
-    q = lambda: spark.range(1 << 23, numPartitions=16).mapInPandas(  # noqa: E731
-        fold, "s double"
-    ).agg({"s": "sum"}).collect()
-    for _ in range(3):  # warm: worker pool spin-up + Arrow codepath JIT
-        q()
-    best = float("inf")
-    for _ in range(5):
-        t0 = _t.perf_counter()
-        q()
-        best = min(best, _t.perf_counter() - t0)
-    return round(best, 4)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -198,14 +96,6 @@ def main() -> None:
 
     spark = get_spark(app_name="xml-hive-spark-bench")
     registry = all_queries()
-
-    calib = calibrate(spark)
-    calib_py = calibrate_py(spark)
-    print(
-        f"# calibration: jvm {calib:.4f}s (ref {CALIB_REF_SEC}), "
-        f"py-worker {calib_py:.4f}s (ref {CALIB_PY_REF_SEC})",
-        file=sys.stderr,
-    )
 
     # untimed warm run immediately before each timed run: JIT/codegen
     # compilation, parquet footer cache, Arrow/Python worker startup —
@@ -245,13 +135,7 @@ def main() -> None:
         "queries": timings,
         "med": medians,
         "sf": sf,
-        "calib_sec": calib,
-        "calib_ref_sec": CALIB_REF_SEC,
-        "calib_py_sec": calib_py,
-        "calib_py_ref_sec": CALIB_PY_REF_SEC,
     }
-    if CALIB_REF_SEC:
-        out["value_calibrated"] = round(total * CALIB_REF_SEC / calib, 3)
     line = json.dumps(out, separators=(",", ":"))
     # the driver keeps only the last 2000 chars of stdout; the artifact
     # must parse from that tail alone (BENCH_r10 lost its head)

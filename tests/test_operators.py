@@ -249,31 +249,113 @@ def test_oracle_floordiv_lint():
     )
 
 
-def test_next_window_plan_valid():
-    """The pre-enumerated next-round driver window (comment block in
-    operators/__init__.py, marker `_R<N>_WINDOW_PLAN`) must stay
-    applyable: exactly 50 unique, registered query names, none of them
-    rows-only-by-design (VERDICT r10 item 4: window slots must buy hash
-    evidence). Guards against registry renames or plan edits drifting
-    between rounds — the rotation policy only works if the plan is
-    mechanically correct at the moment it's applied."""
+def _latest_green(evidence_dir):
+    """{query: latest round with a green driver hash}, CORRECTNESS_r<N>.json."""
+    import json
     import re
+
+    out = {}
+    for path in evidence_dir.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        for name, row in json.loads(path.read_text()).items():
+            if m and row.get("hash_match") is True:
+                out[name] = max(out.get(name, 0), int(m.group(1)))
+    return out
+
+
+def test_next_window_plan_valid(tmp_path):
+    """The driver checks the first 50 entries of all_queries() against
+    DuckDB. Those 50 must be the window computed from the committed
+    CORRECTNESS artifacts: 50 unique, registered names, none of them
+    rows-only (a window slot must buy hash evidence), and every oracled
+    query that has never had a green driver hash among them."""
+    import shutil
     from pathlib import Path
 
     import __spark_entry__ as entry
-    import xml_hive_spark.operators as ops
+    from xml_hive_spark.operators import REGISTRY, driver_window
 
-    src = Path(ops.__file__).read_text()
-    m = re.search(
-        r"# _R\d+_WINDOW_PLAN = \[\n((?:#     \"[a-z0-9_]+\",\n)+)# \]", src
-    )
-    assert m, "_R<N>_WINDOW_PLAN comment block missing"
-    plan = re.findall(r'"([a-z0-9_]+)"', m.group(1))
+    root = Path(__file__).resolve().parents[1]
     reg = all_queries()
-    assert len(plan) == 50, len(plan)
-    assert len(set(plan)) == 50, "duplicate names in the plan"
-    unknown = [n for n in plan if n not in reg]
+    window = list(reg)[:50]
+    assert window == driver_window(REGISTRY, root)
+    assert len(set(window)) == 50, "duplicate names in the window"
+    unknown = [n for n in window if n not in REGISTRY]
     assert not unknown, f"unregistered names: {unknown}"
     oracles = entry.oracle_sql()
-    rows_only = [n for n in plan if n not in oracles]
+    rows_only = [n for n in window if n not in oracles]
     assert not rows_only, f"rows-only entries waste window slots: {rows_only}"
+    green = _latest_green(root)
+    never = [n for n in oracles if n not in green]
+    assert set(never) <= set(window), never
+
+    # pinned evidence (rounds 1-14): plagiarism_detect, added in r13, had
+    # no driver row, and the whole r9-vintage cohort was the oldest
+    for path in root.glob("CORRECTNESS_r*.json"):
+        if int(path.stem.rsplit("_r", 1)[1]) <= 14:
+            shutil.copy(path, tmp_path)
+    pinned = driver_window(REGISTRY, tmp_path)
+    assert "plagiarism_detect" in pinned
+    r14 = _latest_green(tmp_path)
+    r9_vintage = [n for n in oracles if r14.get(n) == 9]
+    assert len(r9_vintage) == 42
+    assert set(r9_vintage) <= set(pinned)
+
+
+def _oracled():
+    from xml_hive_spark.operators import REGISTRY
+
+    all_queries()
+    return [n for n, qd in REGISTRY.items() if qd.oracle is not None]
+
+
+def _write_round(d, rnd, rows):
+    import json
+
+    (d / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(
+        {n: {"rows_match": True, "hash_match": h} for n, h in rows.items()}
+    ))
+
+
+def test_driver_window_without_evidence(tmp_path, monkeypatch):
+    import xml_hive_spark.operators as ops
+
+    monkeypatch.setattr(ops, "_LEAD", {})
+    assert ops.driver_window(ops.REGISTRY, tmp_path) == _oracled()[:50]
+
+
+def test_driver_window_null_hash_is_no_evidence(tmp_path, monkeypatch):
+    import xml_hive_spark.operators as ops
+
+    monkeypatch.setattr(ops, "_LEAD", {})
+    oracled = _oracled()
+    first = oracled[0]
+    _write_round(tmp_path, 1, {first: None})  # rows-only driver row
+    assert ops.driver_window(ops.REGISTRY, tmp_path) == oracled[:50]
+    _write_round(tmp_path, 2, {first: False})  # a red hash is no evidence
+    assert ops.driver_window(ops.REGISTRY, tmp_path) == oracled[:50]
+    _write_round(tmp_path, 3, {first: True})
+    # the only hashed query rotates behind every never-checked one
+    assert ops.driver_window(ops.REGISTRY, tmp_path) == oracled[1:51]
+
+
+def test_driver_window_lead_expires(tmp_path, monkeypatch):
+    import xml_hive_spark.operators as ops
+
+    oracled = _oracled()
+    name = oracled[-1]
+    monkeypatch.setattr(ops, "_LEAD", {name: 15})
+    assert ops.driver_window(ops.REGISTRY, tmp_path) == [name] + oracled[:49]
+    _write_round(tmp_path, 14, {name: True})  # older than the owed round
+    assert ops.driver_window(ops.REGISTRY, tmp_path)[0] == name
+    _write_round(tmp_path, 15, {name: True})
+    assert ops.driver_window(ops.REGISTRY, tmp_path) == oracled[:50]
+
+
+def test_driver_window_rejects_unregistered_lead(tmp_path, monkeypatch):
+    import xml_hive_spark.operators as ops
+
+    all_queries()
+    monkeypatch.setattr(ops, "_LEAD", {"no_such_query": 15})
+    with pytest.raises(KeyError, match="no_such_query"):
+        ops.driver_window(ops.REGISTRY, tmp_path)

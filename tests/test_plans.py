@@ -641,10 +641,7 @@ def test_fan_out_statsless_noop(spark, sf_dir):
 
 def test_bench_contract():
     """bench.py is a driver contract: every HEADLINE name must be a
-    registered query, and both calibration probes must carry positive
-    idle references (the r10 telemetry — calib_py_ref_sec beside
-    calib_ref_sec — is what makes a hot-box artifact self-explaining,
-    so a rename or a zeroed ref is a contract break, not a style
+    registered query (a rename is a contract break, not a style
     issue)."""
     import bench
 
@@ -653,9 +650,6 @@ def test_bench_contract():
     reg = all_queries()
     missing = [n for n in bench.HEADLINE if n not in reg]
     assert not missing, f"HEADLINE names not in registry: {missing}"
-    assert bench.CALIB_REF_SEC > 0
-    assert bench.CALIB_PY_REF_SEC > 0
-    assert callable(bench.calibrate) and callable(bench.calibrate_py)
 
 
 def test_guard_size_estimates_are_conservative(spark, sf_dir):

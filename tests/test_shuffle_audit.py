@@ -9,7 +9,12 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.shuffle_audit import _store_totals, measure  # noqa: E402
+from tools.shuffle_audit import (  # noqa: E402
+    _DRAIN_LIMIT_S,
+    _store_totals,
+    drain_storage,
+    measure,
+)
 
 
 def test_store_totals_sees_a_shuffle(spark):
@@ -39,6 +44,23 @@ def test_store_totals_min_stage_id_excludes_old_stages(spark):
     assert empty["shuffle_write"] == 0
     # max_stage_id is reported regardless of the filter window
     assert empty["max_stage_id"] == snap["max_stage_id"]
+
+
+def test_drain_storage_settles_after_broadcast_join(spark):
+    """measure() drains storage memory before each measured run: after a
+    broadcast join and clearCache(), the GC-then-poll loop must see the
+    status store's memoryUsed settle inside its fixed limit."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    cached = spark.range(50_000).selectExpr("id AS k", "id * 3 AS v").cache()
+    spark.range(200_000).selectExpr("id % 50000 AS k") \
+        .join(F.broadcast(cached), "k").count()
+    spark.catalog.clearCache()
+    t0 = time.monotonic()
+    assert drain_storage(spark, "broadcast_probe")
+    assert time.monotonic() - t0 < _DRAIN_LIMIT_S + 0.5
 
 
 def test_measure_delta_is_per_query(spark, sf_dir):

@@ -44,6 +44,7 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -95,6 +96,43 @@ def _store_totals(spark, min_stage_id: int = -1) -> dict[str, int]:
     return tot
 
 
+_DRAIN_LIMIT_S = 5.0
+
+
+def drain_storage(spark, name: str) -> bool:
+    """GC the driver JVM, then wait until executor storage memory settles.
+
+    clearCache() only unpersists DataFrames; torrent broadcast blocks from
+    earlier queries stay in STORAGE memory until a driver GC lets the
+    ContextCleaner reap them, asynchronously. Deep in a 31-query session
+    that debris shrank the unified pool enough that plagiarism_detect's
+    pair-count partial aggregate fell back early and shipped 2.37x its
+    combine-complete bytes (SCALE.md r14). A bare GC hint raced the
+    measured run, so poll the status store's ``memoryUsed`` until two
+    reads 100 ms apart agree, up to ``_DRAIN_LIMIT_S``. Returns False (and
+    warns, naming the query) if it never settled."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    def used() -> int:
+        execs = store.executorList(True)
+        return sum(execs.apply(i).memoryUsed() for i in range(execs.size()))
+
+    sc._jvm.System.gc()
+    deadline = time.monotonic() + _DRAIN_LIMIT_S
+    prev = used()
+    while time.monotonic() < deadline:
+        time.sleep(0.1)
+        cur = used()
+        if cur == prev:
+            return True
+        prev = cur
+    print(f"# WARNING {name}: storage memory still moving "
+          f"{_DRAIN_LIMIT_S:.0f} s after GC; measuring anyway",
+          file=sys.stderr)
+    return False
+
+
 def measure(spark, names, sf_dir: str) -> dict[str, dict[str, int]]:
     from xml_hive_spark.operators import all_queries
 
@@ -112,17 +150,7 @@ def measure(spark, names, sf_dir: str) -> dict[str, dict[str, int]]:
         # actually executes; WITHIN-run persist/reuse still applies,
         # which is the plan behavior being measured.
         spark.catalog.clearCache()
-        # r14: ALSO flush unreferenced broadcast/cache blocks before the
-        # measured run. clearCache() only unpersists DataFrames; torrent
-        # broadcast blocks from every earlier query linger in STORAGE
-        # memory until a driver GC lets the ContextCleaner reap them.
-        # Deep in a 31-query session that debris shrank the unified pool
-        # enough that plagiarism_detect's pair-count partial aggregate
-        # fell back early and shipped 2.37x its combine-complete bytes
-        # (63,726,438 vs 26,868,487) — a MEASUREMENT-STATE artifact the
-        # solo/short-session runs never show. A GC hint per query makes
-        # the measured run start from a canonical memory state.
-        spark.sparkContext._jvm.System.gc()
+        drain_storage(spark, name)
         before = _store_totals(spark)
         qd.fn(spark, sf_dir).count()
         # sum ONLY the measured run's stages (id > before max): old-stage

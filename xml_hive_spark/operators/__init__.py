@@ -13,7 +13,10 @@ the driver's sorted-by-name value hash lines up.
 
 from __future__ import annotations
 
+import json
+import re
 from dataclasses import dataclass
+from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -266,388 +269,59 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         t(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
-_LOADED = False
 _FANOUT_STATS_WARNED = False
+_WINDOW: list[str] | None = None
 
-# Driver-window rotation (round 8). The verify driver snapshots correctness
-# for only the FIRST 50 registry entries (dict order).
-#
-# ROTATION POLICY (mechanical, applied each round):
-#   1. NEVER-driver-checked queries first, oldest registration first —
-#      a query with no CORRECTNESS_r*.json row anywhere is self-certified
-#      (local gate only) and outranks any freshness refresh.
-#   2. If never-checked > 50, defer the entries whose machinery is most
-#      covered by an already-driver-green SIBLING (same operator family,
-#      same join/agg shape); deferred entries LEAD the next round's window.
-#   3. Remaining slots refresh oldest-driver-evidence first (currently the
-#      r2-vintage rows listed below, then the r4 cohort).
-#   4. Queries whose RESULT SEMANTICS changed this round must be
-#      in-window (r8: the three de-funneled retrieval queries — RRF's
-#      oracle moved to rank-cutoff semantics — and, late r8,
-#      graph_pagerank, whose float iteration became exact fixed-point
-#      with a full oracle). Perf-only changes with outputs verified
-#      identical (the r8 persist/positional-filter sweep:
-#      minhash/simhash/embedding-cosine/setsim/ann — all local-gate
-#      green post-change, and all but setsim_join_prefix rows-only by
-#      design) follow normal rotation; the two with stale driver rows
-#      (dedup_minhash_lsh, dedup_simhash, r2-vintage) already lead the
-#      r9 window. Oracle-only upgrades (Spark result unchanged, DuckDB
-#      twin added — late r8: dedup_exact_by_hash, xml_scan_books/
-#      inferred/sql_ddl, streaming_window_counts/stream_join) follow
-#      normal rotation and are queued at the head of r9 so the new
-#      hashes earn driver rows.
-# Window membership is derived by diffing the registry against the union
-# of CORRECTNESS_r*.json keys; outside-window queries are covered
-# meanwhile by the identical local gate (tools/verify_local.py,
-# pandas-canonicalizing like the driver).
-#
-# Round 8 application: 58 registry queries had no driver row after r7
-# (the late-r7 additions) + 1 new this round (pca_explained_variance_2d,
-# the SQL-verifiable PCA witness) = 59 candidates for 50 slots. The 9
-# DEFERRED to lead r9 (rule 2, sibling-green in parens): window_percent_rank
-# (window_rolling_1h r7), join_null_safe_eq (join family r6/r7),
-# lateral_topn_per_group (topk_orders r5 + TakeOrdered plan pins),
-# sql_registered_udf (udf/pandas_udf r4/r5), parquet_codec_zstd
-# (orc/avro/evolution/compaction/zorder r7), daily_new_and_cumulative_users
-# (cohort_retention r7), copurchase_lift (copurchase_pairs r7),
-# twap_time_weighted (asof/tumbling r4 + ohlc/gap-fill in this window),
-# anomaly_zscore_events (anomaly_mad_robust in this window). All 9 are
-# local-gate green. In-window per rule 4: the three de-funneled retrieval
-# queries (knn/maxsim/rrf). r9 plan: the 9 deferred + the 8 r2-vintage
-# rows (agg_approx_distinct, dedup_exact_by_hash, dedup_minhash_lsh,
-# dedup_simhash, multimodal_{decode_stub,feature_extract,frame_sample,
-# resize_stub}) + the oldest r4 rows fill the remainder.
-# Round 9 application: _R9_WINDOW_PLAN applied mechanically (below,
-# now retired) — 9 rule-2 deferrals from r8 + 8 r2-vintage refreshes +
-# the 7 late-r8 full-oracle upgrades + logreg_train_distributed (evicted
-# by the rule-4 graph_pagerank swap) + the r4-vintage cohort = 50.
-# Rule-4 swaps during r9: sample_deterministic (result semantics changed
-# — engine RNG became the portable md5 Bernoulli, now a FULL oracle) and
-# streaming_sessionize (oracle-only upgrade rows-only → full
-# gaps-and-islands + flushed-prefix twin; enforced this round while
-# slots allow rather than queued to r10). Evicted to the r10 plan:
-# sliding_window_agg (exact family siblings tumbling_window_agg +
-# session_window_agg remain in-window) and apply_in_pandas_centered
-# (the Pandas-UDF family has driver-green r6 siblings udf/pandas_udf
-# and the in-window doc_chunks_udtf). Third swap:
-# streaming_stream_join_outer (rows-only → full oracle: min-of-sides
-# watermark + flushed-prefix holdback, boundary probed to the ms)
-# enters; json_roundtrip evicted (csv_roundtrip stays in-window and
-# the avro/orc/zstd roundtrip siblings are driver r7/r8 green).
-# Fourth swap: streaming_dedup_minhash (bucket hash went portable
-# md5+universal-perms, first-seq-wins verdict now fully oracled)
-# enters; embedding_label_centroids evicted (embedding-family siblings
-# pca_explained_variance_2d + embedding_drift_monitor are driver r8
-# green). Fifth/sixth swaps: ann_join_topk + dedup_embedding_cosine
-# (sign-LSH went md5-Rademacher over 2^20-quantized integers and the
-# cosine became a ratio of exact int64 aggregates — both now FULLY
-# oracled, bit-exact cross-engine) enter; hypertable_rollup (siblings
-# agg_rollup r6 + the r8-green timeseries family) and
-# explode_outer_empty_arrays (array_functions r8-green,
-# array_higher_order in-window) evicted to the r10 plan. Seventh/
-# eighth swaps: cosine_topk_ivf + cosine_topk_lsh (integer floor-div
-# centroids / md5-Rademacher planes + quantized cosine — both now
-# FULLY oracled) enter; csv_roundtrip (parquet_codec_zstd keeps the
-# roundtrip family in-window; avro/orc r7-green) and
-# scalar_subquery_ratio (subquery family q2/q4/q22 r5/r6-green)
-# evicted to the r10 plan. Ninth swap: cosine_topk_ivf_kmeans (integer
-# Lloyd's recurrence, 3 iterations unrolled in the DuckDB twin — the
-# pagerank fixed-point discipline applied to ML training) enters;
-# source_stats evicted (profiling-aggregate siblings agg_stats +
-# corpus_provenance_report, the latter driver r8 green).
-# Round 10 application: _R10_WINDOW_PLAN (below, now retired into this
-# list) applied mechanically at round start — the five r4/r5-vintage
-# scalar-function shapes + the four r9 rule-4 evictions lead, then the
-# oldest-driver-evidence refresh cohort (r4 remainder, r5 block).
-# Late-r10 rule-4 swap: logreg_train_distributed's result semantics
-# changed (portable quantized fast-sigmoid trainer + w_l1q witness,
-# rows-only → full oracle) so it enters; xml_write_roundtrip (r8
-# driver evidence, refresh-tail) evicted to the r11 plan.
-# Round 11 application: _R11_WINDOW_PLAN (pre-enumerated in r10,
-# now the live list below) applied mechanically at round start.
-# Derivation (recorded in r10): rule-1 lead pca_project_2d (late-r10
-# addition, only never-driver-checked entry); then the two late-r10
-# oracle-only upgrades (streaming_vector_ingest coarse-replay twin,
-# bpe_learn_merges gaps-and-islands twin) per the r8 convention; then
-# xml_write_roundtrip (the late-r10 rule-4 eviction); then the
-# oldest-driver-evidence refresh cohort, (vintage, name)-sorted: the
-# complete r6-vintage block outside the r10 window (TPC-H q2/q7-q9/
-# q11/q13/q15-q17/q19-q22, the set/window/agg families,
-# scan_project_filter, scd2_merge, the r2-converted dedup siblings)
-# cut at 50; audio_resample_decimate and avro_roundtrip dropped to
-# the r12 tail. One amendment vs the pre-enumerated plan, per VERDICT
-# r10 item 4 (window slots spent on rows-only entries buy no hash
-# evidence): embedding_pca_project (rows-only by design — 64-d
-# eigendecomposition, blocker re-audited in tests/test_operators.py)
-# is excluded and its slot goes to agg_argmax_argmin, the next
-# refresh candidate by (vintage, name) sort (r7 evidence). Zero
-# rows-only-by-design entries remain in this window.
-# Round 12 application: _R12_WINDOW_PLAN (pre-enumerated in r11)
-# applied mechanically at round start, verbatim — no amendments
-# pending (never-driver-checked = 0; the late-r11 oracle-text
-# upgrade ann_join_topk leads per the r8 convention; the r11
-# join-strategy touches setsim_join_prefix/image_phash_dedup are
-# already in the cohort). Rule-4 swaps during r12, if any, evict
-# from the refresh tail (bucketed_join_colocated first).
-# Round 13 application: _R13_WINDOW_PLAN (pre-enumerated in r12, kept
-# below for the record) applied mechanically at round start, with the
-# ONE head amendment VERDICT r12 item 1 ordered: dedup_embedding_cosine
-# leads (its r12 refactor routes the registry entry through the new
-# parameterized embedding_cosine_pairs — code-motion, output verified
-# identical at sf0.01, but per the r8 "new code earns a driver hash"
-# convention the refactored path needs fresh driver evidence; its last
-# driver hash is r9). The eviction comes from the refresh tail:
-# asof_join (the newest r9-vintage name in the plan) drops to the r14
-# tail. setsim_containment_join (the other r12-touched code path)
-# already sits in this cohort, as the plan derivation anticipated.
-_DRIVER_WINDOW = [
-    "dedup_embedding_cosine",
-    "chi_square_independence",
-    "chunk_content_defined",
-    "corpus_curation_pipeline",
-    "corpus_mix_weights",
-    "corpus_provenance_report",
-    "dedup_incremental_ingest",
-    "embedding_drift_monitor",
-    "event_pattern_match",
-    "federated_three_source_join",
-    "filter_top_decile_docs",
-    "forecast_seasonal_naive_backtest",
-    "graph_pagerank",
-    "hive_script_transform",
-    "hybrid_rank_fusion_rrf",
-    "knn_classify_majority",
-    "max_drawdown_per_user",
-    "maxsim_late_interaction",
-    "multimodal_image_augment",
-    "multimodal_tile_composite",
-    "multimodal_video_framesample",
-    "nested_denormalize_roundtrip",
-    "ohlc_bars_hourly",
-    "pareto_skyline_2d",
-    "pca_explained_variance_2d",
-    "phrase_search_positional",
-    "recursive_cte_hierarchy",
-    "regression_slope_closed_form",
-    "rls_masked_view",
-    "sample_stratified_exact",
-    "scd2_early_arriving_fact",
-    "setsim_containment_join",
-    "sketch_kmv_distinct",
-    "sketch_quantile_histogram",
-    "snapshot_change_feed",
-    "spatial_grid_join",
-    "streak_gaps_islands",
-    "streaming_late_data_drop",
-    "streaming_ohlc_bars",
-    "streaming_quantile_histogram",
-    "text_pii_redact",
-    "timeseries_gap_fill",
-    "vacuum_unreferenced",
-    "xml_attribute_roundtrip",
-    "xml_corrupt_capture",
-    "xml_expression_codec",
-    "xsd_generate_roundtrip",
-    "agg_percentiles",
-    "anomaly_zscore_events",
-    "array_higher_order",
-]
+#: Queries whose executing code changed after their last driver hash, with
+#: the round that owes the new hash. An entry leads the driver window until
+#: some CORRECTNESS_r<N>.json with N >= its round holds a green hash for it.
+_LEAD = {
+    "setsim_join_prefix": 15,  # dim_side guard in its pref stage; last hash r12
+    "ann_join_topk": 15,  # shared cosine scoring kernel; last hash r12
+    "dedup_embedding_cosine": 15,  # attach plan on that kernel; last hash r14
+    "xml_stream_scan": 15,  # streaming source on the fused scan; last hash r10
+}
 
-# ROUND-12 WINDOW, PRE-ENUMERATED (apply mechanically at r12 start:
-# replace _DRIVER_WINDOW with this list, run tools/verify_local.py over
-# it, commit first; then rule-4 swap any query whose result semantics
-# change during r12, evicting from the refresh tail).
-# Derivation (mechanical, at r11 start): never-driver-checked = ZERO;
-# no rule-4 evictions pending (the r10 eviction xml_write_roundtrip is
-# in the r11 window). Cohort = the oldest-driver-evidence refresh
-# block outside the r11 window, (vintage, name)-sorted: the complete
-# remaining r7-vintage block (46 rows — the multimodal codecs, the
-# portable HLL family, graph, streaming r7 cohort, text scoring,
-# lakehouse lifecycle, XML advanced/ETL/xpath), then the earliest
-# r8-vintage names (anomaly_mad_robust, attribution_last_touch,
-# bucketed_join_colocated) cut at 50. The three rows-only-by-design
-# entries (agg_approx_distinct, agg_approx_percentiles,
-# embedding_pca_project) are excluded per VERDICT r10 item 4 — window
-# slots go to hash-evidence refreshes. HEAD AMENDMENT (late r11, r8
-# convention for oracle-text changes): ann_join_topk's oracle gained
-# the adaptive-banding formula during r11 (results verified
-# bit-identical at sf0.001/0.01/0.1 and value-green at the 10x probe
-# corpus, so rule 4 — result semantics — does not apply, but the new
-# oracle TEXT should earn a driver hash), so it leads;
-# chi_square_independence drops to the r13 tail. The other three r11
-# scale-probe touches (dedup_embedding_cosine, dedup_minhash_lsh,
-# setsim_join_prefix) are join-strategy-only (payload_side hints),
-# outputs verified identical at sf0.01 — normal rotation per the r8
-# precedent; setsim_join_prefix and dedup-family refreshes are already
-# in this plan's cohort.
-# ROUND-13 WINDOW, PRE-ENUMERATED (apply mechanically at r13 start:
-# replace _DRIVER_WINDOW with this list, run tools/verify_local.py over
-# it, commit first; then rule-4 swap any query whose result semantics
-# change during r13, evicting from the refresh tail).
-# Derivation (mechanical, at r12 start, from CORRECTNESS_r01–r11 +
-# the r12 window assumed fresh): never-driver-checked = ZERO; no
-# rule-4 evictions pending: the r12 dedup_embedding_cosine refactor is
-# code-motion into embedding_cosine_pairs (output verified identical at
-# sf0.01), and setsim_containment_join's counted-pigeonhole prune is
-# perf-only (outputs bit-identical at sf0.1/sf1/sf10, DuckDB-green at
-# sf0.01 and sf0.1) — normal rotation per the r8 precedent, and it
-# already sits in this cohort, so the new code earns a fresh driver
-# hash in r13 anyway. Cohort = oldest-driver-evidence outside the r12 window,
-# (vintage, name)-sorted: the complete remaining r8-vintage block
-# (46 rows) + the 4 earliest r9-vintage names (agg_percentiles,
-# anomaly_zscore_events, array_higher_order, asof_join) cut at 50.
-# The 3 rows-only-by-design entries stay excluded per VERDICT r10
-# item 4.
-# _R13_WINDOW_PLAN = [
-#     "chi_square_independence",
-#     "chunk_content_defined",
-#     "corpus_curation_pipeline",
-#     "corpus_mix_weights",
-#     "corpus_provenance_report",
-#     "dedup_incremental_ingest",
-#     "embedding_drift_monitor",
-#     "event_pattern_match",
-#     "federated_three_source_join",
-#     "filter_top_decile_docs",
-#     "forecast_seasonal_naive_backtest",
-#     "graph_pagerank",
-#     "hive_script_transform",
-#     "hybrid_rank_fusion_rrf",
-#     "knn_classify_majority",
-#     "max_drawdown_per_user",
-#     "maxsim_late_interaction",
-#     "multimodal_image_augment",
-#     "multimodal_tile_composite",
-#     "multimodal_video_framesample",
-#     "nested_denormalize_roundtrip",
-#     "ohlc_bars_hourly",
-#     "pareto_skyline_2d",
-#     "pca_explained_variance_2d",
-#     "phrase_search_positional",
-#     "recursive_cte_hierarchy",
-#     "regression_slope_closed_form",
-#     "rls_masked_view",
-#     "sample_stratified_exact",
-#     "scd2_early_arriving_fact",
-#     "setsim_containment_join",
-#     "sketch_kmv_distinct",
-#     "sketch_quantile_histogram",
-#     "snapshot_change_feed",
-#     "spatial_grid_join",
-#     "streak_gaps_islands",
-#     "streaming_late_data_drop",
-#     "streaming_ohlc_bars",
-#     "streaming_quantile_histogram",
-#     "text_pii_redact",
-#     "timeseries_gap_fill",
-#     "vacuum_unreferenced",
-#     "xml_attribute_roundtrip",
-#     "xml_corrupt_capture",
-#     "xml_expression_codec",
-#     "xsd_generate_roundtrip",
-#     "agg_percentiles",
-#     "anomaly_zscore_events",
-#     "array_higher_order",
-#     "asof_join",
-# ]
 
-# ROUND-14 WINDOW, PRE-ENUMERATED (apply mechanically at r14 start:
-# replace _DRIVER_WINDOW with this list, run tools/verify_local.py over
-# it, commit first; then rule-4 swap any query whose result semantics
-# change during r14, evicting from the refresh tail).
-# Derivation (mechanical, at r13, from CORRECTNESS_r01–r12 + the r13
-# window assumed fresh): rule-1 lead plagiarism_detect (added r13, the
-# only never-driver-checked entry). dedup_simhash carries the r13
-# block-pair blocking upgrade (perf-only, outputs verified
-# bit-identical at sf0.1/sf1/sf10, oracle-green at sf0.01/sf0.1) and
-# earns its fresh driver hash here per the r8 convention — it is
-# r9-vintage, so it sits in this cohort naturally. The r13
-# containment_pairs code-motion needs no carry: setsim_containment_join
-# is IN the r13 window, so the refactored path is driver-hashed this
-# round. Cohort = oldest-driver-evidence outside the r13 window,
-# (vintage, name)-sorted: the complete r9-vintage block (42 rows —
-# asof_join, the cosine_topk brute/lsh/ivf ladder, the text-analysis
-# family, the streaming r9 cohort, multimodal stubs, XML scan quartet)
-# + the 7 earliest r10-vintage names cut at 50; cosine_topk_ivf_pq
-# drops to the r15 tail. The 3 rows-only-by-design entries stay
-# excluded per VERDICT r10 item 4.
-# LATE-r13 AMENDMENT (same r8 convention that ordered the r13 head):
-# setsim_join_prefix joins the window — the r13 dim_side guard landed
-# INSIDE its pref stage (dedup.py:903-914, commit 406cdb6) after its
-# last driver hash (r12 window), so the executing code is newer than
-# its evidence; outputs were verified unchanged at sf0.01/sf0.1 (both
-# re-run this session: full sf0.01 gate + the 188-row sf0.1 solo
-# oracle) but the new code path earns a driver hash like every other.
-# The eviction comes from the refresh tail: cosine_topk_ivf_kmeans
-# (the last-cut r10 name) drops to the r15 tail beside
-# cosine_topk_ivf_pq. The other dim_side consumer,
-# setsim_containment_join, is already driver-hashed WITH the new code
-# in the r13 window; plagiarism_detect (the third) leads this plan.
-# The later r13 guard-proxy fix (size-map/payload multipliers, commit
-# e3a00fb) touches dedup_minhash_lsh plus the three above; all four
-# are covered without further amendment — minhash_lsh,
-# setsim_join_prefix, and plagiarism_detect are in THIS plan, and
-# setsim_containment_join's r13 driver hash post-dates the fix.
-# _R14_WINDOW_PLAN = [
-#     "plagiarism_detect",
-#     "setsim_join_prefix",
-#     "asof_join",
-#     "copurchase_lift",
-#     "cosine_topk_bruteforce",
-#     "cosine_topk_ivf",
-#     "cosine_topk_lsh",
-#     "daily_new_and_cumulative_users",
-#     "dedup_exact_by_hash",
-#     "dedup_minhash_lsh",
-#     "dedup_simhash",
-#     "doc_chunks_udtf",
-#     "join_null_safe_eq",
-#     "lateral_topn_per_group",
-#     "multimodal_decode_stub",
-#     "multimodal_feature_extract",
-#     "multimodal_frame_sample",
-#     "multimodal_resize_stub",
-#     "pack_sequences",
-#     "parquet_codec_zstd",
-#     "quality_filter_verdicts",
-#     "salted_join_agg",
-#     "sample_deterministic",
-#     "session_window_agg",
-#     "sql_registered_udf",
-#     "streaming_dedup_minhash",
-#     "streaming_sessionize",
-#     "streaming_stream_join",
-#     "streaming_stream_join_outer",
-#     "streaming_window_counts",
-#     "text_clean_normalize",
-#     "text_fingerprint",
-#     "text_language_id",
-#     "text_quality_score",
-#     "text_token_stats",
-#     "tumbling_window_agg",
-#     "twap_time_weighted",
-#     "variant_json_access",
-#     "vocab_topk",
-#     "window_percent_rank",
-#     "xml_scan_bench",
-#     "xml_scan_books",
-#     "xml_scan_inferred",
-#     "xml_sql_ddl",
-#     "agg_distinct_count",
-#     "agg_grouping_sets",
-#     "agg_rollup",
-#     "agg_stats",
-#     "apply_in_pandas_centered",
-#     "conditional_functions",
-# ]
+def driver_window(
+    registry: dict[str, QueryDef], evidence_dir: str | Path
+) -> list[str]:
+    """The 50 names the driver checks against DuckDB, computed from the
+    ``CORRECTNESS_r<N>.json`` artifacts in ``evidence_dir``: the
+    :data:`_LEAD` entries still owed a hash, then never-hashed queries in
+    registration order, then the rest by (round of latest green hash,
+    name). Only ``hash_match: true`` rows count as evidence, and queries
+    without an oracle never take a slot."""
+    missing = [n for n in _LEAD if n not in registry]
+    if missing:  # a rename would silently drop a lead entry
+        raise KeyError(f"_LEAD names not in registry: {missing}")
+    latest: dict[str, int] = {}
+    for path in Path(evidence_dir).glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m is None:
+            continue
+        for name, row in json.loads(path.read_text()).items():
+            if row.get("hash_match") is True:
+                latest[name] = max(latest.get(name, 0), int(m.group(1)))
+    oracled = [n for n, qd in registry.items() if qd.oracle is not None]
+    lead = [
+        n
+        for n, rnd in _LEAD.items()
+        if registry[n].oracle is not None and latest.get(n, 0) < rnd
+    ]
+    rest = [n for n in oracled if n not in lead]
+    never = [n for n in rest if n not in latest]
+    seen = sorted((latest[n], n) for n in rest if n in latest)
+    return (lead + never + [n for _, n in seen])[:50]
 
 
 def all_queries() -> dict[str, QueryDef]:
     """Import every operator module (side effect: registration) and return
     the full registry, reordered so the driver's 50-entry correctness
-    window lands on :data:`_DRIVER_WINDOW`."""
-    global _LOADED
-    if not _LOADED:
+    window lands on :func:`driver_window` (computed once, at load), with
+    the rest in registration order."""
+    global _WINDOW
+    if _WINDOW is None:
         from xml_hive_spark.operators import (  # noqa: F401
             analytics,
             curation,
@@ -683,10 +357,7 @@ def all_queries() -> dict[str, QueryDef]:
             windowed,
         )
 
-        _LOADED = True
-    missing = [n for n in _DRIVER_WINDOW if n not in REGISTRY]
-    if missing:  # a rename would silently shrink the checked window
-        raise KeyError(f"_DRIVER_WINDOW names not in registry: {missing}")
-    ordered = {n: REGISTRY[n] for n in _DRIVER_WINDOW}
+        _WINDOW = driver_window(REGISTRY, Path(__file__).resolve().parents[2])
+    ordered = {n: REGISTRY[n] for n in _WINDOW}
     ordered.update((n, qd) for n, qd in REGISTRY.items() if n not in ordered)
     return ordered
