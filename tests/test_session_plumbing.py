@@ -69,3 +69,66 @@ def test_avro_probe_runs_once_per_application(spark, monkeypatch):
     monkeypatch.setattr(xml_sink, "_AVRO_AVAILABLE", {})
     answers = {xml_sink.avro_available(spark) for _ in range(3)}
     assert len(answers) == 1 and probes == ["avro-probe-"]
+
+
+def _multi_split_file(tmp_path, n=200):
+    path = tmp_path / "multi.xml"
+    path.write_text("<log>" + "".join(f'<e id="{i}"><v>{i}</v></e>' for i in range(n)) + "</log>")
+    return str(path)
+
+
+def _schema():
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    return StructType([
+        StructField("id", IntegerType(), False,
+                    metadata={"xmlKind": "attribute", "xmlName": "id"}),
+        StructField("v", IntegerType(), False,
+                    metadata={"xmlKind": "element", "xmlName": "v"}),
+    ])
+
+
+def test_package_added_once_per_application(spark, monkeypatch, tmp_path):
+    from pyspark import SparkContext
+
+    from xml_hive_spark import session
+    from xml_hive_spark.reader import read_xml
+    from xml_hive_spark.sources import xml_datasource
+
+    added = []
+    real = SparkContext.addPyFile
+
+    def spy(self, path):
+        added.append(path)
+        return real(self, path)
+
+    monkeypatch.setattr(SparkContext, "addPyFile", spy)
+    monkeypatch.setattr(xml_datasource, "_SHIPPED_APPS", set(), raising=False)
+    monkeypatch.setattr(xml_datasource, "_REGISTERED_SESSIONS", set())
+    assert session.get_spark(app_name="xml-hive-spark-tests", cpus=4,
+                             shuffle_partitions=4) is spark
+    xml_datasource.register(spark)
+    path = _multi_split_file(tmp_path)
+    for _ in range(2):
+        df = read_xml(spark, path, "e", schema=_schema(), partition_bytes=512)
+    assert df.count() == 200
+    assert added == [xml_datasource._PKG_ZIP]
+
+
+def test_planning_starts_no_spark_job(spark, tmp_path):
+    """Phase A runs on the driver: building the read of a multi-split
+    file submits no job."""
+    import uuid
+
+    from xml_hive_spark.reader import read_xml
+
+    path = _multi_split_file(tmp_path)
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan a multi-split read")
+    try:
+        df = read_xml(spark, path, "e", schema=_schema(), partition_bytes=512)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert df.rdd.getNumPartitions() > 5
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

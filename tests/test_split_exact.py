@@ -13,6 +13,7 @@ import io
 
 import pytest
 
+from xml_hive_spark import reader
 from xml_hive_spark.reader import (
     chain_splits,
     iter_record_spans,
@@ -133,6 +134,85 @@ class TestSummaries:
         for cut in (6, 7, 8):
             recs = _records_via_protocol(data, "a", [0, cut, len(data)])
             assert recs == [b"<a>1</a>"], f"cut={cut}"
+
+
+# cut-sweep documents, plus forms the kernel checks one by one or leaves
+# to the exact loop (whitespace before a close's ">", long and mixed-quote
+# start tags)
+_KERNEL_DOCS = [
+    (b"<r><d>outer<d>inner</d>tail</d><d>x</d></r>", "d"),
+    (b"<r><!-- <a>no</a> --><a>yes</a><!--<a>n2</a>--><a>y2</a></r>", "a"),
+    (b"<r><a><![CDATA[</a><a>fake</a>]]></a><a>2</a></r>", "a"),
+    (b"<r><?pi <a>ghost</a> ?><a>1</a></r>", "a"),
+    (b'<r><m a="x>y"/><m b="</m>">v</m><m/></r>', "m"),
+    (b"<ns:r><ns:d>1</ns:d><other:d>2</other:d><d>3</d></ns:r>", "d"),
+    (b'<r><d k="v">x</d ><d/><d />< d><d\t>y</d\n>t</d x></r>', "d"),
+    (b"<r><d a='1' b='2'>x</d><d a=\"it's\">y</d><!---->-->]]>?></r>", "d"),
+    (b"<r><d " + b"a='x' " * 12 + b">long</d><d " + b"b='y" * 3 + b">t</d></r>", "d"),
+]
+
+
+class TestKernel:
+    """The vectorized phase-A kernel against the exact token loop."""
+
+    @pytest.mark.parametrize("window", [1 << 22, 7])
+    @pytest.mark.parametrize("data,tag", _KERNEL_DOCS,
+                             ids=[f"doc{i}" for i in range(len(_KERNEL_DOCS))])
+    def test_equals_exact_loop_for_every_range(self, monkeypatch, data, tag, window):
+        monkeypatch.setattr(reader, "_KERNEL_WINDOW", window)
+        monkeypatch.setattr(reader, "_KERNEL_MARGIN", 3)
+        for a in range(len(data)):
+            for b in range(a + 1, len(data) + 1):
+                got = split_summaries(io.BytesIO(data), tag, a, b)
+                assert got == reader._exact_summaries(io.BytesIO(data), tag, a, b), (a, b)
+
+    @pytest.mark.parametrize("data", [
+        b"<r><d>1</d><ns:d>2</ns:d></r>",  # namespace-prefixed row tag
+        b'<r><d k="a>b">1</d></r>',  # quoted '>' in a row-tag start tag
+        b'<r><d k="</d>">1</d></r>',  # quoted '</d>' in a row-tag start tag
+        b"<r><d k=\"it's\">1</d></r>",  # mixed quotes
+        b"<r><d </d>1</d></r>",  # a '<' before a row-tag start tag's '>'
+    ])
+    def test_unproven_forms_take_the_exact_loop(self, data):
+        assert reader._vector_summaries(io.BytesIO(data), "d", 0, len(data)) is None
+        assert _records_via_protocol(data, "d", [0, len(data) // 2, len(data)]) == (
+            _reference_records(data, "d"))
+
+    def test_range_past_end_of_file_takes_the_exact_loop(self):
+        data = b"<r><d>1</d><d>2</d></r>"
+        assert reader._vector_summaries(io.BytesIO(data), "d", 4, len(data) + 9) is None
+        assert split_summaries(io.BytesIO(data), "d", 4, len(data) + 9) == (
+            reader._exact_summaries(io.BytesIO(data), "d", 4, len(data) + 9))
+
+    def test_construct_across_a_window_edge(self, monkeypatch):
+        """A comment and a CDATA section straddle a kernel window edge
+        inside one split: inside the look-ahead the kernel answers,
+        past it the split falls back, and both equal the exact loop."""
+        data = (b"<r><d>1</d><!-- <d>x</d> " + b"c" * 200 + b" --><d>2"
+                b"<![CDATA[ </d> " + b"z" * 200 + b" ]]></d><d>3</d></r>")
+        monkeypatch.setattr(reader, "_KERNEL_WINDOW", 16)
+        for margin, kernel in ((4096, True), (8, False)):
+            monkeypatch.setattr(reader, "_KERNEL_MARGIN", margin)
+            for cut in range(1, 12):
+                v = reader._vector_summaries(io.BytesIO(data), "d", cut, len(data) - 3)
+                assert (v is not None) == kernel, (margin, cut)
+                assert split_summaries(io.BytesIO(data), "d", cut, len(data) - 3) == (
+                    reader._exact_summaries(io.BytesIO(data), "d", cut, len(data) - 3))
+            assert _records_via_protocol(data, "d", [0, 5, 40, len(data)]) == (
+                _reference_records(data, "d"))
+
+    def test_reads_one_bounded_window_at_a_time(self, monkeypatch):
+        class Spy(io.BytesIO):
+            largest = 0
+
+            def readinto(self, b):
+                Spy.largest = max(Spy.largest, len(b))
+                return super().readinto(b)
+
+        monkeypatch.setattr(reader, "_KERNEL_WINDOW", 1024)
+        doc = b"<r>" + b"<d k='v'>x</d><!-- <d> -->" * 2000 + b"</r>"
+        assert reader._vector_summaries(Spy(doc), "d", 5, len(doc) - 5) is not None
+        assert Spy.largest <= 1024 + reader._KERNEL_MARGIN + 2
 
 
 class TestSparkEndToEnd:

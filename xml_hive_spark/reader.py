@@ -15,9 +15,12 @@ for Spark's execution model:
   AvroFromXmlInputFormat.scala:49; SURVEY.md §4.3): splits are made exact
   by a **two-phase protocol**:
 
-  * *Phase A* (parallel, per split): for each possible lexer state at the
+  * *Phase A* (driver, per split): for each possible lexer state at the
     split start — TEXT, COMMENT, CDATA, PI — summarize the split's row-tag
-    token stream as ``(end_state, depth_delta, min_prefix_depth)``.
+    token stream as ``(end_state, depth_delta, min_prefix_depth)``. A
+    vectorized numpy pass over bounded windows does this; the exact
+    token loop of phase C is its fallback for forms the pass cannot
+    prove.
     A cut that lands inside a *tag* needs no state of its own: ``<`` cannot
     appear raw inside attribute values, so scanning the tag tail in TEXT
     state yields no spurious tokens, and the straddling token was already
@@ -31,7 +34,7 @@ for Spark's execution model:
   This is what makes N byte-range partitions over one file exact — no
   duplicates, no drops — even when records self-nest or a cut lands inside
   a comment/CDATA, at the cost of one extra byte-scan pass (phase A) over
-  multi-split files only.
+  multi-split files only, made while the plan is built.
 - **Record assembly** (reference: stack machine over XML pull events,
   AvroTransormer.scala:77-170): each extracted record chunk is parsed with
   ``ElementTree`` and assembled into a tuple directed by the target
@@ -410,10 +413,211 @@ def _resume_offset(
     covers the whole range."""
     pat = _RESUME_PAT[state]
     pos = max(0, start - (len(pat) - 1))
-    i = buf.find(pat, pos, bound=end, compact_to=pos)
+    # compacting to the search cursor keeps a construct that covers the
+    # whole range from buffering all of it
+    i = buf.find(pat, pos, bound=end, compact_to=end)
     while i != -1 and i + len(pat) <= start:  # closed before the split began
-        i = buf.find(pat, i + 1, bound=end, compact_to=pos)
+        i = buf.find(pat, i + 1, bound=end, compact_to=end)
     return None if i == -1 else i + len(pat)
+
+
+# Phase-A kernel geometry: bytes classified per numpy pass, and how far
+# past its window a pass looks for the end of a construct that begins
+# inside it. A construct still open past the look-ahead (unless the split
+# ends in this window) sends the split to the exact token loop.
+_KERNEL_WINDOW = 1 << 22
+_KERNEL_MARGIN = 1 << 12
+# a row-tag start tag whose '>' lies within this many bytes of its name
+# is checked in one vector pass (one uint64 bit mask per tag); a longer
+# one is checked on its own
+_TAG_SPAN = 64
+
+_OPENER = {ST_COMMENT: b"<!--", ST_CDATA: b"<![CDATA[", ST_PI: b"<?"}
+
+
+def _having(arr, pos, off: int, lit: bytes):
+    """The positions ``p`` of ``pos`` where ``lit`` sits at ``p + off``."""
+    for j, c in enumerate(lit):
+        pos = pos[arr[pos + off + j] == c]
+    return pos
+
+
+def _bits(rows, byte: int):
+    """Per row of a ``(k, _TAG_SPAN)`` byte matrix, a uint64 whose bit j
+    is set where column j holds ``byte``."""
+    import numpy as np
+
+    return np.packbits(rows == byte, axis=1, bitorder="little").view("<u8")[:, 0]
+
+
+def _start_tag_end(b: bytearray, ne: int, got: int) -> int:
+    """Offset of the ``>`` ending a row-tag start tag whose attributes
+    begin at ``ne``, or -1 unless the first ``>`` provably ends it: no
+    ``<`` before it, and its quotes pair up (an even count, one kind)."""
+    g = b.find(b">", ne, got)
+    if g == -1:
+        return -1
+    seg = b[ne:g]
+    dq, sq = seg.count(b'"'), seg.count(b"'")
+    if b"<" in seg or (dq and sq) or (dq + sq) % 2:
+        return -1
+    return g
+
+
+def _vector_summaries(
+    f: BinaryIO, row_tag: str, start: int, end: int
+) -> dict[str, tuple[str, int, int]] | None:
+    """:func:`split_summaries` by numpy passes over bounded windows.
+
+    Every token the exact loop consumes starts at a ``<`` and holds no
+    other ``<``, so each ``<`` is classified on its own: comment, CDATA
+    and PI openers, row-tag opens and closes, or nothing. Classifying is
+    the same for all four start states; per state, a short Python loop
+    over the construct openers alone marks the spans they hide, and the
+    depth is a cumulative sum over the row-tag tokens outside them.
+
+    Returns None, and the caller runs the exact loop, when the split
+    holds a form this pass cannot prove: a namespace-prefixed row tag, a
+    row-tag start tag with a ``<`` or an unpaired or mixed quote before
+    its first ``>`` (such as a quoted ``>``), a tag whose ``>`` lies past
+    the look-ahead, or a construct still open past the look-ahead of a
+    window before the split's last."""
+    import numpy as np
+
+    tag = row_tag.encode()
+    n = len(tag)
+    ws = np.zeros(256, bool)
+    ws[list(_WS)] = True
+    open_delim = ws.copy()
+    open_delim[[0x2F, 0x3E]] = True  # '/', '>'
+    # the look-ahead always covers classifying a '<' of the window: a row
+    # tag with a 64-byte namespace prefix, or a start tag's first bytes
+    ahead = max(_KERNEL_MARGIN, n + 80)
+    # start state → [pos, delta, min_prefix, end_state]; a non-TEXT state
+    # joins once its resume offset (the first close pattern ending past
+    # ``start``) is found
+    hyps = {ST_TEXT: [start, 0, 0, ST_TEXT]}
+    pending = [ST_COMMENT, ST_CDATA, ST_PI]
+    out: dict[str, tuple[str, int, int]] = {}
+    wk = start
+    while wk < end:
+        hi = min(wk + _KERNEL_WINDOW, end)
+        last = hi == end
+        base = max(0, start - 2) if wk == start else wk
+        want = hi + ahead - base
+        f.seek(base)
+        b = bytearray(want + n + _TAG_SPAN)  # zero tail: reads past `got` see no markup
+        got = f.readinto(memoryview(b)[:want])
+        eof = got < want
+        if base + got < hi:
+            return None  # the file ends inside the split
+        lo_i, hi_i = wk - base, hi - base
+        arr = np.frombuffer(b, np.uint8)
+
+        # resume offsets: the first close pattern that starts in this
+        # window and ends past ``start``
+        for st in list(pending):
+            pat = _RESUME_PAT[st]
+            at = np.flatnonzero(arr[:hi_i] == pat[0])
+            at = _having(arr, at, 1, pat[1:])
+            at = at[at + len(pat) + base > start]
+            if not len(at):
+                continue
+            pending.remove(st)
+            r = base + int(at[0]) + len(pat)
+            if r < end:
+                hyps[st] = [r, 0, 0, ST_TEXT]
+            else:
+                out[st] = (ST_TEXT, 0, 0) if r == end else (st, 0, 0)
+
+        # a prefixed row tag's ':' lies at most 66 bytes past its '<'
+        colons = np.flatnonzero(arr[lo_i : hi_i + 66] == 0x3A) + lo_i
+        if open_delim[arr[_having(arr, colons, 1, tag) + 1 + n]].any():
+            return None
+
+        lt = np.flatnonzero(arr[lo_i:hi_i] == 0x3C) + lo_i
+        c1 = arr[lt + 1]
+        bang = lt[c1 == 0x21]
+        cons = sorted(
+            (p, st)
+            for ps, st in (
+                (_having(arr, bang, 2, b"--"), ST_COMMENT),
+                (_having(arr, bang, 2, b"[CDATA["), ST_CDATA),
+                (lt[c1 == 0x3F], ST_PI),
+            )
+            for p in ps.tolist()
+        )
+
+        opens = _having(arr, lt[c1 == tag[0]], 2, tag[1:])
+        opens = opens[open_delim[arr[opens + 1 + n]]]
+        ne = opens + 1 + n
+        rows = np.lib.stride_tricks.sliding_window_view(arr, _TAG_SPAN)[ne]
+        gt = _bits(rows, 0x3E)
+        before = (gt & (~gt + np.uint64(1))) - np.uint64(1)  # bits below the first '>'
+        dq, sq = _bits(rows, 0x22) & before, _bits(rows, 0x27) & before
+        par = dq | sq
+        for sh in (32, 16, 8, 4, 2, 1):
+            par ^= par >> np.uint64(sh)
+        ok = (gt != 0) & ((_bits(rows, 0x3C) & before) == 0)
+        ok &= ((dq == 0) | (sq == 0)) & ((par & np.uint64(1)) == 0)
+        g = ne + np.log2(before.astype(np.float64) + 1).astype(np.int64)
+        for i in np.flatnonzero(gt == 0):  # start tags past the span
+            g[i] = _start_tag_end(b, int(ne[i]), got)
+            ok[i] = g[i] != -1
+        open_dd = 1 - (arr[g - 1] == 0x2F)  # '/>' closes itself
+
+        closes = _having(arr, lt[c1 == 0x2F], 2, tag)
+        ce = closes + 2 + n
+        tok = arr[ce] == 0x3E
+        cok = np.ones(len(closes), bool)
+        # '</tag' + whitespace is a close token only if nothing but
+        # whitespace runs to its '>' (rare: checked one by one)
+        for i in np.flatnonzero(ws[arr[ce]]):
+            g_ = b.find(b">", int(ce[i]), got)
+            cok[i] = g_ != -1
+            tok[i] = g_ == -1 or not b[ce[i] : g_].strip(b" \t\r\n")
+        closes, cok = closes[tok], cok[tok]
+
+        s = np.concatenate([opens, closes])
+        order = np.argsort(s, kind="stable")
+        s = s[order]
+        dd = np.concatenate([open_dd, np.full(len(closes), -1)])[order]
+        ok = np.concatenate([ok, cok])[order]
+
+        for st, h in hyps.items():
+            pos0 = pos = h[0] - base
+            hidden_s, hidden_e = [], []
+            for o, kind in cons:
+                if o < pos:
+                    continue
+                pat = _RESUME_PAT[kind]
+                t = b.find(pat, o + len(_OPENER[kind]), got)
+                if t != -1:
+                    pos = t + len(pat)
+                elif last:
+                    pos = got if eof else got + 1
+                else:
+                    return None  # a construct open past the look-ahead
+                hidden_s.append(o)
+                hidden_e.append(pos)
+                h[3] = kind if base + pos > end else ST_TEXT
+            h[0] = base + pos
+            live = s >= pos0
+            if hidden_s:
+                k = np.searchsorted(hidden_s, s, "right") - 1
+                live &= (k < 0) | (s >= np.asarray(hidden_e)[k])
+            if not ok[live].all():
+                return None
+            cum = np.cumsum(dd[live]) + h[1]
+            if len(cum):
+                h[1], h[2] = int(cum[-1]), min(h[2], int(cum.min()))
+        wk = hi
+
+    for st, h in hyps.items():
+        out[st] = (h[3], h[1], h[2])
+    for st in pending:
+        out[st] = (st, 0, 0)
+    return out
 
 
 def split_summaries(
@@ -421,7 +625,17 @@ def split_summaries(
 ) -> dict[str, tuple[str, int, int]]:
     """Phase A: for each possible lexer state at ``start``, the
     ``(end_state, depth_delta, min_prefix_depth)`` of scanning
-    ``[start, end)``. Pure byte work — no record parsing, O(1) memory."""
+    ``[start, end)``. Pure byte work — no record parsing, memory bounded
+    by one kernel window. The vectorized kernel answers unless the split
+    holds a form only the exact token loop can prove."""
+    out = _vector_summaries(f, row_tag, start, end)
+    return out if out is not None else _exact_summaries(f, row_tag, start, end)
+
+
+def _exact_summaries(
+    f: BinaryIO, row_tag: str, start: int, end: int
+) -> dict[str, tuple[str, int, int]]:
+    """Phase A by the token loop phase C uses (:class:`_Scanner`)."""
     # raw-byte resume offsets for the non-TEXT hypotheses
     resumes: dict[str, int | None] = {}
     for st in (ST_COMMENT, ST_CDATA, ST_PI):
@@ -925,70 +1139,35 @@ def plan_annotated_splits(
     paths: list[str],
     row_tag: str,
     partition_bytes: int = DEFAULT_PARTITION_BYTES,
-    spark: SparkSession | None = None,
 ) -> list[AnnotatedSplit]:
-    """Full split plan with phase A+B boundary reconciliation.
+    """Full split plan: every split with its incoming lexer state and
+    row-tag depth.
 
-    Phase A summaries for multi-split files run as a Spark job when a
-    session is given (each task byte-scans one split — this is what keeps
-    planning distributed at 100 TB); driver-side otherwise (fine for
-    local files / small inputs). Single-split files need no phase A at
-    all — offset 0 is always ``(TEXT, 0)``."""
+    Runs on the driver: each file goes through :func:`chain_splits`,
+    whose phase A is one vectorized byte pass over every non-final split
+    of a multi-split file. Single-split files need no phase A: offset 0
+    is always ``(TEXT, 0)``. Plans are cached in process and on disk,
+    keyed by each file's size and mtime."""
     cache_key = _plan_cache_key(paths, row_tag, partition_bytes)
     if cache_key is not None and cache_key in _PLAN_CACHE:
         return _PLAN_CACHE[cache_key]
     if cache_key is not None and (disk := _plan_disk_load(cache_key)) is not None:
         _PLAN_CACHE[cache_key] = disk
         return disk
-    raw = plan_splits(paths, partition_bytes)
-    by_file: dict[str, list[tuple[int, int]]] = {}
-    for p, a, b in raw:
-        by_file.setdefault(p, []).append((a, b))
-
-    # phase A: summaries for every non-final split of multi-split files
-    need: list[tuple[str, int, int]] = []
-    for p, spans in by_file.items():
-        if len(spans) > 1:
-            need += [(p, a, b) for a, b in spans[:-1]]
-
-    summaries: dict[tuple[str, int], dict] = {}
-    if need:
-        def _summ(item: tuple[str, int, int]):
-            path, a, b = item
-            with open(path, "rb") as f:
-                return (path, a), split_summaries(f, row_tag, a, b)
-
-        if spark is not None:
-            # the map closure resolves split_summaries by module reference
-            # on executors — ship the package before the first job
-            from xml_hive_spark.sources.xml_datasource import ship_package
-
-            ship_package(spark)
-            sc = spark.sparkContext
-            summaries = dict(
-                sc.parallelize(need, len(need)).map(_summ).collect()
-            )
-        else:
-            summaries = dict(_summ(it) for it in need)
-
-    # phase B: fold per file
     out: list[AnnotatedSplit] = []
-    for p, spans in by_file.items():
-        state, depth = ST_TEXT, 0
-        for i, (a, b) in enumerate(spans):
-            out.append((p, a, b, state, depth))
-            if i < len(spans) - 1:
-                nxt_state, delta, mind = summaries[(p, a)][state]
-                if depth + mind < 0:
-                    log.warning(
-                        "xml split chain: depth underflow in %s at [%d,%d)", p, a, b
-                    )
-                state, depth = nxt_state, max(0, depth + delta)
+    multi = False
+    for p in paths:
+        spans = plan_splits([p], partition_bytes)
+        multi |= len(spans) > 1
+        if spans:
+            fence = [spans[0][1]] + [b for _, _, b in spans]
+            out += [(p, *ann) for ann in chain_splits(
+                lambda p=p: open(p, "rb"), fence, row_tag)]
     if cache_key is not None:
         if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
             _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
         _PLAN_CACHE[cache_key] = out
-        if need:  # only multi-split plans are worth persisting
+        if multi:  # only multi-split plans are worth persisting
             _plan_disk_store(cache_key, out)
     return out
 
@@ -1190,7 +1369,7 @@ def read_xml(
         schema = tag_corrupt_field(schema, corrupt_column)
 
     paths = resolve_paths(path)
-    splits = plan_annotated_splits(paths, row_tag, partition_bytes, spark=spark)
+    splits = plan_annotated_splits(paths, row_tag, partition_bytes)
 
     from xml_hive_spark.sources.xml_datasource import register
 

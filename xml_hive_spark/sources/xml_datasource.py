@@ -121,9 +121,9 @@ class XmlHiveReader(DataSourceReader):
         self._row_tag = _opt(options, "rowTag", "rowtag")
         if not self._row_tag:
             raise ValueError("xmlhive: rowTag option is required")
-        # pre-annotated splits from read_xml (phase A ran as a Spark job):
-        # one entry per read task, either a list of annotated splits (a
-        # packed run of small files) or a bare annotated split
+        # splits read_xml planned and annotated on the driver: one entry
+        # per read task, either a list of annotated splits (a packed run
+        # of small files) or a bare annotated split
         raw_splits = _opt(options, "splits")
         self._tasks = None
         if raw_splits:
@@ -182,9 +182,9 @@ class XmlHiveReader(DataSourceReader):
     def partitions(self):
         tasks = self._tasks
         if tasks is None:
-            # bare .format("xmlhive") use: phase A runs driver-side (the
-            # scale path is read_xml, which distributes it as a Spark job
-            # and packs small files)
+            # bare .format("xmlhive") use: the same driver-side plan as
+            # read_xml, one split per task (read_xml also packs small
+            # files, which needs the session)
             tasks = [(s,) for s in plan_annotated_splits(
                 self._paths, self._row_tag, self._partition_bytes
             )]
@@ -231,6 +231,7 @@ class XmlHiveReader(DataSourceReader):
 
 _REGISTERED_SESSIONS: set[int] = set()
 _PKG_ZIP: str | None = None
+_SHIPPED_APPS: set[str] = set()
 
 
 def ship_package(spark) -> None:
@@ -238,7 +239,7 @@ def ship_package(spark) -> None:
     the driver process's cwd/sys.path: the DataSource class is pickled by
     reference, so the data-source worker must be able to import the
     package. ``addPyFile`` puts the zipped package on every worker's
-    path (idempotent per session). The zip is named by a hash of the
+    path, once per Spark application. The zip is named by a hash of the
     package sources and published with an atomic rename, so concurrent
     processes running different checkouts never ship each other's code
     or a half-written zip."""
@@ -264,10 +265,10 @@ def ship_package(spark) -> None:
                 z.write(p, name)
         os.replace(tmp, zpath)
         _PKG_ZIP = str(zpath)
-    try:
-        spark.sparkContext.addPyFile(_PKG_ZIP)
-    except Exception:
-        pass  # already added in this session
+    sc = spark.sparkContext
+    if sc.applicationId not in _SHIPPED_APPS:
+        sc.addPyFile(_PKG_ZIP)
+        _SHIPPED_APPS.add(sc.applicationId)
 
 
 def register(spark) -> None:
