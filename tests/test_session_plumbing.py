@@ -1,9 +1,11 @@
-"""Session plumbing: the default core count, the shipped package zip and
-the cached Avro probe."""
+"""Session plumbing: the default core count, the shipped package zip,
+the cached Avro probe and the workers' stat-checked zip import caches."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 import types
 import zipfile
 
@@ -132,3 +134,134 @@ def test_planning_starts_no_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert df.rdd.getNumPartitions() > 5
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_workers_reread_no_unchanged_archive(spark):
+    """pyspark calls ``importlib.invalidate_caches()`` before every task.
+    A worker that has imported the package re-reads no unchanged zip
+    archive there (without the stat check: 12+ reads of pyspark.zip per
+    task)."""
+    import time
+
+    sc = spark.sparkContext
+
+    def install(_):
+        import importlib
+        import zipimport
+
+        import xml_hive_spark  # noqa: F401
+
+        if not hasattr(zipimport, "_test_reads"):
+            real = zipimport._read_directory
+
+            def counting(archive):
+                zipimport._test_reads.append(archive)
+                return real(archive)
+
+            zipimport._test_reads = []
+            zipimport._read_directory = counting
+        importlib.invalidate_caches()  # the first checked call reads each archive
+        zipimport._test_reads.clear()
+        time.sleep(0.5)  # hold the worker so the four tasks spread over four
+        yield os.getpid()
+
+    def read(_):
+        import zipimport
+
+        reads = getattr(zipimport, "_test_reads", None)
+        yield os.getpid(), None if reads is None else list(reads)
+        if reads is not None:
+            reads.clear()
+
+    installed = set(sc.parallelize(range(4), 4).mapPartitions(install).collect())
+    seen = sc.parallelize(range(8), 8).mapPartitions(read).collect()
+    reused = [reads for pid, reads in seen if pid in installed and reads is not None]
+    assert reused, seen
+    assert all(reads == [] for reads in reused), seen
+
+
+_ZIP_SEMANTICS = r"""
+import importlib, os, sys, zipfile, zipimport
+
+original = zipimport.zipimporter.invalidate_caches
+import xml_hive_spark  # installs the check in a worker
+from xml_hive_spark.session import stat_checked_zip_caches
+
+if "PYTHON_WORKER_FACTORY_SECRET" not in os.environ:
+    stat_checked_zip_caches()
+    assert zipimport.zipimporter.invalidate_caches is original
+    print("untouched")
+    sys.exit(0)
+
+checked = zipimport.zipimporter.invalidate_caches
+assert checked is not original
+stat_checked_zip_caches()
+assert zipimport.zipimporter.invalidate_caches is checked  # idempotent
+
+archive = sys.argv[1]
+reads = []
+real = zipimport._read_directory
+def counting(path):
+    if path == archive:
+        reads.append(path)
+    return real(path)
+zipimport._read_directory = counting
+
+def write(members):
+    with zipfile.ZipFile(archive, "w") as z:
+        for name, text in members.items():
+            z.writestr(zipfile.ZipInfo(name, (2020, 1, 1, 0, 0, 0)), text)
+
+def invalidations():
+    del reads[:]
+    importlib.invalidate_caches()
+    return len(reads)
+
+members = {"m1.py": "v = 1\n", "pkg/__init__.py": "", "pkg/a.py": "v = 2\n"}
+write(members)
+sys.path.insert(0, archive)
+import m1, pkg.a  # two importers for one archive
+assert invalidations() == 1  # first checked call: no stamp yet
+assert invalidations() == 0
+assert invalidations() == 0
+
+# rewritten with new members: a new size, re-read once for both importers
+write({**members, "m2.py": "v = 3\n", "pkg/b.py": "v = 4\n"})
+assert invalidations() == 1
+import m2, pkg.b
+assert (m2.v, pkg.b.v) == (3, 4)
+assert invalidations() == 0
+
+# same size, new mtime: re-read
+st = os.stat(archive)
+write({**members, "m2.py": "v = 5\n", "pkg/b.py": "v = 4\n"})
+assert os.stat(archive).st_size == st.st_size
+os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+assert invalidations() == 1
+assert invalidations() == 0
+print("checked")
+"""
+
+
+def _zip_semantics(tmp_path, worker):
+    env = {k: v for k, v in os.environ.items() if k != "PYTHON_WORKER_FACTORY_SECRET"}
+    if worker:
+        env["PYTHON_WORKER_FACTORY_SECRET"] = "test"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = os.pathsep.join([repo, env.get("PYTHONPATH", "")])
+    script = tmp_path / "zip_semantics.py"
+    script.write_text(_ZIP_SEMANTICS)
+    out = subprocess.run(
+        [sys.executable, str(script), str(tmp_path / "lib.zip")],
+        env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    return out.stdout.split()
+
+
+def test_zip_caches_stat_checked_in_worker(tmp_path):
+    assert _zip_semantics(tmp_path, worker=True) == ["checked"]
+
+
+def test_zip_caches_untouched_outside_worker(tmp_path):
+    assert _zip_semantics(tmp_path, worker=False) == ["untouched"]

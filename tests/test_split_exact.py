@@ -135,6 +135,16 @@ class TestSummaries:
             recs = _records_via_protocol(data, "a", [0, cut, len(data)])
             assert recs == [b"<a>1</a>"], f"cut={cut}"
 
+    def test_depth_underflow_warning_names_file_and_range(self, caplog):
+        data = b"<r></d></d><d>1</d></r>"
+        with caplog.at_level("WARNING", logger="xml_hive_spark.reader"):
+            chain_splits(lambda: io.BytesIO(data), [0, 11, len(data)], "d",
+                         "/data/broken.xml")
+        assert [r.getMessage() for r in caplog.records] == [
+            "xml split chain: depth underflow in /data/broken.xml at [0,11) "
+            "— malformed input?"
+        ]
+
 
 # cut-sweep documents, plus forms the kernel checks one by one or leaves
 # to the exact loop (whitespace before a close's ">", long and mixed-quote

@@ -15,7 +15,11 @@ relational operator to Hive. Here the equivalent split is:
 """
 
 from xml_hive_spark.infer import infer_xml_schema  # noqa: F401
-from xml_hive_spark.session import get_spark  # noqa: F401
+from xml_hive_spark.session import get_spark, stat_checked_zip_caches  # noqa: F401
 from xml_hive_spark.xsd import XsdGraph, xsd_to_struct  # noqa: F401
 
 __version__ = "0.1.0"
+
+# every worker that runs engine code imports this package (planner
+# workers unpickle the DataSource, task workers the readers and UDFs)
+stat_checked_zip_caches()

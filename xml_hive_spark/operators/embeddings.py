@@ -543,14 +543,9 @@ def logreg_fit(
     # matmul — bounded by maxRecordsPerBatch, independent of corpus
     # size (n never appears in an overflow bound: the fit is valid at
     # any scale for sane feature magnitudes)
-    try:
-        batch_cap = int(
-            emb.sparkSession.conf.get(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
-            )
-        )
-    except Exception:
-        batch_cap = 10000
+    batch_cap = int(
+        emb.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    )
     if batch_cap <= 0:
         batch_cap = n  # unlimited batches: a partition is one batch
     if batch_cap * _Q20I * mx > (1 << 62):

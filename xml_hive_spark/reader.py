@@ -713,11 +713,13 @@ def _exact_summaries(
 
 
 def chain_splits(
-    open_fn: Callable[[], BinaryIO], bounds: list[int], row_tag: str
+    open_fn: Callable[[], BinaryIO], bounds: list[int], row_tag: str,
+    name: str = "<unnamed>",
 ) -> list[tuple[int, int, str, int]]:
     """Phase B over one file: fold per-split summaries into the true
     incoming ``(state, depth)`` of every split. ``bounds`` is the sorted
-    offset fence ``[0, b1, ..., size]``."""
+    offset fence ``[0, b1, ..., size]``; ``name`` labels the file in the
+    depth-underflow warning."""
     ann: list[tuple[int, int, str, int]] = []
     state, depth = ST_TEXT, 0
     for i in range(len(bounds) - 1):
@@ -729,8 +731,8 @@ def chain_splits(
             nxt_state, delta, mind = summ[state]
             if depth + mind < 0:
                 log.warning(
-                    "xml split chain: depth underflow at [%d,%d) — malformed input?",
-                    a, b,
+                    "xml split chain: depth underflow in %s at [%d,%d) — "
+                    "malformed input?", name, a, b,
                 )
             state, depth = nxt_state, max(0, depth + delta)
     return ann
@@ -1162,7 +1164,7 @@ def plan_annotated_splits(
         if spans:
             fence = [spans[0][1]] + [b for _, _, b in spans]
             out += [(p, *ann) for ann in chain_splits(
-                lambda p=p: open(p, "rb"), fence, row_tag)]
+                lambda p=p: open(p, "rb"), fence, row_tag, p)]
     if cache_key is not None:
         if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
             _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))

@@ -5,7 +5,8 @@ Runs at ``local[<CPUs this process may use>]`` unless ``cpus`` or
 on a 1000-executor cluster: AQE on (runtime re-planning, skew-join
 handling, partition coalescing), Arrow for any Python↔JVM batch
 transfer, UTC session time so timestamp semantics don't depend on
-cluster locale.
+cluster locale. ``stat_checked_zip_caches`` fits the Python workers'
+import caches to how often pyspark invalidates them.
 """
 
 from __future__ import annotations
@@ -16,6 +17,47 @@ from pyspark.sql import SparkSession
 
 
 _SCRATCH_ROOT: str | None = None
+
+
+def stat_checked_zip_caches() -> None:
+    """In a Spark Python worker, make ``zipimporter.invalidate_caches``
+    re-read an archive only when its ``(st_ino, st_size, st_mtime_ns)``
+    differs from the last read.
+
+    pyspark calls ``importlib.invalidate_caches()`` before every task and
+    every DataSource planner call; on CPython 3.11/3.12 each cached
+    zipimporter then re-reads its archive's whole central directory, and
+    a worker holds 12 of them for pyspark.zip (SCALE.md, 2026-10-17,
+    "Python workers stop re-reading pyspark.zip"). Import results are
+    unchanged: a changed archive is still re-read, an unchanged one keeps
+    the directory already read. The driver interpreter is left alone.
+    Idempotent."""
+    if "PYTHON_WORKER_FACTORY_SECRET" not in os.environ:
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "stat_checked", False):
+        return
+    stamps: dict[str, tuple[int, int, int] | None] = {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is not None and files is not None and stamps.get(self.archive) == stamp:
+            # 3.11/3.12 importers hold their own reference to the directory
+            self._files = files
+            return
+        # stat before reading, so a write during the read shows next time
+        stamps[self.archive] = stamp
+        reread(self)
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def scratch_dir(prefix: str) -> str:

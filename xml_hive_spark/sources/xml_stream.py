@@ -208,7 +208,7 @@ class XmlStreamReader(DataSourceStreamReader):
             bounds = [min(i * step, size) for i in range(n + 1)]
             # phase A+B boundary reconciliation (driver-side: new files
             # only, one extra byte scan for multi-split files)
-            ann = chain_splits(lambda p=p: open(p, "rb"), bounds, self._row_tag)
+            ann = chain_splits(lambda p=p: open(p, "rb"), bounds, self._row_tag, p)
             parts += [XmlStreamPartition(p, a, b, st, d) for a, b, st, d in ann]
         return parts
 
