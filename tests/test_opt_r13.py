@@ -89,7 +89,20 @@ def test_table_rows_matches_spark_count(spark, sf_dir):
     """r13 changes 2/3: the parquet-footer count must equal a real
     Spark count for every driver table it is used on."""
     for name in ("embeddings", "documents"):
-        assert table_rows(spark, sf_dir, name) == t(spark, sf_dir, name).count()
+        assert table_rows(sf_dir, name) == t(spark, sf_dir, name).count()
+
+
+def test_missing_table_raises_at_the_footer_read(tmp_path):
+    """The driver-side footer reads have no Spark fallback: a missing
+    table raises where it is read, not later as a scheduled job."""
+    import pytest
+
+    from xml_hive_spark.operators.similarity import _query_batch_rows
+
+    with pytest.raises(FileNotFoundError):
+        table_rows(str(tmp_path), "documents")
+    with pytest.raises(FileNotFoundError):
+        _query_batch_rows(str(tmp_path))
 
 
 def test_ann_signature_cache_is_ids_and_sigs_only(spark, sf_dir):

@@ -81,7 +81,7 @@ def test_cosine_kernel_sources_bit_identical(spark, sf_dir, reducer):
     from xml_hive_spark.operators import similarity as S
 
     emb = t(spark, sf_dir, "embeddings")
-    n = table_rows(spark, sf_dir, "embeddings")
+    n = table_rows(sf_dir, "embeddings")
     r = min(30, max(5, (n // 64).bit_length() - 1))
     sigs = (
         S.banded_signatures(emb, "vec_id", "embedding",

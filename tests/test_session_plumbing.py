@@ -117,6 +117,37 @@ def test_package_added_once_per_application(spark, monkeypatch, tmp_path):
     assert added == [xml_datasource._PKG_ZIP]
 
 
+def test_worker_cwd_holding_another_checkout_is_refused(tmp_path):
+    """Local workers put the JVM's working directory ahead of the shipped
+    zip on ``sys.path``: a different ``xml_hive_spark`` there would run in
+    the workers while the driver runs its own. Spark-free."""
+    import shutil
+    from pathlib import Path
+
+    import pytest
+
+    from xml_hive_spark.sources import xml_datasource
+
+    pkg_root = Path(xml_datasource.__file__).resolve().parent.parent
+    digest = xml_datasource._package_sources(pkg_root)[1]
+    other = tmp_path / "other"
+    (other / "xml_hive_spark").mkdir(parents=True)
+    (other / "xml_hive_spark" / "__init__.py").write_text("STUB = True\n")
+    with pytest.raises(RuntimeError) as exc:
+        xml_datasource.check_worker_cwd(other, pkg_root, digest)
+    assert str(other / "xml_hive_spark") in str(exc.value)
+    assert str(pkg_root) in str(exc.value)
+
+    # the checkout itself, a byte-identical copy, and a directory without
+    # the package all pass
+    xml_datasource.check_worker_cwd(pkg_root.parent, pkg_root, digest)
+    same = tmp_path / "same"
+    shutil.copytree(pkg_root, same / "xml_hive_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    xml_datasource.check_worker_cwd(same, pkg_root, digest)
+    xml_datasource.check_worker_cwd(tmp_path, pkg_root, digest)
+
+
 def test_planning_starts_no_spark_job(spark, tmp_path):
     """Phase A runs on the driver: building the read of a multi-split
     file submits no job."""

@@ -11,39 +11,71 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from tools.shuffle_audit import (  # noqa: E402
     _DRAIN_LIMIT_S,
-    _store_totals,
     drain_storage,
     measure,
+    measure_query,
 )
 
 
-def test_store_totals_sees_a_shuffle(spark):
-    # sum only the stages this test creates (id > before max): with the
-    # shared suite session's default retainedStages, old-stage eviction
-    # between snapshots would flake a before/after total-delta
-    # (ADVICE r11) — the min_stage_id filter is the tool's own fix
-    before = _store_totals(spark)
-    spark.range(100_000).selectExpr("id % 13 AS k", "id AS v") \
-        .groupBy("k").sum("v").collect()
-    after = _store_totals(spark, min_stage_id=before["max_stage_id"] + 1)
+def _group_by(spark, _sf_dir):
+    return spark.range(100_000).selectExpr("id % 13 AS k", "id AS v") \
+        .groupBy("k").sum("v")
+
+
+def _lone_run(spark, group, df):
+    """op_layers totals of one ``df.count()`` under its own job group."""
+    from perfbench.sparkstats import op_layers
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        df.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return op_layers(spark, [group])[group]
+
+
+def test_measure_query_sees_a_shuffle(spark):
+    m = measure_query(spark, "audit-test groupBy", _group_by, "unused")
     # one groupBy = one exchange: bytes match across the write/read
     # sides of the same exchange
-    assert after["shuffle_write"] > 0
-    assert after["shuffle_read"] == after["shuffle_write"]
-    assert after["n_stages"] >= 2  # map side + reduce side
-    assert after["max_stage_id"] > before["max_stage_id"]
+    assert m["shuffle_write"] > 0
+    assert m["shuffle_read"] == m["shuffle_write"]
+    assert m["spill_disk"] == 0
+    assert m["python_nodes"] == 0  # a JVM-only plan
+    assert m["build_s"] >= 0
 
 
-def test_store_totals_min_stage_id_excludes_old_stages(spark):
-    spark.range(10_000).selectExpr("id % 7 AS k").groupBy("k").count() \
-        .collect()
-    snap = _store_totals(spark)
-    # a floor above every retained stage id sums nothing
-    empty = _store_totals(spark, min_stage_id=snap["max_stage_id"] + 1)
-    assert empty["n_stages"] == 0
-    assert empty["shuffle_write"] == 0
-    # max_stage_id is reported regardless of the filter window
-    assert empty["max_stage_id"] == snap["max_stage_id"]
+def test_measure_query_excludes_the_warm_run(spark):
+    """The warm run and the measured run each build the DataFrame; only
+    the second is summed, so the figure equals one run's bytes taken
+    alone, not twice that."""
+    calls = []
+
+    def counted(s, d):
+        calls.append(d)
+        return _group_by(s, d)
+
+    m = measure_query(spark, "audit-test warm", counted, "unused")
+    assert len(calls) == 2
+    # the measured group is cleared afterwards: a later job is not tagged
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    single = _lone_run(spark, "audit-test single", _group_by(spark, "unused"))
+    assert m["shuffle_write"] == single["shuffle_write_bytes"] > 0
+
+
+def test_measure_query_counts_python_nodes(spark, tmp_path):
+    def py_plan(s, _d):
+        return s.range(1_000, numPartitions=2).mapInArrow(
+            lambda batches: batches, "id long")
+
+    plan = tmp_path / "py_plan.txt"
+    m = measure_query(spark, "audit-test python", py_plan, "unused", plan)
+    assert m["python_nodes"] == 1
+    assert "MapInArrow" in plan.read_text()  # --plans writes this file
+    assert m["arrow_bytes_in"] > 0 and m["arrow_bytes_out"] > 0
+    assert m["python_run_s"] >= 0 and m["python_start_init_s"] >= 0
 
 
 def test_drain_storage_settles_after_broadcast_join(spark):
@@ -67,12 +99,67 @@ def test_measure_delta_is_per_query(spark, sf_dir):
     out = measure(spark, ["q1_pricing_summary"], sf_dir)
     m = out["q1_pricing_summary"]
     # the steady-state q1 plan is scan -> partial agg -> one exchange ->
-    # final agg: it must shuffle SOMETHING (the partial-agg rows) and
-    # read parquet input, and the delta must exclude the warm run
-    # (a double-counted warm run would roughly double n_stages)
+    # final agg: it must shuffle SOMETHING (the partial-agg rows), read
+    # back what it wrote, and the figure must exclude the warm run (a
+    # double-counted warm run would double the bytes of a lone run)
     assert 0 < m["shuffle_write"] < 1_000_000
-    assert m["input"] > 0
-    assert m["n_stages"] <= 10
+    assert m["shuffle_read"] == m["shuffle_write"]
+    from xml_hive_spark.operators import all_queries
+
+    alone = _lone_run(spark, "audit-test q1 alone",
+                      all_queries()["q1_pricing_summary"].fn(spark, sf_dir))
+    assert alone["shuffle_write_bytes"] == m["shuffle_write"]
+    # a stage that reads no shuffle but feeds one: the parquet scan ran
+    assert alone["scan_stage_run_s"] > 0
+
+
+def test_regress_refuses_a_config_mismatch(tmp_path, monkeypatch):
+    """Shuffle bytes follow the task count, so --regress against an
+    artifact recorded at another core count or shuffle-partition count
+    exits non-zero, naming both, before any query is measured."""
+    import json
+    import types
+
+    import pytest
+
+    from tools import shuffle_audit
+    from xml_hive_spark import session
+
+    art = tmp_path / "audit.json"
+    art.write_text(json.dumps({
+        "sf_dir": "sf", "cpus": 32, "shuffle_partitions": 32,
+        "queries": {"q1_pricing_summary": {"shuffle_write": 1, "spill_disk": 0}},
+    }))
+    stopped = []
+    fake = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(defaultParallelism=4),
+        conf=types.SimpleNamespace(get=lambda key: "4"),
+        stop=lambda: stopped.append(True),
+    )
+
+    def no_measuring(*_args, **_kw):
+        raise AssertionError("measured despite a config mismatch")
+
+    monkeypatch.setattr(session, "get_spark", lambda **_kw: fake)
+    monkeypatch.setattr(shuffle_audit, "measure", no_measuring)
+    monkeypatch.setattr(sys, "argv", ["shuffle_audit.py", "--sf-dir", "sf",
+                                      "--regress", str(art)])
+    with pytest.raises(SystemExit) as exc:
+        shuffle_audit.main()
+    msg = str(exc.value.code)
+    assert exc.value.code not in (0, None)
+    assert "cpus=32 shuffle_partitions=32" in msg
+    assert "cpus=4 shuffle_partitions=4" in msg
+    assert stopped == [True]
+
+    current = shuffle_audit.recording_config(fake)
+    assert current == {"cpus": 4, "shuffle_partitions": 4}
+    assert shuffle_audit.config_mismatch(
+        {"cpus": 4, "shuffle_partitions": 4}, current) is None
+    # one setting off is enough; an unstamped artifact is not comparable
+    assert shuffle_audit.config_mismatch(
+        {"cpus": 4, "shuffle_partitions": 8}, current)
+    assert shuffle_audit.config_mismatch({"queries": {}}, current)
 
 
 def test_get_spark_extra_conf_applies_at_creation():

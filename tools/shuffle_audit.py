@@ -1,13 +1,12 @@
 """Per-query shuffle-byte audit: measure the exchanges, don't audit them.
 
-The 100-TB design claims lean on "minimize shuffles" — ids-only
-candidate phases, broadcast-vs-shuffle payload guards, map-side
-combines. The scale probe (tools/scale_probe.py) measures TIME; this
-tool measures BYTES: for each query it runs the plan once untimed
-(JIT, index/XML one-times) then reads the per-stage task metrics from
-the JVM AppStatusStore (works with spark.ui.enabled=false) and reports
-the delta in shuffle write/read, input, and output bytes for one
-steady-state execution.
+For each query the tool runs the plan once untimed (JIT, index and XML
+one-times), clears the cache, then runs it again under its own job group
+and reads that run's totals through ``perfbench.sparkstats.op_layers``
+(the status stores are populated with spark.ui.enabled=false): shuffle
+write and read, spill, and the Python boundary (plan-node count,
+start+init and run seconds, Arrow bytes each way), plus the seconds the
+query function takes to build its DataFrame on the driver.
 
 With ``--scaled DIR`` (a corpus built by tools/scale_probe.py) every
 query is measured at both scales and the bytes RATIO is reported — a
@@ -16,85 +15,43 @@ a plan whose candidate set or join fan-out grows superlinearly shows
 it in the ratio even when wall-clock hides it behind parallelism.
 
 Usage:
-    python tools/shuffle_audit.py [--sf-dir /root/testdata/sf0.1]
-                                  [--scaled $TMPDIR/xmlhive_scale/sf1]
+    python tools/shuffle_audit.py [--sf-dir SF_DIR] [--scaled SCALED_DIR]
                                   [--queries name ...]
-                                  [--regress SHUFFLE_AUDIT_rN.json]
+                                  [--regress SHUFFLE_AUDIT_*.json]
+                                  [--plans DIR]
 
-Prints one JSON line {query: {shuffle_write, shuffle_read, input,
-output, ...}} plus a markdown table for SCALE.md.
+Prints one JSON line {sf_dir, scaled, cpus, shuffle_partitions,
+queries: {query: {shuffle_write, shuffle_read, spill_disk, ...}}} plus a
+markdown table for SCALE.md. ``--plans DIR`` also writes each measured
+query's formatted plan to ``DIR/<query>.txt``.
 
-``--regress`` (r13): compare each query's base-SF shuffle_write to the
-recorded artifact and exit 1 on drift beyond ±10 %. Rationale: on this
-host, WALL-CLOCK exponents moved ±0.3 with box load while shuffle
-bytes replayed BYTE-IDENTICAL across rounds and sessions (ann sf1:
-168,062,463 in both the r12 and r13 audits; every decade-1 r13 ratio
-replayed r12 within noise) — bytes are the load-invariant plan-change
-signal, so the byte gate catches a silently changed join strategy,
-lost map-side combine, or candidate-volume regression that a loaded
-box hides in timing noise. Queries present in the artifact but not
-measured are listed (visible gap, not silent); queries measured but
-unrecorded fail (a new query must be added to the artifact
-deliberately). Spill at the base SF also fails — every recorded
-base-SF measurement has spill 0, so any spill is new memory pressure.
+``--regress`` compares each query's base-SF shuffle_write to a recorded
+artifact and exits 1 on drift beyond ±10 %. Shuffle bytes replay
+within a few percent across sessions (most rows byte-identical) while
+wall-clock moves with box load, so the byte gate catches a silently
+changed join strategy, a lost map-side combine or a candidate-volume
+regression that timing noise hides. Bytes
+follow the map-task count, so an artifact is comparable only at the
+core count and shuffle-partition count it records: ``--regress`` exits 1
+before measuring when the session's differ. Queries recorded but not
+measured are listed; queries measured but unrecorded fail (a new query
+must be added to the artifact deliberately). Spill at the base SF also
+fails: every recorded base-SF measurement has spill 0.
 """
 
 from __future__ import annotations
 
 import argparse
+import io
 import json
 import sys
 import time
+from contextlib import redirect_stdout
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-
-def _store_totals(spark, min_stage_id: int = -1) -> dict[str, int]:
-    """Sum task metrics across retained stages with id >= min_stage_id.
-
-    Uses the Spark 4 AppStatusStore.stageList(statuses, details,
-    withSummaries, unsortedQuantiles, taskStatus) signature; the store
-    is populated regardless of spark.ui.enabled. ``max_stage_id`` in
-    the result lets a caller take a before-snapshot and then sum ONLY
-    the stages a measured run created (id > before max) — immune to
-    the store evicting OLD stages between snapshots, which a plain
-    before/after total-delta silently under-counts (the SKIPPED-stage
-    failure class r11 fixed once; ADVICE r11 flagged the remaining
-    eviction window). Eviction can still bite only if a SINGLE
-    measured run outgrows spark.ui.retainedStages — measure() warns
-    when the store is sized near that."""
-    sc = spark.sparkContext
-    ss = sc._jsc.sc().statusStore()
-    gw = sc._gateway
-    empty = gw.jvm.java.util.ArrayList()
-    quantiles = gw.new_array(gw.jvm.double, 0)
-    stages = ss.stageList(empty, False, False, quantiles, empty)
-    tot = {"shuffle_write": 0, "shuffle_read": 0, "input": 0, "output": 0,
-           "spill_disk": 0, "n_stages": 0, "n_skipped": 0,
-           "max_stage_id": -1}
-    for i in range(stages.size()):
-        st = stages.apply(i)
-        sid = st.stageId()
-        tot["max_stage_id"] = max(tot["max_stage_id"], sid)
-        if sid < min_stage_id:
-            continue
-        tot["shuffle_write"] += st.shuffleWriteBytes()
-        tot["shuffle_read"] += st.shuffleReadBytes()
-        tot["input"] += st.inputBytes()
-        tot["output"] += st.outputBytes()
-        tot["spill_disk"] += st.diskBytesSpilled()
-        tot["n_stages"] += 1
-        # SKIPPED = the stage consumed already-written shuffle files.
-        # WITHIN one execution that's normal (a self-join reads one
-        # exchange twice; its bytes were counted at the write). ACROSS
-        # executions it under-counts — that leak is what the
-        # clearCache in measure() breaks; the count here is surfaced
-        # for diagnosis, not as an error.
-        if st.status().toString() == "SKIPPED":
-            tot["n_skipped"] += 1
-    return tot
-
+from perfbench.sparkstats import _PY_NODE, _seq, op_layers  # noqa: E402
 
 _DRAIN_LIMIT_S = 5.0
 
@@ -133,41 +90,101 @@ def drain_storage(spark, name: str) -> bool:
     return False
 
 
-def measure(spark, names, sf_dir: str) -> dict[str, dict[str, int]]:
+def python_nodes(spark, group: str) -> int:
+    """Python evaluation nodes (sparkstats' ``_PY_NODE``) in the plans of
+    the SQL executions run under ``group``. A subtree a plan lists twice
+    shares its metric accumulators, so it counts once."""
+    conv = spark.sparkContext._jvm.scala.jdk.javaapi.CollectionConverters
+    sql = spark._jsparkSession.sharedState().statusStore()
+    seen = set()
+    for ex in _seq(conv, sql.executionsList()):
+        if ex.description() != group:
+            continue
+        for node in _seq(conv, sql.planGraph(ex.executionId()).allNodes()):
+            if _PY_NODE.search(node.name()):
+                seen.add(tuple(m.accumulatorId()
+                               for m in _seq(conv, node.metrics())))
+    return len(seen)
+
+
+def measure_query(spark, group: str, fn, sf_dir: str,
+                  plan_path: Path | None = None) -> dict:
+    """One steady-state run of ``fn(spark, sf_dir)``: a warm run under
+    ``group + " warm"``, then the measured run under job group ``group``,
+    whose totals come from ``op_layers``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group + " warm", group + " warm", False)
+    fn(spark, sf_dir).count()  # JIT, index/XML-gen one-times
+    # Spark reuses a prior identical execution's shuffle outputs (stages
+    # show SKIPPED), which silently zeroes the measured run's bytes —
+    # dedup_simhash at 10x read 1.8 KB instead of its true 167 MB before
+    # this clear. WITHIN-run persist/reuse still applies, which is the
+    # plan behavior being measured.
+    spark.catalog.clearCache()
+    drain_storage(spark, group)
+    sc.setJobGroup(group, group, False)
+    try:
+        start = time.perf_counter()
+        df = fn(spark, sf_dir)
+        build_s = time.perf_counter() - start
+        df.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tot = op_layers(spark, [group])[group]
+    row = {
+        "shuffle_write": int(tot["shuffle_write_bytes"]),
+        "shuffle_read": int(tot["shuffle_read_bytes"]),
+        "spill_disk": int(tot["spill_bytes"]),
+        "python_nodes": python_nodes(spark, group),
+        "python_start_init_s": round(tot.get("py.python_start_s", 0.0)
+                                     + tot.get("py.python_init_s", 0.0), 3),
+        "python_run_s": round(tot.get("py.python_run_s", 0.0), 3),
+        "arrow_bytes_in": round(tot.get("py.arrow_bytes_in", 0.0)),
+        "arrow_bytes_out": round(tot.get("py.arrow_bytes_out", 0.0)),
+        "build_s": round(build_s, 3),
+    }
+    if plan_path is not None:
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        plan_path.write_text(buf.getvalue())
+    return row
+
+
+def measure(spark, names, sf_dir: str,
+            plans_dir: Path | None = None) -> dict[str, dict]:
     from xml_hive_spark.operators import all_queries
 
     reg = all_queries()
-    retained = int(spark.conf.get("spark.ui.retainedStages", "1000"))
     out = {}
     for name in names:
-        qd = reg[name]
-        qd.fn(spark, sf_dir).count()  # warm: JIT, index/XML-gen one-times
-        # Spark reuses a prior identical execution's shuffle outputs
-        # (stages show SKIPPED), which silently zeroes the measured
-        # run's deltas — dedup_simhash at 10x read 1.8 KB instead of
-        # its true 167 MB before this clear. Dropping the cache breaks
-        # the shared lineage so every exchange of the measured run
-        # actually executes; WITHIN-run persist/reuse still applies,
-        # which is the plan behavior being measured.
-        spark.catalog.clearCache()
-        drain_storage(spark, name)
-        before = _store_totals(spark)
-        qd.fn(spark, sf_dir).count()
-        # sum ONLY the measured run's stages (id > before max): old-stage
-        # eviction between snapshots can no longer deflate the figure
-        after = _store_totals(spark, min_stage_id=before["max_stage_id"] + 1)
-        if after["n_stages"] > retained // 2:
-            print(f"# WARNING {name}: {after['n_stages']} stages vs "
-                  f"spark.ui.retainedStages={retained} — a single run "
-                  f"near the cap can self-evict; raise retainedStages",
-                  file=sys.stderr)
-        out[name] = {k: after[k] for k in after if k != "max_stage_id"}
+        plan_path = plans_dir / f"{name}.txt" if plans_dir else None
+        m = out[name] = measure_query(spark, f"shuffle-audit {sf_dir} {name}",
+                                      reg[name].fn, sf_dir, plan_path)
         print(f"# {sf_dir.rsplit('/', 1)[-1]} {name}: "
-              f"sw={out[name]['shuffle_write']} sr={out[name]['shuffle_read']} "
-              f"in={out[name]['input']} spill={out[name]['spill_disk']} "
-              f"skipped={out[name]['n_skipped']}",
-              file=sys.stderr)
+              f"sw={m['shuffle_write']} sr={m['shuffle_read']} "
+              f"spill={m['spill_disk']} py_nodes={m['python_nodes']} "
+              f"build={m['build_s']}s", file=sys.stderr)
     return out
+
+
+def recording_config(spark) -> dict[str, int]:
+    """The session settings shuffle bytes depend on, as an artifact records them."""
+    return {"cpus": spark.sparkContext.defaultParallelism,
+            "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions"))}
+
+
+def config_mismatch(artifact: dict, current: dict[str, int]) -> str | None:
+    """Why ``artifact`` is not comparable with a session at ``current``, or None."""
+    recorded = {k: artifact.get(k) for k in current}
+    if recorded == current:
+        return None
+    return (f"artifact recorded at cpus={recorded['cpus']} "
+            f"shuffle_partitions={recorded['shuffle_partitions']}, this "
+            f"session runs cpus={current['cpus']} "
+            f"shuffle_partitions={current['shuffle_partitions']}; shuffle "
+            f"bytes follow the task count (set SPARK_GRAFT_CPUS to match)")
 
 
 def _fmt(b: int) -> str:
@@ -225,12 +242,16 @@ def main() -> None:
     ap.add_argument("--skip-xml", action="store_true")
     ap.add_argument("--regress", metavar="SHUFFLE_AUDIT_JSON", default=None,
                     help="compare base-SF shuffle_write per query to the "
-                         "recorded artifact; exit 1 beyond ±10% or on new "
-                         "base-SF spill. Default query set = the "
-                         "artifact's recorded queries (load-invariant "
-                         "plan-change gate — see module docstring)")
+                         "recorded artifact; exit 1 beyond ±10%%, on new "
+                         "base-SF spill, or (before measuring) when the "
+                         "artifact's cpus/shuffle_partitions differ from "
+                         "the session's. Default query set = the "
+                         "artifact's recorded queries")
     ap.add_argument("--tolerance", type=float, default=0.10,
                     help="relative drift bar for --regress (default 0.10)")
+    ap.add_argument("--plans", metavar="DIR", type=Path, default=None,
+                    help="write each measured query's formatted plan to "
+                         "DIR/<query>.txt")
     ap.add_argument("--attach-cap", type=int, default=None,
                     help="override operators._ATTACH_BROADCAST_CAP "
                          "(bytes). --attach-cap 0 forces every "
@@ -252,7 +273,7 @@ def main() -> None:
         print(f"# _ATTACH_BROADCAST_CAP overridden to {args.attach_cap}",
               file=sys.stderr)
 
-    recorded = None
+    art = recorded = None
     if args.regress:
         with open(args.regress) as fh:
             art = json.load(fh)
@@ -271,7 +292,15 @@ def main() -> None:
     spark = get_spark(app_name="xml-hive-spark-shuffle-audit",
                       extra_conf={"spark.ui.retainedStages": "100000",
                                   "spark.ui.retainedJobs": "100000"})
-    base = measure(spark, names, args.sf_dir)
+    config = recording_config(spark)
+    if art is not None:
+        why = config_mismatch(art, config)
+        if why is not None:
+            spark.stop()
+            sys.exit(f"# regress REFUSED {args.regress}: {why}")
+    if args.plans is not None:
+        args.plans.mkdir(parents=True, exist_ok=True)
+    base = measure(spark, names, args.sf_dir, args.plans)
     scaled = measure(spark, names, args.scaled) if args.scaled else None
     spark.stop()
 
@@ -285,10 +314,11 @@ def main() -> None:
                 round(scaled[n]["shuffle_write"] / bw, 2) if bw > 0 else None
             )
     print(json.dumps({"sf_dir": args.sf_dir, "scaled": args.scaled,
-                      "queries": report}))
+                      **config, "queries": report}))
 
-    hdr = "| query | shuffle W | shuffle R | input | spill |"
-    sep = "|---|---|---|---|---|"
+    hdr = ("| query | shuffle W | shuffle R | spill | py nodes "
+           "| py start+init | py run | build |")
+    sep = "|---|---|---|---|---|---|---|---|"
     if scaled:
         hdr += " shuffle W @scaled | ratio |"
         sep += "---|---|"
@@ -297,7 +327,9 @@ def main() -> None:
     for n in sorted(names, key=lambda x: -report[x]["shuffle_write"]):
         r = report[n]
         row = (f"| {n} | {_fmt(r['shuffle_write'])} | {_fmt(r['shuffle_read'])}"
-               f" | {_fmt(r['input'])} | {_fmt(r['spill_disk'])} |")
+               f" | {_fmt(r['spill_disk'])} | {r['python_nodes']}"
+               f" | {r['python_start_init_s']} s | {r['python_run_s']} s"
+               f" | {r['build_s']} s |")
         if scaled:
             ratio = r["shuffle_ratio"]
             row += (f" {_fmt(r['scaled_shuffle_write'])} |"

@@ -237,31 +237,15 @@ def table_bytes(sf_dir: str, name: str) -> int:
         return 1 << 40
 
 
-def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """EXACT row count of a source table from parquet footer metadata —
-    no Spark job. Several queries need the corpus count mid-plan (the
-    adaptive LSH band width, provenance shares); a ``df.count()`` there
-    costs a full scheduled job (~0.17 s measured at sf0.1 idle, worse
-    under load) to learn a number every parquet footer already states.
-    Footer reads are O(#files) driver-side metadata I/O — the same
-    order as the file listing Spark performs at plan time, so this
-    holds at cluster scale too (a production pipeline would persist
-    corpus stats beside the corpus instead). Falls back to a Spark
-    count for unreadable/remote layouts so behavior is unchanged off
-    the local-file path.
+def table_rows(sf_dir: str, name: str) -> int:
+    """EXACT row count of a source table from its parquet footers — no
+    Spark job, where a ``df.count()`` mid-plan (adaptive LSH band width,
+    provenance shares) costs a scheduled job. A missing or unreadable
+    table raises. Equals ``t(...).count()`` only while :func:`t` applies
+    no row-changing transform (tests/test_opt_r13.py pins it)."""
+    import pyarrow.dataset as _ds
 
-    CALLER CONTRACT (r13 advice): equivalence to ``t(...).count()``
-    holds only for tables where :func:`t` applies no row-changing
-    transform — true for every table today (t() only repairs dtypes).
-    If t() ever grows a filter for some table, callers of table_rows
-    on that table must switch back to counting the DataFrame;
-    tests/test_opt_r13.py pins the equality on the tables in use."""
-    try:
-        import pyarrow.dataset as _ds
-
-        return _ds.dataset(f"{sf_dir}/{name}.parquet").count_rows()
-    except Exception:
-        return t(spark, sf_dir, name).count()
+    return _ds.dataset(f"{sf_dir}/{name}.parquet").count_rows()
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

@@ -56,7 +56,7 @@ def corpus_provenance_report(spark: SparkSession, sf: str) -> DataFrame:
     the corpus total is the one driver scalar."""
     docs = t(spark, sf, "documents")
     # r13: footer-metadata count (no Spark job) — see table_rows
-    n_total = table_rows(spark, sf, "documents")
+    n_total = table_rows(sf, "documents")
     return (
         docs.select(
             "source", "lang", "n_chars",

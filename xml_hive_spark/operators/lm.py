@@ -148,7 +148,7 @@ def tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     old ``docs.count()`` spent a full scheduled scan to learn a number
     the footers already state)."""
     docs = t(spark, sf, "documents")
-    n_docs = table_rows(spark, sf, "documents")
+    n_docs = table_rows(sf, "documents")
     tok = docs.select(
         "doc_id", F.explode(F.expr(_SPARK_TOKENS)).alias("term")
     )

@@ -455,7 +455,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     ``ann_join_topk`` (adaptive banding, linear-at-scale) demonstrates."""
     return embedding_cosine_pairs(t(spark, sf, "embeddings"),
                                   "vec_id", "embedding", 0.25,
-                                  n=table_rows(spark, sf, "embeddings"),
+                                  n=table_rows(sf, "embeddings"),
                                   vec_path=f"{sf}/embeddings.parquet")
 
 
@@ -1289,11 +1289,9 @@ def cosine_topk_ivf_kmeans(spark: SparkSession, sf: str) -> DataFrame:
 
     import numpy as np
 
-    # r14: the query batch selects raw (vec_id, embedding) — assignment
-    # leaves both untouched — so the footer-pushdown fast path of
-    # _query_batch_rows applies (the collect here was a full scheduled
-    # job through the kmeans-assign projection to move 5 rows)
-    q_rows = _query_batch_rows(emb, sf)
+    # the query batch is raw (vec_id, embedding), which assignment leaves
+    # untouched, read on the driver without a Spark job
+    q_rows = _query_batch_rows(sf)
     # per-query probe list: tiny (5 × k) — computed driver-side like the
     # centroid collect; at scale this is a broadcast of q × nprobe ints.
     # Exact integer probe scores; np.argsort is stable, so ties fall to
@@ -1552,7 +1550,7 @@ def cosine_topk_ivf_pq(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     idx = ivf_pq_index(spark, sf)
     coded = idx.lists(spark)
-    probed, _ = _adc_tables(spark, emb, idx.books, sf)
+    probed, _ = _adc_tables(spark, idx.books, sf)
 
     cand = probed.drop("qe").crossJoin(
         coded.select(F.col("vec_id").alias("nid"), "hx", "nsq")
@@ -1568,48 +1566,27 @@ from collections import namedtuple
 _QRow = namedtuple("_QRow", ["vec_id", "embedding"])
 
 
-def _query_batch_rows(emb: DataFrame, sf: str | None) -> list:
-    """The vec_id < 5 query batch, on the driver. For a local parquet
-    layout this is a pyarrow predicate-pushdown read of 5 rows — no
-    scheduled Spark job (r13: the collect was the only job inside the
-    ivf/pq search functions, ~0.15 s of pure scheduling at sf0.1 to
-    move 5 rows). Values mirror the Spark path bit-exactly: ``t()``
-    pins embeddings to array<float>, so entries are cast through
-    float32 before widening to Python floats, exactly what a collect
-    of the cast DataFrame returns. Any unreadable/remote layout falls
-    back to the collect.
+def _query_batch_rows(sf: str) -> list:
+    """The vec_id < 5 query batch, read on the driver from the embeddings
+    parquet with a pushed-down filter — no Spark job. Entries go through
+    float32 before widening to Python floats, the values a collect of
+    ``t(spark, sf, 'embeddings')`` (array<float>) returns. A missing or
+    unreadable table raises."""
+    import numpy as np
+    import pyarrow.dataset as _ds
 
-    CALLER CONTRACT (r13 advice): ``emb`` must be exactly
-    ``t(spark, sf, 'embeddings')`` — or a projection that leaves
-    (vec_id, embedding) value-identical to it (the ivf_kmeans caller
-    passes the raw table; assignment adds a column, it never rewrites
-    these two). The fast path reads {sf}/embeddings.parquet directly
-    and would silently ignore any row-changing transform on ``emb``;
-    a caller that filters or remaps vectors must pass sf=None to force
-    the collect path."""
-    if sf is not None:
-        try:
-            import numpy as np
-            import pyarrow.dataset as _ds
-
-            tab = _ds.dataset(f"{sf}/embeddings.parquet").to_table(
-                columns=["vec_id", "embedding"],
-                filter=_ds.field("vec_id") < 5,
-            )
-            rows = [
-                _QRow(int(i), [float(x) for x in
-                               np.asarray(e, dtype=np.float32)])
-                for i, e in zip(tab.column("vec_id").to_pylist(),
-                                tab.column("embedding").to_pylist())
-            ]
-            rows.sort(key=lambda r: r.vec_id)
-            return rows
-        except Exception:
-            pass
-    return emb.filter(F.col("vec_id") < 5).select("vec_id", "embedding").collect()
+    tab = _ds.dataset(f"{sf}/embeddings.parquet").to_table(
+        columns=["vec_id", "embedding"], filter=_ds.field("vec_id") < 5)
+    rows = [
+        _QRow(int(i), [float(x) for x in np.asarray(e, dtype=np.float32)])
+        for i, e in zip(tab.column("vec_id").to_pylist(),
+                        tab.column("embedding").to_pylist())
+    ]
+    rows.sort(key=lambda r: r.vec_id)
+    return rows
 
 
-def _adc_tables(spark: SparkSession, emb: DataFrame, books, sf: str | None = None):
+def _adc_tables(spark: SparkSession, books, sf: str):
     """Broadcast (qid, qe, tbl) with the per-query ADC lookup table
     T[m][k] = <q_sub_m, codebook[m][k]>, flattened M*K. Returns
     (broadcast DataFrame, collected query rows) so callers that also
@@ -1623,7 +1600,7 @@ def _adc_tables(spark: SparkSession, emb: DataFrame, books, sf: str | None = Non
     twin's SUM, in any order."""
     import numpy as np
 
-    q_rows = _query_batch_rows(emb, sf)
+    q_rows = _query_batch_rows(sf)
     sub = books.shape[2]
     probe = []
     for r in q_rows:
@@ -1715,7 +1692,7 @@ def cosine_topk_ivf_pq_probed(spark: SparkSession, sf: str) -> DataFrame:
     ``ann_index.ivf_pq_index`` builds (or loads) the persisted artifact —
     seeded k-means centroids + PQ codebooks + the encoded lists as a
     parquet directory PARTITIONED BY cluster — once per corpus, and this
-    query is the search path only: ONE collect of the query batch (ADC
+    query is the search path only: ONE read of the query batch (ADC
     tables and probe lists derive from the same 5 rows) plus one DAG
     whose list scan is partition-PRUNED to the probed clusters
     (``cluster IN (...)`` → PartitionFilters, the columnar equivalent of
@@ -1733,9 +1710,9 @@ def cosine_topk_ivf_pq_probed(spark: SparkSession, sf: str) -> DataFrame:
     emb = t(spark, sf, "embeddings")
     idx = ivf_pq_index(spark, sf)
 
-    # one collect for the query batch: the ADC tables' collected rows
+    # one read of the query batch: the ADC tables' query rows
     # also feed the coarse probe lists
-    probed, q_rows = _adc_tables(spark, emb, idx.books, sf)
+    probed, q_rows = _adc_tables(spark, idx.books, sf)
     probes = [
         (int(r.vec_id), c)
         for r in q_rows
@@ -1914,7 +1891,7 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     # r13: the count comes from parquet footer metadata (table_rows) —
     # the old emb.count() spent a full scheduled job (~0.17 s at sf0.1)
     # to learn a number the footers already state
-    n = table_rows(spark, sf, "embeddings")
+    n = table_rows(sf, "embeddings")
     # min(30): band buckets ride array<int>, so 1 << (r-1) must fit int32
     r = min(30, max(5, (n // 64).bit_length() - 1))
     # r13: persist (id, sig) ONLY — this query attaches vectors from

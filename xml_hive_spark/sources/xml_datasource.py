@@ -231,7 +231,42 @@ class XmlHiveReader(DataSourceReader):
 
 _REGISTERED_SESSIONS: set[int] = set()
 _PKG_ZIP: str | None = None
+_PKG_DIGEST: str | None = None
 _SHIPPED_APPS: set[str] = set()
+
+
+def _package_sources(pkg_root):
+    """``[(path, archive name)]`` of the package's sources and their hash."""
+    import hashlib
+
+    sources = [(p, "xml_hive_spark/" + str(p.relative_to(pkg_root)))
+               for p in sorted(pkg_root.rglob("*.py"))]
+    digest = hashlib.sha256()
+    for p, name in sources:
+        digest.update(name.encode() + b"\0" + p.read_bytes() + b"\0")
+    return sources, digest.hexdigest()
+
+
+def check_worker_cwd(cwd, pkg_root, digest: str) -> None:
+    """Raise when local workers would import another ``xml_hive_spark``.
+
+    ``python -m pyspark.daemon`` puts the JVM's working directory first on
+    every worker's ``sys.path``, ahead of the shipped zip, so a package in
+    that directory shadows the driver's. A copy with the same sources is
+    harmless; any other is a driver and workers running different code."""
+    from pathlib import Path
+
+    shadow = Path(cwd) / "xml_hive_spark"
+    if not (shadow / "__init__.py").is_file():
+        return
+    if shadow.resolve() == Path(pkg_root).resolve():
+        return
+    if _package_sources(shadow.resolve())[1] != digest:
+        raise RuntimeError(
+            f"Spark Python workers start in {cwd} and would import "
+            f"{shadow.resolve()}, while the driver runs "
+            f"{Path(pkg_root).resolve()}; the sources differ. Start the "
+            f"session from another directory or from this checkout.")
 
 
 def ship_package(spark) -> None:
@@ -239,26 +274,22 @@ def ship_package(spark) -> None:
     the driver process's cwd/sys.path: the DataSource class is pickled by
     reference, so the data-source worker must be able to import the
     package. ``addPyFile`` puts the zipped package on every worker's
-    path, once per Spark application. The zip is named by a hash of the
-    package sources and published with an atomic rename, so concurrent
-    processes running different checkouts never ship each other's code
-    or a half-written zip."""
-    global _PKG_ZIP
-    import hashlib
+    path, once per Spark application; on a local master the JVM's working
+    directory is checked first (:func:`check_worker_cwd`). The zip is
+    named by a hash of the package sources and published with an atomic
+    rename, so concurrent processes running different checkouts never
+    ship each other's code or a half-written zip."""
+    global _PKG_ZIP, _PKG_DIGEST
     import os
     import tempfile
     import zipfile
     from pathlib import Path
 
+    pkg_root = Path(__file__).resolve().parent.parent
     if _PKG_ZIP is None:
-        pkg_root = Path(__file__).resolve().parent.parent
-        sources = [(p, "xml_hive_spark/" + str(p.relative_to(pkg_root)))
-                   for p in sorted(pkg_root.rglob("*.py"))]
-        digest = hashlib.sha256()
-        for p, name in sources:
-            digest.update(name.encode() + b"\0" + p.read_bytes() + b"\0")
+        sources, _PKG_DIGEST = _package_sources(pkg_root)
         zpath = Path(tempfile.gettempdir()) / (
-            f"xml_hive_spark_pkg_{digest.hexdigest()[:16]}.zip")
+            f"xml_hive_spark_pkg_{_PKG_DIGEST[:16]}.zip")
         tmp = zpath.with_name(f"{zpath.name}.tmp{os.getpid()}")
         with zipfile.ZipFile(tmp, "w") as z:
             for p, name in sources:
@@ -267,6 +298,9 @@ def ship_package(spark) -> None:
         _PKG_ZIP = str(zpath)
     sc = spark.sparkContext
     if sc.applicationId not in _SHIPPED_APPS:
+        if sc.master.startswith("local"):
+            check_worker_cwd(sc._jvm.System.getProperty("user.dir"),
+                             pkg_root, _PKG_DIGEST)
         sc.addPyFile(_PKG_ZIP)
         _SHIPPED_APPS.add(sc.applicationId)
 
