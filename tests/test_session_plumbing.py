@@ -1,5 +1,6 @@
-"""Session plumbing: the default core count, the shipped package zip,
-the cached Avro probe and the workers' stat-checked zip import caches."""
+"""Session plumbing: the default core count and driver heap, the Spark
+home local workers import pyspark from, the shipped package zip, the
+cached Avro probe and the workers' stat-checked zip import caches."""
 
 from __future__ import annotations
 
@@ -9,32 +10,303 @@ import sys
 import types
 import zipfile
 
+import pytest
+
+
+def _meminfo(tmp_path, kib=16_000_000):
+    path = tmp_path / "meminfo"
+    path.write_text(f"MemFree:  1000 kB\nMemTotal:  {kib} kB\n")
+    return str(path)
+
+
+def _cgroup(tmp_path, memory_max):
+    tmp_path.mkdir()
+    proc = tmp_path / "cgroup"
+    proc.write_text("4:memory:/v1\n0::/jobs/one\n")
+    root = tmp_path / "fs"
+    (root / "jobs" / "one").mkdir(parents=True)
+    if memory_max is not None:
+        (root / "jobs" / "one" / "memory.max").write_text(memory_max + "\n")
+    return str(proc), str(root)
+
+
+def test_driver_heap_is_a_quarter_of_the_smaller_limit(tmp_path):
+    from xml_hive_spark.session import default_driver_memory
+
+    quarter = "3906m"  # of MemTotal, 16e6 KiB
+    meminfo = _meminfo(tmp_path)
+    # cgroup v2 limit below MemTotal wins
+    assert default_driver_memory(meminfo, *_cgroup(tmp_path / "a", str(2 << 30))) == "512m"
+    # a limit above MemTotal, "max", no memory.max, or no cgroup file: MemTotal
+    for sub, memory_max in (("b", str(64 << 30)), ("c", "max"), ("d", None)):
+        assert default_driver_memory(meminfo, *_cgroup(tmp_path / sub, memory_max)) == quarter
+    assert default_driver_memory(meminfo, str(tmp_path / "missing"), str(tmp_path)) == quarter
+
+
+def _fake_home(tmp_path):
+    """A Spark home whose spark-core jar carries the driver's pyspark version."""
+    import pyspark
+
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    (home / "jars" / f"spark-core_2.13-{pyspark.__version__}.jar").write_bytes(b"")
+    (home / "python" / "lib").mkdir(parents=True)
+    (home / "python" / "lib" / "pyspark.zip").write_bytes(b"")
+    (home / "bin").mkdir()
+    (home / "RELEASE").write_text("Spark\n")
+    return str(home)
+
+
+@pytest.fixture
+def decide(monkeypatch, tmp_path):
+    """``worker_spark_home`` with every condition for the shadow home met
+    (no py4j gateway yet, local master, this interpreter as the worker's)."""
+    import tempfile
+
+    from pyspark import SparkContext
+
+    from xml_hive_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    home = _fake_home(tmp_path)
+
+    def run(master="local[2]", worker_python=sys.executable):
+        return session.worker_spark_home(master, worker_python, home)
+
+    run.home = home
+    return run
+
+
+def test_local_workers_get_the_shadow_home(decide, tmp_path):
+    got = decide()
+    assert got != decide.home
+    assert os.path.dirname(got) == str(tmp_path)
+    assert decide("local") == decide("local[*]") == got
+
+
+def test_real_home_kept_once_a_gateway_runs(decide, monkeypatch):
+    """pyspark launches no JVM while its gateway lives, even with no
+    active context (after ``spark.stop()``)."""
+    from pyspark import SparkContext
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    assert decide() == decide.home
+
+
+def test_real_home_kept_for_a_non_local_master(decide):
+    assert decide("spark://driver:7077") == decide.home
+    assert decide("local-cluster[2,1,1024]") == decide.home
+
+
+def test_real_home_kept_on_a_version_mismatch(decide, monkeypatch):
+    import pyspark
+
+    monkeypatch.setattr(pyspark, "__version__", "0.0.1")
+    assert decide() == decide.home
+
+
+def test_real_home_kept_when_the_worker_resolves_another_pyspark(decide, monkeypatch, tmp_path):
+    other = tmp_path / "other"
+    (other / "pyspark").mkdir(parents=True)
+    (other / "pyspark" / "__init__.py").write_text("")
+    monkeypatch.setenv("PYTHONPATH", str(other))
+    assert decide() == decide.home
+    monkeypatch.delenv("PYTHONPATH")
+    # an interpreter that cannot start, or has no pyspark at all
+    assert decide(worker_python=str(tmp_path / "no-python")) == decide.home
+    no_site = tmp_path / "python-no-site"
+    no_site.write_text(f"#!/bin/sh\nexec {sys.executable} -S \"$@\"\n")
+    no_site.chmod(0o755)
+    assert decide(worker_python=str(no_site)) == decide.home
+
+
+def test_shadow_home_links_all_but_python(tmp_path, monkeypatch):
+    import tempfile
+
+    from xml_hive_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    real = _fake_home(tmp_path)
+    home = session.shadow_spark_home(real)
+    links = sorted(os.listdir(home))
+    assert links == sorted(e for e in os.listdir(real) if e != "python")
+    for e in links:
+        assert os.readlink(os.path.join(home, e)) == os.path.join(real, e)
+    # published once, by rename: the same directory, no temp left behind
+    assert session.shadow_spark_home(real) == home
+    assert os.listdir(tmp_path / "tmp") == [os.path.basename(home)]
+    assert sorted(os.listdir(home)) == links
+
+    # another process publishes first: its home stands, ours is removed
+    (tmp_path / "tmp2").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp2"))
+    real_replace = os.replace
+
+    def lose_the_race(src, dst):
+        os.mkdir(dst)
+        for e in links:
+            os.symlink(os.path.join(real, e), os.path.join(dst, e))
+        real_replace(src, dst)
+
+    monkeypatch.setattr(session.os, "replace", lose_the_race)
+    raced = session.shadow_spark_home(real)
+    assert os.listdir(tmp_path / "tmp2") == [os.path.basename(raced)]
+    assert sorted(os.listdir(raced)) == links
+
+
+def _tamper(home, how):
+    if how == "wrong link":
+        os.unlink(os.path.join(home, "jars"))
+        os.symlink("/elsewhere/jars", os.path.join(home, "jars"))
+    elif how == "missing link":
+        os.unlink(os.path.join(home, "bin"))
+    elif how == "extra entry":
+        os.symlink("/elsewhere/python", os.path.join(home, "python"))
+    elif how == "writable by others":
+        os.chmod(home, 0o777)
+    elif how == "a symlink":
+        os.rename(home, home + ".target")
+        os.symlink(home + ".target", home)
+
+
+@pytest.mark.parametrize("how", ["wrong link", "missing link", "extra entry",
+                                 "writable by others", "a symlink"])
+def test_stale_shadow_home_of_this_user_is_rebuilt(tmp_path, monkeypatch, how):
+    import tempfile
+
+    from xml_hive_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    real = _fake_home(tmp_path)
+    home = session.shadow_spark_home(real)
+    _tamper(home, how)
+    assert session.shadow_spark_home(real) == home
+    assert not os.path.islink(home) and not os.stat(home).st_mode & 0o022
+    assert sorted(os.listdir(home)) == ["RELEASE", "bin", "jars"]
+    for e in os.listdir(home):
+        assert os.readlink(os.path.join(home, e)) == os.path.join(real, e)
+    leftovers = {home + ".target"} if how == "a symlink" else set()
+    assert {str(p) for p in (tmp_path / "tmp").iterdir()} == {home} | leftovers
+
+
+def test_shadow_home_of_another_user_is_not_used(tmp_path, monkeypatch):
+    """A directory at this user's name, owned by someone else, is neither
+    trusted nor touched: the session gets a private shadow home."""
+    import tempfile
+
+    from xml_hive_spark import session
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
+    real = _fake_home(tmp_path)
+    monkeypatch.setattr(session.os, "getuid", lambda: os.stat(tmp_path).st_uid + 1)
+    planted = session.shadow_spark_home(real)  # owned by the real uid, not the one reported
+    _tamper(planted, "wrong link")
+    got = session.shadow_spark_home(real)
+    assert got != planted and os.path.dirname(got) == os.path.dirname(planted)
+    assert os.readlink(os.path.join(planted, "jars")) == "/elsewhere/jars"
+    assert sorted(os.listdir(got)) == ["RELEASE", "bin", "jars"]
+    for e in os.listdir(got):
+        assert os.readlink(os.path.join(got, e)) == os.path.join(real, e)
+    # the untouched one is still refused even when its links are right
+    os.unlink(os.path.join(planted, "jars"))
+    os.symlink(os.path.join(real, "jars"), os.path.join(planted, "jars"))
+    assert session.shadow_spark_home(real) not in (planted, got)
+
+
+class _Builder:
+    """A stand-in for ``SparkSession.builder`` that records the master and
+    the ``SPARK_HOME`` in force while the session is created."""
+
+    def __init__(self, result, fail=False):
+        self.result, self.fail = result, fail
+        self.masters, self.homes = [], []
+
+    def master(self, url):
+        self.masters.append(url)
+        return self
+
+    def appName(self, _name):
+        return self
+
+    def config(self, _key, _value):
+        return self
+
+    def getOrCreate(self):
+        self.homes.append(os.environ.get("SPARK_HOME"))
+        if self.fail:
+            raise RuntimeError("launch failed")
+        return self.result
+
 
 def test_default_cpus_follow_affinity(spark, monkeypatch):
     from xml_hive_spark import session
 
-    masters = []
-
-    class Recorder:
-        def master(self, url):
-            masters.append(url)
-            return self
-
-        def appName(self, _name):
-            return self
-
-        def config(self, _key, _value):
-            return self
-
-        def getOrCreate(self):
-            return spark
-
-    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=Recorder()))
+    builder = _Builder(spark)
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
     monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
     session.get_spark()
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     session.get_spark()
-    assert masters == [f"local[{len(os.sched_getaffinity(0))}]", "local[3]"]
+    assert builder.masters == [f"local[{len(os.sched_getaffinity(0))}]", "local[3]"]
+
+
+def test_spark_home_set_only_around_session_creation(monkeypatch):
+    from xml_hive_spark import session
+    from xml_hive_spark.sources import xml_datasource
+
+    asked = []
+
+    def choose(master, worker_python, real_home):
+        asked.append((master, worker_python))
+        return "/shadow"
+
+    monkeypatch.setattr(session, "worker_spark_home", choose)
+    monkeypatch.setattr(xml_datasource, "ship_package", lambda _spark: None)
+    monkeypatch.setenv("PYSPARK_PYTHON", "env-python")
+    for before in ("another-spark-home", None):
+        if before is None:
+            monkeypatch.delenv("SPARK_HOME", raising=False)
+        else:
+            monkeypatch.setenv("SPARK_HOME", before)
+        for fail in (False, True):
+            builder = _Builder(object(), fail=fail)
+            monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=builder))
+            if fail:
+                with pytest.raises(RuntimeError):
+                    session.get_spark(cpus=2)
+            else:
+                session.get_spark(cpus=2)
+            assert builder.homes == ["/shadow"]
+            assert os.environ.get("SPARK_HOME") == before
+    assert set(asked) == {("local[2]", "env-python")}
+    asked.clear()
+    monkeypatch.setattr(session, "SparkSession", types.SimpleNamespace(builder=_Builder(object())))
+    session.get_spark(cpus=2, extra_conf={"spark.master": "spark://driver:7077",
+                                          "spark.pyspark.python": "conf-python"})
+    assert asked == [("spark://driver:7077", "conf-python")]
+
+
+def test_local_tasks_import_the_driver_pyspark(spark):
+    """The JVM still names ``<SPARK_HOME>/python/lib/pyspark.zip`` on the
+    workers' path, but under the shadow home no such file exists."""
+    import pyspark
+
+    def where(_):
+        import os
+        import sys
+
+        import pyspark
+
+        zips = [p for p in sys.path if p.endswith("pyspark.zip")]
+        yield pyspark.__file__, [p for p in zips if os.path.exists(p)], len(zips)
+
+    seen = spark.sparkContext.parallelize(range(4), 4).mapPartitions(where).collect()
+    assert seen == [(pyspark.__file__, [], 1)] * 4
 
 
 def test_package_zip_named_by_source_hash(spark, monkeypatch, tmp_path):
