@@ -38,21 +38,25 @@ def write_xml(
 _AVRO_AVAILABLE: dict[str, bool] = {}
 
 
+def _lookup_avro(spark) -> None:
+    """Resolve the ``avro`` format the way a read or write would, without
+    starting a job; raises ``AnalysisException`` when it is not found."""
+    spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+        "avro", spark._jsparkSession.sessionState().conf())
+
+
 def avro_available(spark) -> bool:
     """The Avro source is an external Spark module (spark-avro jar),
-    absent from plain pyspark distributions. Probe by resolving the
-    format on an empty write plan (no data movement), once per Spark
-    application: its classpath does not change while it runs."""
+    absent from plain pyspark distributions. Asked once per Spark
+    application, whose classpath does not change while it runs."""
+    from pyspark.errors import AnalysisException
+
     app = spark.sparkContext.applicationId
     if app not in _AVRO_AVAILABLE:
-        from xml_hive_spark.session import scratch_dir
-
         try:
-            spark.createDataFrame([], "a int").write.format("avro").mode(
-                "overwrite"
-            ).save(scratch_dir("avro-probe-") + "/p")
+            _lookup_avro(spark)
             _AVRO_AVAILABLE[app] = True
-        except Exception:
+        except AnalysisException:
             _AVRO_AVAILABLE[app] = False
     return _AVRO_AVAILABLE[app]
 
