@@ -77,7 +77,7 @@ def test_cosine_kernel_sources_bit_identical(spark, sf_dir, reducer):
     per-task parquet vector load; attach: vectors joined onto every
     pair) on the full bench corpus. Both sources stay live: attach runs
     beyond _SIDELOAD_CAP and for in-memory inputs."""
-    from xml_hive_spark.operators import table_rows
+    from xml_hive_spark.operators import band_pairs, table_rows
     from xml_hive_spark.operators import similarity as S
 
     emb = t(spark, sf_dir, "embeddings")
@@ -88,19 +88,13 @@ def test_cosine_kernel_sources_bit_identical(spark, sf_dir, reducer):
                             bands=16, rows_per_band=r)
         .select("id", "sig").persist()
     )
-    cand = sigs.select("id", F.posexplode("sig").alias("band", "bucket"))
-    a = cand.select("band", "bucket", F.col("id").alias("qid"))
-    b = cand.select("band", "bucket", F.col("id").alias("nid"))
-    uniq = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("qid") < F.col("nid"))
-        .select("qid", "nid").distinct()
-    )
+    pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(16)]) \
+        .select(F.col("id_a").alias("qid"), F.col("id_b").alias("nid"))
     attach = S.score_candidates(
-        uniq, emb.select("vec_id", "embedding"), n, None, **reducer
+        pairs, emb.select("vec_id", "embedding"), n, None, **reducer
     )
     side = S.cosine_pair_kernel(
-        uniq, vec_path=f"{sf_dir}/embeddings.parquet", **reducer
+        pairs, vec_path=f"{sf_dir}/embeddings.parquet", **reducer
     )
 
     # partial top-k is partition-dependent; compare after the same

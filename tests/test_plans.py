@@ -384,28 +384,70 @@ def test_ann_join_no_allpairs(spark, sf_dir):
     """The all-corpus ANN join must get its candidates from the
     (band, bucket) equi-join — never a cartesian/nested-loop all-pairs —
     and run the partial top-k without a shuffle of its own (the
-    exchanges in the plan are the bucket join, the cross-band dedupe,
-    and the global merge — all bounded by candidate count, not N^2)."""
+    exchanges in the plan are the bucket join and the global merge —
+    both bounded by candidate count, not N^2)."""
     plan = plan_of(spark, sf_dir, "ann_join_topk")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "MapInArrow" in plan
 
 
+def _nodes(node):
+    """Pre-order physical plan nodes, through AQE wrappers. A cached
+    relation's scan is a leaf: the plan that fills the cache is not
+    walked."""
+    yield node
+    if node.nodeName() == "AdaptiveSparkPlan":
+        yield from _nodes(node.executedPlan())
+        return
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _nodes(kids.apply(i))
+
+
+def _names(seq):
+    return {seq.apply(i).name() for i in range(seq.size())}
+
+
+def _below_scoring(spark, sf_dir, name):
+    """The physical nodes under a query's scoring MapInArrow."""
+    df = all_queries()[name].fn(spark, sf_dir)
+    root = df._jdf.queryExecution().executedPlan()
+    arrow = next(n for n in _nodes(root) if n.nodeName() == "MapInArrow")
+    return list(_nodes(arrow))[1:]
+
+
+def _assert_ids_only(nodes):
+    """The band self-join and every exchange under the scoring kernel
+    move ids and band keys only (~16 B per pair); the 64-float vectors
+    (~512 B each) reach the kernel side-loaded at test SF. Pin: no
+    embedding/vector column in the output of any join, exchange or
+    aggregate there."""
+    vectors = {"embedding", "vec", "va", "vb", "qe", "ne"}
+    checked = [n for n in nodes
+               if any(k in n.nodeName() for k in ("Join", "Exchange", "Aggregate"))]
+    assert any("Join" in n.nodeName() for n in checked)
+    for n in checked:
+        assert not _names(n.output()) & vectors, (n.nodeName(), _names(n.output()))
+
+
 def test_ann_join_candidate_phase_ids_only(spark, sf_dir):
-    """The band self-join and cross-band dedupe must shuffle (qid, nid)
-    ids only (~16 B/row); the 64-float vectors (~512 B each) are joined
-    back once per SURVIVING pair. Pin: the HashAggregate pair that
-    implements the distinct dedupe keys on (qid, nid) alone — no
-    embedding/vector column in its grouping or output."""
-    plan = plan_of(spark, sf_dir, "ann_join_topk")
-    dedup_lines = [
-        l for l in plan.splitlines()
-        if "HashAggregate" in l and "qid" in l and "nid" in l
-    ]
-    assert dedup_lines, plan
-    for l in dedup_lines:
-        assert "embedding" not in l and "qe" not in l and "ne" not in l, l
+    _assert_ids_only(_below_scoring(spark, sf_dir, "ann_join_topk"))
+
+
+def test_embedding_cosine_candidate_phase_ids_only(spark, sf_dir):
+    _assert_ids_only(_below_scoring(spark, sf_dir, "dedup_embedding_cosine"))
+
+
+@pytest.mark.parametrize("name", ["ann_join_topk", "dedup_embedding_cosine"])
+def test_no_pair_dedupe_below_scoring(spark, sf_dir, name):
+    """band_pairs emits each candidate pair once, from its first
+    agreeing band, so no aggregate (the old cross-band distinct was a
+    HashAggregate keyed on the pair ids, plus its exchange) may sit
+    between the band self-join and the scoring kernel."""
+    aggs = [n.toString() for n in _below_scoring(spark, sf_dir, name)
+            if "Aggregate" in n.nodeName()]
+    assert not aggs, aggs
 
 
 def test_runtime_bloom_filter_injects_on_shuffle_join(spark, sf_dir):

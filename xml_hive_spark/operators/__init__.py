@@ -225,6 +225,40 @@ def dim_side(df: DataFrame, approx_bytes: int) -> DataFrame:
     return df.hint("shuffle_hash")
 
 
+def band_pairs(df: DataFrame, id_col: str, keys: list,
+               payload: tuple[str, ...] = ()) -> DataFrame:
+    """LSH band self-join: every unordered pair of rows whose per-band
+    ``keys`` (a list of Columns, one per band, of any equality-comparable
+    type) agree in at least one band, once. A null key never collides,
+    and ``id_col`` must be unique. Returns (id_a, id_b, then <p>_a, <p>_b
+    for each ``payload`` column) with id_a < id_b.
+
+    Rows explode to one per band and self-join on (band, key). A pair
+    that agrees in several bands meets once per agreeing band; the join
+    condition keeps only the meeting in the pair's FIRST agreeing band,
+    an unrolled ``CASE WHEN a.ks[0] = b.ks[0] THEN 0 …`` compiled into
+    the join stage. Each colliding pair has exactly one first agreeing
+    band, so the output is the ``.distinct()`` of all meetings without
+    the exchange that distinct needs."""
+    from pyspark.sql import functions as F
+
+    rows = df.select(F.col(id_col).alias("_id"), F.array(*keys).alias("_ks"),
+                     *payload)
+    expl = rows.select("*", F.posexplode("_ks").alias("_band", "_key"))
+    first = F.expr("CASE " + " ".join(
+        f"WHEN a._ks[{i}] = b._ks[{i}] THEN {i}" for i in range(len(keys))
+    ) + " END")
+    a, b = expl.alias("a"), expl.alias("b")
+    cond = ((F.col("a._band") == F.col("b._band"))
+            & (F.col("a._key") == F.col("b._key"))
+            & (F.col("a._id") < F.col("b._id"))
+            & (first == F.col("a._band")))
+    return a.join(b, cond).select(
+        F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
+        *[F.col(f"{s}.{p}").alias(f"{p}_{s}") for p in payload for s in "ab"],
+    )
+
+
 def table_bytes(sf_dir: str, name: str) -> int:
     """On-disk size of a source table — a FREE corpus-size proxy for
     :func:`payload_side` estimates (no count job). Unknown/remote paths
@@ -261,9 +295,12 @@ _WINDOW: list[str] | None = None
 #: some CORRECTNESS_r<N>.json with N >= its round holds a green hash for it.
 _LEAD = {
     "setsim_join_prefix": 15,  # dim_side guard in its pref stage; last hash r12
-    "ann_join_topk": 15,  # shared cosine scoring kernel; last hash r12
-    "dedup_embedding_cosine": 15,  # attach plan on that kernel; last hash r14
+    "ann_join_topk": 15,  # cosine kernel, band_pairs; last hash r12
+    "dedup_embedding_cosine": 15,  # same; last hash r14
     "xml_stream_scan": 15,  # streaming source on the fused scan; last hash r10
+    "dedup_minhash_lsh": 15,  # candidates from band_pairs; last hash r9
+    "dedup_simhash": 15,  # candidates from band_pairs; last hash r9
+    "image_phash_dedup": 15,  # candidates from band_pairs; last hash r12
 }
 
 

@@ -16,8 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import (dim_side, fan_out, payload_side, query, t,
-                                      table_bytes)
+from xml_hive_spark.operators import (band_pairs, dim_side, fan_out,
+                                      payload_side, query, t, table_bytes)
 
 # ------------------------------------------------------------- exact dedup
 
@@ -151,37 +151,17 @@ def minhash_signatures(sh: DataFrame, num_perm: int = 32) -> DataFrame:
 
 
 def lsh_candidate_pairs(sig: DataFrame, bands: int = 8, rows: int = 4) -> DataFrame:
-    """Band the wide signature (bands × rows columns) and bucket-join:
-    candidate pairs collide on at least one full band. The self-join key
-    is (band_id, r0..r{rows-1}) — the band's raw signature values, not a
-    hash of them (r9: the xxhash64 band key was engine-specific AND
-    carried a theoretical collision-admits-candidate hole; raw values
-    join exactly and replay in SQL). Bounded fan-out per bucket."""
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            *[
-                F.col(f"m{b * rows + r}").alias(f"r{r}")
-                for r in range(rows)
-            ],
-        )
+    """Band the wide signature (bands × rows columns) into :func:`band_pairs`
+    keys: candidate pairs (id_a, id_b) collide on at least one full band.
+    A band's key is the struct of its raw signature values, not a hash of
+    them (r9: the xxhash64 band key was engine-specific AND carried a
+    theoretical collision-admits-candidate hole; raw values join exactly
+    and replay in SQL)."""
+    keys = [
+        F.struct(*[F.col(f"m{b * rows + r}").alias(f"r{r}") for r in range(rows)])
         for b in range(bands)
     ]
-    banded = sig.select(
-        "id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("id", "bk.band_id", *[f"bk.r{r}" for r in range(rows)])
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cond = (F.col("a.band_id") == F.col("b.band_id")) & (
-        F.col("a.id") < F.col("b.id")
-    )
-    for r in range(rows):
-        cond = cond & (F.col(f"a.r{r}") == F.col(f"b.r{r}"))
-    return (
-        a.join(b, cond)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return band_pairs(sig, "id", keys)
 
 
 def exact_jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
@@ -495,21 +475,12 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     both sides and would otherwise run the 48-vote hash-agg twice
     (measured 2.00 → 1.46 s at sf0.1; the signature-store pattern).
 
-    r13 blocking upgrade (closes the r12 f100 residual e = 0.92): the
-    old 4×12-bit single-chunk blocking carried a Θ(N²·4/2¹²)
-    random-collision term — profiled at the probe corpora, candidates
-    grew 14.1 M → 230.4 M across the 50 k → 500 k decade (×16.3 at ×10
-    docs) and the verify compute inside the join was the whole
-    residual. Pair keys cut the collision constant 51× (10/2¹⁹·⁵ vs
-    4/2¹²): candidates 230 M → 39 M and join wall 6.4 → 4.4 s at 500 k
-    docs, 1.3 → 0.8 s at 50 k. Dedup of the up-to-10-table multiplicity
-    is a CANONICAL-TABLE filter computed from the xor alone (keep a
-    candidate only in the first all-clean pair table), so duplicate
-    emissions die inside the join stage and the old `.distinct()`
-    exchange disappears entirely. Output verified bit-identical to the
-    retired plan at sf0.1/sf1/sf10 and oracle-green at sf0.01/sf0.1;
-    the DuckDB oracle is unchanged (both blockings are recall-complete
-    for h ≤ 3, so both compute exactly the all-pairs-hamming≤3 set).
+    r13 blocking upgrade: pair keys cut the random-collision constant
+    of the retired 4×12-bit single-chunk blocking 51× (10/2¹⁹·⁵ vs
+    4/2¹²), candidates 230 M → 39 M at 500 k docs (SCALE.md r13). The
+    hamming filter runs on the (simhash_a, simhash_b) payload of
+    :func:`band_pairs`, which emits each pair once, from its first
+    all-clean pair table.
 
     FULL value oracle since r9 (was rows-only under xxhash64): the
     portable md5-slice SimHash is replayed in SQL end to end — same
@@ -519,52 +490,18 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     Recall on planted near-dups stays pinned in tests/test_dedup.py."""
     docs = t(spark, sf, "documents")
     sig = simhash48(docs).persist()
-    chunks = sig.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(ti).alias("chunk_id"),
-                        (
-                            _simhash_block(F.col("simhash"), i)
-                            * F.lit(1 << _SIMHASH_BLOCKS[j][1])
-                            + _simhash_block(F.col("simhash"), j)
-                        ).alias("chunk"),
-                    )
-                    for ti, (i, j) in enumerate(_SIMHASH_PAIRS)
-                ]
-            )
-        ).alias("ck"),
-    ).select("id", "simhash", "ck.chunk_id", "ck.chunk")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    clean = [_simhash_block(xor, bk) == 0 for bk in range(5)]
-    canon = F.lit(None).cast("int")
-    for ti in reversed(range(len(_SIMHASH_PAIRS))):
-        i, j = _SIMHASH_PAIRS[ti]
-        canon = F.when(clean[i] & clean[j], F.lit(ti)).otherwise(canon)
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(xor).alias("hamming"),
-            (F.col("a.chunk_id") == canon).alias("keep"),
-        )
-        # hamming + canonical-table BEFORE any exchange: collisions and
-        # multi-table duplicate emissions both die inside the join stage
-        # (the r11 byte-audit discipline); only unique true near-dups
-        # leave the stage — no distinct needed
-        .filter((F.col("hamming") <= 3) & F.col("keep"))
+    keys = [
+        _simhash_block(F.col("simhash"), i) * F.lit(1 << _SIMHASH_BLOCKS[j][1])
+        + _simhash_block(F.col("simhash"), j)
+        for i, j in _SIMHASH_PAIRS
+    ]
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return (
+        band_pairs(sig, "id", keys, payload=("simhash",))
+        .select("id_a", "id_b", hamming.alias("hamming"))
+        .filter(F.col("hamming") <= 3)
+        .orderBy("id_a", "id_b")
     )
-    return cand.select("id_a", "id_b", "hamming").orderBy("id_a", "id_b")
 
 
 # ------------------------------------------------------------ ngram jaccard

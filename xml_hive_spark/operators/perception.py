@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import query, t
+from xml_hive_spark.operators import band_pairs, query, t
 from xml_hive_spark.operators.multimodal import fan_out
 
 # Perceptual-hash corpus: doc pairs (2k, 2k+1) share base = 2k. Pair
@@ -206,24 +206,10 @@ def image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     subtree — at 100 TB the fingerprints are the stored index; images
     never enter the join.
 
-    Unlike ``ann_join_topk``, the join carries the WHOLE fingerprint
-    (8 bytes) and computes hamming inside it: the ids-only candidate
-    discipline is for 512-byte payloads, and applying it here (r11
-    shuffle-byte audit finding) materialized every random 16-bit band
-    collision — an inherently QUADRATIC set at the fixed 65 536-bucket
-    band space (16.8× bytes at 10× data, 59.6× at 100×) — through a
-    distinct exchange plus two re-attach joins. With the fingerprint
-    riding the explode rows, collision pairs live and die inside the
-    join stage (4 bit_counts in codegen, no exchange) and only the ≤ 3
-    survivors — true near-dups, linear in the corpus — reach the
-    dedupe. Shuffled bytes: 8 fingerprint rows per image + survivors,
-    linear by construction (re-measured at KB-scale volumes: 6.1×
-    bytes at the first 10× decade, 10.05× at the second — vs 16.8×
-    accelerating to 59.6× pre-fix). The quadratic collision-CHECK
-    work is inherent
-    to exact 64-bit blocking (pigeonhole needs ≥ h+1 = 4 bands) and
-    stays embarrassingly parallel; the fix removes it from the network
-    fabric, which is the resource that doesn't scale with executors."""
+    The whole 8-byte fingerprint rides :func:`band_pairs` as payload and
+    the hamming filter runs inside the join stage, so random 16-bit band
+    collisions (quadratic at the fixed 65 536-bucket band space, the r11
+    byte-audit finding in SCALE.md) never reach an exchange."""
     docs = t(spark, sf, "documents").select("doc_id")
     # r13 (guide §4.1): encode and fingerprint are chained inside ONE
     # mapInPandas, so PNG payloads never cross the Arrow/JVM boundary
@@ -236,34 +222,15 @@ def image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
         lambda it: fp(synth(it)),
         schema="doc_id long, b0 int, b1 int, b2 int, b3 int",
     ).persist()
-    expl = bands.select(
-        "doc_id",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
-        F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("band_idx", "val"),
-    )
+    fp_cols = ("b0", "b1", "b2", "b3")
     hamming = sum(
-        F.bit_count(F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}")))
-        for i in range(4)
-    ).alias("hamming")
+        F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b"))) for c in fp_cols
+    )
     return (
-        expl.alias("a")
-        .join(
-            expl.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming,
-        )
+        band_pairs(bands, "doc_id", [F.col(c) for c in fp_cols], payload=fp_cols)
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
+                hamming.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= 3)
-        .distinct()
-        .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
     )
 
 

@@ -13,7 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import fan_out, payload_side, query, t, table_rows
+from xml_hive_spark.operators import (band_pairs, fan_out, payload_side, query, t,
+                                      table_rows)
 
 
 def _dot(a, b):
@@ -412,12 +413,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     Candidate generation is banded hyperplane LSH (``banded_signatures``):
     per band, vectors shuffle on (band, bucket) and only same-bucket
     pairs join — O(sum of bucket^2) work instead of the O(N^2) all-pairs
-    self-join, which is what survives a 100x corpus. Candidates seen in
-    several bands are deduplicated by key BEFORE the exact-cosine verify,
-    so each surviving pair pays the dot product once. The verify step is
-    exact, so every emitted pair truly exceeds the threshold (no false
-    positives; recall vs the exact pair set is asserted in
-    tests/test_similarity.py).
+    self-join, which is what survives a 100x corpus. :func:`band_pairs`
+    emits each candidate once, so each pays the dot product once. The
+    verify step is exact, so every emitted pair truly exceeds the
+    threshold (no false positives; recall vs the exact pair set is
+    asserted in tests/test_similarity.py).
 
     FULL value oracle since r9: the planes are md5-derived Rademacher
     vectors, the sign bits are exact integer sums over 2^20-quantized
@@ -469,7 +469,7 @@ def embedding_cosine_pairs(
     n: int | None = None,
     vec_path: str | None = None,
 ) -> DataFrame:
-    """The full banded-LSH → dedupe → attach → exact-verify pipeline of
+    """The full banded-LSH → :func:`band_pairs` → exact-verify pipeline of
     :func:`dedup_embedding_cosine`, parameterized on the threshold (and
     banding) so the sparse production regime (θ ≥ 0.85) is testable
     independently of the committed θ = 0.25 registry shape — the
@@ -490,12 +490,8 @@ def embedding_cosine_pairs(
     sigs = banded_signatures(emb, id_col, vec_col, bands=bands,
                              rows_per_band=rows_per_band) \
         .select("id", "sig").persist()
-    cand = sigs.select("id", F.posexplode("sig").alias("band", "bucket"))
-    a = cand.select("band", "bucket", F.col("id").alias("id_a"))
-    b = cand.select("band", "bucket", F.col("id").alias("id_b"))
-    pairs = a.join(b, ["band", "bucket"]).filter(F.col("id_a") < F.col("id_b"))
-    uniq = pairs.select("id_a", "id_b").distinct()
-    return score_candidates(uniq, emb.select(id_col, vec_col), n, vec_path,
+    pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(bands)])
+    return score_candidates(pairs, emb.select(id_col, vec_col), n, vec_path,
                             threshold=threshold)
 
 
@@ -1832,24 +1828,19 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     This is where the two-phase top-k earns its keep: candidate pairs
     come from banded-LSH buckets (O(sum bucket^2), never all-pairs),
-    deduped across bands BEFORE scoring so each surviving pair pays the
-    dot product once, then the kernel's top-k reducer cuts each
-    partition to <= N x k rows with NO exchange before the single global
-    merge window — a per-query ranking window over the raw candidate
-    set would funnel every candidate of a query into one reducer.
+    once per pair (:func:`band_pairs`), then the kernel's top-k reducer
+    cuts each partition to <= N x k rows with NO exchange before the
+    single global merge window — a per-query ranking window over the
+    raw candidate set would funnel every candidate of a query into one
+    reducer.
 
-    The candidate phase moves IDS ONLY, and only UNDIRECTED pairs: the
-    band self-join keeps qid < nid, the cross-band dedupe shuffles one
-    (qid, nid) row (~16 B) per unordered pair, and the two 64-float
-    vectors reach the cosine only for SURVIVING pairs (side-loaded or
-    attached, :func:`score_candidates`) — scored once and folded into
-    BOTH endpoints' top-k heaps (cosine is symmetric), halving
-    dedupe/attach/score volume vs the directed formulation for an
-    identical result. At 100 TB the
-    candidate shuffles are the dominant network cost and this keeps them
-    ~60x slimmer than carrying vectors through directed pairs
-    (plan-pinned: no vector column below the dedupe exchange,
-    tests/test_plans.py).
+    The candidate phase moves IDS ONLY, and only UNDIRECTED pairs
+    (qid < nid): the two 64-float vectors reach the cosine only for
+    candidate pairs (side-loaded or attached, :func:`score_candidates`)
+    — scored once and folded into BOTH endpoints' top-k heaps (cosine is
+    symmetric), halving attach/score volume vs the directed formulation
+    for an identical result (plan-pinned: no vector column below the
+    scoring MapInArrow, tests/test_plans.py).
 
     Tuning: the all-corpus shape uses B=16 bands x ADAPTIVE r rows
     (2^r buckets per band) rather than the dedup default (12x3, 8
@@ -1902,18 +1893,11 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     sigs = banded_signatures(emb, "vec_id", "embedding",
                              bands=16, rows_per_band=r) \
         .select("id", "sig").persist()
-    cand = sigs.select("id", F.posexplode("sig").alias("band", "bucket"))
-    a = cand.select("band", "bucket", F.col("id").alias("qid"))
-    b = cand.select("band", "bucket", F.col("id").alias("nid"))
-    pairs = a.join(b, ["band", "bucket"]).filter(F.col("qid") < F.col("nid"))
-    # dedupe band collisions before the expensive cosine on UNDIRECTED
-    # pairs (band collision is symmetric, cosine is symmetric): the
-    # dedupe shuffle, the vector-attach joins, and the einsum all touch
-    # HALF the rows of the directed formulation; the fused partial top-k
-    # folds each scored pair into both endpoints' heaps, so the directed
-    # result is identical — still ids-only
-    uniq = pairs.select("qid", "nid").distinct()
-    scored = score_candidates(uniq, emb.select("vec_id", "embedding"), n,
+    # each UNDIRECTED pair once (band_pairs); the fused partial top-k
+    # folds each scored pair into both endpoints' heaps
+    pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(16)]) \
+        .select(F.col("id_a").alias("qid"), F.col("id_b").alias("nid"))
+    scored = score_candidates(pairs, emb.select("vec_id", "embedding"), n,
                               f"{sf}/embeddings.parquet", k=5)
     w = Window.partitionBy("qid").orderBy(F.col("cos_sim").desc(), "nid")
     return (
