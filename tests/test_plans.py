@@ -648,7 +648,7 @@ def test_fan_out_guard(spark, sf_dir):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_fan_out_statsless_noop(spark, sf_dir):
+def test_fan_out_statsless_noop(spark, sf_dir, monkeypatch):
     """When the plan-stats probe itself fails (py4j bridge error — the
     only way to reach the fallback, since Catalyst reports UNKNOWN size
     as Long.MAX which the guard already treats as large), fan_out must
@@ -674,9 +674,16 @@ def test_fan_out_statsless_noop(spark, sf_dir):
     proxy = StatsLess()
     import warnings
 
+    import xml_hive_spark.operators as ops
+
+    monkeypatch.setattr(ops, "_FANOUT_STATS_WARNED", False)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         assert fan_out(proxy) is proxy
+        assert fan_out(proxy) is proxy  # the warning is given once
+    assert [str(w.message) for w in caught] == [
+        "fan_out: plan-stats probe failed (RuntimeError('simulated py4j "
+        "bridge failure')); skipping repartition (scale-safe no-op)"]
     # and the real, sized path is unaffected by the fallback change
     assert fan_out(real).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 

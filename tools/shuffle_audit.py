@@ -6,7 +6,8 @@ and reads that run's totals through ``perfbench.sparkstats.op_layers``
 (the status stores are populated with spark.ui.enabled=false): shuffle
 write and read, spill, and the Python boundary (plan-node count,
 start+init and run seconds, Arrow bytes each way), plus the seconds the
-query function takes to build its DataFrame on the driver.
+query function takes to build its DataFrame on the driver and the Spark
+jobs that build starts before the action.
 
 With ``--scaled DIR`` (a corpus built by tools/scale_probe.py) every
 query is measured at both scales and the bytes RATIO is reported — a
@@ -127,6 +128,7 @@ def measure_query(spark, group: str, fn, sf_dir: str,
         start = time.perf_counter()
         df = fn(spark, sf_dir)
         build_s = time.perf_counter() - start
+        jobs_before_action = len(sc.statusTracker().getJobIdsForGroup(group))
         df.count()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -143,6 +145,7 @@ def measure_query(spark, group: str, fn, sf_dir: str,
         "arrow_bytes_in": round(tot.get("py.arrow_bytes_in", 0.0)),
         "arrow_bytes_out": round(tot.get("py.arrow_bytes_out", 0.0)),
         "build_s": round(build_s, 3),
+        "jobs_before_action": jobs_before_action,
     }
     if plan_path is not None:
         buf = io.StringIO()
@@ -165,7 +168,8 @@ def measure(spark, names, sf_dir: str,
         print(f"# {sf_dir.rsplit('/', 1)[-1]} {name}: "
               f"sw={m['shuffle_write']} sr={m['shuffle_read']} "
               f"spill={m['spill_disk']} py_nodes={m['python_nodes']} "
-              f"build={m['build_s']}s", file=sys.stderr)
+              f"build={m['build_s']}s jobs_before_action="
+              f"{m['jobs_before_action']}", file=sys.stderr)
     return out
 
 
@@ -317,8 +321,8 @@ def main() -> None:
                       **config, "queries": report}))
 
     hdr = ("| query | shuffle W | shuffle R | spill | py nodes "
-           "| py start+init | py run | build |")
-    sep = "|---|---|---|---|---|---|---|---|"
+           "| py start+init | py run | build | jobs before action |")
+    sep = "|---|---|---|---|---|---|---|---|---|"
     if scaled:
         hdr += " shuffle W @scaled | ratio |"
         sep += "---|---|"
@@ -329,7 +333,7 @@ def main() -> None:
         row = (f"| {n} | {_fmt(r['shuffle_write'])} | {_fmt(r['shuffle_read'])}"
                f" | {_fmt(r['spill_disk'])} | {r['python_nodes']}"
                f" | {r['python_start_init_s']} s | {r['python_run_s']} s"
-               f" | {r['build_s']} s |")
+               f" | {r['build_s']} s | {r['jobs_before_action']} |")
         if scaled:
             ratio = r["shuffle_ratio"]
             row += (f" {_fmt(r['scaled_shuffle_write'])} |"

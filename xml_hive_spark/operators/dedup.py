@@ -75,8 +75,9 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: i
     (id, pos)). The UDF is partition-local — no shuffle — so it scales
     linearly with corpus size."""
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, StringType
 
-    @pandas_udf("array<string>")
+    @pandas_udf(ArrayType(StringType()))
     def mk_shingles(texts: pd.Series) -> pd.Series:
         out = []
         for txt in texts:
@@ -126,16 +127,21 @@ def _hash48(col) -> "F.Column":
     )
 
 
-def _perm_mins(src_col: str, num_perm: int) -> list:
-    """The k min-of-permutation aggregates over a 48-bit hash column —
-    one md5 per row upstream, then k multiply-mod ops (cheaper than the
-    k seeded xxhash64 calls they replaced, and exactly replayable in
-    SQL)."""
-    hp = F.col(src_col) % F.lit(_MINHASH_P)
+def _perm_min_sql(src_col: str, num_perm: int) -> list[str]:
+    """The k min-of-permutation aggregates over a 48-bit hash column as
+    SQL, shared by the Spark builder and the DuckDB twin — one md5 per
+    row upstream, then k multiply-mod ops (cheaper than the k seeded
+    xxhash64 calls they replaced)."""
     return [
-        F.min((F.lit(a) * hp + F.lit(b)) % F.lit(_MINHASH_P)).alias(f"m{i}")
+        f"MIN(({a} * ({src_col} % {_MINHASH_P}) + {b}) % {_MINHASH_P}) AS m{i}"
         for i, (a, b) in enumerate(_minhash_ab(num_perm))
     ]
+
+
+def _perm_mins(src_col: str, num_perm: int) -> list:
+    """:func:`_perm_min_sql` as Columns: each string builds in one py4j
+    call, where a Column tree costs one per node."""
+    return [F.expr(e) for e in _perm_min_sql(src_col, num_perm)]
 
 
 def minhash_signatures(sh: DataFrame, num_perm: int = 32) -> DataFrame:
@@ -158,7 +164,7 @@ def lsh_candidate_pairs(sig: DataFrame, bands: int = 8, rows: int = 4) -> DataFr
     theoretical collision-admits-candidate hole; raw values join exactly
     and replay in SQL)."""
     keys = [
-        F.struct(*[F.col(f"m{b * rows + r}").alias(f"r{r}") for r in range(rows)])
+        "struct(" + ", ".join(f"m{b * rows + r} AS r{r}" for r in range(rows)) + ")"
         for b in range(bands)
     ]
     return band_pairs(sig, "id", keys)
@@ -213,11 +219,7 @@ def _minhash_oracle(bands: int = 8, rows: int = 4, num_perm: int = 32) -> str:
     (a, b) literals, band blocking on raw signature values, and the
     exact-Jaccard verify over distinct hash sets. Out-of-envelope docs
     (> 512 tokens) fail loudly as an oracle-domain error."""
-    ab = _minhash_ab(num_perm)
-    mins = ",\n         ".join(
-        f"MIN(({a} * (shh % {_MINHASH_P}) + {b}) % {_MINHASH_P}) AS m{i}"
-        for i, (a, b) in enumerate(ab)
-    )
+    mins = ",\n         ".join(_perm_min_sql("shh", num_perm))
     band_sel = "\n  UNION ALL ".join(
         "SELECT id, {b} AS band_id, {cols} FROM sig".format(
             b=b,
@@ -374,19 +376,18 @@ def simhash48(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         .cast("long")
         .alias("h"),
     )
+    # SQL strings: each builds in one py4j call, where a Column tree
+    # costs one per node (about 900 here, most of the query's build)
     votes = [
-        F.sum(
-            F.when(F.col("h").bitwiseAND(F.lit(1 << b)) != 0, 1).otherwise(-1)
-        ).alias(f"b{b}")
+        F.expr(f"sum(CASE WHEN (h & {1 << b}) != 0 THEN 1 ELSE -1 END) AS b{b}")
         for b in range(_SIMHASH_BITS)
     ]
-    agg = tokens.groupBy("id").agg(*votes)
-    sim = F.lit(0).cast("long")
-    for b in range(_SIMHASH_BITS):
-        sim = sim + F.when(F.col(f"b{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return agg.select("id", sim.alias("simhash"))
+    packed = " + ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [f"CASE WHEN b{b} > 0 THEN CAST({1 << b} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+           for b in range(_SIMHASH_BITS)]
+    )
+    return tokens.groupBy("id").agg(*votes).selectExpr("id", f"{packed} AS simhash")
 
 
 def _simhash_oracle() -> str:
@@ -460,9 +461,10 @@ _SIMHASH_PAIRS = [
 ]
 
 
-def _simhash_block(col, b):
+def _simhash_block(col: str, b: int) -> str:
+    """Block ``b`` of the 48-bit signature column ``col``, as SQL."""
     off, width = _SIMHASH_BLOCKS[b]
-    return F.shiftright(col, off).bitwiseAND(F.lit((1 << width) - 1))
+    return f"(shiftright({col}, {off}) & {(1 << width) - 1})"
 
 
 @query("dedup_simhash", oracle=_simhash_oracle(), tags=("dedup", "simhash"))
@@ -491,8 +493,8 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     sig = simhash48(docs).persist()
     keys = [
-        _simhash_block(F.col("simhash"), i) * F.lit(1 << _SIMHASH_BLOCKS[j][1])
-        + _simhash_block(F.col("simhash"), j)
+        f"{_simhash_block('simhash', i)} * {1 << _SIMHASH_BLOCKS[j][1]}"
+        f" + {_simhash_block('simhash', j)}"
         for i, j in _SIMHASH_PAIRS
     ]
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
@@ -801,8 +803,9 @@ def setsim_join_prefix(spark: SparkSession, sf: str) -> DataFrame:
     # dominated the first cut; xxhash64 collisions over a ~1e4 universe
     # are ~1e-11)
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, StringType
 
-    @pandas_udf("array<string>")
+    @pandas_udf(ArrayType(StringType()))
     def grams(texts: pd.Series) -> pd.Series:
         return pd.Series(
             [list({tx[i : i + 8] for i in range(len(tx) - 7)}) for tx in texts]
@@ -1251,8 +1254,9 @@ def containment_pairs(
         .filter(F.length("tx") >= 8)
     )
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, StringType
 
-    @pandas_udf("array<string>")
+    @pandas_udf(ArrayType(StringType()))
     def grams(texts: pd.Series) -> pd.Series:
         return pd.Series(
             [list({tx[i : i + 8] for i in range(len(tx) - 7)}) for tx in texts]

@@ -120,11 +120,12 @@ def embedding_pca_project(spark: SparkSession, sf: str) -> DataFrame:
     eigenvalue agreement."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, DoubleType
 
     emb = t(spark, sf, "embeddings")
     mean, comps = pca_fit(emb, "embedding", dim=64, k=8)
 
-    @pandas_udf("array<double>")
+    @pandas_udf(ArrayType(DoubleType()))
     def project(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)

@@ -178,13 +178,19 @@ bits AS (  -- sampled positions are never perturbed: base formula applies
                    * p.n > p.px_sum
               THEN 1 ELSE 0 END AS bit
   FROM px p CROSS JOIN range(0, 64) t(j)
+),
+sig AS (  -- one BIGINT per image before the all-pairs step; bit 63 is
+          -- the sign bit, which a left shift may not reach
+  SELECT doc_id,
+         bit_or(CASE WHEN bit = 0 THEN 0
+                     WHEN j = 63 THEN CAST(-9223372036854775808 AS BIGINT)
+                     ELSE CAST(1 AS BIGINT) << j END) AS h
+  FROM bits GROUP BY doc_id
 )
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(SUM(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) AS INT)
-         AS hamming
-FROM bits a JOIN bits b ON a.j = b.j AND a.doc_id < b.doc_id
-GROUP BY a.doc_id, b.doc_id
-HAVING SUM(CASE WHEN a.bit <> b.bit THEN 1 ELSE 0 END) <= 3
+       CAST(bit_count(xor(a.h, b.h)) AS INT) AS hamming
+FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.h, b.h)) <= 3
 """,
     tags=("multimodal", "image", "dedup", "phash", "codec"),
 )
@@ -227,7 +233,7 @@ def image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
         F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b"))) for c in fp_cols
     )
     return (
-        band_pairs(bands, "doc_id", [F.col(c) for c in fp_cols], payload=fp_cols)
+        band_pairs(bands, "doc_id", list(fp_cols), payload=fp_cols)
         .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
                 hamming.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= 3)

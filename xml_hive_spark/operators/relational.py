@@ -1080,8 +1080,9 @@ def pandas_udf_scalar(spark: SparkSession, sf: str) -> DataFrame:
     SURVEY.md §2.B UDF row)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import DoubleType
 
-    @pandas_udf("double")
+    @pandas_udf(DoubleType())
     def net_price(price: pd.Series, disc: pd.Series) -> pd.Series:
         return price * (1.0 - disc)
 
@@ -1114,8 +1115,9 @@ def grouped_agg_pandas_udf(spark: SparkSession, sf: str) -> DataFrame:
 
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import DoubleType
 
-    @pandas_udf("double")
+    @pandas_udf(DoubleType())
     def mean_bal(bal: pd.Series) -> float:
         q = sum(math.floor(x * 1048576.0) for x in bal)
         return q / 1048576.0 / len(bal)

@@ -335,11 +335,12 @@ def banded_signatures(
     Returns (id, vec, sig: array<int> of per-band bucket values)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, IntegerType
 
     planes = _rademacher_planes(bands * rows_per_band, dim)
     weights = 1 << np.arange(rows_per_band)
 
-    @pandas_udf("array<int>")
+    @pandas_udf(ArrayType(IntegerType()))
     def sig(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
@@ -490,7 +491,7 @@ def embedding_cosine_pairs(
     sigs = banded_signatures(emb, id_col, vec_col, bands=bands,
                              rows_per_band=rows_per_band) \
         .select("id", "sig").persist()
-    pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(bands)])
+    pairs = band_pairs(sigs, "id", [f"sig[{i}]" for i in range(bands)])
     return score_candidates(pairs, emb.select(id_col, vec_col), n, vec_path,
                             threshold=threshold)
 
@@ -859,10 +860,11 @@ def kmeans_assign(df: DataFrame, vec_col: str, centroids) -> DataFrame:
     collect). Exact arithmetic end to end (see _int_argmax_cosine)."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import IntegerType
 
     cents = np.asarray(centroids, dtype=np.int64)
 
-    @pandas_udf("int")
+    @pandas_udf(IntegerType())
     def assign(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="int32")
@@ -901,6 +903,8 @@ def train_kmeans_centroids(
     keep their previous centroid."""
     import numpy as np
     import pyarrow as pa
+    from pyspark.sql.types import (ArrayType, IntegerType, LongType, StructField,
+                                   StructType)
 
     h = F.conv(
         F.substring(
@@ -916,6 +920,10 @@ def train_kmeans_centroids(
         np.stack([np.asarray(r[0], dtype=np.float64) for r in first])
     )
     vecs = fan_out(emb.select(vec_col))
+    # a DataType, not DDL: each iteration would parse the string in the JVM
+    partial = StructType([StructField("cluster", IntegerType()),
+                          StructField("cnt", LongType()),
+                          StructField("s", ArrayType(LongType()))])
 
     def partials_for(cents):
         def fn(batches):
@@ -943,7 +951,7 @@ def train_kmeans_centroids(
                 }
             )
 
-        return vecs.mapInArrow(fn, "cluster int, cnt long, s array<long>")
+        return vecs.mapInArrow(fn, partial)
 
     for _ in range(iters):
         rows = partials_for(centroids).collect()
@@ -1412,11 +1420,13 @@ def pq_encode(df: DataFrame, vec_col: str, books) -> DataFrame:
     ``ORDER BY ds, code LIMIT 1``."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
     sub = books.shape[2]
     cb_ssq = (books.astype(np.int64) ** 2).sum(axis=2)  # (M, K) exact
 
-    @pandas_udf("codes binary, nsq long")
+    @pandas_udf(StructType([StructField("codes", BinaryType()),
+                            StructField("nsq", LongType())]))
     def enc(vecs: pd.Series) -> pd.DataFrame:
         if len(vecs) == 0:
             return pd.DataFrame({"codes": pd.Series([], dtype="object"),
@@ -1895,7 +1905,7 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
         .select("id", "sig").persist()
     # each UNDIRECTED pair once (band_pairs); the fused partial top-k
     # folds each scored pair into both endpoints' heaps
-    pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(16)]) \
+    pairs = band_pairs(sigs, "id", [f"sig[{i}]" for i in range(16)]) \
         .select(F.col("id_a").alias("qid"), F.col("id_b").alias("nid"))
     scored = score_candidates(pairs, emb.select("vec_id", "embedding"), n,
                               f"{sf}/embeddings.parquet", k=5)

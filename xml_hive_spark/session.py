@@ -451,6 +451,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The session (see the module docstring for its defaults); ``extra_conf``
+    entries are set last, at session creation.
+
+    DataFrame call-site capture is off, so building a ``Column`` is one py4j
+    call with no stack walk and no IPython import; for call sites in error
+    contexts, pass ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``."""
     if cpus is None:
         env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
         cpus = int(env_cpus) if env_cpus else len(os.sched_getaffinity(0))
@@ -474,6 +480,7 @@ def get_spark(
                 os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # session-creation-time overrides for tools (e.g. the shuffle audit
     # raises spark.ui.retainedStages so per-query stage-metric deltas

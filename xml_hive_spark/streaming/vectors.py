@@ -54,13 +54,14 @@ def assign_clusters(df: DataFrame, centroids: np.ndarray) -> DataFrame:
     integer arithmetic -> assignment is exact and
     parallelism-independent."""
     from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import IntegerType
 
     from xml_hive_spark.operators.similarity import _quantize20
 
     c = np.asarray(centroids, dtype=np.int64)
     c_norm2 = (c * c).sum(axis=1)
 
-    @pandas_udf("int")
+    @pandas_udf(IntegerType())
     def nearest(col: pd.Series) -> pd.Series:
         x = _quantize20(np.stack(col.to_numpy()).astype(np.float64))
         d = c_norm2[None, :] - 2 * (x @ c.T)  # + ||x||² is rank-free
