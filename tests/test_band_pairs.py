@@ -8,6 +8,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from xml_hive_spark.operators import band_pairs
 
@@ -28,7 +29,7 @@ def reference(rows, payload_of=lambda r: ()):
 
 
 def run(df, bands, payload=()):
-    keys = [f"ks[{i}]" for i in range(bands)]
+    keys = [F.col("ks")[i] for i in range(bands)]
     got = band_pairs(df, "id", keys, payload=payload)
     return got.columns, sorted(tuple(r) for r in got.collect())
 
@@ -112,7 +113,7 @@ def test_no_job_before_action_and_no_distinct(spark, banded):
     group = "band-pairs-build"
     sc.setJobGroup(group, "build only")
     try:
-        df = band_pairs(banded, "id", [f"ks[{i}]" for i in range(4)])
+        df = band_pairs(banded, "id", [F.col("ks")[i] for i in range(4)])
         plan = df._jdf.queryExecution().executedPlan().toString()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -370,7 +370,7 @@ class TestSimhashBlockPairPigeonhole:
                     if clean[i] and clean[j]]
 
     def test_column_extractor_matches_python(self, spark):
-        """The Spark twin (_simhash_block's SQL) must agree with the
+        """The Spark Column twin (_simhash_block) must agree with the
         pure-Python mirror the exhaustive proofs above run on."""
         import random
         from xml_hive_spark.operators.dedup import _simhash_block
@@ -378,7 +378,7 @@ class TestSimhashBlockPairPigeonhole:
         rng = random.Random(13)
         sigs = [rng.getrandbits(48) for _ in range(200)]
         df = spark.createDataFrame([(s,) for s in sigs], "simhash long")
-        cols = [F.expr(_simhash_block("simhash", b)).alias(f"b{b}")
+        cols = [_simhash_block(F.col("simhash"), b).alias(f"b{b}")
                 for b in range(5)]
         for row, s in zip(df.select(*cols).collect(), sigs):
             for b in range(5):

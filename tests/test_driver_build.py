@@ -1,25 +1,17 @@
-"""Driver-side query building: a repeated build starts no Spark job, and
-``operators.read_parquet``'s schema store re-infers exactly when the files
-or the inference confs change."""
+"""Driver-side query building: a repeated build starts no Spark job but
+parquet schema inference, and Column building walks no stack."""
 
 from __future__ import annotations
 
 import json
-import os
-from collections import OrderedDict
 from pathlib import Path
-
-import pyarrow as pa
-import pyarrow.parquet as pq
-import pytest
-
-import xml_hive_spark.operators as ops
 
 REPO = Path(__file__).resolve().parent.parent
 #: queries whose build runs Spark jobs by design: k-means iterations
 #: collect their centroids on the driver
 BUILD_TIME_JOBS = ("cosine_topk_ivf_kmeans",)
-NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+#: the stage name of ``spark.read.parquet``'s footer-inference job
+FOOTER = "parquet at "
 
 
 def _build_queries() -> list[str]:
@@ -29,117 +21,52 @@ def _build_queries() -> list[str]:
     return sorted(set(REGISTRY_PYTHON + REGISTRY_JVM) | set(audited))
 
 
-def test_repeated_build_starts_no_job(spark, sf_dir):
+def test_repeated_build_starts_only_footer_jobs(spark, sf_dir, monkeypatch):
     """Every registry_mix and audited query, built twice: the second build
-    (schemas known, indexes loaded) starts no Spark job before its action."""
+    (indexes loaded) starts no Spark job before its action other than
+    schema inference, one job at most per ``read.parquet`` call (a
+    parquet write's job has the same stage name; the count keeps it out)."""
+    from pyspark.sql import DataFrameReader
+
     from xml_hive_spark.operators import all_queries
 
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def counted(self, *paths, **options):
+        reads.append(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
     reg = all_queries()
     sc = spark.sparkContext
-    jobs = {}
+    st = sc.statusTracker()
+    stages, n_reads = {}, {}
     try:
         for name in _build_queries():
             reg[name].fn(spark, sf_dir)
             group = f"driver-build {name}"
+            reads.clear()
             sc.setJobGroup(group, group, False)
             try:
                 reg[name].fn(spark, sf_dir)
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
                 sc.setLocalProperty("spark.job.description", None)
-            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+            stages[name] = [st.getStageInfo(s).name
+                            for j in st.getJobIdsForGroup(group)
+                            for s in st.getJobInfo(j).stageIds]
+            n_reads[name] = len(reads)
     finally:
         spark.catalog.clearCache()
-    started = {n: j for n, j in jobs.items() if j and n not in BUILD_TIME_JOBS}
+    other = {n: [s for s in names if not s.startswith(FOOTER)]
+             for n, names in stages.items()}
+    started = {n: s for n, s in other.items() if s and n not in BUILD_TIME_JOBS}
     assert not started, f"repeat builds that start jobs: {started}"
-    assert all(jobs[n] for n in BUILD_TIME_JOBS)  # the list names live cases
-
-
-@pytest.fixture
-def store(monkeypatch):
-    """An empty schema store for one test; returns a (hits, misses) reader."""
-    monkeypatch.setattr(ops, "_SCHEMAS", OrderedDict())
-    base = dict(ops.SCHEMA_STORE_STATS)
-    return lambda: (ops.SCHEMA_STORE_STATS["hits"] - base["hits"],
-                    ops.SCHEMA_STORE_STATS["misses"] - base["misses"])
-
-
-def test_store_reinfers_a_rewritten_file(spark, tmp_path, store):
-    path = str(tmp_path / "t.parquet")
-    pq.write_table(pa.table({"a": pa.array([1, 2], pa.int64())}), path)
-    first = ops.read_parquet(spark, path)
-    assert ops.read_parquet(spark, path).schema == first.schema
-    assert store() == (1, 1)
-    st = os.stat(path)
-    pq.write_table(pa.table({"a": ["x"], "b": [1.5]}), path)
-    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    again = ops.read_parquet(spark, path)
-    assert store() == (1, 2)
-    assert again.schema.fieldNames() == ["a", "b"]
-    assert again.collect()[0] == ("x", 1.5)
-
-
-def test_store_key_follows_nanos_as_long(spark, tmp_path, store):
-    """Both ``events`` layouts: TIMESTAMP(NANOS) infers as a long only
-    under the legacy conf, timestamp[us] as a timestamp either way; a
-    toggle is a miss for each."""
-    ts = [1_700_000_000_123_456_789]
-    nanos, micros = str(tmp_path / "ns.parquet"), str(tmp_path / "us.parquet")
-    pq.write_table(pa.table({"ts": pa.array(ts, pa.timestamp("ns"))}), nanos,
-                   version="2.6")
-    pq.write_table(pa.table({"ts": pa.array([ts[0] // 1000], pa.timestamp("us"))}),
-                   micros)
-    old = spark.conf.get(NANOS)
-    try:
-        spark.conf.set(NANOS, "true")
-        assert ops.read_parquet(spark, nanos).schema["ts"].dataType.typeName() == "long"
-        us_type = ops.read_parquet(spark, micros).schema["ts"].dataType
-        assert store() == (0, 2)
-        spark.conf.set(NANOS, "false")
-        with pytest.raises(Exception, match="NANOS"):
-            ops.read_parquet(spark, nanos).schema  # inferred again: not a long
-        assert ops.read_parquet(spark, micros).schema["ts"].dataType == us_type
-        assert store() == (0, 4)
-        spark.conf.set(NANOS, "true")
-        ops.read_parquet(spark, nanos)
-        ops.read_parquet(spark, micros)
-        assert store() == (2, 4)
-    finally:
-        spark.conf.set(NANOS, old)
-
-
-def test_store_bound_evicts_oldest(spark, tmp_path, store, monkeypatch):
-    monkeypatch.setattr(ops, "_SCHEMA_STORE_CAP", 2)
-    paths = []
-    for i in range(3):
-        paths.append(str(tmp_path / f"{i}.parquet"))
-        pq.write_table(pa.table({f"c{i}": [i]}), paths[-1])
-        ops.read_parquet(spark, paths[-1])
-    assert len(ops._SCHEMAS) == 2
-    ops.read_parquet(spark, paths[2])
-    assert store() == (1, 3)
-    ops.read_parquet(spark, paths[0])  # evicted first: inferred again
-    assert store() == (1, 4)
-
-
-@pytest.mark.parametrize("name", ["events", "embeddings", "lineitem", "partitioned"])
-def test_store_read_matches_inferring_read(spark, sf_dir, tmp_path, store, name):
-    """A hit reads with ``.schema(...)``: same schema and rows as inferring,
-    for driver tables and for a partitioned directory (the ANN lists)."""
-    if name == "partitioned":
-        path = str(tmp_path / "lists")
-        (spark.range(40).selectExpr("id", "CAST(id % 3 AS INT) AS cluster",
-                                    "CAST(CAST(id AS STRING) AS BINARY) AS codes")
-         .write.partitionBy("cluster").parquet(path))
-    else:
-        spark.conf.set(NANOS, "true")  # as ops.t reads events
-        path = f"{sf_dir}/{name}.parquet"
-    inferred = spark.read.parquet(path)
-    ops.read_parquet(spark, path)
-    given = ops.read_parquet(spark, path)
-    assert store() == (1, 1)
-    assert given.schema == inferred.schema
-    assert sorted(map(repr, given.collect())) == sorted(map(repr, inferred.collect()))
+    over = {n: (len(s) - len(other[n]), n_reads[n]) for n, s in stages.items()
+            if len(s) - len(other[n]) > n_reads[n]}
+    assert not over, f"(footer-named stages, parquet reads): {over}"
+    assert all(other[n] for n in BUILD_TIME_JOBS)  # the list names live cases
 
 
 def test_call_site_capture_is_off(spark):
@@ -148,27 +75,3 @@ def test_call_site_capture_is_off(spark):
 
     assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     assert not is_debugging_enabled()
-
-
-def test_store_under_concurrent_reads(spark, tmp_path, store, monkeypatch):
-    """Threads share the store (foreachBatch callbacks build on py4j
-    threads): no read fails, every read is counted, the bound holds."""
-    import sys
-    from concurrent.futures import ThreadPoolExecutor
-
-    monkeypatch.setattr(ops, "_SCHEMA_STORE_CAP", 2)
-    paths = []
-    for i in range(3):
-        paths.append(str(tmp_path / f"{i}.parquet"))
-        pq.write_table(pa.table({f"c{i}": [i]}), paths[-1])
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        with ThreadPoolExecutor(8) as pool:
-            futs = [pool.submit(ops.read_parquet, spark, paths[n % 3]) for n in range(48)]
-            names = [f.result(timeout=120).columns for f in futs]
-    finally:
-        sys.setswitchinterval(old)
-    assert names == [[f"c{n % 3}"] for n in range(48)]
-    assert sum(store()) == 48
-    assert len(ops._SCHEMAS) <= 2

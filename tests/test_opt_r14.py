@@ -88,7 +88,7 @@ def test_cosine_kernel_sources_bit_identical(spark, sf_dir, reducer):
                             bands=16, rows_per_band=r)
         .select("id", "sig").persist()
     )
-    pairs = band_pairs(sigs, "id", [f"sig[{i}]" for i in range(16)]) \
+    pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(16)]) \
         .select(F.col("id_a").alias("qid"), F.col("id_b").alias("nid"))
     attach = S.score_candidates(
         pairs, emb.select("vec_id", "embedding"), n, None, **reducer

@@ -14,16 +14,12 @@ the driver's sorted-by-name value hash lines up.
 from __future__ import annotations
 
 import json
-import os
 import re
-import threading
-from collections import OrderedDict
 from dataclasses import dataclass
 from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -47,68 +43,6 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
-#: session confs whose values change the schema parquet inference returns
-_INFER_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.binaryAsString",
-    "spark.sql.parquet.int96AsTimestamp",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-    "spark.sql.caseSensitive",
-    "spark.sql.parquet.mergeSchema",
-)
-_SCHEMA_STORE_CAP = 256
-_SCHEMAS: OrderedDict[tuple, StructType] = OrderedDict()
-_SCHEMAS_LOCK = threading.Lock()
-#: read_parquet's schema store counters since process start
-SCHEMA_STORE_STATS = {"hits": 0, "misses": 0}
-
-
-def _files_stamp(path: str) -> tuple | None:
-    """(relative path, size, mtime_ns) of the file at ``path``, or of every
-    file under the directory ``path``; None when it cannot be listed."""
-    try:
-        if os.path.isfile(path):
-            st = os.stat(path)
-            return (("", st.st_size, st.st_mtime_ns),)
-        stamp = []
-        for root, _, files in os.walk(path):
-            for f in files:
-                st = os.stat(os.path.join(root, f))
-                stamp.append((os.path.relpath(os.path.join(root, f), path),
-                              st.st_size, st.st_mtime_ns))
-    except OSError:
-        return None
-    return tuple(sorted(stamp)) or None
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` whose schema comes from a bounded LRU
-    store when the same files were read before under the same inference
-    confs, so a repeated read starts no footer job. The key is the
-    resolved path, each file's size and ``mtime_ns`` (taken before the
-    read, so a rewrite during it shows next time) and the session values
-    of :data:`_INFER_CONFS`. Paths that cannot be listed locally always
-    infer."""
-    stamp = _files_stamp(path)
-    key = None if stamp is None else (
-        os.path.realpath(path), stamp, tuple(spark.conf.get(k) for k in _INFER_CONFS))
-    with _SCHEMAS_LOCK:  # foreachBatch callbacks build on py4j threads
-        schema = _SCHEMAS.get(key)
-        if schema is not None:
-            _SCHEMAS.move_to_end(key)
-        SCHEMA_STORE_STATS["misses" if schema is None else "hits"] += 1
-    if schema is not None:
-        return spark.read.schema(schema).parquet(path)
-    df = spark.read.parquet(path)
-    if key is not None:
-        schema = df.schema
-        with _SCHEMAS_LOCK:
-            _SCHEMAS[key] = schema
-            if len(_SCHEMAS) > _SCHEMA_STORE_CAP:
-                _SCHEMAS.popitem(last=False)
-    return df
-
-
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver parquet table (TESTDATA.md).
 
@@ -125,7 +59,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql.types import LongType, TimestampNTZType
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if isinstance(raw.schema["ts"].dataType, LongType):
             # integer DIV, not /: epoch-nanos (~1.7e18) exceeds double's
             # exact integer range — float division would round the microsecond
@@ -142,14 +76,14 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql.types import ArrayType, FloatType
 
-        raw = read_parquet(spark, f"{sf_dir}/{name}.parquet")
+        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         et = raw.schema["embedding"].dataType
         if isinstance(et, ArrayType) and not isinstance(et.elementType, FloatType):
             raw = raw.withColumn(
                 "embedding", F.col("embedding").cast("array<float>")
             )
         return raw
-    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -291,35 +225,37 @@ def dim_side(df: DataFrame, approx_bytes: int) -> DataFrame:
     return df.hint("shuffle_hash")
 
 
-def band_pairs(df: DataFrame, id_col: str, keys: list[str],
+def band_pairs(df: DataFrame, id_col: str, keys: list,
                payload: tuple[str, ...] = ()) -> DataFrame:
     """LSH band self-join: every unordered pair of rows whose per-band
-    ``keys`` (SQL expressions over ``df``'s columns, one per band, of any
-    equality-comparable type) agree in at least one band, once. A null key
-    never collides, and ``id_col`` must be unique. Returns (id_a, id_b,
-    then <p>_a, <p>_b for each ``payload`` column) with id_a < id_b.
+    ``keys`` (a list of Columns, one per band, of any equality-comparable
+    type) agree in at least one band, once. A null key never collides,
+    and ``id_col`` must be unique. Returns (id_a, id_b, then <p>_a, <p>_b
+    for each ``payload`` column) with id_a < id_b.
 
     Rows explode to one per band and self-join on (band, key). A pair
     that agrees in several bands meets once per agreeing band; the join
     condition keeps only the meeting in the pair's FIRST agreeing band,
-    an unrolled ``CASE WHEN a._ks[0] = b._ks[0] THEN 0 …`` compiled into
+    an unrolled ``CASE WHEN a.ks[0] = b.ks[0] THEN 0 …`` compiled into
     the join stage. Each colliding pair has exactly one first agreeing
     band, so the output is the ``.distinct()`` of all meetings without
-    the exchange that distinct needs. Built from SQL strings: a Column
-    tree would cost one py4j call per node."""
+    the exchange that distinct needs."""
     from pyspark.sql import functions as F
 
-    rows = df.selectExpr(f"{id_col} AS _id", f"array({', '.join(keys)}) AS _ks",
-                         *payload)
-    expl = rows.selectExpr("*", "posexplode(_ks) AS (_band, _key)")
-    first = "CASE " + " ".join(
+    rows = df.select(F.col(id_col).alias("_id"), F.array(*keys).alias("_ks"),
+                     *payload)
+    expl = rows.select("*", F.posexplode("_ks").alias("_band", "_key"))
+    first = F.expr("CASE " + " ".join(
         f"WHEN a._ks[{i}] = b._ks[{i}] THEN {i}" for i in range(len(keys))
-    ) + " END"
-    cond = F.expr("a._band = b._band AND a._key = b._key AND a._id < b._id"
-                  f" AND {first} = a._band")
-    return expl.alias("a").join(expl.alias("b"), cond).selectExpr(
-        "a._id AS id_a", "b._id AS id_b",
-        *[f"{s}.{p} AS {p}_{s}" for p in payload for s in "ab"],
+    ) + " END")
+    a, b = expl.alias("a"), expl.alias("b")
+    cond = ((F.col("a._band") == F.col("b._band"))
+            & (F.col("a._key") == F.col("b._key"))
+            & (F.col("a._id") < F.col("b._id"))
+            & (first == F.col("a._band")))
+    return a.join(b, cond).select(
+        F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"),
+        *[F.col(f"{s}.{p}").alias(f"{p}_{s}") for p in payload for s in "ab"],
     )
 
 

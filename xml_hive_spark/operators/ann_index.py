@@ -41,8 +41,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import read_parquet
-
 _INDEX_FORMAT = 3  # bump on any layout change; mismatch → rebuild
 # v3 (r10): integer-exact PQ — int64 codebooks (md5-48 sample,
 # floor-div Lloyd), lists carry the exact reconstructed-norm nsq
@@ -56,7 +54,7 @@ class IvfPqIndex:
     lists_path: str  # parquet dir partitioned by cluster
 
     def lists(self, spark: SparkSession) -> DataFrame:
-        return read_parquet(spark, self.lists_path)
+        return spark.read.parquet(self.lists_path)
 
 
 _MEM_CACHE: dict[tuple, IvfPqIndex] = {}

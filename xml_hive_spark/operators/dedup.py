@@ -164,7 +164,7 @@ def lsh_candidate_pairs(sig: DataFrame, bands: int = 8, rows: int = 4) -> DataFr
     theoretical collision-admits-candidate hole; raw values join exactly
     and replay in SQL)."""
     keys = [
-        "struct(" + ", ".join(f"m{b * rows + r} AS r{r}" for r in range(rows)) + ")"
+        F.struct(*[F.col(f"m{b * rows + r}").alias(f"r{r}") for r in range(rows)])
         for b in range(bands)
     ]
     return band_pairs(sig, "id", keys)
@@ -461,10 +461,9 @@ _SIMHASH_PAIRS = [
 ]
 
 
-def _simhash_block(col: str, b: int) -> str:
-    """Block ``b`` of the 48-bit signature column ``col``, as SQL."""
+def _simhash_block(col, b):
     off, width = _SIMHASH_BLOCKS[b]
-    return f"(shiftright({col}, {off}) & {(1 << width) - 1})"
+    return F.shiftright(col, off).bitwiseAND(F.lit((1 << width) - 1))
 
 
 @query("dedup_simhash", oracle=_simhash_oracle(), tags=("dedup", "simhash"))
@@ -493,8 +492,8 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents")
     sig = simhash48(docs).persist()
     keys = [
-        f"{_simhash_block('simhash', i)} * {1 << _SIMHASH_BLOCKS[j][1]}"
-        f" + {_simhash_block('simhash', j)}"
+        _simhash_block(F.col("simhash"), i) * F.lit(1 << _SIMHASH_BLOCKS[j][1])
+        + _simhash_block(F.col("simhash"), j)
         for i, j in _SIMHASH_PAIRS
     ]
     hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))

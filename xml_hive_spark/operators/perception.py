@@ -233,7 +233,7 @@ def image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
         F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b"))) for c in fp_cols
     )
     return (
-        band_pairs(bands, "doc_id", list(fp_cols), payload=fp_cols)
+        band_pairs(bands, "doc_id", [F.col(c) for c in fp_cols], payload=fp_cols)
         .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
                 hamming.cast("int").alias("hamming"))
         .filter(F.col("hamming") <= 3)

@@ -491,7 +491,7 @@ def embedding_cosine_pairs(
     sigs = banded_signatures(emb, id_col, vec_col, bands=bands,
                              rows_per_band=rows_per_band) \
         .select("id", "sig").persist()
-    pairs = band_pairs(sigs, "id", [f"sig[{i}]" for i in range(bands)])
+    pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(bands)])
     return score_candidates(pairs, emb.select(id_col, vec_col), n, vec_path,
                             threshold=threshold)
 
@@ -1905,7 +1905,7 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
         .select("id", "sig").persist()
     # each UNDIRECTED pair once (band_pairs); the fused partial top-k
     # folds each scored pair into both endpoints' heaps
-    pairs = band_pairs(sigs, "id", [f"sig[{i}]" for i in range(16)]) \
+    pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(16)]) \
         .select(F.col("id_a").alias("qid"), F.col("id_b").alias("nid"))
     scored = score_candidates(pairs, emb.select("vec_id", "embedding"), n,
                               f"{sf}/embeddings.parquet", k=5)

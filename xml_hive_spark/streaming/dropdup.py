@@ -27,7 +27,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import query, read_parquet
+from xml_hive_spark.operators import query
 from xml_hive_spark.session import scratch_dir
 from xml_hive_spark.streaming.windowed import streaming_events
 
@@ -48,7 +48,7 @@ def run_streaming_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-type aggregate of the deduplicated rows."""
     landing = stage_replayed_events(spark, sf_dir)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = spark.readStream.schema(schema).parquet(landing)
     from pyspark.sql.types import LongType, TimestampNTZType
 

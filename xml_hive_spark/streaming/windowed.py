@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
 
-from xml_hive_spark.operators import query, read_parquet
+from xml_hive_spark.operators import query
 from xml_hive_spark.operators.scaleops import (
     HLL_EST_SQL,
     HLL_REG_SQL,
@@ -39,7 +39,7 @@ def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged. This keeps the stream byte-identical to its batch twin
     whichever layout the data files carry."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
