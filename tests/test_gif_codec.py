@@ -141,6 +141,27 @@ class TestRejection:
         with pytest.raises(ValueError, match="no image data"):
             gif_decode(p)
 
+    def test_truncated_global_table_rejected_by_both_decoders(self):
+        from xml_hive_spark.operators.gif import gif_decode_frames
+
+        # GCT flag with 2^(7+1) = 256 entries, but only 2 bytes follow
+        p = b"GIF89a" + struct.pack("<HH", 2, 2) + bytes([0x87, 0, 0]) + b"\0\0"
+        for decode in (gif_decode, gif_decode_frames):
+            with pytest.raises(ValueError, match="truncated global color table"):
+                decode(p)
+
+    def test_first_image_decode_ignores_later_bytes(self):
+        """gif_decode stops after the first image: a bad block after it
+        does not matter, while the all-frames walk reaches and rejects it."""
+        from xml_hive_spark.operators.gif import gif_decode_frames
+
+        idx = _rng(3).integers(0, 4, (5, 6), dtype=np.uint8)
+        p = gif_encode(idx, _pal(4))[:-1] + b"\x99"  # trailer -> bad block
+        first, _ = gif_decode(p)
+        assert (first == idx).all()
+        with pytest.raises(ValueError, match="unexpected block 0x99"):
+            gif_decode_frames(p)
+
 
 class TestAnimation:
     def test_animation_roundtrip_exact(self):

@@ -465,3 +465,86 @@ def test_vector_ingest_routing_is_true_nearest(spark, sf_dir):
     from collections import Counter
     spread = Counter(got.values())
     assert len(spread) >= len(c) // 2
+
+
+def test_dropdup_drain_timeout_stops_query(spark, sf_dir, monkeypatch):
+    """A drain whose wait expires stops its query and raises instead of
+    waiting for good (the replayed-events dropDuplicates stream once
+    called ``awaitTermination()`` with no timeout)."""
+    import pytest
+    from pyspark.sql.streaming import StreamingQuery
+
+    from xml_hive_spark.streaming.dropdup import run_streaming_dropdup
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination",
+                        lambda self, timeout=None: False)
+    with pytest.raises(TimeoutError):
+        run_streaming_dropdup(spark, sf_dir)
+    assert spark.streams.active == []
+
+
+def test_streaming_query_leaves_no_memory_table(spark, sf_dir):
+    """A registry streaming query drops its memory-sink view once the
+    result is resolved; the resolved result still reads every row."""
+    def tables():
+        return {tb.name for tb in spark.catalog.listTables()}
+
+    before = tables()
+    out = all_queries()["streaming_window_counts"].fn(spark, sf_dir)
+    assert tables() == before
+    assert out.count() == all_queries()["tumbling_window_agg"].fn(
+        spark, sf_dir).count() > 0
+
+
+def _stream_wait_sites(src: str) -> set[tuple[str, str]]:
+    """(enclosing function, call) of every ``format("memory")`` sink
+    and ``awaitTermination`` call in ``src``."""
+    import ast
+
+    sites = set()
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute):
+                a = child.func.attr
+                if a == "format" and any(
+                    isinstance(x, ast.Constant) and x.value == "memory"
+                    for x in child.args
+                ):
+                    sites.add((fn, "memory"))
+                elif a == "awaitTermination":
+                    sites.add((fn, a))
+            visit(child, fn)
+
+    visit(ast.parse(src), "<module>")
+    return sites
+
+
+def test_memory_sink_only_in_drain_lint():
+    """Package code starts a memory sink only in ``streaming.drain`` and
+    waits on a query only in ``streaming.finish``, so hand-written
+    drains (and unbounded waits) cannot grow back. Red on a seeded
+    violation, green on the package."""
+    from pathlib import Path
+
+    seeded = (
+        "def run(df):\n"
+        "    q = df.writeStream.format('memory').queryName('x').start()\n"
+        "    q.awaitTermination()\n"
+    )
+    assert _stream_wait_sites(seeded) == {("run", "memory"),
+                                          ("run", "awaitTermination")}
+
+    pkg = Path(__file__).resolve().parent.parent / "xml_hive_spark"
+    found = {
+        (str(p.relative_to(pkg)), fn, call)
+        for p in sorted(pkg.rglob("*.py"))
+        for fn, call in _stream_wait_sites(p.read_text())
+    }
+    assert found == {
+        ("streaming/__init__.py", "drain", "memory"),
+        ("streaming/__init__.py", "finish", "awaitTermination"),
+    }

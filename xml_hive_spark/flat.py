@@ -371,10 +371,7 @@ class _Template:
         self.base_vals = base_vals
         self.groups = groups
         self.end_group = len(groups) + 1  # the () record-end anchor
-        try:
-            self.extract_groups = _compile_extractor(groups, len(fields))
-        except Exception:  # pragma: no cover — codegen is literal-driven
-            self.extract_groups = self._extract_groups_generic
+        self.extract_groups = _compile_extractor(groups, len(fields))
         return self
 
     def extract(self, rec: bytes) -> tuple | None:

@@ -43,32 +43,40 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return deco
 
 
+def events(spark: SparkSession, sf_dir: str, stream=None) -> DataFrame:
+    """The ``events`` table with ``ts`` as TIMESTAMP (LTZ, session tz
+    pinned to UTC), whichever layout the file carries.
+
+    ``events.parquet`` has shipped as TIMESTAMP(NANOS) (rejected by
+    Spark's reader — read as int64 nanos via the legacy conf and floored
+    to microseconds, the same truncation DuckDB applies when it narrows
+    ns→us) and as timestamp[us] (arrives as TIMESTAMP_NTZ, which
+    streaming watermarks reject). ``stream``, when given, maps a
+    ``DataStreamReader`` that already carries the table's schema to the
+    streaming DataFrame to normalize instead of the batch read."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    if stream is not None:
+        raw = stream(spark.readStream.schema(raw.schema))
+    if isinstance(raw.schema["ts"].dataType, LongType):
+        # integer DIV, not /: epoch-nanos (~1.7e18) exceeds double's
+        # exact integer range — float division would round the microsecond
+        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    elif isinstance(raw.schema["ts"].dataType, TimestampNTZType):
+        # value-exact under UTC session tz; restores the LTZ dtype the
+        # nanos layout produced via timestamp_micros
+        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return raw
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver parquet table (TESTDATA.md).
-
-    ``events.parquet`` has shipped in two layouts: TIMESTAMP(NANOS)
-    (rejected by Spark's reader — read as int64 nanos via the legacy conf
-    and floored to microseconds, the same truncation DuckDB applies when
-    it narrows ns→us) and timestamp[us] (arrives as TIMESTAMP_NTZ).
-    Both are normalized to TIMESTAMP (LTZ, session tz pinned to UTC) so
-    every consumer — including streaming watermarks, which reject NTZ —
-    sees one dtype regardless of the file layout."""
+    """Load one driver parquet table (TESTDATA.md); ``events`` and
+    ``embeddings`` are normalized to one layout each."""
     if name == "events":
-        from pyspark.sql import functions as F
-
-        from pyspark.sql.types import LongType, TimestampNTZType
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(raw.schema["ts"].dataType, LongType):
-            # integer DIV, not /: epoch-nanos (~1.7e18) exceeds double's
-            # exact integer range — float division would round the microsecond
-            raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif isinstance(raw.schema["ts"].dataType, TimestampNTZType):
-            # value-exact under UTC session tz; restores the LTZ dtype the
-            # nanos layout produced via timestamp_micros
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw
+        return events(spark, sf_dir)
     if name == "embeddings":
         # the driver has regenerated table layouts between rounds (events
         # ns→us); keep the vector dtype pinned to array<float> so every

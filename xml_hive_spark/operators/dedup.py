@@ -741,6 +741,55 @@ def dedup_cluster_components(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _shingle_stages(d: DataFrame, sf: str):
+    """Char-8-gram staging of documents ``d`` (doc_id, tx) shared by the
+    exact set joins: ``(ranked, sets_sized)``.
+
+    Shingles come from an Arrow-batched UDF (HOF transform lambdas are
+    expression-interpreted: 5.7 s vs 0.4 s at sf0.1) and are hashed to
+    8-byte longs before anything shuffles (xxhash64 collisions over a
+    ~1e4 universe are ~1e-11). ``toks`` and ``sets`` (per-doc token set
+    and size) are persisted: they feed several consumers each, the
+    staging tables a production ppjoin materializes between stages.
+    ``ranked`` is every (doc_id, tok, df, rn, sz) row, ``rn`` being the
+    token's rank in the document under the global rarest-first order;
+    callers persist what they derive from it. The corpus-sized joins
+    carry size guards: the vocabulary df table is a skinny dim
+    (:func:`dim_side`; its static estimate ducks under the broadcast
+    threshold and AQE never demotes the broadcast, so the ×32 parquet
+    proxy keeps the broadcast at driver/bench SFs and pins shuffle-hash
+    beyond), the per-doc size map rides the plain parquet-bytes proxy
+    (a 3.6× over-estimate of its real rows), and ``sets_sized`` is the
+    token-set payload for the verify attach (:func:`payload_side`; the
+    set table measures 17–19× its parquet, so ×32). The proxies are
+    pinned in tests/test_plans.py."""
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import ArrayType, StringType
+
+    @pandas_udf(ArrayType(StringType()))
+    def grams(texts: pd.Series) -> pd.Series:
+        return pd.Series(
+            [list({tx[i : i + 8] for i in range(len(tx) - 7)}) for tx in texts]
+        )
+
+    toks = fan_out(d).select("doc_id", F.explode(grams("tx")).alias("g")).select(
+        "doc_id", F.xxhash64("g").alias("tok")
+    ).persist()
+    sets = toks.groupBy("doc_id").agg(
+        F.collect_set("tok").alias("toks"), F.count(F.lit(1)).alias("sz")
+    ).persist()
+    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    w = Window.partitionBy("doc_id").orderBy("df", "tok")
+    ranked = (
+        toks.join(dim_side(freq, table_bytes(sf, "documents") * 32), "tok")
+        .withColumn("rn", F.row_number().over(w))
+        .join(dim_side(sets.select("doc_id", "sz"),
+                       table_bytes(sf, "documents")), "doc_id")
+    )
+    sets_sized = payload_side(sets, table_bytes(sf, "documents") * 32)
+    return ranked, sets_sized
+
+
 @query(
     "setsim_join_prefix",
     oracle=r"""
@@ -795,75 +844,10 @@ def setsim_join_prefix(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id", F.lower(F.col("text")).alias("tx"))
         .filter(F.length("tx") >= 8)
     )
-    # Arrow-batched char-8-gram shingling (the module's measured lesson:
-    # HOF transform lambdas are expression-interpreted — 5.7 s vs 0.4 s
-    # at sf0.1 for word shingles; same ratio holds here), then hashed to
-    # 8-byte longs BEFORE anything shuffles (string shingle shuffles
-    # dominated the first cut; xxhash64 collisions over a ~1e4 universe
-    # are ~1e-11)
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def grams(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [list({tx[i : i + 8] for i in range(len(tx) - 7)}) for tx in texts]
-        )
-
-    toks = fan_out(d).select("doc_id", F.explode(grams("tx")).alias("g")).select(
-        "doc_id", F.xxhash64("g").alias("tok")
-    ).persist()
-    # one aggregation yields set + size for verification; freq and the
-    # prefix consume the skinny (doc_id, tok) rows directly — a variant
-    # deriving everything from the sets exchange measured ~2x SLOWER
-    # (re-exploding 2.4 KB array rows out of the exchange costs more
-    # than re-running the 0.4 s Arrow map side).
-    # Round 8: the three multi-consumed stages are PERSISTED instead of
-    # recomputed — toks feeds sets/freq/pref (3 scans), sets feeds
-    # pref + both verify sides (3), and pref is self-joined (2); the
-    # full combination measured 2.35 → 0.66 s at sf0.1, identical rows
-    # (persisting sets ALONE is slower — the win needs pref cached too;
-    # partial combinations are in SCALE.md). At 100 TB these persists
-    # are the staging tables a production ppjoin materializes between
-    # stages (MEMORY_AND_DISK spills instead of recomputing 3×).
-    sets = toks.groupBy("doc_id").agg(
-        F.collect_set("tok").alias("toks"), F.count(F.lit(1)).alias("sz")
-    ).persist()
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-
-    w = Window.partitionBy("doc_id").orderBy("df", "tok")
-    pref = (
-        # the shingle-vocabulary df table grows with the corpus (~24 B
-        # per distinct 8-gram ≈ 20-30× the zstd'd documents bytes:
-        # measured 1.1 GiB serialized at the 100× corpus vs 57 MB on
-        # disk) and Catalyst's STATIC estimate for it sails under the
-        # 10 MB broadcast threshold — the initial plan commits to a
-        # BroadcastHashJoin that AQE never demotes (r13, measured: the
-        # broadcast collect blew maxResultSize/heap at the 100× corpus;
-        # the old comment here claimed AQE would fall back — falsified).
-        # See dim_side for why shuffle_hash (not merge) past the cap.
-        # dim_side pins SHUFFLE_HASH beyond the cap (skinny 24 B rows:
-        # per-partition build ~34 MB at 100×, and merge would force a
-        # sort of the 158 M-row toks stream — measured wedged); the ×32 proxy
-        # keeps the broadcast at driver/bench SFs (freq ≈ 110 MB at the
-        # 10× corpus, known-good) and merges at 100× and beyond. The
-        # per-doc size map rides the full parquet-bytes proxy: its real
-        # rows are ~32 B (two longs + row overhead) vs ~115 B/doc of
-        # parquet, so table_bytes is a 3.6× over-estimate — the ÷50 it
-        # replaced UNDER-estimated by ~13× (measured r13, pinned in
-        # tests/test_plans.py::test_guard_size_estimates_are_conservative)
-        # and would have kept broadcasting to ~3.5 GB real at ~10⁸ docs.
-        toks.join(dim_side(freq, table_bytes(sf, "documents") * 32),
-                  "tok")
-        .withColumn("rn", F.row_number().over(w))
-        .join(dim_side(sets.select("doc_id", "sz"),
-                       table_bytes(sf, "documents")), "doc_id")
-        .filter(
-            F.col("rn")
-            <= F.col("sz") - F.ceil(F.col("sz") * T_NUM / T_DEN) + 1
-        )
-        .select("doc_id", "tok", "sz", "rn")
-    ).persist()
+    ranked, sets_sized = _shingle_stages(d, sf)
+    pref = ranked.filter(
+        F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * T_NUM / T_DEN) + 1
+    ).select("doc_id", "tok", "sz", "rn").persist()
     # length filter (ppjoin's second prune): Jaccard >= t forces
     # t*|A| <= |B| <= |A|/t, so size-incompatible prefix collisions are
     # dropped INSIDE the candidate join. The POSITIONAL filter (ppjoin's
@@ -900,18 +884,7 @@ def setsim_join_prefix(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
     # verification: one array_intersect per surviving pair (bounded
-    # arrays of longs), not a re-exploded shingle join. The per-doc
-    # set table is CORPUS-sized (~2 KB/doc of token arrays): broadcast
-    # only while provably small — at the r11 100x probe corpus the
-    # planner broadcast this table from a stale post-agg estimate and
-    # died in BroadcastExchange at ~1 GiB (SCALE.md §r11); beyond the
-    # cap the attach is pinned to sort-merge on the id
-    # free size proxy: ×32 the source parquet bytes. The token-set
-    # table MEASURES 17.3–18.4× the parquet at every driver SF (the ×8
-    # this replaced was 2.2× UNDER — it would broadcast to ~580 MB real
-    # before flipping; measured r13, pinned in tests/test_plans.py);
-    # ×32 gives ~1.7× margin and matches the freq-dim discipline.
-    sets_sized = payload_side(sets, table_bytes(sf, "documents") * 32)
+    # arrays of longs), not a re-exploded shingle join
     sa = sets_sized.select(F.col("doc_id").alias("a_id"),
                            F.col("toks").alias("ta"), F.col("sz").alias("sa"))
     sb = sets_sized.select(F.col("doc_id").alias("b_id"),
@@ -1202,48 +1175,28 @@ def containment_pairs(
     caps the intersection below t·|A|); the index side (B) keeps every
     token, and the only size constraint is one-sided (|B|·10 ≥ |A|·9 —
     containment has no upper length bound, which is exactly why the
-    Jaccard prefix join can't answer it). Candidate prune (r12,
-    replacing r8's per-row positional filter): a DEEPER-PREFIX COUNTED
-    pigeonhole. A qualifying pair misses at most m = sa − ⌈t·sa⌉ of
-    A's tokens, so among A's first pl = min(sa, m + 1 + EXTRA) tokens
-    (global rarest-first order) B must contain at least
-    c_req = pl − m — the classic pigeonhole (EXTRA = 0, "share ≥ 1
-    rare token") extended to "share ≥ 1+EXTRA of a slightly longer
-    prefix", still exactly lossless. The prefix join's rows are
-    COUNTED per pair (groupBy replaces the old distinct — same
-    shuffle shape) and pairs below c_req drop before the expensive
-    verify. EXTRA swept at {2,4,6,8,14} (SCALE.md §r12): candidates at
-    sf0.1 drop 1,441,429 → 202k → 58k → 11.4k → 4.6k → 627 while the
-    raw prefix join only grows 2.9 M → 9.9 M, and end-to-end wall-clock
-    bottoms at EXTRA = 4 (sf0.1 3.4 → 0.9 s; 10× corpus 89 → 5.6 s;
-    100× corpus 262 → 73 s — the verify attach stops dominating and
-    the raw join + pair count-aggregate, both exactly linear in corpus
-    size, take over), identical rows at every SF — the r8 positional filter kept
-    1.44 M of the 3.53 M raw rows because 1.06 M candidates share
-    exactly ONE rare token and the B-side positional term is vacuous
-    for the long B docs containment allows. The r8 per-row positional
-    filter is REMOVED rather than kept alongside: for rows deeper in
-    the extended prefix it can reject a qualifying pair's row (at
-    rank ra ≤ m + k the A-side slack sa − ra ≥ ⌈t·sa⌉ − k fails its
-    bound for k ≥ 2), which would corrupt the count the pigeonhole
-    needs — and c_req ≥ 3 is strictly stronger than what it pruned
-    here. The shared stages (toks/sets/ranked) persist — the
-    staging-table pattern of the Jaccard twin. Verification is one
+    Jaccard prefix join can't answer it). Candidate prune: a
+    DEEPER-PREFIX COUNTED pigeonhole. A qualifying pair misses at most
+    m = sa − ⌈t·sa⌉ of A's tokens, so among A's first
+    pl = min(sa, m + 1 + EXTRA) tokens (global rarest-first order) B
+    must contain at least c_req = pl − m — the classic pigeonhole
+    (EXTRA = 0, "share ≥ 1 rare token") extended to "share ≥ 1+EXTRA
+    of a slightly longer prefix", still exactly lossless. The prefix
+    join's rows are COUNTED per pair and pairs below c_req drop before
+    the expensive verify; EXTRA = 4 is the measured wall-clock minimum
+    (SCALE.md). No per-row positional filter: deeper in the extended
+    prefix it can reject a qualifying pair's row and so corrupt the
+    count. Staging is :func:`_shingle_stages`. Verification is one
     array_intersect per candidate; the threshold is exact integer
     arithmetic (inter·t_den ≥ |A|·t_num), bit-identical to the naive
     O(n²) DuckDB oracle — zero recall loss, no all-pairs comparison.
 
-    r13: parameterized over the threshold (t_num/t_den), the prune
-    depth, and an optional PROBE-side predicate so a second consumer
-    (``plagiarism_detect``, t = 0.8, batch-vs-corpus) can exercise the
-    counted pigeonhole in a different miss-budget regime — pure
-    code-motion from the r12 ``setsim_containment_join`` body at the
-    default arguments (output re-verified identical at sf0.01 and
-    sf0.1, same ritual as the r12 ``embedding_cosine_pairs`` motion).
-    ``probe_pred`` restricts which documents are PROBED (the A side);
-    the index side, the global df ranking, and the verify sets always
-    cover the full corpus, so a probed document's pairs are exactly
-    the all-corpus pairs with that a_id."""
+    ``t_num``/``t_den`` set the threshold and ``extra`` the prune depth
+    (``plagiarism_detect`` runs t = 0.8). ``probe_pred`` restricts which
+    documents are PROBED (the A side); the index side, the global df
+    ranking, and the verify sets always cover the full corpus, so a
+    probed document's pairs are exactly the all-corpus pairs with that
+    a_id."""
     T_NUM, T_DEN = t_num, t_den
     EXTRA = extra  # prefix deepened by EXTRA -> share >= 1+EXTRA tokens
 
@@ -1252,40 +1205,8 @@ def containment_pairs(
         .select("doc_id", F.lower(F.col("text")).alias("tx"))
         .filter(F.length("tx") >= 8)
     )
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    @pandas_udf(ArrayType(StringType()))
-    def grams(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [list({tx[i : i + 8] for i in range(len(tx) - 7)}) for tx in texts]
-        )
-
-    toks = fan_out(d).select("doc_id", F.explode(grams("tx")).alias("g")).select(
-        "doc_id", F.xxhash64("g").alias("tok")
-    ).persist()
-    sets = toks.groupBy("doc_id").agg(
-        F.collect_set("tok").alias("toks"), F.count(F.lit(1)).alias("sz")
-    ).persist()
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "tok")
-    ranked = (
-        # same corpus-sized-broadcast guard as the Jaccard twin's pref
-        # stage (see setsim_join_prefix): the static estimate for the
-        # vocab df table ducks under the broadcast threshold and the
-        # resulting BroadcastHashJoin is never demoted by AQE — at the
-        # 100× corpus the freq collect alone is ~1.1 GiB (r13, died in
-        # BroadcastExchange). dim_side: shuffle-hash beyond the cap,
-        # broadcast kept at driver/bench SFs. Size-map proxy is plain
-        # table_bytes (3.6× over real; the ÷50 it replaced was ~13×
-        # UNDER — see the prefix twin's comment and the r13 pin in
-        # tests/test_plans.py).
-        toks.join(dim_side(freq, table_bytes(sf, "documents") * 32),
-                  "tok")
-        .withColumn("rn", F.row_number().over(w))
-        .join(dim_side(sets.select("doc_id", "sz"),
-                       table_bytes(sf, "documents")), "doc_id")
-    ).persist()
+    ranked, sets_sized = _shingle_stages(d, sf)
+    ranked = ranked.persist()
     # m = allowed misses; pl = deepened prefix; c_req = pl − m shared
     # tokens required (exact pigeonhole, lossless at any EXTRA ≥ 0)
     m_col = F.col("sz") - F.ceil(F.col("sz") * T_NUM / T_DEN)
@@ -1314,12 +1235,6 @@ def containment_pairs(
         .filter(F.col("c") >= F.col("c_req"))
         .select("a_id", "b_id")
     )
-    # corpus-sized token-set payload (~2 KB/doc): broadcast only while
-    # provably small, sort-merge beyond the cap — the one candidate-
-    # attach site the r11 guard sweep missed; the byte-audit sweep
-    # found it the hard way (BroadcastExchange OOM at the 100x corpus).
-    # ×32 proxy: the set table measures 17–19× its parquet (r13 pin).
-    sets_sized = payload_side(sets, table_bytes(sf, "documents") * 32)
     sa = sets_sized.select(F.col("doc_id").alias("a_id"),
                            F.col("toks").alias("ta"),
                            F.col("sz").alias("a_sz"))

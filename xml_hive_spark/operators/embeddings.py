@@ -139,9 +139,9 @@ def embedding_pca_project(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
-    "pca_explained_variance_2d",
-    oracle="""
+# Decimal-exact first and second moments of the first two embedding
+# coordinates (the ``dsum`` convention), shared by both 2-d PCA oracles.
+_PCA2_M_CTE = """
 WITH m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
          CAST(sum(CAST(CAST(embedding[1] AS DOUBLE)
@@ -156,6 +156,52 @@ WITH m AS (
                        AS DECIMAL(30,6))) AS DOUBLE) AS sab
   FROM embeddings
 ),
+"""
+
+
+def _pca2_eigen(emb: DataFrame):
+    """``(a, b, eig)``: the first two embedding coordinates as double
+    columns and the 1-row frame of the 2-d PCA fit over them — moments
+    ``n``, means ``m0``/``m1``, covariance ``va``/``vb``/``cab`` and the
+    closed-form eigenvalues ``h ± d``. Both engines run this identical
+    expression tree over decimal-exact sums, so every output is
+    hash-exact; unused columns are pruned from each caller's plan."""
+    a = F.col("embedding")[0].cast("double")
+    b = F.col("embedding")[1].cast("double")
+    m = emb.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(a.cast("decimal(30,6)")).cast("double").alias("sa"),
+        F.sum(b.cast("decimal(30,6)")).cast("double").alias("sb"),
+        F.sum((a * a).cast("decimal(30,6)")).cast("double").alias("saa"),
+        F.sum((b * b).cast("decimal(30,6)")).cast("double").alias("sbb"),
+        F.sum((a * b).cast("decimal(30,6)")).cast("double").alias("sab"),
+    )
+    cov = m.select(
+        "n",
+        (F.col("sa") / F.col("n")).alias("m0"),
+        (F.col("sb") / F.col("n")).alias("m1"),
+        (F.col("saa") / F.col("n")
+         - (F.col("sa") / F.col("n")) * (F.col("sa") / F.col("n"))).alias("va"),
+        (F.col("sbb") / F.col("n")
+         - (F.col("sb") / F.col("n")) * (F.col("sb") / F.col("n"))).alias("vb"),
+        (F.col("sab") / F.col("n")
+         - (F.col("sa") / F.col("n")) * (F.col("sb") / F.col("n"))).alias("cab"),
+    )
+    eig = cov.select(
+        "n", "m0", "m1", "va", "vb", "cab",
+        ((F.col("va") + F.col("vb")) / F.lit(2.0)).alias("h"),
+        F.sqrt(
+            ((F.col("va") - F.col("vb")) / F.lit(2.0))
+            * ((F.col("va") - F.col("vb")) / F.lit(2.0))
+            + F.col("cab") * F.col("cab")
+        ).alias("d"),
+    )
+    return a, b, eig
+
+
+@query(
+    "pca_explained_variance_2d",
+    oracle=_PCA2_M_CTE + """
 cov AS (
   SELECT n,
          saa / n - (sa / n) * (sa / n) AS va,
@@ -201,37 +247,7 @@ def pca_explained_variance_2d(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: ONE corpus pass, one partial+final hash-agg emitting
     six scalars; the eigen arithmetic is a 1-row projection. Nothing
     grows with N."""
-    emb = t(spark, sf, "embeddings")
-    a = F.col("embedding")[0].cast("double")
-    b = F.col("embedding")[1].cast("double")
-    m = emb.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(a.cast("decimal(30,6)")).cast("double").alias("sa"),
-        F.sum(b.cast("decimal(30,6)")).cast("double").alias("sb"),
-        F.sum((a * a).cast("decimal(30,6)")).cast("double").alias("saa"),
-        F.sum((b * b).cast("decimal(30,6)")).cast("double").alias("sbb"),
-        F.sum((a * b).cast("decimal(30,6)")).cast("double").alias("sab"),
-    )
-    cov = m.select(
-        "n",
-        (F.col("saa") / F.col("n")
-         - (F.col("sa") / F.col("n")) * (F.col("sa") / F.col("n"))).alias("va"),
-        (F.col("sbb") / F.col("n")
-         - (F.col("sb") / F.col("n")) * (F.col("sb") / F.col("n"))).alias("vb"),
-        (F.col("sab") / F.col("n")
-         - (F.col("sa") / F.col("n")) * (F.col("sb") / F.col("n"))).alias("cab"),
-    )
-    eig = cov.select(
-        "n",
-        "va",
-        "vb",
-        ((F.col("va") + F.col("vb")) / F.lit(2.0)).alias("h"),
-        F.sqrt(
-            ((F.col("va") - F.col("vb")) / F.lit(2.0))
-            * ((F.col("va") - F.col("vb")) / F.lit(2.0))
-            + F.col("cab") * F.col("cab")
-        ).alias("d"),
-    )
+    _, _, eig = _pca2_eigen(t(spark, sf, "embeddings"))
     return eig.select(
         F.col("n").alias("n_vectors"),
         F.round(F.col("h") + F.col("d"), 6).alias("ev_1"),
@@ -244,21 +260,7 @@ def pca_explained_variance_2d(spark: SparkSession, sf: str) -> DataFrame:
 
 @query(
     "pca_project_2d",
-    oracle="""
-WITH m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(CAST(embedding[1] AS DOUBLE)
-                       AS DECIMAL(30,6))) AS DOUBLE) AS sa,
-         CAST(sum(CAST(CAST(embedding[2] AS DOUBLE)
-                       AS DECIMAL(30,6))) AS DOUBLE) AS sb,
-         CAST(sum(CAST(CAST(embedding[1] AS DOUBLE) * CAST(embedding[1] AS DOUBLE)
-                       AS DECIMAL(30,6))) AS DOUBLE) AS saa,
-         CAST(sum(CAST(CAST(embedding[2] AS DOUBLE) * CAST(embedding[2] AS DOUBLE)
-                       AS DECIMAL(30,6))) AS DOUBLE) AS sbb,
-         CAST(sum(CAST(CAST(embedding[1] AS DOUBLE) * CAST(embedding[2] AS DOUBLE)
-                       AS DECIMAL(30,6))) AS DOUBLE) AS sab
-  FROM embeddings
-),
+    oracle=_PCA2_M_CTE + """
 cov AS (
   SELECT sa / n AS m0, sb / n AS m1,
          saa / n - (sa / n) * (sa / n) AS va,
@@ -305,35 +307,7 @@ def pca_project_2d(spark: SparkSession, sf: str) -> DataFrame:
     in both engines rather than hashing NaNs. numpy-parity (up to
     eigenvector sign) pinned in tests/test_embeddings.py."""
     emb = t(spark, sf, "embeddings")
-    a = F.col("embedding")[0].cast("double")
-    b = F.col("embedding")[1].cast("double")
-    m = emb.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(a.cast("decimal(30,6)")).cast("double").alias("sa"),
-        F.sum(b.cast("decimal(30,6)")).cast("double").alias("sb"),
-        F.sum((a * a).cast("decimal(30,6)")).cast("double").alias("saa"),
-        F.sum((b * b).cast("decimal(30,6)")).cast("double").alias("sbb"),
-        F.sum((a * b).cast("decimal(30,6)")).cast("double").alias("sab"),
-    )
-    cov = m.select(
-        (F.col("sa") / F.col("n")).alias("m0"),
-        (F.col("sb") / F.col("n")).alias("m1"),
-        (F.col("saa") / F.col("n")
-         - (F.col("sa") / F.col("n")) * (F.col("sa") / F.col("n"))).alias("va"),
-        (F.col("sbb") / F.col("n")
-         - (F.col("sb") / F.col("n")) * (F.col("sb") / F.col("n"))).alias("vb"),
-        (F.col("sab") / F.col("n")
-         - (F.col("sa") / F.col("n")) * (F.col("sb") / F.col("n"))).alias("cab"),
-    )
-    eig = cov.select(
-        "m0", "m1", "va", "cab",
-        ((F.col("va") + F.col("vb")) / F.lit(2.0)).alias("h"),
-        F.sqrt(
-            ((F.col("va") - F.col("vb")) / F.lit(2.0))
-            * ((F.col("va") - F.col("vb")) / F.lit(2.0))
-            + F.col("cab") * F.col("cab")
-        ).alias("d"),
-    )
+    a, b, eig = _pca2_eigen(emb)
     vv = eig.select(
         "m0", "m1",
         F.col("cab").alias("v0"),

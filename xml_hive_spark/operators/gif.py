@@ -169,67 +169,90 @@ def gif_encode(indices, palette, loop_ext: bool = False) -> bytes:
     return bytes(out)
 
 
-def gif_decode(payload: bytes):
-    """Decode the first image of a GIF to ``(indices, palette)``:
-    a (h, w) uint8 index array and the active (k, 3) color table.
-    Full container walk + real LZW decompression; interlaced images
-    and images without any color table raise ``ValueError``."""
+def _gif_images(payload: bytes):
+    """``(gct, images)``: the global color table (or None) and a lazy
+    iterator over the images of a GIF, each ``(indices, palette,
+    delay_cs)`` — a (h, w) uint8 index array, the active (k, 3) color
+    table, and the preceding Graphic Control delay (0 without one).
+    Header and global table are checked up front; each block is walked
+    only when the next image is asked for."""
     import numpy as np
 
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF (bad signature)")
     if len(payload) < 13:
         raise ValueError("truncated header")
-    sw, sh = struct.unpack("<HH", payload[6:10])
     packed = payload[10]
     pos = 13
     gct = None
     if packed & 0x80:
         n = 2 << (packed & 0x07)
+        if len(payload) < pos + 3 * n:
+            raise ValueError("truncated global color table")
         gct = np.frombuffer(
             payload[pos : pos + 3 * n], dtype=np.uint8
         ).reshape(-1, 3)
-        if gct.shape[0] != n:
-            raise ValueError("truncated global color table")
         pos += 3 * n
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
+
+    def images():
+        nonlocal pos
+        delay = 0
+        while pos < len(payload):
+            b = payload[pos]
+            if b == 0x3B:  # trailer
+                return
+            if b == 0x21:  # extension: label + sub-blocks
+                label = payload[pos + 1] if pos + 1 < len(payload) else None
+                pos += 2
+                data = bytearray()
+                while pos < len(payload) and payload[pos] != 0:
+                    ln = payload[pos]
+                    data += payload[pos + 1 : pos + 1 + ln]
+                    pos += 1 + ln
+                pos += 1
+                if label == 0xF9 and len(data) >= 3:
+                    delay = struct.unpack("<H", bytes(data[1:3]))[0]
+                continue
+            if b != 0x2C:
+                raise ValueError(f"unexpected block 0x{b:02x}")
+            left, top, w, h = struct.unpack("<HHHH", payload[pos + 1 : pos + 9])
+            iflags = payload[pos + 9]
+            pos += 10
+            if iflags & 0x40:
+                raise ValueError("interlaced GIF not supported")
+            pal = gct
+            if iflags & 0x80:
+                n = 2 << (iflags & 0x07)
+                pal = np.frombuffer(
+                    payload[pos : pos + 3 * n], dtype=np.uint8
+                ).reshape(-1, 3)
+                pos += 3 * n
+            if pal is None:
+                raise ValueError("no color table for image")
+            min_code = payload[pos]
             pos += 1
-            continue
-        if b != 0x2C:
-            raise ValueError(f"unexpected block 0x{b:02x}")
-        left, top, w, h = struct.unpack("<HHHH", payload[pos + 1 : pos + 9])
-        iflags = payload[pos + 9]
-        pos += 10
-        if iflags & 0x40:
-            raise ValueError("interlaced GIF not supported")
-        pal = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 0x07)
-            pal = np.frombuffer(
-                payload[pos : pos + 3 * n], dtype=np.uint8
-            ).reshape(-1, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("no color table for image")
-        min_code = payload[pos]
-        pos += 1
-        stream = bytearray()
-        while pos < len(payload) and payload[pos] != 0:
-            ln = payload[pos]
-            stream += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        idx = _lzw_decompress(bytes(stream), min_code, w * h)
-        return (
-            np.array(idx, dtype=np.uint8).reshape(h, w),
-            pal.copy(),
-        )
+            stream = bytearray()
+            while pos < len(payload) and payload[pos] != 0:
+                ln = payload[pos]
+                stream += payload[pos + 1 : pos + 1 + ln]
+                pos += 1 + ln
+            pos += 1
+            idx = _lzw_decompress(bytes(stream), min_code, w * h)
+            yield np.array(idx, dtype=np.uint8).reshape(h, w), pal, delay
+            delay = 0
+
+    return gct, images()
+
+
+def gif_decode(payload: bytes):
+    """Decode the first image of a GIF to ``(indices, palette)``:
+    a (h, w) uint8 index array and the active (k, 3) color table.
+    Full container walk + real LZW decompression; bytes after the first
+    image are not read. Interlaced images and images without any color
+    table raise ``ValueError``."""
+    _, images = _gif_images(payload)
+    for indices, pal, _ in images:
+        return indices, pal.copy()
     raise ValueError("no image data in GIF")
 
 
@@ -281,69 +304,11 @@ def gif_decode_frames(payload: bytes):
     """Decode EVERY image of a GIF to ``(frames, palette, delays_cs)``
     — a list of (h, w) uint8 index arrays, the global color table, and
     the per-frame Graphic Control delay (0 when a frame carries no
-    GCE). Same walk as :func:`gif_decode` but extensions labeled 0xF9
-    are parsed (not skipped) and all image blocks are consumed."""
-    import numpy as np
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    if len(payload) < 13:
-        raise ValueError("truncated header")
-    packed = payload[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(
-            payload[pos : pos + 3 * n], dtype=np.uint8
-        ).reshape(-1, 3)
-        pos += 3 * n
-    frames, delays = [], []
-    pending_delay = 0
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x3B:
-            break
-        if b == 0x21:
-            label = payload[pos + 1]
-            pos += 2
-            data = bytearray()
-            while pos < len(payload) and payload[pos] != 0:
-                ln = payload[pos]
-                data += payload[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            if label == 0xF9 and len(data) >= 3:
-                pending_delay = struct.unpack("<H", bytes(data[1:3]))[0]
-            continue
-        if b != 0x2C:
-            raise ValueError(f"unexpected block 0x{b:02x}")
-        left, top, w, h = struct.unpack("<HHHH", payload[pos + 1 : pos + 9])
-        iflags = payload[pos + 9]
-        pos += 10
-        if iflags & 0x40:
-            raise ValueError("interlaced GIF not supported")
-        pal = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 0x07)
-            pal = np.frombuffer(
-                payload[pos : pos + 3 * n], dtype=np.uint8
-            ).reshape(-1, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("no color table for image")
-        min_code = payload[pos]
-        pos += 1
-        stream = bytearray()
-        while pos < len(payload) and payload[pos] != 0:
-            ln = payload[pos]
-            stream += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = _lzw_decompress(bytes(stream), min_code, w * h)
-        frames.append(np.array(idx, dtype=np.uint8).reshape(h, w))
-        delays.append(pending_delay)
-        pending_delay = 0
-    if not frames:
+    GCE)."""
+    gct, images = _gif_images(payload)
+    decoded = list(images)
+    if not decoded:
         raise ValueError("no image data in GIF")
+    frames = [indices for indices, _, _ in decoded]
+    delays = [delay for _, _, delay in decoded]
     return frames, (gct.copy() if gct is not None else None), delays

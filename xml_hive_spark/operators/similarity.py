@@ -141,6 +141,24 @@ def hyperplane_buckets(df: DataFrame, id_col: str, vec_col: str, n_planes: int =
                      bucket.alias("bucket"))
 
 
+def exact_top5(pairs: DataFrame) -> DataFrame:
+    """Exact re-rank of ANN candidates: each (qid, qe, nid, ne) pair is
+    scored by the quantized cosine (ratio of exact int64 aggregates via
+    :func:`_dot_q`/:func:`_norm_q`, bit-identical ordering in any
+    engine) and each query keeps its 5 best by (cosine DESC, nid), as
+    ``qid, nid, cos_sim`` (4 places) and ``rank``."""
+    cos_exact = _dot_q(F.col("qe"), F.col("ne")) / (
+        _norm_q(F.col("qe")) * _norm_q(F.col("ne"))
+    )
+    w = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), "nid")
+    return (
+        pairs.select("qid", "nid", cos_exact.alias("cos_raw"))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= 5)
+        .select("qid", "nid", F.round("cos_raw", 4).alias("cos_sim"), "rank")
+    )
+
+
 @query(
     "cosine_topk_lsh",
     oracle="""
@@ -204,7 +222,7 @@ def cosine_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
     + ranking window. Recall vs the brute-force baseline is asserted in
     tests/test_similarity.py.
 
-    FULL value oracle since r9: md5-Rademacher planes over quantized
+    FULL value oracle: md5-Rademacher planes over quantized
     integer entries (see :func:`hyperplane_buckets`) make the bucket
     ids exact, and the quantized cosine (ratio of exact int64
     aggregates via :func:`_dot_q`/:func:`_norm_q`) gives bit-identical
@@ -220,16 +238,7 @@ def cosine_topk_lsh(spark: SparkSession, sf: str) -> DataFrame:
         F.col("id").alias("nid"), F.col("vec").alias("ne"), F.col("bucket").alias("nb")
     )
     pairs = q.join(n, (F.col("qb") == F.col("nb")) & (F.col("qid") != F.col("nid")))
-    cos_exact = _dot_q(F.col("qe"), F.col("ne")) / (
-        _norm_q(F.col("qe")) * _norm_q(F.col("ne"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), "nid")
-    return (
-        pairs.select("qid", "nid", cos_exact.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", F.round("cos_raw", 4).alias("cos_sim"), "rank")
-    )
+    return exact_top5(pairs)
 
 
 @query(
@@ -736,19 +745,17 @@ def cosine_topk_ivf(spark: SparkSession, sf: str) -> DataFrame:
     At scale the lists come from a k-means coarse quantizer and the same
     plan applies unchanged.
 
-    FULL value oracle since r9: centroids are FLOOR-DIVIDED integer
+    FULL value oracle: centroids are FLOOR-DIVIDED integer
     means of the 2^20-quantized entries (probing by cosine is
     scale-invariant, so an integer centroid ranks lists identically to
     a float one up to the 2^-20 grain — and exactly reproducibly), and
     both the probe similarity and the final cosine are ratios of exact
     int64 aggregates, bit-identical in any engine. Division-semantics
-    trap (r10 fuzz finding): Spark ``DIV`` AND DuckDB's integer ``//``
-    both TRUNCATE toward zero while numpy/Python ``//`` floors — so the
-    Spark side floors explicitly via pmod and the SQL twin spells exact
-    floor division the same way (the r9 oracle's bare ``//`` silently
-    truncated negative means; see
-    test_coarse_centroids_bitexact_vs_duckdb). Recall vs brute force
-    stays asserted in tests/test_similarity.py."""
+    trap: Spark ``DIV`` AND DuckDB's integer ``//`` both TRUNCATE toward
+    zero while numpy/Python ``//`` floors — so the Spark side floors
+    explicitly via pmod and the SQL twin spells exact floor division the
+    same way (see test_coarse_centroids_bitexact_vs_duckdb). Recall vs
+    brute force stays asserted in tests/test_similarity.py."""
     emb = t(spark, sf, "embeddings")
 
     # per-label integer centroid: floor(sum(q20) / n) per dimension
@@ -806,16 +813,7 @@ def cosine_topk_ivf(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("nid"), F.col("embedding").alias("ne"), "label"
     )
     pairs = probed.join(n, "label").filter(F.col("qid") != F.col("nid"))
-    cos_exact = _dot_q(F.col("qe"), F.col("ne")) / (
-        _norm_q(F.col("qe")) * _norm_q(F.col("ne"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), "nid")
-    return (
-        pairs.select("qid", "nid", cos_exact.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", F.round("cos_raw", 4).alias("cos_sim"), "rank")
-    )
+    return exact_top5(pairs)
 
 
 def fixed_dim_matrix(col, dim: int):
@@ -1277,7 +1275,7 @@ def cosine_topk_ivf_kmeans(spark: SparkSession, sf: str) -> DataFrame:
     op (the iterative driver loop is the one place collect() is
     legitimate — it moves k×dim ints, not data).
 
-    FULL value oracle since r9 — ITERATIVE ML TRAINING driver-checked
+    FULL value oracle — ITERATIVE ML TRAINING driver-checked
     end to end: the integer Lloyd's recurrence (md5-48 init, exact
     argmax-cosine assignment over 2^20-quantized vectors, floor-div
     centroid update) is bit-stable across parallelism and engines, so
@@ -1315,16 +1313,7 @@ def cosine_topk_ivf_kmeans(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("nid"), F.col("embedding").alias("ne"), "cluster"
     )
     pairs = probed.join(n, "cluster").filter(F.col("qid") != F.col("nid"))
-    cos_exact = _dot_q(F.col("qe"), F.col("ne")) / (
-        _norm_q(F.col("qe")) * _norm_q(F.col("ne"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos_raw").desc(), "nid")
-    return (
-        pairs.select("qid", "nid", cos_exact.alias("cos_raw"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "nid", F.round("cos_raw", 4).alias("cos_sim"), "rank")
-    )
+    return exact_top5(pairs)
 
 
 # ------------------------------------------------- product quantization (PQ)

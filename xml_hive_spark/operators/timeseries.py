@@ -464,9 +464,7 @@ def twap_time_weighted(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@query(
-    "ohlc_bars_hourly",
-    oracle="""
+OHLC_ORACLE = """
 WITH pricks AS (
   SELECT event_type,
          date_trunc('hour', ts) AS bar,
@@ -486,24 +484,17 @@ SELECT event_type, bar,
 FROM pricks
 GROUP BY event_type, bar
 ORDER BY event_type, bar
-""",
-    tags=("timeseries", "ohlc", "resample", "finance"),
-)
-def ohlc_bars_hourly(spark: SparkSession, sf: str) -> DataFrame:
-    """OHLC bar resampling — the canonical financial/IoT downsample:
-    per (series, hour), the Opening and Closing tick (first/last by
-    time) plus the High/Low, in integer cents. First/last ride
-    min_by/max_by over a UNIQUE integer ordering value
-    (in-bar
-    microsecond offset · 2^31 + event_id — the ``agg_argmax_argmin``
-    determinism convention; bar-relative so the product stays inside
-    BIGINT: 3.6e9 µs/hour · 2^31 < 2^63).
+"""
 
-    Scale shape: ONE hash-agg with map-side combine — OHLC is fully
-    mergeable (min_by/max_by/min/max all are), which is why bar
-    construction scales to tick firehoses; output is
-    |series|×|hours|."""
-    ev = t(spark, sf, "events")
+
+def ohlc_bars(ev: DataFrame) -> DataFrame:
+    """Per (event_type, hour) OHLC bar of ``ev`` (batch or streaming) in
+    integer cents. First/last ride min_by/max_by over a UNIQUE integer
+    ordering value (in-bar microsecond offset · 2^31 + event_id — the
+    ``agg_argmax_argmin`` determinism convention; bar-relative so the
+    product stays inside BIGINT: 3.6e9 µs/hour · 2^31 < 2^63). Every
+    aggregate is mergeable, so this is ONE hash-agg with map-side
+    combine and bounded complete-mode streaming state."""
     ordv = (
         F.unix_micros("ts") - F.unix_micros(F.date_trunc("hour", "ts"))
     ) * 2147483648 + F.col("event_id")
@@ -522,8 +513,20 @@ def ohlc_bars_hourly(spark: SparkSession, sf: str) -> DataFrame:
             F.expr("max_by(cents, ord)").cast("long").alias("close_cents"),
             F.count(F.lit(1)).cast("long").alias("n_ticks"),
         )
-        .orderBy("event_type", "bar")
     )
+
+
+@query(
+    "ohlc_bars_hourly",
+    oracle=OHLC_ORACLE,
+    tags=("timeseries", "ohlc", "resample", "finance"),
+)
+def ohlc_bars_hourly(spark: SparkSession, sf: str) -> DataFrame:
+    """OHLC bar resampling — the canonical financial/IoT downsample:
+    per (series, hour), the Opening and Closing tick (first/last by
+    time) plus the High/Low (see :func:`ohlc_bars`); output is
+    |series|×|hours|."""
+    return ohlc_bars(t(spark, sf, "events")).orderBy("event_type", "bar")
 
 
 @query(

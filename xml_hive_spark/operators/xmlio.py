@@ -217,13 +217,12 @@ def xml_stream_scan(spark: SparkSession, sf: str) -> DataFrame:
     (availableNow), and the aggregate must hash-match DuckDB over the
     original parquet. Executor-side split parsing — the landing-dir
     ingest shape for 100 TB/day XML feeds."""
-    import uuid as _uuid
-
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from xml_hive_spark.operators import t
     from xml_hive_spark.sources.xml_sink import write_xml
     from xml_hive_spark.sources.xml_stream import register_stream
+    from xml_hive_spark.streaming import drain
 
     register_stream(spark)
     nation = t(spark, sf, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -244,20 +243,8 @@ def xml_stream_scan(spark: SparkSession, sf: str) -> DataFrame:
         .option("path", landing)
         .load()
     )
-    name = f"xml_stream_scan_{_uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", _scratch("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 120s")
     return (
-        spark.table(name)
+        drain(stream, "append")
         .groupBy(F.col("n_regionkey").alias("region"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_nations"),

@@ -21,15 +21,14 @@ backstop.
 from __future__ import annotations
 
 import shutil
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import query
+from xml_hive_spark.operators import events, query
 from xml_hive_spark.session import scratch_dir
-from xml_hive_spark.streaming.windowed import streaming_events
+from xml_hive_spark.streaming import drain
 
 
 def stage_replayed_events(spark: SparkSession, sf_dir: str) -> str:
@@ -47,28 +46,10 @@ def run_streaming_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a watermark, drain with availableNow into a memory sink, and return
     the per-type aggregate of the deduplicated rows."""
     landing = stage_replayed_events(spark, sf_dir)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = spark.readStream.schema(schema).parquet(landing)
-    from pyspark.sql.types import LongType, TimestampNTZType
-
-    if isinstance(schema["ts"].dataType, LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif isinstance(schema["ts"].dataType, TimestampNTZType):
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    raw = events(spark, sf_dir, lambda r: r.parquet(landing))
     deduped = raw.withWatermark("ts", "2 hours").dropDuplicates(["event_id"])
-    name = f"dropdup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        drain(deduped, "append")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),

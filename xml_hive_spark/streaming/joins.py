@@ -23,13 +23,11 @@ extension scope, like the rest of streaming/.
 
 from __future__ import annotations
 
-from xml_hive_spark.session import scratch_dir
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xml_hive_spark.operators import query
+from xml_hive_spark.streaming import drain
 from xml_hive_spark.streaming.windowed import streaming_events
 
 _ATTRIBUTION = "30 minutes"
@@ -74,19 +72,7 @@ def _sides(views: DataFrame, purchases: DataFrame, how: str = "inner"):
 def run_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribution join as a real streaming query, drained availableNow."""
     out = _sides(streaming_events(spark, sf_dir), streaming_events(spark, sf_dir))
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 120s")
-    return spark.table(name)
+    return drain(out, "append")
 
 
 def batch_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,19 +138,7 @@ def run_streaming_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFra
     )
     ev = raw.withColumn("ts", F.timestamp_micros(F.col("ts")))
     out = _sides(ev, ev, how="left_outer")
-    name = f"stream_join_outer_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 180s")
-    return spark.table(name)
+    return drain(out, "append")
 
 
 def batch_join_outer_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -250,10 +224,7 @@ def streaming_static_join(spark: SparkSession, sf: str) -> DataFrame:
     batch-equivalent, so DuckDB's plain batch join/aggregate over the
     same parquet must hash-match the drained stream exactly — the same
     stream-equals-batch contract ``xml_stream_scan`` pins."""
-    import uuid
-
     from xml_hive_spark.operators import t
-    from xml_hive_spark.streaming.windowed import streaming_events
 
     ev = streaming_events(spark, sf)
     dim = F.broadcast(
@@ -269,16 +240,4 @@ def streaming_static_join(spark: SparkSession, sf: str) -> DataFrame:
             .alias("sum_value"),
         )
     )
-    name = f"stream_static_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 120s")
-    return spark.table(name)
+    return drain(agg, "complete")

@@ -27,7 +27,6 @@ the store).
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +40,7 @@ from pyspark.sql.types import (
 
 from xml_hive_spark.operators import query
 from xml_hive_spark.session import scratch_dir
+from xml_hive_spark.streaming import drain
 from xml_hive_spark.streaming.stateful import _epoch_us
 
 _STAGED = StructType(
@@ -121,19 +121,7 @@ def run_streaming_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").cast("date").alias("day"), "event_type", "n", "cents"
         )
     )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 180s")
-    return spark.table(name).orderBy("day", "event_type")
+    return drain(agg, "append").orderBy("day", "event_type")
 
 
 @query(

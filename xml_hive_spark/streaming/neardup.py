@@ -27,7 +27,6 @@ tests/test_streaming.py.
 from __future__ import annotations
 
 import os
-import uuid
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -44,6 +43,7 @@ from pyspark.sql.types import (
 
 from xml_hive_spark.operators import query
 from xml_hive_spark.session import scratch_dir
+from xml_hive_spark.streaming import drain
 
 _BANDS = 8
 _ROWS = 2  # minhash rows per band → 16 permutations
@@ -192,20 +192,8 @@ def run_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.NoTimeout,
         )
     )
-    name = f"stream_neardup_{uuid.uuid4().hex[:8]}"
-    q = (
-        hits.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 180s")
     return (
-        spark.table(name)
+        drain(hits, "append")
         .groupBy("doc_id")
         .agg(F.max("hit").alias("is_dup"))
         .orderBy("doc_id")

@@ -21,8 +21,6 @@ prefix is asserted in tests/test_streaming.py.
 from __future__ import annotations
 
 import os
-from xml_hive_spark.session import scratch_dir
-import uuid
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -38,6 +36,8 @@ from pyspark.sql.types import (
 )
 
 from xml_hive_spark.operators import query
+from xml_hive_spark.session import scratch_dir
+from xml_hive_spark.streaming import drain
 
 # Layout of the files staged by stage_ordered_event_files below — ts is
 # written as int64 epoch-MICROS (a plain long survives the forced stream
@@ -203,19 +203,7 @@ def run_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             GroupStateTimeout.EventTimeTimeout,
         )
     )
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 180s")
-    return spark.table(name)
+    return drain(sessions, "append")
 
 
 @query(
@@ -251,10 +239,9 @@ WHERE session_end_us // 1000 + 1800000
     tags=("streaming", "stateful", "session"),
 )
 def streaming_sessionize(spark: SparkSession, sf: str) -> DataFrame:
-    """Registry entry. FULL value oracle (r9 rows-only conversion): the
-    drained output is the gaps-and-islands batch sessionization
-    restricted to the WATERMARK-FLUSHED PREFIX, and both halves are
-    SQL-expressible. (a) Sessions = islands of per-user events split
+    """Registry entry. FULL value oracle: the drained output is the
+    gaps-and-islands batch sessionization restricted to the
+    WATERMARK-FLUSHED PREFIX, and both halves are SQL-expressible. (a) Sessions = islands of per-user events split
     where the gap exceeds 30 min — the classic LAG + running-sum twin
     (same pattern as the components oracle). (b) Flushed prefix: a
     session is emitted iff its event-time timeout fired, i.e. its

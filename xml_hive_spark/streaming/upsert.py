@@ -17,13 +17,13 @@ carries a FULL DuckDB oracle.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xml_hive_spark.operators import query
 from xml_hive_spark.session import scratch_dir
+from xml_hive_spark.streaming import finish
 
 
 def _latest_per_key(df: DataFrame) -> DataFrame:
@@ -91,13 +91,10 @@ def run_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         raw.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", scratch_dir("ckpt-"))
-        .queryName(f"cdc_upsert_{uuid.uuid4().hex[:8]}")
         .trigger(availableNow=True)
         .start()
     )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 180s")
+    finish(q)
     return (
         spark.read.parquet(current["path"])
         .select(

@@ -16,8 +16,6 @@ tests/test_streaming.py.
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 import pandas as pd
 
@@ -26,6 +24,7 @@ from pyspark.sql import functions as F
 
 from xml_hive_spark.operators import query, t
 from xml_hive_spark.session import scratch_dir
+from xml_hive_spark.streaming import drain
 
 
 def stage_embedding_chunks(
@@ -91,19 +90,7 @@ def run_streaming_vector_ingest(
             F.min("vec_id").cast("long").alias("min_vec_id"),
         )
     )
-    name = f"vec_ingest_{uuid.uuid4().hex[:8]}"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(180):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 180s")
-    return spark.table(name)
+    return drain(counts, "complete")
 
 
 def _vector_ingest_oracle() -> str:

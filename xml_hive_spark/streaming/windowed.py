@@ -9,15 +9,10 @@ twin (``tumbling_window_agg``)."""
 
 from __future__ import annotations
 
-from xml_hive_spark.session import scratch_dir
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
 
-
-from xml_hive_spark.operators import query
+from xml_hive_spark.operators import events, query
 from xml_hive_spark.operators.scaleops import (
     HLL_EST_SQL,
     HLL_REG_SQL,
@@ -26,31 +21,19 @@ from xml_hive_spark.operators.scaleops import (
     hll_estimate_from_registers,
     hll_register_cols,
 )
+from xml_hive_spark.operators.timeseries import OHLC_ORACLE, ohlc_bars
+from xml_hive_spark.streaming import drain
 
 
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events table as an unbounded stream (file source over the sf dir).
-
-    The stream schema is derived from the parquet footer via a throwaway
-    batch read (streams require an explicit schema), then the ``ts``
-    column is normalized exactly like the batch loader ``t()``: stored
-    TIMESTAMP(NANOS) arrives as int64 nanos under the legacy conf and is
-    floored to microseconds; stored timestamp[us] passes through
-    unchanged. This keeps the stream byte-identical to its batch twin
-    whichever layout the data files carry."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+    """events table as an unbounded stream (file source over the sf dir),
+    ``ts`` normalized exactly like the batch loader
+    (:func:`xml_hive_spark.operators.events`), so the stream is
+    byte-identical to its batch twin whichever layout the file carries."""
+    return events(
+        spark, sf_dir,
+        lambda r: r.option("pathGlobFilter", "events.parquet").parquet(sf_dir),
     )
-    if isinstance(schema["ts"].dataType, LongType):
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif isinstance(schema["ts"].dataType, TimestampNTZType):
-        # watermarks reject NTZ; value-exact under the UTC session tz
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
 
 
 def run_streaming_event_counts(
@@ -70,19 +53,7 @@ def run_streaming_event_counts(
             F.col("w.start").alias("window_start"), "event_type", "n", "sum_value"
         )
     )
-    name = f"stream_counts_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 120s")
-    return spark.table(name)
+    return drain(agg, "complete")
 
 
 @query(
@@ -111,8 +82,6 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark horizon (bounded state — the streaming twin of exact dedup;
     unbounded ``dropDuplicates`` state would grow forever at 100 TB/day).
     Keyed on the event's JSON payload value as a stand-in content key."""
-    from pyspark.sql import functions as F
-
     ev = streaming_events(spark, sf_dir)
     keyed = ev.withColumn(
         "content_key", F.get_json_object("props", "$.k").cast("int")
@@ -121,19 +90,7 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyed.withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["content_key"])
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 120s")
-    return spark.table(name)
+    return drain(deduped, "append")
 
 
 def run_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,19 +109,7 @@ def run_streaming_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("reg")
         .agg(F.max("rho").alias("mx"))
     )
-    name = f"stream_hll_{uuid.uuid4().hex[:8]}"
-    q = (
-        regs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 120s")
-    return hll_estimate_from_registers(spark.table(name))
+    return hll_estimate_from_registers(drain(regs, "complete"))
 
 
 @query(
@@ -225,21 +170,9 @@ def run_streaming_quantile_histogram(
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    name = f"stream_qhist_{uuid.uuid4().hex[:8]}"
-    q = (
-        hist.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 120s")
     from pyspark.sql import Window
 
-    b = spark.table(name)
+    b = drain(hist, "complete")
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     total = b.agg(F.sum("n").alias("total"))
     c = b.select(
@@ -301,68 +234,18 @@ def streaming_quantile_histogram(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def run_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming OHLC bar construction: open/close ride min_by/max_by
-    over the bar-relative unique ordering value (the batch
-    ``ohlc_bars_hourly`` convention) — all four OHLC aggregates are
-    MERGEABLE, so complete-mode state is |series|×|hours| rows and the
-    drained bars equal the batch bars exactly (availableNow), giving a
-    streaming query a FULL value oracle."""
-    ev = streaming_events(spark, sf_dir)
-    ordv = (
-        F.unix_micros("ts") - F.unix_micros(F.date_trunc("hour", "ts"))
-    ) * 2147483648 + F.col("event_id")
-    bars = (
-        ev.select(
-            "event_type",
-            F.date_trunc("hour", "ts").alias("bar"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-            ordv.alias("ord"),
-        )
-        .groupBy("event_type", "bar")
-        .agg(
-            F.expr("min_by(cents, ord)").cast("long").alias("open_cents"),
-            F.max("cents").cast("long").alias("high_cents"),
-            F.min("cents").cast("long").alias("low_cents"),
-            F.expr("max_by(cents, ord)").cast("long").alias("close_cents"),
-            F.count(F.lit(1)).cast("long").alias("n_ticks"),
-        )
-    )
-    name = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-    q = (
-        bars.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("ckpt-"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(120):
-        q.stop()
-        raise TimeoutError("availableNow drain did not finish within 120s")
-    return spark.table(name).orderBy("event_type", "bar")
+    """Streaming OHLC bar construction (:func:`ohlc_bars`): all four OHLC
+    aggregates are MERGEABLE, so complete-mode state is
+    |series|×|hours| rows and the drained bars equal the batch bars
+    exactly (availableNow), giving a streaming query a FULL value
+    oracle."""
+    bars = ohlc_bars(streaming_events(spark, sf_dir))
+    return drain(bars, "complete").orderBy("event_type", "bar")
 
 
 @query(
     "streaming_ohlc_bars",
-    oracle="""
-WITH pricks AS (
-  SELECT event_type,
-         date_trunc('hour', ts) AS bar,
-         CAST(round(value * 100) AS BIGINT) AS cents,
-         (epoch_us(ts) - epoch_us(date_trunc('hour', ts))) * 2147483648
-           + event_id AS ord
-  FROM events
-)
-SELECT event_type, bar,
-       CAST(min_by(cents, ord) AS BIGINT) AS open_cents,
-       CAST(max(cents) AS BIGINT) AS high_cents,
-       CAST(min(cents) AS BIGINT) AS low_cents,
-       CAST(max_by(cents, ord) AS BIGINT) AS close_cents,
-       CAST(count(*) AS BIGINT) AS n_ticks
-FROM pricks
-GROUP BY event_type, bar
-ORDER BY event_type, bar
-""",
+    oracle=OHLC_ORACLE,
     tags=("streaming", "ohlc", "finance"),
 )
 def streaming_ohlc_bars(spark: SparkSession, sf: str) -> DataFrame:
