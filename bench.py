@@ -74,7 +74,7 @@ HEADLINE = [
     # → split in ONE DAG — the composed corpus workload
     "corpus_curation_pipeline",
     # GB-scale XML source scan (1 GiB at sf0.1): the engine's raison
-    # d'être — file generated once and cached under $TMPDIR/xmlhive_bench
+    # d'être — file generated once and cached under $TMPDIR/xmlhive_bench_<uid>
     "xml_scan_bench",
     # round-14 boundary additions (SCALE.md r14 start item 1 —
     # ADDITIONS ONLY, nothing removed or renamed, so every BENCH_rN

@@ -68,9 +68,8 @@ class TestPlanCacheHardening:
         plan = [("f.xml", 0, 10, "TEXT", 0)]
         r._plan_disk_store(key, plan)
         path = r._plan_disk_path(key)
-        if hasattr(os, "getuid"):
-            assert str(os.getuid()) in path.parent.name
-            assert (path.parent.stat().st_mode & 0o077) == 0  # no group/other
+        assert str(os.getuid()) in path.parent.name
+        assert (path.parent.stat().st_mode & 0o077) == 0  # no group/other
         doc = json.loads(path.read_text())
         assert doc["v"] == r._PLAN_CACHE_FORMAT
         assert r._plan_disk_load(key) == plan
@@ -83,7 +82,6 @@ class TestPlanCacheHardening:
         monkeypatch.setattr(tempfile, "gettempdir", lambda: str(tmp_path))
         key = (("f.xml", 10, 1), "row", 1024)
         path = r._plan_disk_path(key)
-        path.parent.mkdir(parents=True, mode=0o700)
         # pre-version-field format (a bare list) → invalidated, not parsed
         path.write_text(json.dumps([["f.xml", 0, 10, "TEXT", 0]]))
         assert r._plan_disk_load(key) is None

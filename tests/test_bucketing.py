@@ -5,15 +5,14 @@ hash-partitioning Exchange, and results equal the plain join."""
 
 from __future__ import annotations
 
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark, sf_dir):
-    d = tempfile.mkdtemp(prefix="xmlhive-bkt-")
+def bucketed_tables(spark, sf_dir, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("bkt"))
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     # external bucketed tables (explicit path → no warehouse-dir reliance)

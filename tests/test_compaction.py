@@ -57,22 +57,20 @@ def test_compact_small_files_query_reduces_files(spark, sf_dir):
     # the scratch root of this process
     import glob
     import os
-    import tempfile
 
-    roots = glob.glob(os.path.join(tempfile.gettempdir(),
-                                   "xmlhive-scratch-*", "compact-*",
-                                   "compacted"))
+    from xml_hive_spark import session
+
+    roots = glob.glob(os.path.join(session._SCRATCH_ROOT, "compact-*", "compacted"))
     newest = max(roots, key=os.path.getmtime)
     files = _parquet_files(newest)
     assert 1 <= len(files) <= 2  # sf0.001 events << 32 MiB target
 
 
-def test_zstd_smaller_than_snappy(spark, sf_dir):
+def test_zstd_smaller_than_snappy(spark, sf_dir, tmp_path):
     """The zstd codec must actually shrink the same data vs snappy
     (the size effect the parquet_codec_zstd oracle can't see), and
     both copies must read back identically."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -81,7 +79,7 @@ def test_zstd_smaller_than_snappy(spark, sf_dir):
         if "l_comment" in spark.read.parquet(
             f"{sf_dir}/lineitem.parquet").columns else "l_quantity"
     )
-    d = tempfile.mkdtemp(prefix="xmlhive-codec-")
+    d = str(tmp_path)
 
     def write(codec):
         p = os.path.join(d, codec)

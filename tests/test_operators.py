@@ -85,7 +85,7 @@ def test_approx_distinct_error_bound(spark, sf_dir):
         assert abs(approx[flag] - n) / n < 0.05
 
 
-def test_asof_join_golden(spark):
+def test_asof_join_golden(spark, tmp_path):
     """Hand-computed as-of semantics on crafted events."""
     ts = lambda s: dt.datetime.fromisoformat(s)  # noqa: E731
     rows = [
@@ -102,8 +102,8 @@ def test_asof_join_golden(spark):
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
     )
     df = df.withColumn("props", F.lit("{}"))
-    df.write.mode("overwrite").parquet("/tmp/xmlhive_asof_events/events.parquet")
-    out = all_queries()["asof_join"].fn(spark, "/tmp/xmlhive_asof_events")
+    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    out = all_queries()["asof_join"].fn(spark, str(tmp_path))
     got = {r.event_id: (r.last_view_ts, r.last_view_value) for r in out.collect()}
     assert got[2] == (ts("2024-01-01 10:00:00"), 1.0)
     assert got[4] == (ts("2024-01-01 11:00:00"), 2.0)

@@ -591,20 +591,20 @@ def test_local_tasks_import_the_driver_pyspark(spark):
     assert seen == [(pyspark.__file__, [], 1)] * 4
 
 
-def test_package_zip_named_by_source_hash(spark, monkeypatch, tmp_path):
-    import tempfile
-
+def test_package_zip_named_by_source_hash(spark, monkeypatch):
+    from xml_hive_spark import session
     from xml_hive_spark.sources import xml_datasource
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(xml_datasource, "_PKG_ZIP", None)
     xml_datasource.ship_package(spark)
     first = xml_datasource._PKG_ZIP
     monkeypatch.setattr(xml_datasource, "_PKG_ZIP", None)
     xml_datasource.ship_package(spark)
-    # same sources, same name; published by rename, so no temp file left
-    assert xml_datasource._PKG_ZIP == first
-    assert os.listdir(tmp_path) == [os.path.basename(first)]
+    # same sources, same name; written alone into this process's scratch
+    second = xml_datasource._PKG_ZIP
+    assert os.path.basename(second) == os.path.basename(first)
+    assert first.startswith(session._SCRATCH_ROOT + os.sep)
+    assert os.listdir(os.path.dirname(first)) == [os.path.basename(first)]
     assert os.path.basename(first).startswith("xml_hive_spark_pkg_")
     with zipfile.ZipFile(first) as z:
         assert "xml_hive_spark/reader.py" in z.namelist()

@@ -13,9 +13,9 @@ significant digits (raw rows ×10.002, distinct pairs ×10.008,
 survivors ×10.001), bounding the byte excess by the raw-rows line — a
 one-time ≤ duplication-factor transition, not growth.
 
-Replicates the candidate stage of ``containment_pairs`` (dedup.py) up
-to the count-filter — no payload attach, no argmax window — and
-reports, per corpus:
+Builds on ``containment_pairs``' staging (``dedup._shingle_stages``)
+and replicates its candidate stage up to the count-filter — no payload
+attach, no argmax window — and reports, per corpus:
 
     raw_rows        Σ c over distinct pairs  (prefix-join output rows)
     distinct_pairs  |{(a_id, b_id)}| before the counted-pigeonhole cut
@@ -38,40 +38,20 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import pandas as pd  # noqa: E402
-from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
 def volumes(spark, sf, t_num, t_den, extra, mod, rem):
-    from pyspark.sql.functions import pandas_udf
-
-    from xml_hive_spark.operators import dim_side, fan_out, t, table_bytes
+    from xml_hive_spark.operators import t
+    from xml_hive_spark.operators.dedup import _shingle_stages
 
     d = (
         t(spark, sf, "documents")
         .select("doc_id", F.lower(F.col("text")).alias("tx"))
         .filter(F.length("tx") >= 8)
     )
-
-    @pandas_udf("array<string>")
-    def grams(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [list({tx[i : i + 8] for i in range(len(tx) - 7)}) for tx in texts]
-        )
-
-    toks = fan_out(d).select(
-        "doc_id", F.explode(grams("tx")).alias("g")
-    ).select("doc_id", F.xxhash64("g").alias("tok")).persist()
-    sets_sz = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "tok")
-    ranked = (
-        toks.join(dim_side(freq, table_bytes(sf, "documents") * 32), "tok")
-        .withColumn("rn", F.row_number().over(w))
-        .join(dim_side(sets_sz, table_bytes(sf, "documents") // 50),
-              "doc_id")
-    ).persist()
+    ranked, _ = _shingle_stages(d, sf)
+    ranked = ranked.persist()
     m_col = F.col("sz") - F.ceil(F.col("sz") * t_num / t_den)
     pl_col = F.least(F.col("sz"), m_col + 1 + extra)
     probe = (
@@ -95,8 +75,7 @@ def volumes(spark, sf, t_num, t_den, extra, mod, rem):
         F.sum(F.when(F.col("c") >= F.col("c_req"), 1).otherwise(0))
         .alias("survivors"),
     ).collect()[0]
-    toks.unpersist()
-    ranked.unpersist()
+    spark.catalog.clearCache()  # ranked and the staging tables it persisted
     return row
 
 

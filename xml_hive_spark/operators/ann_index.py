@@ -12,7 +12,8 @@ The artifact here mirrors :func:`xml_hive_spark.reader._plan_disk_store`
 (the phase-A XML split-plan cache): content-keyed by the embeddings
 file identity + index parameters, built once, atomically published,
 reusable across processes. On a cluster it would live in the catalog /
-an object store; locally it is
+an object store; locally it is, in the ``ann_index``
+:func:`~xml_hive_spark.session.owned_store`,
 
     <tmp>/xmlhive_ann_index_<uid>/<sha256(key)>/
         model.npz   — k×dim centroids + M×K×sub PQ codebooks
@@ -34,12 +35,13 @@ import hashlib
 import json
 import os
 import shutil
-import tempfile
 from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from xml_hive_spark.session import file_stamp, owned_store, scratch_dir
 
 _INDEX_FORMAT = 3  # bump on any layout change; mismatch → rebuild
 # v3 (r10): integer-exact PQ — int64 codebooks (md5-48 sample,
@@ -61,37 +63,22 @@ _MEM_CACHE: dict[tuple, IvfPqIndex] = {}
 
 
 def _corpus_key(sf_dir: str, k: int, iters: int) -> tuple | None:
-    """File-identity key over the embeddings table (same contract as the
-    XML plan cache: any rewrite — size or mtime — invalidates)."""
+    """:func:`~xml_hive_spark.session.file_stamp` of the embeddings table
+    and the index parameters: any rewrite (size or mtime) invalidates."""
     base = Path(sf_dir) / "embeddings.parquet"
     files = [base] if base.is_file() else sorted(base.glob("**/*.parquet"))
-    if not files:
-        files = [base]
-    try:
-        sig = tuple(
-            (str(p), (st := os.stat(p)).st_size, st.st_mtime_ns) for p in files
-        )
-    except OSError:
+    sig = file_stamp(files or [base])
+    return None if sig is None else (sig, k, iters, _INDEX_FORMAT)
+
+
+def _index_dir(key: tuple) -> Path | None:
+    """The artifact's directory in the ``ann_index`` store; None without
+    one (a foreign-owned store is never read or written)."""
+    root = owned_store("ann_index")
+    if root is None:
         return None
-    return (sig, k, iters, _INDEX_FORMAT)
-
-
-def _index_dir(key: tuple) -> Path:
-    """Per-user 0700 root (same trust posture as the plan cache: a
-    foreign-owned dir is never read or written)."""
-    uid = os.getuid() if hasattr(os, "getuid") else "na"
-    root = Path(tempfile.gettempdir()) / f"xmlhive_ann_index_{uid}"
     blob = json.dumps(key, sort_keys=True).encode()
-    return root / hashlib.sha256(blob).hexdigest()
-
-
-def _dir_trusted(root: Path) -> bool:
-    if not hasattr(os, "getuid"):
-        return True
-    try:
-        return root.stat().st_uid == os.getuid()
-    except OSError:
-        return False
+    return Path(root) / hashlib.sha256(blob).hexdigest()
 
 
 def _build(spark: SparkSession, sf_dir: str, k: int, iters: int,
@@ -153,8 +140,6 @@ def _build(spark: SparkSession, sf_dir: str, k: int, iters: int,
             # so it is reaped at exit instead of stranding a full index
             # under the shared cache root, where the cached lists_path
             # would also die with any tmp reaping
-            from xml_hive_spark.session import scratch_dir
-
             home = Path(scratch_dir("ann-race-")) / "idx"
             try:
                 tmp.rename(home)
@@ -193,19 +178,10 @@ def ivf_pq_index(spark: SparkSession, sf_dir: str, k: int = 16,
     key = _corpus_key(sf_dir, k, iters)
     if key is not None and key in _MEM_CACHE:
         return _MEM_CACHE[key]
-    out = None
-    if key is not None:
-        d = _index_dir(key)
-        d.parent.mkdir(parents=True, exist_ok=True, mode=0o700)
-        if _dir_trusted(d.parent):
-            out = d
+    out = None if key is None else _index_dir(key)
     if out is None:
-        # unstat-able corpus OR foreign-owned cache root: never read from
-        # or publish under a directory we don't own (same posture as the
-        # XML plan cache) — build into per-process scratch (removed at
-        # interpreter exit), uncached on disk
-        from xml_hive_spark.session import scratch_dir
-
+        # unstat-able corpus or no store of this user's: build into
+        # per-process scratch (removed at interpreter exit), uncached on disk
         idx = _build(spark, sf_dir, k, iters, Path(scratch_dir("ann-")) / "idx")
     else:
         idx = _load(out) if out.exists() else None

@@ -16,25 +16,32 @@ tests/test_plans.py.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from xml_hive_spark.operators import dsum, query, t
+from xml_hive_spark.session import scratch_dir
 
-_ROUNDTRIP_DIR: dict[tuple, str] = {}
+_ROUNDTRIP_DIR: dict[tuple[str, str], str] = {}
+
+
+def _roundtrip_dir(kind: str, sf: str) -> str:
+    """This process's scratch directory for the ``kind`` output written
+    from the tables in ``sf``: made on first use and the same for every
+    later query of the process (``snapshot_change_feed`` reads the
+    history ``time_travel_read`` wrote); no other process reads it."""
+    if (kind, sf) not in _ROUNDTRIP_DIR:
+        _ROUNDTRIP_DIR[kind, sf] = scratch_dir(f"rt-{kind}-")
+    return _ROUNDTRIP_DIR[kind, sf]
 
 
 def partitioned_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """documents written once per (session, sf) as lang-partitioned
-    parquet under the temp dir; returns the read-back DataFrame whose
-    scans carry PartitionFilters for lang predicates."""
-    key = (id(spark), sf)
-    if key not in _ROUNDTRIP_DIR:
-        out = os.path.join(
-            tempfile.gettempdir(), f"xmlhive_part_docs_{abs(hash(sf)) % 10**8}"
-        )
+    """documents written once per process and sf as lang-partitioned
+    parquet in :func:`_roundtrip_dir`; returns the read-back DataFrame
+    whose scans carry PartitionFilters for lang predicates."""
+    out = _roundtrip_dir("part_docs", sf)
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
         (
             t(spark, sf, "documents")
             .repartition("lang")  # one task per partition dir: no
@@ -43,8 +50,7 @@ def partitioned_documents(spark: SparkSession, sf: str) -> DataFrame:
             .partitionBy("lang")
             .parquet(out)
         )
-        _ROUNDTRIP_DIR[key] = out
-    return spark.read.parquet(_ROUNDTRIP_DIR[key])
+    return spark.read.parquet(out)
 
 
 @query(
@@ -76,18 +82,6 @@ def partitioned_write_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-def _roundtrip_dir(fmt: str, sf: str) -> str:
-    """Stable per-(format, sf) scratch dir. ``hash(str)`` is randomized
-    per process (PYTHONHASHSEED), so the earlier formulation minted a
-    fresh directory every run and accumulated round-trip output across
-    repeated driver/bench invocations; a content digest keeps ONE
-    reusable (mode=overwrite) location per input."""
-    import hashlib
-
-    digest = hashlib.md5(sf.encode()).hexdigest()[:8]
-    return os.path.join(tempfile.gettempdir(), f"xmlhive_rt_{fmt}_{digest}")
 
 
 @query(
@@ -247,8 +241,6 @@ def compact_small_files(spark: SparkSession, sf: str) -> DataFrame:
     The rewrite is one exchange (repartition to the computed count);
     reading back the compacted copy proves the round trip, exactly like
     the format round-trip family above."""
-    from xml_hive_spark.session import scratch_dir
-
     ev = t(spark, sf, "events")
     frag = scratch_dir("compact-") + "/frag"
     ev.repartition(48).write.mode("overwrite").parquet(frag)
@@ -383,8 +375,6 @@ def vacuum_unreferenced(spark: SparkSession, sf: str) -> DataFrame:
     (keep manifests newer than N days); the mechanism is identical."""
     import json
     import shutil
-
-    from xml_hive_spark.session import scratch_dir
 
     out = scratch_dir("vacuum-")
     orders = t(spark, sf, "orders")

@@ -9,7 +9,6 @@ tests/test_reader.py)."""
 from __future__ import annotations
 
 import os
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,7 +18,7 @@ from xml_hive_spark.operators import dsum, query, t
 
 _FIXTURE = Path(__file__).resolve().parent.parent.parent / "tests" / "fixtures" / "books"
 
-from xml_hive_spark.session import scratch_dir as _scratch
+from xml_hive_spark.session import owned_store, scratch_dir as _scratch
 
 
 @query(
@@ -268,15 +267,17 @@ def ensure_bench_xml(target_bytes: int, cache_dir: str | None = None) -> tuple[s
     scan's aggregate has an exactly predictable answer
     (tests/test_xml_bench.py); comments with decoy row tags are sprinkled
     in so the split protocol is exercised at benchmark scale, not just in
-    unit sweeps."""
-    cache_dir = cache_dir or os.path.join(tempfile.gettempdir(), "xmlhive_bench")
+    unit sweeps. The file is kept in ``cache_dir``, else the ``bench``
+    :func:`~xml_hive_spark.session.owned_store`, else this process's
+    scratch."""
+    cache_dir = cache_dir or owned_store("bench") or _scratch("bench-")
     os.makedirs(cache_dir, exist_ok=True)
     path = os.path.join(cache_dir, f"scan_{target_bytes}.xml")
     meta = path + ".meta"
     if os.path.exists(path) and os.path.exists(meta):
         return path, int(Path(meta).read_text())
 
-    tmp = path + ".tmp"
+    tmp = f"{path}.tmp{os.getpid()}"
     n = 0
     with open(tmp, "w", buffering=1 << 22) as f:
         f.write("<dataset>\n")
@@ -341,7 +342,7 @@ def run_xml_scan_bench(
         # even task waves: split count = a multiple of the core count
         # (33 tasks on 32 slots = a straggler wave that serializes one
         # full task at the end), floored so tiny files still multi-split
-        slots = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        slots = spark.sparkContext.defaultParallelism
         size = os.path.getsize(path)
         partition_bytes = max(4 * 1024 * 1024, -(-size // slots))
     df = read_xml(

@@ -79,6 +79,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from xml_hive_spark.session import file_stamp, owned_store
+
 log = logging.getLogger("xml_hive_spark.reader")
 
 DEFAULT_PARTITION_BYTES = 128 * 1024 * 1024
@@ -1026,33 +1028,32 @@ def parse_record_safe(record_bytes: bytes, struct: StructType, mode: str):
 # ---------------------------------------------------------------- planning
 
 
+def byte_ranges(path: str, size: int, partition_bytes: int) -> list[tuple[int, int]]:
+    """The ``(start, end)`` byte ranges a ``size``-byte file at ``path`` is
+    split into: none for an empty file, one whole-member range ending at
+    :data:`GZIP_SPLIT_END` for a non-splittable codec (the scanner runs to
+    EOF), else ``ceil(size / partition_bytes)`` ranges of near-equal length."""
+    if size <= 0:
+        return []
+    if path.endswith(_COMPRESSED_SUFFIXES):
+        return [(0, GZIP_SPLIT_END)]
+    n = max(1, (size + partition_bytes - 1) // partition_bytes)
+    step = (size + n - 1) // n
+    return [(i * step, min((i + 1) * step, size)) for i in range(n) if i * step < size]
+
+
 def plan_splits(
     paths: list[str], partition_bytes: int = DEFAULT_PARTITION_BYTES
 ) -> list[tuple[str, int, int]]:
-    """(file, start, end) byte-range splits. ``read_xml`` gives each split
-    of a multi-split file its own task and packs whole-file splits into
-    shared tasks (:func:`pack_small_files`).
+    """(file, start, end) byte-range splits (:func:`byte_ranges`).
+    ``read_xml`` gives each split of a multi-split file its own task and
+    packs whole-file splits into shared tasks (:func:`pack_small_files`).
 
     At 100 TB this is what keeps parallelism = data size / partition_bytes
     rather than = file count (the reference is one task per HDFS split but
     re-reads whole files, SURVEY.md §4.3)."""
-    splits: list[tuple[str, int, int]] = []
-    for p in paths:
-        size = os.path.getsize(p)
-        if size == 0:
-            continue
-        if p.endswith(_COMPRESSED_SUFFIXES):
-            # non-splittable codec → whole-member split, scanner runs
-            # to EOF
-            splits.append((p, 0, GZIP_SPLIT_END))
-            continue
-        n = max(1, (size + partition_bytes - 1) // partition_bytes)
-        step = (size + n - 1) // n
-        for i in range(n):
-            a, b = i * step, min((i + 1) * step, size)
-            if a < b:
-                splits.append((p, a, b))
-    return splits
+    return [(p, a, b) for p in paths
+            for a, b in byte_ranges(p, os.path.getsize(p), partition_bytes)]
 
 
 AnnotatedSplit = tuple[str, int, int, str, int]  # path, start, end, state, depth
@@ -1067,13 +1068,8 @@ _PLAN_CACHE_MAX = 64
 
 
 def _plan_cache_key(paths: list[str], row_tag: str, partition_bytes: int):
-    try:
-        sig = tuple(
-            (p, (st := os.stat(p)).st_size, st.st_mtime_ns) for p in paths
-        )
-    except OSError:
-        return None
-    return (sig, row_tag, partition_bytes)
+    sig = file_stamp(paths)
+    return None if sig is None else (sig, row_tag, partition_bytes)
 
 
 # bumped whenever the on-disk plan layout changes; a mismatched or absent
@@ -1081,29 +1077,26 @@ def _plan_cache_key(paths: list[str], row_tag: str, partition_bytes: int):
 _PLAN_CACHE_FORMAT = 1
 
 
-def _plan_disk_path(cache_key) -> "Path":
+def _plan_disk_path(cache_key) -> "Path | None":
     """Cross-process plan cache location. A fresh driver re-reading a
     static file shouldn't repeat phase A (a full byte-scan of every
     split); on a cluster this artifact lives in the catalog/metastore —
-    locally it's a content-keyed JSON under a per-user temp dir (uid in
-    the name + mode 0700: another user on a shared host can neither
-    pre-create it to poison entries nor read plan metadata)."""
+    locally it's a content-keyed JSON in the ``plan_cache``
+    :func:`~xml_hive_spark.session.owned_store`; None without one."""
     import hashlib
-    import tempfile
 
+    d = owned_store("plan_cache")
+    if d is None:
+        return None
     blob = json.dumps(cache_key, sort_keys=True).encode()
-    uid = os.getuid() if hasattr(os, "getuid") else "na"
-    d = Path(tempfile.gettempdir()) / f"xmlhive_plan_cache_{uid}"
-    return d / (hashlib.sha256(blob).hexdigest() + ".json")
+    return Path(d) / (hashlib.sha256(blob).hexdigest() + ".json")
 
 
 def _plan_disk_load(cache_key) -> "list[AnnotatedSplit] | None":
+    path = _plan_disk_path(cache_key)
+    if path is None:
+        return None
     try:
-        path = _plan_disk_path(cache_key)
-        if hasattr(os, "getuid") and path.parent.exists():
-            st = path.parent.stat()
-            if st.st_uid != os.getuid():
-                return None  # dir pre-created by someone else: don't trust
         doc = json.loads(path.read_bytes())
         if not isinstance(doc, dict) or doc.get("v") != _PLAN_CACHE_FORMAT:
             return None
@@ -1125,11 +1118,10 @@ def _plan_disk_load(cache_key) -> "list[AnnotatedSplit] | None":
 
 
 def _plan_disk_store(cache_key, plan: list) -> None:
+    path = _plan_disk_path(cache_key)
+    if path is None:
+        return
     try:
-        path = _plan_disk_path(cache_key)
-        path.parent.mkdir(parents=True, exist_ok=True, mode=0o700)
-        if hasattr(os, "getuid") and path.parent.stat().st_uid != os.getuid():
-            return  # foreign-owned dir: skip the cache entirely
         tmp = path.with_suffix(f".tmp{os.getpid()}")
         tmp.write_text(json.dumps({"v": _PLAN_CACHE_FORMAT, "plan": plan}))
         tmp.replace(path)  # atomic publish — concurrent writers race safely

@@ -22,6 +22,16 @@ the first session of a JDK and Spark install dumps at exit and later
 sessions map; :func:`cds_state` says which. The archive and the shadow
 home live in :func:`cache_dir`, regenerable per-user install state:
 ``rm -rf ~/.cache/xml_hive_spark`` resets both.
+
+Every file the engine keeps outside a query's result has one of three
+homes, all defined here. Output only this process reads (round-trip
+tables, the time-travel history, the shipped package zip, checkpoints)
+goes under :func:`scratch_dir`, removed at interpreter exit. Caches this
+user's processes share (the XML split-plan cache, the IVF-PQ index
+store, the generated bench XML) live in :func:`owned_store`, one
+``$TMPDIR/xmlhive_<name>_<uid>`` directory each, keyed by
+:func:`file_stamp` of their inputs. Install state (the shadow Spark home
+and the class-data-sharing archive) lives in :func:`cache_dir`.
 """
 
 from __future__ import annotations
@@ -126,22 +136,45 @@ def _own(path: str, kind) -> os.stat_result | None:
     return st if ok else None
 
 
-def cache_dir() -> str | None:
-    """This user's cache directory, ``$XDG_CACHE_HOME/xml_hive_spark``
-    (else ``~/.cache/xml_hive_spark``), created if missing. None unless
-    it is a directory this user owns with mode 0700: the shadow Spark
-    home and the class-data-sharing archive in it decide what the JVM
-    runs and maps."""
-    base = os.environ.get("XDG_CACHE_HOME", "")
-    if not os.path.isabs(base):
-        base = os.path.join(os.path.expanduser("~"), ".cache")
-    path = os.path.join(base, "xml_hive_spark")
+def _private_dir(path: str) -> str | None:
+    """``path``, created with mode 0700 if missing; None unless it is a
+    directory (not a symlink) this user owns with mode 0700."""
     try:
         os.makedirs(path, mode=0o700, exist_ok=True)
     except OSError:
         return None
     st = _own(path, stat.S_ISDIR)
     return path if st is not None and stat.S_IMODE(st.st_mode) == 0o700 else None
+
+
+def cache_dir() -> str | None:
+    """This user's cache directory, ``$XDG_CACHE_HOME/xml_hive_spark``
+    (else ``~/.cache/xml_hive_spark``), per :func:`_private_dir`: the
+    shadow Spark home and the class-data-sharing archive in it decide
+    what the JVM runs and maps."""
+    base = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(base):
+        base = os.path.join(os.path.expanduser("~"), ".cache")
+    return _private_dir(os.path.join(base, "xml_hive_spark"))
+
+
+def owned_store(name: str) -> str | None:
+    """``$TMPDIR/xmlhive_<name>_<uid>`` per :func:`_private_dir`: a cache
+    this user's processes share. Its entries are published by rename and
+    keyed by what they were built from, so any of them may be reused."""
+    import tempfile
+
+    return _private_dir(os.path.join(tempfile.gettempdir(), f"xmlhive_{name}_{os.getuid()}"))
+
+
+def file_stamp(paths) -> tuple | None:
+    """``((path, size, mtime_ns), ...)`` of ``paths``, the key by which an
+    :func:`owned_store` entry built from them is reused (any rewrite
+    changes it); None when one cannot be stat-ed."""
+    try:
+        return tuple((str(p), (st := os.stat(p)).st_size, st.st_mtime_ns) for p in paths)
+    except OSError:
+        return None
 
 
 def _shadow_layout(real: str) -> dict[str, str | None]:

@@ -276,25 +276,21 @@ def ship_package(spark) -> None:
     package. ``addPyFile`` puts the zipped package on every worker's
     path, once per Spark application; on a local master the JVM's working
     directory is checked first (:func:`check_worker_cwd`). The zip is
-    named by a hash of the package sources and published with an atomic
-    rename, so concurrent processes running different checkouts never
-    ship each other's code or a half-written zip."""
+    written once per process, under its scratch directory, and named by a
+    hash of the package sources."""
     global _PKG_ZIP, _PKG_DIGEST
-    import os
-    import tempfile
     import zipfile
     from pathlib import Path
+
+    from xml_hive_spark.session import scratch_dir
 
     pkg_root = Path(__file__).resolve().parent.parent
     if _PKG_ZIP is None:
         sources, _PKG_DIGEST = _package_sources(pkg_root)
-        zpath = Path(tempfile.gettempdir()) / (
-            f"xml_hive_spark_pkg_{_PKG_DIGEST[:16]}.zip")
-        tmp = zpath.with_name(f"{zpath.name}.tmp{os.getpid()}")
-        with zipfile.ZipFile(tmp, "w") as z:
+        zpath = Path(scratch_dir("pkg-")) / f"xml_hive_spark_pkg_{_PKG_DIGEST[:16]}.zip"
+        with zipfile.ZipFile(zpath, "w") as z:
             for p, name in sources:
                 z.write(p, name)
-        os.replace(tmp, zpath)
         _PKG_ZIP = str(zpath)
     sc = spark.sparkContext
     if sc.applicationId not in _SHIPPED_APPS:

@@ -48,8 +48,10 @@ from pyspark.sql.types import StructType
 from xml_hive_spark.flat import FlatAssembler, strip_metadata
 from xml_hive_spark.reader import (
     DEFAULT_PARTITION_BYTES,
+    GZIP_SPLIT_END,
     _read_split,
     _reject_utf16,
+    byte_ranges,
     chain_splits,
 )
 from xml_hive_spark.sources.xml_datasource import _opt
@@ -192,24 +194,20 @@ class XmlStreamReader(DataSourceStreamReader):
         target = json.loads(end.get("files", "{}"))
         parts: list[XmlStreamPartition] = []
         for p, size in target.items():
-            if p in seen or size <= 0 or not os.path.exists(p):
+            if p in seen or not os.path.exists(p):
                 continue
-            if p.endswith((".gz", ".bz2")):
-                from xml_hive_spark.reader import GZIP_SPLIT_END
-
+            ranges = byte_ranges(p, size, self._partition_bytes)
+            if ranges == [(0, GZIP_SPLIT_END)]:
                 parts.append(
                     XmlStreamPartition(p, 0, GZIP_SPLIT_END, "TEXT", 0,
                                        raw_limit=size)
                 )
-                continue
-            pb = self._partition_bytes
-            n = max(1, (size + pb - 1) // pb)
-            step = (size + n - 1) // n
-            bounds = [min(i * step, size) for i in range(n + 1)]
-            # phase A+B boundary reconciliation (driver-side: new files
-            # only, one extra byte scan for multi-split files)
-            ann = chain_splits(lambda p=p: open(p, "rb"), bounds, self._row_tag, p)
-            parts += [XmlStreamPartition(p, a, b, st, d) for a, b, st, d in ann]
+            elif ranges:
+                # phase A+B boundary reconciliation (driver-side: new files
+                # only, one extra byte scan for multi-split files)
+                bounds = [0] + [b for _, b in ranges]
+                ann = chain_splits(lambda p=p: open(p, "rb"), bounds, self._row_tag, p)
+                parts += [XmlStreamPartition(p, a, b, st, d) for a, b, st, d in ann]
         return parts
 
     def read(self, partition: XmlStreamPartition):
