@@ -58,3 +58,32 @@ def test_unbucketed_same_join_does_shuffle(spark, sf_dir):
     )
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" in plan
+
+
+def test_registry_query_keeps_one_table_pair_per_sf(spark, sf_dir, tmp_path):
+    """``bucketed_join_colocated`` rewrites the same two catalog tables
+    on every build instead of adding a pair per build, so its plan is
+    the same from one build to the next. The sf is a fresh directory
+    (links to the driver tables) whose tables no earlier test built."""
+    import contextlib
+    import io
+    import os
+    import re
+
+    from xml_hive_spark.operators import all_queries
+
+    for name in ("orders", "lineitem"):
+        os.symlink(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+    build = all_queries()["bucketed_join_colocated"].fn
+
+    def plan():
+        out = io.StringIO()
+        with contextlib.redirect_stdout(out):
+            build(spark, str(tmp_path)).explain("formatted")
+        return re.sub(r"#\d+L?|plan_id=\d+", "#", out.getvalue())
+
+    before = len(spark.catalog.listTables())
+    first = plan()
+    second = plan()
+    assert len(spark.catalog.listTables()) == before + 2
+    assert first == second

@@ -1,6 +1,7 @@
-"""Feature-extraction and resize stages: numpy-reference exactness for
+"""Feature-extraction and resize kernels: numpy-reference exactness for
 the (real) byte-histogram features, determinism + shape for the resize
-pipeline, and registry execution for both."""
+pipeline (plain Python calls of the row kernels), and registry execution
+for both."""
 
 from __future__ import annotations
 
@@ -9,15 +10,17 @@ from pyspark.sql import functions as F
 
 from xml_hive_spark.operators import all_queries, t
 from xml_hive_spark.operators.multimodal import (
-    extract_byte_features,
-    resize_images,
+    byte_features,
+    resize_pool,
+    synth_media,
 )
 
 
 def test_byte_features_match_numpy(spark, sf_dir):
     docs = t(spark, sf_dir, "documents").limit(50)
     wp = docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    got = {r.doc_id: r.features for r in extract_byte_features(wp).collect()}
+    got = {did: v for r in wp.collect() for did, v in byte_features(r.doc_id, r.payload)}
+    assert len(got) == 50
     for r in wp.collect():
         a = np.frombuffer(bytes(r.payload), dtype=np.uint8)
         h = np.bincount(a >> 4, minlength=16).astype(np.float64)
@@ -28,14 +31,16 @@ def test_byte_features_match_numpy(spark, sf_dir):
 
 
 def test_resize_deterministic_and_shaped(spark, sf_dir):
-    from xml_hive_spark.operators.multimodal import synth_media_stage
-
     docs = t(spark, sf_dir, "documents").limit(20)
-    wp = synth_media_stage(
-        docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    )
-    a = sorted(map(tuple, resize_images(wp).collect()))
-    b = sorted(map(tuple, resize_images(wp).collect()))
+    wp = [tuple(r) for r in docs.select(
+        "doc_id", F.encode("text", "utf-8").alias("payload")).collect()]
+
+    def resized():
+        return sorted(out for row in wp for media in synth_media(*row)
+                      for out in resize_pool(*media))
+
+    a = resized()
+    b = resized()
     assert a == b  # deterministic decode + pooling
     assert all(r[1] == 8 and r[2] == 8 for r in a)
     assert len(a) == 20

@@ -3,7 +3,7 @@ oracles run in tools/verify_local.py and the driver; these tests pin
 what the oracle can't see — that the payloads are REAL distinct codec
 containers (not shared bytes), that the planted near-dup structure is
 what the query finds, and that the resample chain equals the pure
-formula end to end."""
+formula end to end. The row kernels are plain Python calls here."""
 
 from __future__ import annotations
 
@@ -12,15 +12,11 @@ import numpy as np
 from xml_hive_spark.operators import all_queries
 from xml_hive_spark.operators.perception import (
     _phash_bands,
-    phash_fingerprint_stage,
-    resample_wav_stage,
-    synth_mono_wav_stage,
-    synth_pair_png_stage,
+    phash_fingerprint,
+    resample_wav,
+    synth_mono_wav,
+    synth_pair_png,
 )
-
-
-def _ids_df(spark, ids):
-    return spark.createDataFrame([(int(i),) for i in ids], "doc_id long")
 
 
 class TestImagePhashDedup:
@@ -42,23 +38,19 @@ class TestImagePhashDedup:
         assert got == expected
         assert all(r.hamming == 0 for r in rows)
 
-    def test_pair_payloads_differ_but_hash_equal(self, spark):
+    def test_pair_payloads_differ_but_hash_equal(self):
         """The odd member's PNG must be a DIFFERENT byte stream (the
         perturbation really is encoded) whose decoded perceptual hash
         still equals its partner's — the near-dup premise."""
-        payloads = {
-            r.doc_id: bytes(r.payload)
-            for r in synth_pair_png_stage(_ids_df(spark, [6, 7])).collect()
-        }
+        payloads = dict(row for did in (6, 7) for row in synth_pair_png(did))
         assert payloads[6] != payloads[7]
         assert payloads[6][:8] == b"\x89PNG\r\n\x1a\n"  # real container
         bands = {
-            r.doc_id: (r.b0, r.b1, r.b2, r.b3)
-            for r in phash_fingerprint_stage(
-                synth_pair_png_stage(_ids_df(spark, [6, 7]))
-            ).collect()
+            did: tuple(b)
+            for doc, payload in payloads.items()
+            for did, *b in phash_fingerprint(doc, payload)
         }
-        assert bands[6] == bands[7]
+        assert bands[6] == bands[7] and len(bands[6]) == 4
 
     def test_perturbation_positions_never_sampled(self):
         """The sum-neutral perturbation sites p1=1 and p2=(2n)//64+1
@@ -81,15 +73,15 @@ class TestImagePhashDedup:
 
 
 class TestAudioResample:
-    def test_resample_matches_formula(self, spark):
+    def test_resample_matches_formula(self):
         """decode → decimate → encode → decode equals the closed-form
         adjacent-pair mean of the synthesis formula, per sample."""
         ids = [0, 3, 100, 257]
         out = {
-            r.doc_id: r
-            for r in resample_wav_stage(
-                synth_mono_wav_stage(_ids_df(spark, ids))
-            ).collect()
+            row[0]: row
+            for did in ids
+            for doc, payload in synth_mono_wav(did)
+            for row in resample_wav(doc, payload)
         }
         for did in ids:
             frames = 128 + did % 101
@@ -98,14 +90,9 @@ class TestAudioResample:
             n_out = frames // 2
             dec = (u[: 2 * n_out : 2] + u[1 : 2 * n_out : 2]) // 2 - 32768
             m = np.arange(n_out, dtype=np.int64)
-            r = out[did]
-            assert r.n_out_frames == n_out
-            assert r.out_rate == 8000
-            assert r.rs_sum == int(dec.sum())
-            assert r.rs_dot == int((m * dec).sum())
+            assert out[did] == (did, n_out, 8000, int(dec.sum()), int((m * dec).sum()))
 
-    def test_intermediate_is_real_wav(self, spark):
+    def test_intermediate_is_real_wav(self):
         """The synth payload is a spec-valid RIFF/WAVE container."""
-        rows = synth_mono_wav_stage(_ids_df(spark, [42])).collect()
-        payload = bytes(rows[0].payload)
+        [(_, payload)] = synth_mono_wav(42)
         assert payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"

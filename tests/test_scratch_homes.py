@@ -48,9 +48,10 @@ def _temp_path_sites(src: str) -> set[tuple[str, str]]:
 
 
 def test_temp_paths_only_in_session_lint():
-    """Package code asks for a temp directory, or names ``/tmp``, only
-    in ``session.py``, so no module grows its own shared temp path back.
-    Red on a seeded violation, green on the package."""
+    """Package and ``tools/`` code asks for a temp directory, or names
+    ``/tmp``, only in ``session.py``, so no module or tool grows its own
+    shared temp path back. Red on a seeded violation, green on the
+    package and the tools."""
     seeded = (
         "import tempfile\n"
         "from tempfile import mkdtemp as md\n"
@@ -60,10 +61,10 @@ def test_temp_paths_only_in_session_lint():
     assert _temp_path_sites(seeded) == {("f", "gettempdir"), ("f", "md"), ("f", "/tmp")}
 
     pkg = Path(session.__file__).resolve().parent
-    found = {(str(p.relative_to(pkg)), fn, what)
-             for p in sorted(pkg.rglob("*.py"))
+    found = {(str(p.relative_to(pkg.parent)), fn, what)
+             for p in sorted([*pkg.rglob("*.py"), *(pkg.parent / "tools").rglob("*.py")])
              for fn, what in _temp_path_sites(p.read_text())}
-    assert found and {path for path, _, _ in found} == {"session.py"}, found
+    assert found and {path for path, _, _ in found} == {"xml_hive_spark/session.py"}, found
 
 
 class TestOwnedStore:

@@ -52,9 +52,9 @@ Usage:
     python tools/scale_probe.py [--factor 10] [--src /root/testdata/sf0.1]
                                 [--queries name ...] [--skip-xml]
 
-Writes the corpus to $TMPDIR/xmlhive_scale/sf{src_sf*F} (cached by a
-DONE marker), prints one JSON line {query: {t1, tF, exp}} plus a
-markdown table for SCALE.md.
+Writes the corpus to sf{src_sf*F} in this user's owned store
+``session.owned_store("scale")`` (cached by a _DONE marker), prints one
+JSON line {query: {t1, tF, exp}} plus a markdown table for SCALE.md.
 """
 
 from __future__ import annotations
@@ -66,7 +66,6 @@ import os
 import re
 import shutil
 import sys
-import tempfile
 import threading
 import time
 from pathlib import Path
@@ -424,7 +423,12 @@ def main() -> None:
     src_sf = float(m.group(1)) if m else 0.1
     big_sf = src_sf * args.factor
     big_name = f"sf{big_sf:g}"
-    dst = os.path.join(tempfile.gettempdir(), "xmlhive_scale", big_name)
+    from xml_hive_spark.session import owned_store
+
+    store = owned_store("scale")
+    if store is None:
+        ap.error("the scale corpus store is not this user's private directory")
+    dst = os.path.join(store, big_name)
     marker = Path(dst) / "_DONE"
     if stale_corpus(marker):
         # pre-r12 corpus (letter-only cipher, unseeded composition):

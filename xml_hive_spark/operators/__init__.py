@@ -149,6 +149,37 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
+def map_rows(df: DataFrame, schema: str, *steps) -> DataFrame:
+    """Every per-row Python stage: one ``mapInPandas`` that sends each
+    input row, as its columns, through ``steps`` in turn. A step is a
+    module-level function taking one row's columns and returning an
+    iterable of row tuples (zero, one or many rows per input); each row
+    it returns is the next step's input. The last step's tuples are in
+    the column order of ``schema``, a DDL string; one frame per batch.
+
+    Chaining the steps inside one pass keeps intermediate payloads (a
+    synthesized PNG, say) on the Python side: two adjacent MapInPandas
+    nodes would serialize every payload Python→JVM→Python between them
+    (at sf0.1, ``multimodal_png_codec`` went 0.851 → 0.593 s when its
+    encode and decode were fused)."""
+    return df.mapInPandas(lambda batches: _map_batches(batches, steps),
+                          schema=schema)
+
+
+def _map_batches(batches, steps):
+    import pandas as pd
+
+    for pdf in batches:
+        out = []
+        for row in pdf.itertuples(index=False, name=None):
+            rows = [row]
+            for step in steps:
+                rows = [o for r in rows for o in step(*r)]
+            out += rows
+        # integer column labels: Spark assigns the columns by position
+        yield pd.DataFrame(out)
+
+
 def dsum(col, scale: int = 2):
     """Order-independent cross-engine SUM of doubles: cast each addend to
     DECIMAL(30,6) (exact, associative); the final decimal→double conversion

@@ -1,8 +1,10 @@
 """Multimodal-column plumbing (BASELINE.md north_star).
 
 Image/audio/video payloads are opaque ``binary`` columns with typed
-metadata; decode / feature-extract run as Arrow-batched ``mapInPandas``
-stages. The decode kernel is a REAL, dependency-free container parser:
+metadata. Synthesis, decode and feature extraction are module-level row
+kernels (one row's columns in, row tuples out) that the queries chain
+through ``operators.map_rows``. The decode kernel is a REAL,
+dependency-free container parser:
 PNG IHDR / JPEG SOFn / GIF logical-screen-descriptor headers read with
 ``struct`` — it reports correct dimensions for any real file of those
 formats. Codec *decompression* is REAL for PNG (``png.py``: zlib IDAT
@@ -19,15 +21,21 @@ pool genuine pixels at genuine parsed dimensions either way. Swapping
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
+from functools import partial
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import fan_out, query, t
+from xml_hive_spark.operators import fan_out, map_rows, query, t
+from xml_hive_spark.operators.gif import gif_decode, gif_encode
+from xml_hive_spark.operators.jpeg import jpeg_decode, jpeg_encode
+from xml_hive_spark.operators.png import png_decode, png_encode
+from xml_hive_spark.operators.wav import wav_decode, wav_encode
 
 DECODE_SCHEMA = (
     "doc_id long, byte_len int, checksum long, width int, height int, format string"
@@ -148,15 +156,11 @@ def _pixel_planes(payload: bytes):
     per channel); the ``make_image`` synthetic convention (raw
     grayscale planes after a valid header) is the fallback, and the
     remaining swap point is JPEG only (DCT)."""
-    import numpy as np
-
     meta = decode_image_header(payload)
     w, h = meta["width"], meta["height"]
     if w <= 0 or h <= 0:
         return meta["width"], meta["height"], []
     if meta["format"] == "png" and b"IDAT" in payload:
-        from xml_hive_spark.operators.png import png_decode
-
         try:
             img = png_decode(payload)
             if img.ndim == 2:
@@ -169,8 +173,6 @@ def _pixel_planes(payload: bytes):
         # global color table present → a real encoded GIF (the
         # make_image synthetic convention writes packed=0x70, no GCT,
         # so raw-plane bodies can never be mistaken for an LZW stream)
-        from xml_hive_spark.operators.gif import gif_decode
-
         try:
             idx, pal = gif_decode(payload)
             # grayscale plane via the palette's luminance (integer BT.601)
@@ -185,7 +187,7 @@ def _pixel_planes(payload: bytes):
         except (ValueError, IndexError):
             # damaged stream → raw-plane convention below (IndexError
             # included: a malformed record must degrade, never kill the
-            # whole mapInPandas task)
+            # whole task)
             pass
     body = payload[_body_offset(payload, meta["format"]) :]
     n_planes = max(len(body) // (w * h), 0)
@@ -194,65 +196,40 @@ def _pixel_planes(payload: bytes):
                   for i in range(n_planes)]
 
 
-def synth_media_stage(df: DataFrame, id_col: str = "doc_id",
-                      bin_col: str = "payload", planes: int = 1) -> DataFrame:
-    """Deterministic synthetic-media fixture stage: wrap each payload's
-    bytes as the pixel body of a valid PNG/JPEG/GIF container (format by
-    ``doc_id % 3``, dimensions derived from the byte length), tiled to
-    exactly ``planes`` full w×h grayscale planes. This is the corpus
-    generator for the decode/resize/frame operators — headers are valid,
-    so the downstream parsers are exercised for real."""
-    return fan_out(df).mapInPandas(
-        _synth_media_batches(id_col, bin_col, planes),
-        schema="doc_id long, payload binary",
-    )
+def synth_media(did, payload, planes: int = 1):
+    """Row kernel: the deterministic synthetic-media fixture. Wraps the
+    payload's bytes as the pixel body of a valid PNG/JPEG/GIF container
+    (format by ``doc_id % 3``, dimensions derived from the byte length),
+    tiled to exactly ``planes`` full w×h grayscale planes. Headers are
+    valid, so the downstream parsers are exercised for real."""
+    raw = bytes(payload) or b"\x00"
+    w = 16 + (len(raw) % 48)
+    h = 16 + ((len(raw) * 7) % 48)
+    body = np.resize(np.frombuffer(raw, dtype=np.uint8), planes * w * h).tobytes()
+    yield did, make_image(("png", "jpeg", "gif")[int(did) % 3], w, h, body)
 
 
-def _synth_media_batches(id_col: str, bin_col: str, planes: int):
-    """Batch transform of :func:`synth_media_stage` (exposed for the
-    fused pipelines — see :func:`_synth_png_batches`)."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_payload = [], []
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                raw = bytes(payload) or b"\x00"
-                w = 16 + (len(raw) % 48)
-                h = 16 + ((len(raw) * 7) % 48)
-                body = np.resize(
-                    np.frombuffer(raw, dtype=np.uint8), planes * w * h
-                ).tobytes()
-                kind = ("png", "jpeg", "gif")[int(did) % 3]
-                out_id.append(did)
-                out_payload.append(make_image(kind, w, h, body))
-            yield pd.DataFrame({"doc_id": out_id, "payload": out_payload})
-
-    return synth
+def image_meta(did, payload):
+    """Row kernel: a ``DECODE_SCHEMA`` row from the real header parser
+    (:func:`decode_image_header`)."""
+    m = decode_image_header(bytes(payload))
+    yield did, m["byte_len"], m["checksum"], m["width"], m["height"], m["format"]
 
 
-def decode_binary_metadata(df: DataFrame, id_col: str = "doc_id",
-                           bin_col: str = "payload") -> DataFrame:
-    """Arrow-batched decode stage: mapInPandas over (id, binary) batches.
-    Batch shape = Arrow record batches; per-batch Python cost is one loop
-    over payloads, no JVM↔Python per-row chatter. The kernel is the real
-    header parser (``decode_image_header``)."""
-    return df.mapInPandas(
-        _decode_binary_metadata_batches(id_col, bin_col), schema=DECODE_SCHEMA
-    )
+def sum_dot(a) -> tuple[int, int]:
+    """(Σ v, Σ i·v) over ``a`` flattened in row-major order: an
+    order-invariant checksum and an order-sensitive one (a dropped,
+    swapped or mis-decoded element changes the second)."""
+    v = np.asarray(a).reshape(-1).astype(np.int64)
+    return int(v.sum()), int((np.arange(v.size, dtype=np.int64) * v).sum())
 
 
-def _decode_binary_metadata_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`decode_binary_metadata`."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_image_header(bytes(p)) for p in pdf[bin_col]]
-            out = pd.DataFrame(metas)
-            out.insert(0, "doc_id", pdf[id_col].values)
-            yield out
-
-    return decode
+def image_checksums(did, payload, decode=png_decode):
+    """Row kernel: full decode of one image (``png_decode``: chunk walk,
+    CRC verify, inflate, unfilter; or ``jpeg_decode``), emitting its
+    width, height and the pixels' :func:`sum_dot`."""
+    img = decode(bytes(payload))
+    yield (int(did), img.shape[1], img.shape[0], *sum_dot(img))
 
 
 @query(
@@ -277,7 +254,7 @@ FROM m GROUP BY format ORDER BY format
 )
 def multimodal_decode_stub(spark: SparkSession, sf: str) -> DataFrame:
     """Binary-column pipeline: text → valid PNG/JPEG/GIF container
-    (``synth_media_stage``) → mapInPandas REAL header decode → typed
+    (``synth_media``) → REAL header decode (``image_meta``) → typed
     metadata → aggregate. (Name kept from earlier rounds for snapshot
     continuity; the decode kernel is no longer a stub — see
     decode_image_header.)
@@ -290,16 +267,12 @@ def multimodal_decode_stub(spark: SparkSession, sf: str) -> DataFrame:
     header (PNG 33 = 8 sig + 4 len + 17 IHDR + 4 CRC, JPEG 33 = SOI +
     APP0 + SOF0, GIF 13 = GIF89a + screen descriptor) + w·h body. The
     driver's hash therefore checks the synth container writer AND the
-    real header parser against pure arithmetic.
-
-    r13: synth+decode fused in one mapInPandas — containers never
-    cross the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    real header parser against pure arithmetic."""
     docs = t(spark, sf, "documents")
-    synth = _synth_media_batches("doc_id", "payload", 1)
-    decode = _decode_binary_metadata_batches("doc_id", "payload")
-    meta = fan_out(
-        docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    ).mapInPandas(lambda it: decode(synth(it)), schema=DECODE_SCHEMA)
+    meta = map_rows(
+        fan_out(docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))),
+        DECODE_SCHEMA, synth_media, image_meta,
+    )
     return (
         meta.groupBy("format")
         .agg(
@@ -331,75 +304,20 @@ def binary_column_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _synth_png_batches(id_col: str):
-    """Batch transform of :func:`synth_png_stage`, exposed so the fused
-    round trip can chain it inside ONE Python worker pass."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.png import png_encode
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h = 8 + did % 9, 8 + (did * 3) % 7
-                i = np.arange(w * h, dtype=np.int64)
-                px = ((did * 2654435761 + i * 40503) % 256).astype(np.uint8)
-                ids.append(did)
-                payloads.append(png_encode(px.reshape(h, w)))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
-def synth_png_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode one REAL compressed PNG per row (``png.png_encode``:
-    IHDR + deflated IDAT + CRCs, per-scanline filter cycle 0..4).
-    Dimensions and pixels are pure functions of the id — w = 8 + id%9,
+def synth_png(did):
+    """Row kernel: one REAL compressed PNG (``png.png_encode``: IHDR +
+    deflated IDAT + CRCs, per-scanline filter cycle 0..4). Dimensions
+    and pixels are pure functions of the id — w = 8 + id%9,
     h = 8 + (3·id)%7, px[i] = (id·2654435761 + i·40503) mod 256 — so a
     SQL oracle can recompute pixel checksums without a codec."""
-    return fan_out(df).mapInPandas(
-        _synth_png_batches(id_col), schema="doc_id long, payload binary"
-    )
+    did = int(did)
+    w, h = 8 + did % 9, 8 + (did * 3) % 7
+    i = np.arange(w * h, dtype=np.int64)
+    px = ((did * 2654435761 + i * 40503) % 256).astype(np.uint8)
+    yield did, png_encode(px.reshape(h, w))
 
 
-def _decode_png_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`decode_png_stage` (see
-    :func:`_synth_png_batches` for why it is exposed)."""
-    import numpy as np
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.png import png_decode
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "px_sum": [], "px_dot": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                img = png_decode(bytes(payload))
-                px = img.reshape(-1).astype(np.int64)
-                i = np.arange(len(px), dtype=np.int64)
-                out["doc_id"].append(int(did))
-                out["height"].append(img.shape[0])
-                out["width"].append(img.shape[1])
-                out["px_sum"].append(int(px.sum()))
-                out["px_dot"].append(int((i * px).sum()))
-            yield pd.DataFrame(out)
-
-    return decode
-
-
-def decode_png_stage(df: DataFrame, id_col: str = "doc_id",
-                     bin_col: str = "payload") -> DataFrame:
-    """Full PNG decode per row (``png.png_decode``: chunk walk + CRC
-    verify + zlib inflate + scanline unfilter) emitting dimensions and
-    two pixel checksums — px_sum (order-invariant) and px_dot
-    (Σ i·px[i], order-SENSITIVE: a decoder that shuffles, drops, or
-    mis-unfilters any pixel changes it)."""
-    return df.mapInPandas(
-        _decode_png_batches(id_col, bin_col),
-        schema="doc_id long, width int, height int, px_sum long, px_dot long",
-    )
+PIXEL_SCHEMA = "doc_id long, width int, height int, px_sum long, px_dot long"
 
 
 @query(
@@ -431,102 +349,31 @@ def multimodal_png_codec(spark: SparkSession, sf: str) -> DataFrame:
     The reference has no multimodal tier (BASELINE.md north_star:
     beyond-reference LLM-pipeline surface); codec decompression was
     round 5's one documented multimodal swap point — closed here for
-    PNG with the stdlib (zlib) only.
-
-    r13 (guide §4.1 — control how many columns/bytes cross the
-    boundary): the encode and decode batch transforms are CHAINED
-    inside ONE mapInPandas, so the PNG payloads never cross the
-    Arrow/JVM boundary at all — the r5–r12 two-stage plan shipped
-    every payload Python→JVM→Python between adjacent MapInPandas
-    nodes (two serializations of every image, pure overhead with both
-    codec directions still fully exercised). Measured at sf0.1:
-    min-of-runs 0.851 → 0.593 s, plan 2 MapInPandas → 1, identical
-    output (oracle-green at sf0.001/0.01/0.1)."""
+    PNG with the stdlib (zlib) only."""
     docs = t(spark, sf, "documents").select("doc_id")
-    synth = _synth_png_batches("doc_id")
-    decode = _decode_png_batches("doc_id", "payload")
-    return fan_out(docs).mapInPandas(
-        lambda it: decode(synth(it)),
-        schema="doc_id long, width int, height int, px_sum long, px_dot long",
-    )
+    return map_rows(fan_out(docs), PIXEL_SCHEMA, synth_png, image_checksums)
 
 
-def synth_wav_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode one REAL PCM WAV per row (``wav.wav_encode``: RIFF walk
+def synth_wav(did):
+    """Row kernel: one REAL PCM WAV (``wav.wav_encode``: RIFF walk
     material — fmt chunk, an odd-sized junk chunk forcing word-aligned
     chunk skipping, int16 interleaved data). Frames/channels/rate and
     samples are pure functions of the id: frames = 64 + id%97,
     ch = 1 + id%2, rate = 8000 + (id%5)·4000,
     s[k] = ((id·48271 + k·12345) mod 65536) − 32768 over interleaved
     index k — so a SQL oracle recomputes sample checksums codec-free."""
-    return fan_out(df).mapInPandas(
-        _synth_wav_batches(id_col), schema="doc_id long, payload binary"
-    )
+    did = int(did)
+    frames, ch = 64 + did % 97, 1 + did % 2
+    k = np.arange(frames * ch, dtype=np.int64)
+    s = ((did * 48271 + k * 12345) % 65536 - 32768).astype(np.int16)
+    yield did, wav_encode(s.reshape(frames, ch), 8000 + (did % 5) * 4000, 16)
 
 
-def _synth_wav_batches(id_col: str):
-    """Batch transform of :func:`synth_wav_stage` (exposed for the
-    fused round trip — see :func:`_synth_png_batches`)."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.wav import wav_encode
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                frames, ch = 64 + did % 97, 1 + did % 2
-                rate = 8000 + (did % 5) * 4000
-                k = np.arange(frames * ch, dtype=np.int64)
-                s = ((did * 48271 + k * 12345) % 65536 - 32768).astype(
-                    np.int16
-                )
-                ids.append(did)
-                payloads.append(
-                    wav_encode(s.reshape(frames, ch), rate, 16)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
-def decode_wav_stage(df: DataFrame, id_col: str = "doc_id",
-                     bin_col: str = "payload") -> DataFrame:
-    """Full WAV decode per row (``wav.wav_decode``) emitting shape,
-    rate, and two sample checksums over the interleaved stream —
-    s_sum (order-invariant) and s_dot (Σ k·s[k], order-sensitive: any
-    dropped, swapped, or mis-parsed sample changes it)."""
-    return df.mapInPandas(
-        _decode_wav_batches(id_col, bin_col),
-        schema=("doc_id long, n_frames int, channels int, "
-                "sample_rate int, s_sum long, s_dot long"),
-    )
-
-
-def _decode_wav_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`decode_wav_stage`."""
-    import numpy as np
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.wav import wav_decode
-
-        for pdf in batches:
-            out = {"doc_id": [], "n_frames": [], "channels": [],
-                   "sample_rate": [], "s_sum": [], "s_dot": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                a, rate = wav_decode(bytes(payload))
-                s = a.reshape(-1).astype(np.int64)
-                k = np.arange(len(s), dtype=np.int64)
-                out["doc_id"].append(int(did))
-                out["n_frames"].append(a.shape[0])
-                out["channels"].append(a.shape[1])
-                out["sample_rate"].append(int(rate))
-                out["s_sum"].append(int(s.sum()))
-                out["s_dot"].append(int((k * s).sum()))
-            yield pd.DataFrame(out)
-
-    return decode
+def wav_checksums(did, payload):
+    """Row kernel: full WAV decode (``wav.wav_decode``) emitting shape,
+    rate, and the :func:`sum_dot` of the interleaved sample stream."""
+    a, rate = wav_decode(bytes(payload))
+    yield (int(did), a.shape[0], a.shape[1], int(rate), *sum_dot(a))
 
 
 @query(
@@ -553,98 +400,41 @@ def multimodal_wav_codec(spark: SparkSession, sf: str) -> DataFrame:
     frames — decode it back with the RIFF chunk walk, and emit
     order-sensitive sample checksums that DuckDB recomputes from the
     (doc_id, k) formula without any codec. The driver's hash gate
-    value-checks the full audio codec chain.
-
-    r13: encode+decode fused in one mapInPandas — payloads never cross
-    the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    value-checks the full audio codec chain."""
     docs = t(spark, sf, "documents").select("doc_id")
-    synth = _synth_wav_batches("doc_id")
-    decode = _decode_wav_batches("doc_id", "payload")
-    return fan_out(docs).mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=("doc_id long, n_frames int, channels int, "
-                "sample_rate int, s_sum long, s_dot long"),
+    return map_rows(
+        fan_out(docs),
+        "doc_id long, n_frames int, channels int, sample_rate int, s_sum long, s_dot long",
+        synth_wav, wav_checksums,
     )
 
 
-def synth_gif_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode one REAL GIF89a per row (``gif.gif_encode``: logical
-    screen descriptor, global color table, NETSCAPE extension block,
+def synth_gif(did):
+    """Row kernel: one REAL GIF89a (``gif.gif_encode``: logical screen
+    descriptor, global color table, NETSCAPE extension block,
     LZW-compressed index stream). Shape, palette, and pixels are pure
     functions of the id: w = 6 + id%11, h = 6 + (5·id)%9,
     k = 2 + id%15 colors, idx[i] = (id·7919 + i·104729) mod k,
     pal[c][ch] = (id·31 + c·37 + ch·101) mod 256."""
-    return fan_out(df).mapInPandas(
-        _synth_gif_batches(id_col), schema="doc_id long, payload binary"
-    )
+    did = int(did)
+    w, h, k = 6 + did % 11, 6 + (did * 5) % 9, 2 + did % 15
+    i = np.arange(w * h, dtype=np.int64)
+    idx = ((did * 7919 + i * 104729) % k).astype(np.uint8)
+    c, ch = np.arange(k)[:, None], np.arange(3)[None, :]
+    pal = ((did * 31 + c * 37 + ch * 101) % 256).astype(np.uint8)
+    yield did, gif_encode(idx.reshape(h, w), pal, loop_ext=True)
 
 
-def _synth_gif_batches(id_col: str):
-    """Batch transform of :func:`synth_gif_stage` (exposed for the
-    fused round trip — see :func:`_synth_png_batches`)."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.gif import gif_encode
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                w, h, k = 6 + did % 11, 6 + (did * 5) % 9, 2 + did % 15
-                i = np.arange(w * h, dtype=np.int64)
-                idx = ((did * 7919 + i * 104729) % k).astype(np.uint8)
-                c = np.arange(k)[:, None]
-                ch = np.arange(3)[None, :]
-                pal = ((did * 31 + c * 37 + ch * 101) % 256).astype(np.uint8)
-                ids.append(did)
-                payloads.append(
-                    gif_encode(idx.reshape(h, w), pal, loop_ext=True)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
-def decode_gif_stage(df: DataFrame, id_col: str = "doc_id",
-                     bin_col: str = "payload") -> DataFrame:
-    """Full GIF decode per row (``gif.gif_decode``: container walk,
+def gif_checksums(did, payload):
+    """Row kernel: full GIF decode (``gif.gif_decode``: container walk,
     extension skipping, LZW decompression) emitting dimensions, color
-    count, order-sensitive index checksums, and a palette checksum."""
-    return df.mapInPandas(
-        _decode_gif_batches(id_col, bin_col),
-        schema=("doc_id long, width int, height int, n_colors int, "
-                "idx_sum long, idx_dot long, pal_sum long"),
-    )
-
-
-def _decode_gif_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`decode_gif_stage`."""
-    import numpy as np
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.gif import gif_decode
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [], "n_colors": [],
-                   "idx_sum": [], "idx_dot": [], "pal_sum": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                did = int(did)
-                idx, pal = gif_decode(bytes(payload))
-                k = 2 + did % 15  # GCT is padded to a power of two;
-                # checksum the k REAL palette entries
-                v = idx.reshape(-1).astype(np.int64)
-                i = np.arange(len(v), dtype=np.int64)
-                out["doc_id"].append(did)
-                out["height"].append(idx.shape[0])
-                out["width"].append(idx.shape[1])
-                out["n_colors"].append(k)
-                out["idx_sum"].append(int(v.sum()))
-                out["idx_dot"].append(int((i * v).sum()))
-                out["pal_sum"].append(int(pal[:k].astype(np.int64).sum()))
-            yield pd.DataFrame(out)
-
-    return decode
+    count, the indices' :func:`sum_dot`, and a palette checksum."""
+    did = int(did)
+    idx, pal = gif_decode(bytes(payload))
+    k = 2 + did % 15  # the GCT is padded to a power of two; checksum
+    # the k REAL palette entries
+    yield (did, idx.shape[1], idx.shape[0], k, *sum_dot(idx),
+           int(pal[:k].astype(np.int64).sum()))
 
 
 @query(
@@ -676,90 +466,29 @@ def multimodal_gif_codec(spark: SparkSession, sf: str) -> DataFrame:
     that DuckDB recomputes from pure (doc_id, i) formulas. With
     ``multimodal_png_codec`` this makes two of the three image formats
     fully decoded (JPEG remains header-only: DCT entropy coding is the
-    one genuinely out-of-scope kernel).
-
-    r13: encode+decode fused in one mapInPandas — payloads never cross
-    the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    one genuinely out-of-scope kernel)."""
     docs = t(spark, sf, "documents").select("doc_id")
-    synth = _synth_gif_batches("doc_id")
-    decode = _decode_gif_batches("doc_id", "payload")
-    return fan_out(docs).mapInPandas(
-        lambda it: decode(synth(it)),
-        schema=("doc_id long, width int, height int, n_colors int, "
-                "idx_sum long, idx_dot long, pal_sum long"),
+    return map_rows(
+        fan_out(docs),
+        "doc_id long, width int, height int, n_colors int, "
+        "idx_sum long, idx_dot long, pal_sum long",
+        synth_gif, gif_checksums,
     )
 
 
-def synth_jpeg_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode one REAL baseline JPEG per row (``jpeg.jpeg_encode``:
-    forward DCT, flat-16 quantization, Annex-K Huffman coding, byte
-    stuffing). Images are blockwise-constant with EVEN values — the
-    one shape lossy JPEG reproduces exactly (DC-only blocks divide the
-    flat quantizer) — so the decode side remains fully value-oracle-
-    able: bw = 1 + id%3 and bh = 1 + (7·id)%4 blocks (w = 8·bw,
-    h = 8·bh), block b's value = 2·((id·6151 + b·9173) mod 128)."""
-    return fan_out(df).mapInPandas(
-        _synth_jpeg_batches(id_col), schema="doc_id long, payload binary"
-    )
-
-
-def _synth_jpeg_batches(id_col: str):
-    """Batch transform of :func:`synth_jpeg_stage` (exposed for the
-    fused round trip — see :func:`_synth_png_batches`)."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.jpeg import jpeg_encode
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                bw, bh = 1 + did % 3, 1 + (did * 7) % 4
-                b = np.arange(bh * bw, dtype=np.int64)
-                vals = (2 * ((did * 6151 + b * 9173) % 128)).astype(np.uint8)
-                px = np.kron(vals.reshape(bh, bw),
-                             np.ones((8, 8), dtype=np.uint8))
-                ids.append(did)
-                payloads.append(jpeg_encode(px))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
-def decode_jpeg_stage(df: DataFrame, id_col: str = "doc_id",
-                      bin_col: str = "payload") -> DataFrame:
-    """Full baseline-JPEG decode per row (``jpeg.jpeg_decode``: marker
-    walk, canonical Huffman with unstuffing, dequant, inverse DCT)
-    emitting dimensions and order-sensitive pixel checksums."""
-    return df.mapInPandas(
-        _decode_jpeg_batches(id_col, bin_col),
-        schema="doc_id long, width int, height int, px_sum long, px_dot long",
-    )
-
-
-def _decode_jpeg_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`decode_jpeg_stage`."""
-    import numpy as np
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.jpeg import jpeg_decode
-
-        for pdf in batches:
-            out = {"doc_id": [], "width": [], "height": [],
-                   "px_sum": [], "px_dot": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                img = jpeg_decode(bytes(payload))
-                v = img.reshape(-1).astype(np.int64)
-                i = np.arange(len(v), dtype=np.int64)
-                out["doc_id"].append(int(did))
-                out["height"].append(img.shape[0])
-                out["width"].append(img.shape[1])
-                out["px_sum"].append(int(v.sum()))
-                out["px_dot"].append(int((i * v).sum()))
-            yield pd.DataFrame(out)
-
-    return decode
+def synth_jpeg(did):
+    """Row kernel: one REAL baseline JPEG (``jpeg.jpeg_encode``: forward
+    DCT, flat-16 quantization, Annex-K Huffman coding, byte stuffing).
+    Images are blockwise-constant with EVEN values — the one shape lossy
+    JPEG reproduces exactly (DC-only blocks divide the flat quantizer)
+    — so the decode side remains fully value-oracle-able:
+    bw = 1 + id%3 and bh = 1 + (7·id)%4 blocks (w = 8·bw, h = 8·bh),
+    block b's value = 2·((id·6151 + b·9173) mod 128)."""
+    did = int(did)
+    bw, bh = 1 + did % 3, 1 + (did * 7) % 4
+    b = np.arange(bh * bw, dtype=np.int64)
+    vals = (2 * ((did * 6151 + b * 9173) % 128)).astype(np.uint8)
+    yield did, jpeg_encode(np.kron(vals.reshape(bh, bw), np.ones((8, 8), dtype=np.uint8)))
 
 
 @query(
@@ -793,67 +522,26 @@ def multimodal_jpeg_codec(spark: SparkSession, sf: str) -> DataFrame:
     recompute codec-free while the codec itself does the full
     DCT/Huffman work. (General lossy content is covered by PSNR-floor
     tests in tests/test_jpeg_codec.py.) Completes the image-format
-    set: PNG, GIF, and JPEG all decode through real codecs.
-
-    r13: encode+decode fused in one mapInPandas — payloads never cross
-    the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    set: PNG, GIF, and JPEG all decode through real codecs."""
     docs = t(spark, sf, "documents").select("doc_id")
-    synth = _synth_jpeg_batches("doc_id")
-    decode = _decode_jpeg_batches("doc_id", "payload")
-    return fan_out(docs).mapInPandas(
-        lambda it: decode(synth(it)),
-        schema="doc_id long, width int, height int, px_sum long, px_dot long",
-    )
+    return map_rows(fan_out(docs), PIXEL_SCHEMA, synth_jpeg,
+                    partial(image_checksums, decode=jpeg_decode))
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_checksum long, frame_bytes int"
 
 
-def sample_frames(df: DataFrame, id_col: str = "doc_id",
-                  bin_col: str = "payload", n_frames: int = 4) -> DataFrame:
-    """Frame-sampling stage for video-shaped binary columns: one input
-    row fans out to ``n_frames`` rows via mapInPandas (batch-granular
-    fan-out, no JVM↔Python per-row chatter). The container header is
-    parsed for real (``_pixel_planes``); frames are w×h pixel planes
-    sampled evenly across the stream — ffmpeg keyframe seeking would
-    replace only the plane extraction."""
-    return df.mapInPandas(
-        _sample_frames_batches(id_col, bin_col, n_frames), schema=FRAME_SCHEMA
-    )
-
-
-def _sample_frames_batches(id_col: str, bin_col: str, n_frames: int):
-    """Batch transform of :func:`sample_frames`."""
-    from typing import Iterator
-
-    def explode_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_checksum": [], "frame_bytes": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                _, _, planes = _pixel_planes(bytes(payload))
-                if not planes:
-                    continue
-                # evenly spaced plane indices across the stream
-                idxs = [
-                    (i * len(planes)) // n_frames
-                    for i in range(min(n_frames, len(planes)))
-                ]
-                for i, pi in enumerate(idxs):
-                    frame = planes[pi].tobytes()
-                    out["doc_id"].append(did)
-                    out["frame_idx"].append(i)
-                    # portable 48-bit md5 content fingerprint (r9, was
-                    # zlib.crc32 — no CRC32 in DuckDB, which kept the
-                    # registry entry rows-only)
-                    out["frame_checksum"].append(
-                        int(hashlib.md5(frame).hexdigest()[:12], 16)
-                    )
-                    out["frame_bytes"].append(len(frame))
-            yield pd.DataFrame(out)
-
-    return explode_frames
+def frame_samples(did, payload, n_frames: int = 4):
+    """Row kernel, fan-out: up to ``n_frames`` rows of a video-shaped
+    container, evenly spaced across its w×h pixel planes (header parsed
+    for real by ``_pixel_planes``; ffmpeg keyframe seeking would
+    replace only the plane extraction), each with a portable 48-bit md5
+    content fingerprint (DuckDB has md5, not CRC32) and its byte count.
+    An unparseable container yields no rows."""
+    _, _, planes = _pixel_planes(bytes(payload))
+    for i in range(min(n_frames, len(planes))):
+        frame = planes[(i * len(planes)) // n_frames].tobytes()
+        yield did, i, int(hashlib.md5(frame).hexdigest()[:12], 16), len(frame)
 
 
 @query(
@@ -904,16 +592,12 @@ def multimodal_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
     text (char == byte under the ASCII corpus guard, which fails
     LOUDLY otherwise). Like the resize oracle, the twin never touches
     the container, so the driver hash covers the 8-plane make_image
-    encode → header parse → plane-extract → even-sample round trip.
-
-    r13: synth+sample fused in one mapInPandas — containers never
-    cross the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    encode → header parse → plane-extract → even-sample round trip."""
     docs = t(spark, sf, "documents")
-    synth = _synth_media_batches("doc_id", "payload", 8)
-    sample = _sample_frames_batches("doc_id", "payload", 4)
-    frames = fan_out(
-        docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    ).mapInPandas(lambda it: sample(synth(it)), schema=FRAME_SCHEMA)
+    frames = map_rows(
+        fan_out(docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))),
+        FRAME_SCHEMA, partial(synth_media, planes=8), frame_samples,
+    )
     return (
         frames.groupBy("frame_idx")
         .agg(
@@ -928,26 +612,16 @@ def multimodal_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
 FEATURE_DIM = 16
 
 
-def extract_byte_features(df: DataFrame, id_col: str = "doc_id",
-                          bin_col: str = "payload") -> DataFrame:
-    """Feature-extraction stage: a REAL (not stubbed) 16-bin byte
-    histogram per payload, L2-normalized — the generic content signature
-    that works on any binary modality. One numpy bincount per payload
-    inside an Arrow batch; output is the standard ``array<float>``
-    embedding shape, so it feeds the similarity/IVF operators directly."""
-    import numpy as np
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vecs = []
-            for payload in pdf[bin_col]:
-                a = np.frombuffer(bytes(payload), dtype=np.uint8)
-                h = np.bincount(a >> 4, minlength=FEATURE_DIM).astype(np.float64)
-                n = np.linalg.norm(h)
-                vecs.append((h / n if n else h).astype(np.float32).tolist())
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "features": vecs})
-
-    return df.mapInPandas(feats, schema="doc_id long, features array<float>")
+def byte_features(did, payload):
+    """Row kernel: a REAL (not stubbed) 16-bin byte histogram of the
+    payload's high nibbles, L2-normalized — the generic content
+    signature that works on any binary modality, in the standard
+    ``array<float>`` embedding shape that feeds the similarity/IVF
+    operators directly."""
+    a = np.frombuffer(bytes(payload), dtype=np.uint8)
+    h = np.bincount(a >> 4, minlength=FEATURE_DIM).astype(np.float64)
+    n = np.linalg.norm(h)
+    yield did, (h / n if n else h).astype(np.float32).tolist()
 
 
 @query(
@@ -1013,7 +687,7 @@ def multimodal_feature_extract(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_multimodal_extra.py."""
     docs = t(spark, sf, "documents")
     with_payload = docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    fv = extract_byte_features(with_payload)
+    fv = map_rows(with_payload, "doc_id long, features array<float>", byte_features)
     q20 = lambda c: F.floor(c.cast("double") * F.lit(1048576.0)).cast("long")  # noqa: E731
     return fv.agg(
         F.count(F.lit(1)).alias("n"),
@@ -1027,12 +701,12 @@ def multimodal_feature_extract(spark: SparkSession, sf: str) -> DataFrame:
 RESIZE_SCHEMA = "doc_id long, out_w int, out_h int, q_mean_px long, corner_px long"
 
 
-def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8,
-                  id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
-    """Resize stage: REAL header parse (``_pixel_planes`` — the image's
+def resize_pool(did, payload, out_w: int = 8, out_h: int = 8):
+    """Row kernel: REAL header parse (``_pixel_planes`` — the image's
     actual w×h drive the pooling grid), then a REAL average-pool resize
-    to ``out_w × out_h`` in numpy. ``PIL.Image.open`` would replace only
-    the plane extraction inside ``_pixel_planes``.
+    of the first plane to ``out_w × out_h``; no row for an unparseable
+    container. ``PIL.Image.open`` would replace only the plane
+    extraction inside ``_pixel_planes``.
 
     INTEGER-QUANTIZED pooling (r9, was a float64 mean-of-means): each
     block contributes ``block_sum * 2^20 // block_count`` (exact BIGINT
@@ -1042,44 +716,20 @@ def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8,
     and bit-identical in every engine — numpy's pairwise float
     summation over non-integer block means was the one thing keeping
     this query rows-only."""
-    return df.mapInPandas(
-        _resize_images_batches(out_w, out_h, id_col, bin_col),
-        schema=RESIZE_SCHEMA,
-    )
-
-
-def _resize_images_batches(out_w: int, out_h: int, id_col: str, bin_col: str):
-    """Batch transform of :func:`resize_images`."""
-    import numpy as np
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "out_w": [], "out_h": [], "q_mean_px": [],
-                    "corner_px": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                w, h, planes = _pixel_planes(bytes(payload))
-                if not planes:
-                    continue
-                img = planes[0].astype(np.int64)
-                # real average-pool resize over the parsed h×w grid
-                ys = np.linspace(0, h, out_h + 1).astype(int)
-                xs = np.linspace(0, w, out_w + 1).astype(int)
-                q_mean = 0
-                for i in range(out_h):
-                    for j in range(out_w):
-                        blk = img[ys[i]:ys[i+1], xs[j]:xs[j+1]]
-                        if blk.size:
-                            q_mean += int(blk.sum()) * 1048576 // blk.size
-                c_blk = img[ys[0]:ys[1], xs[0]:xs[1]]
-                corner = int(c_blk.sum()) // c_blk.size if c_blk.size else 0
-                rows["doc_id"].append(did)
-                rows["out_w"].append(out_w)
-                rows["out_h"].append(out_h)
-                rows["q_mean_px"].append(q_mean)
-                rows["corner_px"].append(corner)
-            yield pd.DataFrame(rows)
-
-    return resize
+    w, h, planes = _pixel_planes(bytes(payload))
+    if not planes:
+        return
+    img = planes[0].astype(np.int64)
+    ys = np.linspace(0, h, out_h + 1).astype(int)
+    xs = np.linspace(0, w, out_w + 1).astype(int)
+    q_mean = 0
+    for i in range(out_h):
+        for j in range(out_w):
+            blk = img[ys[i]:ys[i+1], xs[j]:xs[j+1]]
+            if blk.size:
+                q_mean += int(blk.sum()) * 1048576 // blk.size
+    c_blk = img[ys[0]:ys[1], xs[0]:xs[1]]
+    yield did, out_w, out_h, q_mean, int(c_blk.sum()) // c_blk.size if c_blk.size else 0
 
 
 @query(
@@ -1132,7 +782,7 @@ def multimodal_resize_stub(spark: SparkSession, sf: str) -> DataFrame:
     stub.)
 
     FULL value oracle (r9 rows-only conversion): the pooling was made
-    integer-quantized (see ``resize_images``), so the whole pipeline is
+    integer-quantized (see ``resize_pool``), so the whole pipeline is
     exact arithmetic on the payload bytes and the DuckDB twin recomputes
     it from FIRST PRINCIPLES — byte k of the text via the hex trick,
     synth dims w = 16 + L%48 / h = 16 + 7L%48, pixel (y,x) =
@@ -1142,16 +792,12 @@ def multimodal_resize_stub(spark: SparkSession, sf: str) -> DataFrame:
     tests), block quantities S·2^20//n. The oracle never touches the
     container, so the driver hash verifies the make_image encode →
     header parse → plane-extract round trip end to end — the same
-    codec-closure trick as the phash and decode-stub oracles.
-
-    r13: synth+resize fused in one mapInPandas — containers never
-    cross the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    codec-closure trick as the phash and decode-stub oracles."""
     docs = t(spark, sf, "documents")
-    synth = _synth_media_batches("doc_id", "payload", 1)
-    resize = _resize_images_batches(8, 8, "doc_id", "payload")
-    rs = fan_out(
-        docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))
-    ).mapInPandas(lambda it: resize(synth(it)), schema=RESIZE_SCHEMA)
+    rs = map_rows(
+        fan_out(docs.select("doc_id", F.encode("text", "utf-8").alias("payload"))),
+        RESIZE_SCHEMA, synth_media, resize_pool,
+    )
     return (
         rs.groupBy("out_w", "out_h")
         .agg(
@@ -1166,10 +812,7 @@ def multimodal_resize_stub(spark: SparkSession, sf: str) -> DataFrame:
 CHUNK_SCHEMA = "doc_id long, chunk_idx int, chunk binary, n_bytes int"
 
 
-def chunk_payloads_arrow(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload",
-    chunk_bytes: int = 128,
-) -> DataFrame:
+def chunk_payloads_arrow(df: DataFrame, chunk_bytes: int = 128) -> DataFrame:
     """Fixed-size payload chunking via ``mapInArrow`` — the multipart
     layout stage for blob upload/storage. Unlike the pandas stages this
     one never materializes a pandas object: record batches come in and

@@ -18,20 +18,21 @@ candidate generation is an equi-join on (band_idx, band_value), never
 an all-pairs comparison (pigeonhole: hamming ≤ 3 over 4 × 16-bit bands
 guarantees ≥ 1 exact band, so blocking has ZERO recall loss — proven
 by the naive O(n²) oracle). The resample pipeline is embarrassingly
-parallel mapInPandas over Arrow batches with no shuffle at all.
+parallel row kernels over Arrow batches with no shuffle at all.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
+import numpy as np
 import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import band_pairs, query, t
-from xml_hive_spark.operators.multimodal import fan_out
+from xml_hive_spark.operators import band_pairs, fan_out, map_rows, query, t
+from xml_hive_spark.operators.gif import gif_decode_frames, gif_encode_animation
+from xml_hive_spark.operators.multimodal import sum_dot, synth_png
+from xml_hive_spark.operators.png import png_decode, png_encode
+from xml_hive_spark.operators.wav import wav_decode, wav_encode
 
 # Perceptual-hash corpus: doc pairs (2k, 2k+1) share base = 2k. Pair
 # dims/pixels derive from the BASE id — w = 12 + base%5, h = 12 +
@@ -40,7 +41,7 @@ from xml_hive_spark.operators.multimodal import fan_out
 # two never-sampled positions, so the pair's perceptual hashes are
 # bit-identical (hamming 0) while the payload bytes differ.
 _PX_A, _PX_B = 2654435761, 40503  # Knuth multiplicative + step (shared
-# with synth_png_stage so the oracles stay in one constant family).
+# with multimodal.synth_png so the oracles stay in one constant family).
 # The linear + quadratic i-terms carry PER-BASE multipliers (base mod
 # 251/241 — coprime cycles): with a shared i-term, every image is the
 # same sequence shifted by a constant, sampled pixels follow one orbit
@@ -57,8 +58,6 @@ def _phash_bands(px_flat) -> list[int]:
     little-endian into 4 bands of 16. Positions (j·n)//64 step by
     ⌊n/64⌋ ≥ 2 for n ≥ 128, which is what makes sum-neutral
     perturbation at positions s_0+1 and s_2+1 hash-invisible."""
-    import numpy as np
-
     px = px_flat.astype(np.int64)
     n = int(px.size)
     total = int(px.sum())
@@ -68,86 +67,35 @@ def _phash_bands(px_flat) -> list[int]:
     return [int((bits[16 * b : 16 * b + 16] * w).sum()) for b in range(4)]
 
 
-def synth_pair_png_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode one REAL compressed PNG per row (``png.png_encode``) from
-    the pair-corpus formula: base = id − id%2, w = 12 + base%5,
-    h = 12 + base%3, pb[i] = (base·2654435761 + i·40503) mod 256; odd
-    ids move d = min(255 − pb[p1], pb[p2], 7) from position
-    p2 = (2n)//64 + 1 to position p1 = 1 (both provably never sampled
-    by the hash for n ≥ 128, and the move keeps Σpx exact), so each
-    odd payload is a distinct byte stream whose perceptual hash equals
-    its even partner's."""
-    return fan_out(df).mapInPandas(
-        _synth_pair_png_batches(id_col), schema="doc_id long, payload binary"
-    )
+def synth_pair_png(did):
+    """Row kernel: one REAL compressed PNG (``png.png_encode``) from the
+    pair-corpus formula: base = id − id%2, w = 12 + base%5,
+    h = 12 + base%3, pb[i] = (base·2654435761 + i·40503·(base%251 + 1)
+    + i²·(base%241 + 1)) mod 256; odd ids move
+    d = min(255 − pb[p1], pb[p2], 7) from position p2 = (2n)//64 + 1 to
+    position p1 = 1 (both provably never sampled by the hash for
+    n ≥ 128, and the move keeps Σpx exact), so each odd payload is a
+    distinct byte stream whose perceptual hash equals its even
+    partner's."""
+    did = int(did)
+    base = did - did % 2
+    w, h = 12 + base % 5, 12 + base % 3
+    n = w * h
+    i = np.arange(n, dtype=np.int64)
+    px = (base * _PX_A + i * _PX_B * (base % 251 + 1) + i * i * (base % 241 + 1)) % 256
+    if did % 2 == 1:
+        p1, p2 = 1, (2 * n) // 64 + 1
+        d = min(255 - int(px[p1]), int(px[p2]), 7)
+        px[p1] += d
+        px[p2] -= d
+    yield did, png_encode(px.astype(np.uint8).reshape(h, w))
 
 
-def _synth_pair_png_batches(id_col: str):
-    """Batch transform of :func:`synth_pair_png_stage`, exposed so the
-    fused fingerprint pass can chain it in one Python worker pass."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.png import png_encode
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                base = did - did % 2
-                w, h = 12 + base % 5, 12 + base % 3
-                n = w * h
-                i = np.arange(n, dtype=np.int64)
-                px = (
-                    (
-                        base * _PX_A
-                        + i * _PX_B * (base % 251 + 1)
-                        + i * i * (base % 241 + 1)
-                    )
-                    % 256
-                ).astype(np.int64)
-                if did % 2 == 1:
-                    p1, p2 = 1, (2 * n) // 64 + 1
-                    d = min(255 - int(px[p1]), int(px[p2]), 7)
-                    px[p1] += d
-                    px[p2] -= d
-                ids.append(did)
-                payloads.append(png_encode(px.astype(np.uint8).reshape(h, w)))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
-def phash_fingerprint_stage(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
-    """Full PNG decode per row (chunk walk + CRC verify + inflate +
-    unfilter) followed by the 64-bit average-hash, emitted as 4 × 16-bit
-    band integers — the per-image fingerprint a dedup index stores."""
-    return df.mapInPandas(
-        _phash_fingerprint_batches(id_col, bin_col),
-        schema="doc_id long, b0 int, b1 int, b2 int, b3 int",
-    )
-
-
-def _phash_fingerprint_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`phash_fingerprint_stage` (see
-    :func:`_synth_pair_png_batches` for why it is exposed)."""
-
-    def fingerprint(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.png import png_decode
-
-        for pdf in batches:
-            out = {"doc_id": [], "b0": [], "b1": [], "b2": [], "b3": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                img = png_decode(bytes(payload))
-                bands = _phash_bands(img.reshape(-1))
-                out["doc_id"].append(int(did))
-                for b in range(4):
-                    out[f"b{b}"].append(bands[b])
-            yield pd.DataFrame(out)
-
-    return fingerprint
+def phash_fingerprint(did, payload):
+    """Row kernel: full PNG decode (chunk walk + CRC verify + inflate +
+    unfilter), then the 64-bit average-hash as 4 × 16-bit band integers
+    — the per-image fingerprint a dedup index stores."""
+    yield (int(did), *_phash_bands(png_decode(bytes(payload)).reshape(-1)))
 
 
 @query(
@@ -217,17 +165,8 @@ def image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     collisions (quadratic at the fixed 65 536-bucket band space, the r11
     byte-audit finding in SCALE.md) never reach an exchange."""
     docs = t(spark, sf, "documents").select("doc_id")
-    # r13 (guide §4.1): encode and fingerprint are chained inside ONE
-    # mapInPandas, so PNG payloads never cross the Arrow/JVM boundary
-    # (the two-stage plan serialized every payload Python→JVM→Python
-    # between adjacent MapInPandas nodes); identical fingerprints,
-    # 2 MapInPandas → 1 in the plan
-    synth = _synth_pair_png_batches("doc_id")
-    fp = _phash_fingerprint_batches("doc_id", "payload")
-    bands = fan_out(docs).mapInPandas(
-        lambda it: fp(synth(it)),
-        schema="doc_id long, b0 int, b1 int, b2 int, b3 int",
-    ).persist()
+    bands = map_rows(fan_out(docs), "doc_id long, b0 int, b1 int, b2 int, b3 int",
+                     synth_pair_png, phash_fingerprint).persist()
     fp_cols = ("b0", "b1", "b2", "b3")
     hamming = sum(
         F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b"))) for c in fp_cols
@@ -240,83 +179,30 @@ def image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def synth_mono_wav_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode one REAL mono PCM WAV per row (``wav.wav_encode``) at
-    16 kHz: frames = 128 + id%101, s[k] = ((id·48271 + k·12345) mod
-    65536) − 32768 — the ``synth_wav_stage`` formula family pinned to
-    one channel so decimation is channel-free."""
-    return fan_out(df).mapInPandas(
-        _synth_mono_wav_batches(id_col), schema="doc_id long, payload binary"
-    )
+def synth_mono_wav(did):
+    """Row kernel: one REAL mono PCM WAV (``wav.wav_encode``) at 16 kHz:
+    frames = 128 + id%101, s[k] = ((id·48271 + k·12345) mod 65536) −
+    32768 — the ``multimodal.synth_wav`` formula family pinned to one
+    channel so decimation is channel-free."""
+    did = int(did)
+    k = np.arange(128 + did % 101, dtype=np.int64)
+    s = ((did * 48271 + k * 12345) % 65536 - 32768).astype(np.int16)
+    yield did, wav_encode(s.reshape(-1, 1), 16000, 16)
 
 
-def _synth_mono_wav_batches(id_col: str):
-    """Batch transform of :func:`synth_mono_wav_stage` (exposed for the
-    fused pipeline — see :func:`_synth_pair_png_batches`)."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.wav import wav_encode
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                frames = 128 + did % 101
-                k = np.arange(frames, dtype=np.int64)
-                s = ((did * 48271 + k * 12345) % 65536 - 32768).astype(np.int16)
-                ids.append(did)
-                payloads.append(wav_encode(s.reshape(frames, 1), 16000, 16))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
-def resample_wav_stage(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
-    """Decode (RIFF walk) → decimate by 2 (adjacent-pair mean in the
-    UNSIGNED domain: out[m] = (u[2m]+u[2m+1])//2 − 32768 with
-    u = s + 32768, so the //2 truncation is floor on every engine) →
-    re-encode at half the rate → decode AGAIN, emitting the resampled
-    stream's shape and order-sensitive checksums. Both codec directions
+def resample_wav(did, payload):
+    """Row kernel: decode (RIFF walk) → decimate by 2 (adjacent-pair
+    mean in the UNSIGNED domain: out[m] = (u[2m]+u[2m+1])//2 − 32768
+    with u = s + 32768, so the //2 truncation is floor on every engine)
+    → re-encode at half the rate → decode AGAIN, emitting the resampled
+    stream's length, rate and :func:`sum_dot`. Both codec directions
     run twice per row; any mis-parsed byte anywhere changes rs_dot."""
-    return df.mapInPandas(
-        _resample_wav_batches(id_col, bin_col),
-        schema=("doc_id long, n_out_frames int, out_rate int, "
-                "rs_sum long, rs_dot long"),
-    )
-
-
-def _resample_wav_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`resample_wav_stage`."""
-    import numpy as np
-
-    def resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.wav import wav_decode, wav_encode
-
-        for pdf in batches:
-            out = {"doc_id": [], "n_out_frames": [], "out_rate": [],
-                   "rs_sum": [], "rs_dot": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                a, rate = wav_decode(bytes(payload))
-                u = a.reshape(-1).astype(np.int64) + 32768
-                n_out = u.size // 2
-                dec = (u[: 2 * n_out : 2] + u[1 : 2 * n_out : 2]) // 2 - 32768
-                payload2 = wav_encode(
-                    dec.astype(np.int16).reshape(n_out, 1), rate // 2, 16
-                )
-                b, rate2 = wav_decode(payload2)
-                s = b.reshape(-1).astype(np.int64)
-                m = np.arange(s.size, dtype=np.int64)
-                out["doc_id"].append(int(did))
-                out["n_out_frames"].append(int(s.size))
-                out["out_rate"].append(int(rate2))
-                out["rs_sum"].append(int(s.sum()))
-                out["rs_dot"].append(int((m * s).sum()))
-            yield pd.DataFrame(out)
-
-    return resample
+    a, rate = wav_decode(bytes(payload))
+    u = a.reshape(-1).astype(np.int64) + 32768
+    n_out = u.size // 2
+    dec = (u[: 2 * n_out : 2] + u[1 : 2 * n_out : 2]) // 2 - 32768
+    b, rate2 = wav_decode(wav_encode(dec.astype(np.int16).reshape(n_out, 1), rate // 2, 16))
+    yield (int(did), b.size, int(rate2), *sum_dot(b))
 
 
 @query(
@@ -358,22 +244,15 @@ def audio_resample_decimate(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: mapInPandas over Arrow batches with zero shuffles —
     parallelism is input splits; per-row Python IS the codec work, the
-    point of the query (same adjudication as the codec entries).
-
-    r13: synth+resample fused in one mapInPandas — payloads never
-    cross the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    point of the query (same adjudication as the codec entries)."""
     docs = t(spark, sf, "documents").select("doc_id")
-    synth = _synth_mono_wav_batches("doc_id")
-    resample = _resample_wav_batches("doc_id", "payload")
-    return fan_out(docs).mapInPandas(
-        lambda it: resample(synth(it)),
-        schema=("doc_id long, n_out_frames int, out_rate int, "
-                "rs_sum long, rs_dot long"),
-    )
+    return map_rows(fan_out(docs),
+                    "doc_id long, n_out_frames int, out_rate int, rs_sum long, rs_dot long",
+                    synth_mono_wav, resample_wav)
 
 
-def synth_animation_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode one REAL animated GIF per row
+def synth_animation(did):
+    """Row kernel: one REAL animated GIF
     (``gif.gif_encode_animation``: NETSCAPE loop extension + per-frame
     Graphic Control delays + real LZW per frame). Frame count, dims,
     palette, indices, and delays are pure (doc_id, f, i) formulas:
@@ -381,87 +260,32 @@ def synth_animation_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ((id·31 + j·67) % 256) greyscale, idx[f,i] = (id·7919 + f·131 +
     i·104729) % 16, delay[f] = 4 + (id+f)%6 — so a SQL oracle
     recomputes frame-sampled checksums codec-free."""
-    return fan_out(df).mapInPandas(
-        _synth_animation_batches(id_col), schema="doc_id long, payload binary"
-    )
+    did = int(did)
+    nf, w, h = 3 + did % 4, 8 + did % 5, 8 + did % 3
+    i = np.arange(w * h, dtype=np.int64)
+    frames = [((did * 7919 + f * 131 + i * 104729) % 16).astype(np.uint8).reshape(h, w)
+              for f in range(nf)]
+    grey = ((did * 31 + np.arange(16, dtype=np.int64) * 67) % 256).astype(np.uint8)
+    yield did, gif_encode_animation(frames, np.stack([grey, grey, grey], axis=1),
+                                    [4 + (did + f) % 6 for f in range(nf)])
 
 
-def _synth_animation_batches(id_col: str):
-    """Batch transform of :func:`synth_animation_stage` (exposed for
-    the fused pipeline — see :func:`_synth_pair_png_batches`)."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.gif import gif_encode_animation
-
-        for pdf in batches:
-            ids, payloads = [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                nf, w, h = 3 + did % 4, 8 + did % 5, 8 + did % 3
-                i = np.arange(w * h, dtype=np.int64)
-                frames = [
-                    ((did * 7919 + f * 131 + i * 104729) % 16)
-                    .astype(np.uint8)
-                    .reshape(h, w)
-                    for f in range(nf)
-                ]
-                j = np.arange(16, dtype=np.int64)
-                grey = ((did * 31 + j * 67) % 256).astype(np.uint8)
-                pal = np.stack([grey, grey, grey], axis=1)
-                delays = [4 + (did + f) % 6 for f in range(nf)]
-                ids.append(did)
-                payloads.append(gif_encode_animation(frames, pal, delays))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
-def framesample_stage(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
-    """Decode EVERY frame of an animated GIF (container walk, GCE
-    delay parsing, per-frame LZW), keep every 2nd frame (stride
-    sampling — the video keyframe-extraction shape), map sampled
+def gif_frame_sample(did, payload):
+    """Row kernel: decode EVERY frame of an animated GIF (container
+    walk, GCE delay parsing, per-frame LZW), keep every 2nd frame
+    (stride sampling — the video keyframe-extraction shape), map sampled
     indices through the red palette channel, and emit order-sensitive
     checksums plus the total declared animation delay (which
     value-checks the Graphic Control Extension parsing, not just the
     pixel path)."""
-    return df.mapInPandas(
-        _framesample_batches(id_col, bin_col),
-        schema=("doc_id long, n_frames int, n_sampled int, "
-                "delay_total long, vs_sum long, vs_dot long"),
-    )
-
-
-def _framesample_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`framesample_stage`."""
-    import numpy as np
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.gif import gif_decode_frames
-
-        for pdf in batches:
-            out = {"doc_id": [], "n_frames": [], "n_sampled": [],
-                   "delay_total": [], "vs_sum": [], "vs_dot": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                frames, pal, delays = gif_decode_frames(bytes(payload))
-                npx = frames[0].size
-                vs_sum = vs_dot = 0
-                for f in range(0, len(frames), 2):
-                    r = pal[frames[f].reshape(-1), 0].astype(np.int64)
-                    g = f * npx + np.arange(npx, dtype=np.int64)
-                    vs_sum += int(r.sum())
-                    vs_dot += int((g * r).sum())
-                out["doc_id"].append(int(did))
-                out["n_frames"].append(len(frames))
-                out["n_sampled"].append((len(frames) + 1) // 2)
-                out["delay_total"].append(int(sum(delays)))
-                out["vs_sum"].append(vs_sum)
-                out["vs_dot"].append(vs_dot)
-            yield pd.DataFrame(out)
-
-    return sample
+    frames, pal, delays = gif_decode_frames(bytes(payload))
+    npx = frames[0].size
+    vs_sum = vs_dot = 0
+    for f in range(0, len(frames), 2):
+        r = pal[frames[f].reshape(-1), 0].astype(np.int64)
+        vs_sum += int(r.sum())
+        vs_dot += int(((f * npx + np.arange(npx, dtype=np.int64)) * r).sum())
+    yield int(did), len(frames), (len(frames) + 1) // 2, int(sum(delays)), vs_sum, vs_dot
 
 
 @query(
@@ -518,58 +342,26 @@ def multimodal_video_framesample(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: mapInPandas over Arrow batches, zero shuffles;
     parallelism = input splits (the codec adjudication of the
-    ``multimodal_*_codec`` entries applies unchanged).
-
-    r13: synth+framesample fused in one mapInPandas — payloads never
-    cross the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    ``multimodal_*_codec`` entries applies unchanged)."""
     docs = t(spark, sf, "documents").select("doc_id")
-    synth = _synth_animation_batches("doc_id")
-    sample = _framesample_batches("doc_id", "payload")
-    return fan_out(docs).mapInPandas(
-        lambda it: sample(synth(it)),
-        schema=("doc_id long, n_frames int, n_sampled int, "
-                "delay_total long, vs_sum long, vs_dot long"),
+    return map_rows(
+        fan_out(docs),
+        "doc_id long, n_frames int, n_sampled int, delay_total long, vs_sum long, vs_dot long",
+        synth_animation, gif_frame_sample,
     )
 
 
-def augment_stage(
-    df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
-) -> DataFrame:
-    """Decode (full PNG pipeline) → two standard training
+def augment_checksums(did, payload):
+    """Row kernel: decode (full PNG pipeline) → two standard training
     augmentations — horizontal flip and 90° clockwise rotation — each
-    RE-ENCODED as a real PNG and decoded AGAIN, emitting
-    order-sensitive checksums of both augmented images. Any error in
-    either codec direction or in the geometric index mapping changes
-    f_dot / r_dot."""
-    return df.mapInPandas(
-        _augment_batches(id_col, bin_col),
-        schema="doc_id long, f_sum long, f_dot long, r_dot long",
-    )
-
-
-def _augment_batches(id_col: str, bin_col: str):
-    """Batch transform of :func:`augment_stage`."""
-    import numpy as np
-
-    def augment(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.png import png_decode, png_encode
-
-        for pdf in batches:
-            out = {"doc_id": [], "f_sum": [], "f_dot": [], "r_dot": []}
-            for did, payload in zip(pdf[id_col], pdf[bin_col]):
-                img = png_decode(bytes(payload))
-                flip = png_decode(png_encode(img[:, ::-1]))
-                rot = png_decode(png_encode(np.rot90(img, k=-1)))
-                fv = flip.reshape(-1).astype(np.int64)
-                rv = rot.reshape(-1).astype(np.int64)
-                i = np.arange(fv.size, dtype=np.int64)
-                out["doc_id"].append(int(did))
-                out["f_sum"].append(int(fv.sum()))
-                out["f_dot"].append(int((i * fv).sum()))
-                out["r_dot"].append(int((i * rv).sum()))
-            yield pd.DataFrame(out)
-
-    return augment
+    RE-ENCODED as a real PNG and decoded AGAIN, emitting the flip's
+    :func:`sum_dot` and the rotation's order-sensitive checksum. Any
+    error in either codec direction or in the geometric index mapping
+    changes f_dot / r_dot."""
+    img = png_decode(bytes(payload))
+    flip = png_decode(png_encode(img[:, ::-1]))
+    rot = png_decode(png_encode(np.rot90(img, k=-1)))
+    yield (int(did), *sum_dot(flip), sum_dot(rot)[1])
 
 
 @query(
@@ -610,50 +402,22 @@ def multimodal_image_augment(spark: SparkSession, sf: str) -> DataFrame:
     permutation, so it must equal the original pixel sum).
 
     Scale shape: mapInPandas over Arrow batches, no shuffle — the
-    standard augment-on-read training-input pipeline stage.
-
-    r13: synth+augment fused in one mapInPandas — payloads never
-    cross the Arrow/JVM boundary (see ``multimodal_png_codec``)."""
+    standard augment-on-read training-input pipeline stage."""
     docs = t(spark, sf, "documents").select("doc_id")
-    from xml_hive_spark.operators import fan_out
-    from xml_hive_spark.operators.multimodal import _synth_png_batches
-
-    synth = _synth_png_batches("doc_id")
-    augment = _augment_batches("doc_id", "payload")
-    return fan_out(docs).mapInPandas(
-        lambda it: augment(synth(it)),
-        schema="doc_id long, f_sum long, f_dot long, r_dot long",
-    )
+    return map_rows(fan_out(docs), "doc_id long, f_sum long, f_dot long, r_dot long",
+                    synth_png, augment_checksums)
 
 
-def synth_group_png_stage(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode one real PNG per row with GROUP-UNIFORM dims (4
-    consecutive ids share base = id − id%4; w = 8 + base%5,
-    h = 8 + base%3) so group members tile; pixels
-    px[i] = (id·2654435761 + i·40503) mod 256 stay per-MEMBER."""
-    import numpy as np
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from xml_hive_spark.operators.png import png_encode
-
-        for pdf in batches:
-            ids, bases, payloads = [], [], []
-            for did in pdf[id_col]:
-                did = int(did)
-                base = did - did % 4
-                w, h = 8 + base % 5, 8 + base % 3
-                i = np.arange(w * h, dtype=np.int64)
-                px = ((did * _PX_A + i * _PX_B) % 256).astype(np.uint8)
-                ids.append(did)
-                bases.append(base)
-                payloads.append(png_encode(px.reshape(h, w)))
-            yield pd.DataFrame(
-                {"doc_id": ids, "base": bases, "payload": payloads}
-            )
-
-    return fan_out(df).mapInPandas(
-        synth, schema="doc_id long, base long, payload binary"
-    )
+def synth_group_png(did):
+    """Row kernel: one real PNG with GROUP-UNIFORM dims (4 consecutive
+    ids share base = id − id%4; w = 8 + base%5, h = 8 + base%3) so
+    group members tile; pixels px[i] = (id·2654435761 + i·40503) mod
+    256 stay per-MEMBER."""
+    did = int(did)
+    base = did - did % 4
+    w, h = 8 + base % 5, 8 + base % 3
+    i = np.arange(w * h, dtype=np.int64)
+    yield did, base, png_encode(((did * _PX_A + i * _PX_B) % 256).astype(np.uint8).reshape(h, w))
 
 
 @query(
@@ -699,14 +463,10 @@ def multimodal_tile_composite(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: one hash-shuffle on the group key (bounded groups of
     4), then per-group Python = the codec work; composite groups are
     the unit of parallelism."""
-    import numpy as np
-
     docs = t(spark, sf, "documents").select("doc_id")
-    staged = synth_group_png_stage(docs)
+    staged = map_rows(fan_out(docs), "doc_id long, base long, payload binary", synth_group_png)
 
     def compose(pdf: pd.DataFrame) -> pd.DataFrame:
-        from xml_hive_spark.operators.png import png_decode, png_encode
-
         if len(pdf) != 4:  # incomplete trailing group: no composite
             return pd.DataFrame(
                 {"base": [], "out_h": [], "out_w": [],
@@ -720,13 +480,11 @@ def multimodal_tile_composite(spark: SparkSession, sf: str) -> DataFrame:
         for q, img in enumerate(imgs):
             r0, c0 = (q // 2) * h, (q % 2) * w
             canvas[r0 : r0 + h, c0 : c0 + w] = img
-        back = png_decode(png_encode(canvas)).reshape(-1).astype(np.int64)
-        i = np.arange(back.size, dtype=np.int64)
+        c_sum, c_dot = sum_dot(png_decode(png_encode(canvas)))
         return pd.DataFrame(
             {"base": [int(pdf["base"].iloc[0])],
              "out_h": [2 * h], "out_w": [2 * w],
-             "c_sum": [int(back.sum())],
-             "c_dot": [int((i * back).sum())]}
+             "c_sum": [c_sum], "c_dot": [c_dot]}
         )
 
     return staged.groupBy("base").applyInPandas(

@@ -879,27 +879,29 @@ def bucketed_join_colocated(spark: SparkSession, sf: str) -> DataFrame:
 
     The bucket layout is Spark's own (murmur3 on the key mod buckets),
     registered through the session catalog with explicit external
-    paths; a uuid-suffixed name keeps concurrent driver/bench runs
-    isolated (the returned plan is lazy, so the catalog entries stay
-    for the session — in-memory catalog, nothing persists past it)."""
-    import uuid
+    paths. Both tables and their directory are named from ``sf`` and
+    rewritten in place on every build, so a session holds one pair per
+    sf however often the query runs (the returned plan is lazy, so the
+    catalog entries stay for the session — in-memory catalog, nothing
+    persists past it)."""
+    import hashlib
 
-    from xml_hive_spark.session import scratch_dir
+    from xml_hive_spark.operators.storage import _roundtrip_dir
 
-    sfx = uuid.uuid4().hex[:8]
-    d = scratch_dir("bkt-")
+    key = hashlib.md5(sf.encode()).hexdigest()[:8]
+    d = _roundtrip_dir("bkt", sf)
     orders = t(spark, sf, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     li = t(spark, sf, "lineitem").select("l_orderkey", "l_extendedprice")
     (orders.write.mode("overwrite").bucketBy(8, "o_orderkey")
-     .sortBy("o_orderkey").option("path", d + "/orders_b")
-     .saveAsTable(f"orders_b_{sfx}"))
+     .sortBy("o_orderkey").option("path", d + "/orders")
+     .saveAsTable(f"bkt_orders_{key}"))
     (li.write.mode("overwrite").bucketBy(8, "l_orderkey")
-     .sortBy("l_orderkey").option("path", d + "/lineitem_b")
-     .saveAsTable(f"lineitem_b_{sfx}"))
-    ob = spark.table(f"orders_b_{sfx}")
-    lb = spark.table(f"lineitem_b_{sfx}")
+     .sortBy("l_orderkey").option("path", d + "/lineitem")
+     .saveAsTable(f"bkt_lineitem_{key}"))
+    ob = spark.table(f"bkt_orders_{key}")
+    lb = spark.table(f"bkt_lineitem_{key}")
     out = (
         ob.hint("merge")
         .join(lb.hint("merge"), lb.l_orderkey == ob.o_orderkey)

@@ -6,9 +6,10 @@ ingest, not in a nightly batch).
 
 Plan shape (scale-first):
 
-- a ``mapInPandas`` stage computes each document's MinHash band
-  buckets executor-side (B rows per doc, ids + 8-byte buckets only —
-  document text never enters the stateful shuffle);
+- a row kernel (``band_buckets`` through ``operators.map_rows``)
+  computes each document's MinHash band buckets executor-side (B rows
+  per doc, ids + 8-byte buckets only — document text never enters the
+  stateful shuffle);
 - ``applyInPandasWithState`` keyed by ``(band, bucket)`` holds ONE
   number per occupied bucket (the smallest arrival seq seen) — state
   is O(distinct buckets), not O(documents), and a document is a hit in
@@ -41,7 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from xml_hive_spark.operators import query
+from xml_hive_spark.operators import map_rows, query
 from xml_hive_spark.session import scratch_dir
 from xml_hive_spark.streaming import drain
 
@@ -82,25 +83,13 @@ def _minhash_buckets(text: str) -> list[int]:
     ]
 
 
-def band_bucket_stage(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
-    """(doc, seq) → B rows of (doc_id, seq, band, bucket); works
-    identically on a batch or streaming DataFrame."""
+_BUCKETS = "doc_id long, seq long, band int, bucket long"
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "seq": [], "band": [], "bucket": []}
-            for did, seq, text in zip(pdf[id_col], pdf["seq"], pdf[text_col]):
-                for band, bucket in enumerate(_minhash_buckets(str(text))):
-                    out["doc_id"].append(int(did))
-                    out["seq"].append(int(seq))
-                    out["band"].append(band)
-                    out["bucket"].append(bucket)
-            yield pd.DataFrame(out)
 
-    return df.mapInPandas(
-        fn, schema="doc_id long, seq long, band int, bucket long"
-    )
+def band_buckets(did, seq, text):
+    """Row kernel: B rows of ``_BUCKETS`` for one (doc, seq, text)."""
+    for band, bucket in enumerate(_minhash_buckets(str(text))):
+        yield int(did), int(seq), band, bucket
 
 
 _STATE = StructType([StructField("min_seq", LongType())])
@@ -185,7 +174,7 @@ def run_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(stage_ordered_documents(spark, sf_dir))
     )
     hits = (
-        band_bucket_stage(raw)
+        map_rows(raw, _BUCKETS, band_buckets)
         .groupBy("band", "bucket")
         .applyInPandasWithState(
             _bucket_fn, _HIT, _STATE, "append",
@@ -292,7 +281,7 @@ def batch_neardup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.col("doc_id").alias("seq"), "text"
     )
-    bb = band_bucket_stage(docs).cache()
+    bb = map_rows(docs, _BUCKETS, band_buckets).cache()
     earlier = bb.select(
         "band", "bucket", F.col("seq").alias("prev_seq")
     )
