@@ -87,3 +87,38 @@ def test_registry_query_keeps_one_table_pair_per_sf(spark, sf_dir, tmp_path):
     second = plan()
     assert len(spark.catalog.listTables()) == before + 2
     assert first == second
+
+
+def test_registry_query_writes_its_tables_once_per_source_state(spark, sf_dir, tmp_path):
+    """A second build of ``bucketed_join_colocated`` on unchanged source
+    tables starts no Spark job; a build after a source file changes
+    rewrites the pair. Every build returns the same rows."""
+    import os
+    import shutil
+
+    from xml_hive_spark.operators import all_queries
+
+    for name in ("orders", "lineitem"):
+        os.symlink(f"{sf_dir}/{name}.parquet", tmp_path / f"{name}.parquet")
+    build = all_queries()["bucketed_join_colocated"].fn
+    expected = build(spark, str(tmp_path)).collect()
+    sc = spark.sparkContext
+
+    def build_jobs(group):
+        sc.setJobGroup(group, group, False)
+        try:
+            df = build(spark, str(tmp_path))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return df, sc.statusTracker().getJobIdsForGroup(group)
+
+    df, jobs = build_jobs("bkt-unchanged")
+    assert jobs == []
+    assert df.collect() == expected
+
+    os.unlink(tmp_path / "orders.parquet")
+    shutil.copy(f"{sf_dir}/orders.parquet", tmp_path / "orders.parquet")
+    df, jobs = build_jobs("bkt-changed")
+    assert jobs
+    assert df.collect() == expected

@@ -8,9 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from xml_hive_spark.operators.dedup import (
+    _hash48,
     exact_jaccard,
     lsh_candidate_pairs,
-    minhash_signatures,
+    minhash_signatures_with_sets,
     shingles,
     simhash48,
 )
@@ -45,10 +46,16 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def signatures(sh, num_perm):
+    """The signature stage ``dedup_minhash_lsh`` runs, on shingles ``sh``."""
+    return minhash_signatures_with_sets(
+        sh.select("id", _hash48("sh").alias("shh")), num_perm=num_perm)
+
+
 class TestMinHashLSH:
     def test_planted_near_dups_recalled(self, docs):
         sh = shingles(docs)
-        sig = minhash_signatures(sh, num_perm=32)
+        sig = signatures(sh, num_perm=32)
         pairs = lsh_candidate_pairs(sig, bands=8, rows=4)
         verified = exact_jaccard(pairs, sh)
         found = {(r.id_a, r.id_b): r.jaccard for r in verified.collect()}
@@ -60,12 +67,12 @@ class TestMinHashLSH:
         assert (0, 3) not in high and (0, 4) not in high and (3, 4) not in high
 
     def test_signature_width(self, docs):
-        sig = minhash_signatures(shingles(docs), num_perm=16)
-        assert sig.columns == ["id"] + [f"m{i}" for i in range(16)]
+        sig = signatures(shingles(docs), num_perm=16)
+        assert sig.columns == ["id"] + [f"m{i}" for i in range(16)] + ["shs"]
 
     def test_exact_dup_identical_signature(self, docs):
-        sig = minhash_signatures(shingles(docs), num_perm=32)
-        rows = {r["id"]: tuple(r)[1:] for r in sig.collect()}
+        sig = signatures(shingles(docs), num_perm=32)
+        rows = {r["id"]: (tuple(r)[1:-1], sorted(r["shs"])) for r in sig.collect()}
         assert rows[3] == rows[5]
 
 

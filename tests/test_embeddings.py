@@ -221,6 +221,29 @@ def test_logreg_overflow_guard_fails_loudly(spark):
         logreg_fit(df, iters=1)
 
 
+
+def test_pca_fit_rejects_null_vectors(spark):
+    """A batch of exactly ``dim`` null vectors must raise, not fit an
+    all-NaN mean."""
+    import pytest
+
+    df = spark.createDataFrame([(None,)] * 64, "embedding array<float>").coalesce(1)
+    with pytest.raises(Exception, match="embedding: every vector must be non-null and 64 long"):
+        pca_fit(df)
+
+
+def test_logreg_fit_rejects_a_ragged_batch(spark):
+    """63 + 65 values sum to two 64-rows: the fit must raise, not split
+    values across the row boundary."""
+    import pytest
+
+    from xml_hive_spark.operators.embeddings import logreg_fit
+
+    rows = [([0.5] * 64, i % 2) for i in range(8)] + [([0.5] * 63, 0), ([0.5] * 65, 1)]
+    df = spark.createDataFrame(rows, "embedding array<float>, y long").coalesce(1)
+    with pytest.raises(Exception, match=r"embedding \+ bias: every vector must be non-null and 65 long"):
+        logreg_fit(df, iters=1)
+
 def test_pca_project_2d_matches_numpy(spark, sf_dir):
     """The closed-form 2-d projection query must agree (up to
     eigenvector sign) with numpy: eigh over the first two coordinates,

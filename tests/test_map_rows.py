@@ -38,9 +38,9 @@ def test_fan_out_chain_and_empty_batches(spark):
     assert nothing.collect() == []
 
 
-def _boundary_sites(src: str) -> set[tuple[str, str]]:
-    """(enclosing function, call) of every ``mapInPandas`` call in
-    ``src``; a lambda belongs to the function it is written in."""
+def call_sites(src: str, methods=("mapInPandas",)) -> set[tuple[str, str]]:
+    """(enclosing function, method) of every call of one of ``methods``
+    in ``src``; a lambda belongs to the function it is written in."""
     sites = set()
 
     def visit(node, fn):
@@ -49,8 +49,8 @@ def _boundary_sites(src: str) -> set[tuple[str, str]]:
                 visit(child, child.name)
                 continue
             if (isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute)
-                    and child.func.attr == "mapInPandas"):
-                sites.add((fn, "mapInPandas"))
+                    and child.func.attr in methods):
+                sites.add((fn, child.func.attr))
             visit(child, fn)
 
     visit(ast.parse(src), "<module>")
@@ -68,13 +68,13 @@ def test_map_in_pandas_only_in_map_rows_lint():
         "    return df.mapInPandas(run, schema='a long')\n"
         "x = lambda df: df.mapInPandas(iter, 'a long')\n"
     )
-    assert _boundary_sites(seeded) == {("stage", "mapInPandas"),
+    assert call_sites(seeded) == {("stage", "mapInPandas"),
                                        ("<module>", "mapInPandas")}
 
     pkg = Path(__file__).resolve().parent.parent / "xml_hive_spark"
     found = {
         (str(p.relative_to(pkg)), fn, call)
         for p in sorted(pkg.rglob("*.py"))
-        for fn, call in _boundary_sites(p.read_text())
+        for fn, call in call_sites(p.read_text())
     }
     assert found == {("operators/__init__.py", "map_rows", "mapInPandas")}

@@ -296,6 +296,18 @@ class TestCosinePairKernel:
             cosine_pair_kernel(pairs, **reducer).collect()
 
 
+def test_kmeans_training_rejects_a_ragged_batch(spark):
+    """63 + 65 values sum to two 64-rows: training must raise, not
+    split values across the row boundary."""
+    from xml_hive_spark.operators.similarity import train_kmeans_centroids
+
+    rows = [(i, [float(i % 5) + 1.0] * 64) for i in range(20)]
+    rows += [(20, [1.0] * 63), (21, [1.0] * 65)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(1)
+    with pytest.raises(Exception, match="embedding: every vector must be non-null and 64 long"):
+        train_kmeans_centroids(df, k=4, iters=1)
+
+
 class TestPQ:
     def test_pq_recall_and_exact_rerank(self, spark, sf_dir):
         """IVF-PQ: ADC shortlist + exact re-rank must recover most of the

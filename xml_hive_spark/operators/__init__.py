@@ -13,6 +13,7 @@ the driver's sorted-by-name value hash lines up.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 from dataclasses import dataclass
@@ -33,14 +34,45 @@ class QueryDef:
 REGISTRY: dict[str, QueryDef] = {}
 
 
+#: every relation :func:`persisted` cached since the last outermost query
+#: call began, oldest first
+_PERSISTED: list[DataFrame] = []
+_DEPTH = 0
+
+
 def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+    """Register ``fn`` as query ``name`` and return it scoped: an
+    outermost call first unpersists every relation :func:`persisted`
+    recorded, so no build plans against an earlier query's cache; a
+    call from inside another query's build releases nothing."""
     def deco(fn):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QueryDef(name, fn, oracle, tags)
-        return fn
+
+        @functools.wraps(fn)
+        def scoped(*args, **kwargs):
+            global _DEPTH
+            if _DEPTH == 0:
+                while _PERSISTED:
+                    _PERSISTED.pop().unpersist()
+            _DEPTH += 1
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                _DEPTH -= 1
+
+        REGISTRY[name] = QueryDef(name, scoped, oracle, tags)
+        return scoped
 
     return deco
+
+
+def persisted(df: DataFrame) -> DataFrame:
+    """``df.persist()``, the package's only one: the relation stays cached
+    for the caller's actions on the query that built it and is released
+    when the next query starts (see :func:`query`)."""
+    _PERSISTED.append(df)
+    return df.persist()
 
 
 def events(spark: SparkSession, sf_dir: str, stream=None) -> DataFrame:

@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from xml_hive_spark.operators import (band_pairs, dim_side, fan_out,
-                                      payload_side, query, t, table_bytes)
+                                      payload_side, persisted, query, t,
+                                      table_bytes)
 
 # ------------------------------------------------------------- exact dedup
 
@@ -144,18 +145,6 @@ def _perm_mins(src_col: str, num_perm: int) -> list:
     return [F.expr(e) for e in _perm_min_sql(src_col, num_perm)]
 
 
-def minhash_signatures(sh: DataFrame, num_perm: int = 32) -> DataFrame:
-    """Wide signature (id, m0..m{k-1}): k universal-hash permutations of
-    the 48-bit md5 shingle hash, computed as k min aggregates in ONE
-    hash-agg pass — one shuffle of the shingle rows with map-side
-    partial mins, no k-fold row blowup (the naive explode-seeds
-    formulation shuffles k× the shingles and was ~6× slower at sf0.1).
-    PORTABLE since r9 (was k seeded xxhash64 calls): one md5 + k
-    multiply-mods per row, replayable in any engine with md5."""
-    hashed = sh.select("id", _hash48("sh").alias("shh"))
-    return hashed.groupBy("id").agg(*_perm_mins("shh", num_perm))
-
-
 def lsh_candidate_pairs(sig: DataFrame, bands: int = 8, rows: int = 4) -> DataFrame:
     """Band the wide signature (bands × rows columns) into :func:`band_pairs`
     keys: candidate pairs (id_a, id_b) collide on at least one full band.
@@ -200,12 +189,14 @@ def exact_jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
 def minhash_signatures_with_sets(
     hashed: DataFrame, num_perm: int = 32
 ) -> DataFrame:
-    """One-pass signature build: the k min-aggregates AND the hashed
-    shingle set (``collect_set``) in a single hash-agg, so the expensive
-    map side (text scan → shingle UDF → hash → partial aggs) runs once
-    and Catalyst's ReuseExchange serves every downstream consumer —
-    banding and both verify sides — from the same shuffle files.
-    Input: (id, shh) with 48-bit portable shingle hashes."""
+    """Wide signature (id, m0..m{k-1}, shs): k universal-hash permutations
+    of the 48-bit md5 shingle hash as k min aggregates, AND the hashed
+    shingle set (``collect_set``), in a single hash-agg: one shuffle of
+    the shingle rows with map-side partial mins, no k-fold row blowup,
+    and the expensive map side (text scan → shingle UDF → hash → partial
+    aggs) runs once while Catalyst's ReuseExchange serves every
+    downstream consumer — banding and both verify sides — from the same
+    shuffle files. Input: (id, shh) with 48-bit portable shingle hashes."""
     return hashed.groupBy("id").agg(
         *_perm_mins("shh", num_perm), F.collect_set("shh").alias("shs")
     )
@@ -321,7 +312,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf: str) -> DataFrame:
     planted near-duplicates stays pinned in tests/test_dedup.py."""
     docs = t(spark, sf, "documents")
     hashed = shingles(docs).select("id", _hash48("sh").alias("shh"))
-    sig = minhash_signatures_with_sets(hashed, num_perm=32).persist()
+    sig = persisted(minhash_signatures_with_sets(hashed, num_perm=32))
     pairs = lsh_candidate_pairs(sig, bands=8, rows=4)
     # corpus-sized shingle-set (+ signature) payload: broadcast only
     # while provably small, sort-merge beyond the cap (r11 probe
@@ -490,7 +481,7 @@ def dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
     rule — so the driver hash-checks the entire near-dedup pipeline.
     Recall on planted near-dups stays pinned in tests/test_dedup.py."""
     docs = t(spark, sf, "documents")
-    sig = simhash48(docs).persist()
+    sig = persisted(simhash48(docs))
     keys = [
         _simhash_block(F.col("simhash"), i) * F.lit(1 << _SIMHASH_BLOCKS[j][1])
         + _simhash_block(F.col("simhash"), j)
@@ -644,14 +635,14 @@ def connected_components(
     # measured 8.96 -> 6.06 s min-cold for dedup_cluster_components at
     # sf0.1, identical clusters — the remainder is the per-iteration
     # localCheckpoint + fixpoint-probe floor).
-    sym = edges.select(
+    sym = persisted(edges.select(
         F.explode(
             F.array(
                 F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
                 F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
             )
         ).alias("e")
-    ).select("e.a", "e.b").persist()
+    ).select("e.a", "e.b"))
     labels = (
         sym.select(F.col("a").alias("id"))
         .distinct()
@@ -772,12 +763,12 @@ def _shingle_stages(d: DataFrame, sf: str):
             [list({tx[i : i + 8] for i in range(len(tx) - 7)}) for tx in texts]
         )
 
-    toks = fan_out(d).select("doc_id", F.explode(grams("tx")).alias("g")).select(
-        "doc_id", F.xxhash64("g").alias("tok")
-    ).persist()
-    sets = toks.groupBy("doc_id").agg(
+    toks = persisted(fan_out(d).select(
+        "doc_id", F.explode(grams("tx")).alias("g")
+    ).select("doc_id", F.xxhash64("g").alias("tok")))
+    sets = persisted(toks.groupBy("doc_id").agg(
         F.collect_set("tok").alias("toks"), F.count(F.lit(1)).alias("sz")
-    ).persist()
+    ))
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "tok")
     ranked = (
@@ -845,9 +836,9 @@ def setsim_join_prefix(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.length("tx") >= 8)
     )
     ranked, sets_sized = _shingle_stages(d, sf)
-    pref = ranked.filter(
+    pref = persisted(ranked.filter(
         F.col("rn") <= F.col("sz") - F.ceil(F.col("sz") * T_NUM / T_DEN) + 1
-    ).select("doc_id", "tok", "sz", "rn").persist()
+    ).select("doc_id", "tok", "sz", "rn"))
     # length filter (ppjoin's second prune): Jaccard >= t forces
     # t*|A| <= |B| <= |A|/t, so size-incompatible prefix collisions are
     # dropped INSIDE the candidate join. The POSITIONAL filter (ppjoin's
@@ -1206,7 +1197,7 @@ def containment_pairs(
         .filter(F.length("tx") >= 8)
     )
     ranked, sets_sized = _shingle_stages(d, sf)
-    ranked = ranked.persist()
+    ranked = persisted(ranked)
     # m = allowed misses; pl = deepened prefix; c_req = pl − m shared
     # tokens required (exact pigeonhole, lossless at any EXTRA ≥ 0)
     m_col = F.col("sz") - F.ceil(F.col("sz") * T_NUM / T_DEN)

@@ -20,7 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import query, t
+from xml_hive_spark.operators import persisted, query, t
+from xml_hive_spark.operators.similarity import fixed_dim_matrix
 
 
 def pca_fit(emb: DataFrame, vec_col: str = "embedding", dim: int = 64,
@@ -40,20 +41,13 @@ def pca_fit(emb: DataFrame, vec_col: str = "embedding", dim: int = 64,
     vecs = emb.select(vec_col)
 
     def partials(batches):
-        from xml_hive_spark.operators.similarity import fixed_dim_matrix
-
         n = 0
         s = np.zeros(dim)
         g = np.zeros((dim, dim))
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            col = batch.column(0)
-            m = fixed_dim_matrix(col, dim)
-            if m is None:  # ragged/null rows: exact slow path
-                m = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in col.to_pylist()]
-                )
+            m = fixed_dim_matrix(batch.column(0), dim, np.float64, vec_col)
             n += len(m)
             s += m.sum(axis=0)
             g += m.T @ m
@@ -413,30 +407,6 @@ def embedding_drift_monitor(spark: SparkSession, sf: str) -> DataFrame:
 _Q20I = 1 << 20  # integer twin of similarity._Q20
 
 
-def _int_matrix(col, dim: int):
-    """(n, dim) INT64 matrix from an Arrow list<int64> column, or None
-    on nulls/ragged rows — the integer twin of
-    :func:`similarity.fixed_dim_matrix` (float64 would lose exactness
-    past 2^53 in the gradient partials; int64 keeps the whole reduction
-    exact). Row lengths verified via the offsets buffer, same as the
-    sibling."""
-    import numpy as np
-
-    if col.null_count != 0:
-        return None
-    try:
-        offs = col.offsets.to_numpy(zero_copy_only=False)
-    except AttributeError:
-        return None
-    lens = np.diff(offs)
-    if len(lens) != len(col) or not (lens == dim).all():
-        return None
-    flat = col.flatten().to_numpy(zero_copy_only=False)
-    return np.ascontiguousarray(flat.reshape(-1, dim)).astype(
-        np.int64, copy=False
-    )
-
-
 def _tdiv(a: int, b: int) -> int:
     """Truncating integer division (toward zero) for positive ``b`` —
     the convention Spark's ``div`` and DuckDB's ``//`` share (Python's
@@ -530,7 +500,7 @@ def logreg_fit(
             "features or lower spark.sql.execution.arrow.maxRecordsPerBatch"
         )
 
-    qdf = emb.select(
+    qdf = persisted(emb.select(
         (F.col(label_col).cast("long") * F.lit(_Q20I)).alias("yq"),
         F.concat(
             F.expr(
@@ -539,7 +509,7 @@ def logreg_fit(
             ),
             F.array(F.lit(_Q20I).cast("long")),
         ).alias("xs"),
-    ).persist()
+    ))
     try:
         w = [0] * (dim + 1)
         for _ in range(iters):
@@ -562,11 +532,9 @@ def logreg_fit(
                     if b.num_rows == 0:
                         continue
                     yq = b.column("yq").to_numpy(zero_copy_only=False)
-                    m = _int_matrix(b.column("xs"), dim + 1)
-                    if m is None:  # ragged/null rows: exact slow path
-                        m = np.asarray(
-                            b.column("xs").to_pylist(), dtype=np.int64
-                        )
+                    # int64, not float64: exact past 2^53
+                    m = fixed_dim_matrix(b.column("xs"), dim + 1, np.int64,
+                                         f"{vec_col} + bias")
                     dot = m @ wb  # exact: 65·wmax·mx guarded above
                     z = dot.astype(np.float64) / float(1 << 40)
                     p = 0.5 + (0.5 * z) / (1.0 + np.abs(z))

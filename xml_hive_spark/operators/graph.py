@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import query, t
+from xml_hive_spark.operators import persisted, query, t
 
 _DAMP = 0.85
 _ITERS = 5
@@ -89,12 +89,11 @@ def pagerank(edges: DataFrame, damping: float = _DAMP,
     iterations at sf0.1, identical ranks; the graph_bfs_hops frontier
     discipline applied to the walk family). Per-iteration state is one
     (node, rank) row per vertex — O(V), never the crossed lineage.
-    Superseded state is RELEASED as the walk advances (r9 advice):
-    each new ranks is materialized, then its predecessor unpersisted;
-    the invariants are unpersisted after the loop. A long session
-    running many registry queries therefore holds at most two O(V)
-    rank tables at any instant, and exactly one — the returned
-    frame's — after pagerank() returns."""
+    Superseded state is released as the walk advances: each new ranks
+    is materialized, then its predecessor unpersisted; the invariants
+    are unpersisted after the loop. The walk holds at most two O(V)
+    rank tables at any instant, and one, the returned frame's, after
+    pagerank() returns, until the next query starts."""
     dnum = round(damping * 100)
     if abs(dnum / 100.0 - damping) > 1e-12:
         raise ValueError("damping must be a multiple of 0.01 for the "
@@ -107,20 +106,16 @@ def pagerank(edges: DataFrame, damping: float = _DAMP,
     # 11.7 GB at the 100x corpus for 5 iterations without this; edges
     # are the big side, ranks the small one). One edge shuffle total,
     # amortized across the loop — the standard iterative-graph layout.
-    edges = edges.repartition("src").persist()
+    edges = persisted(edges.repartition("src"))
     # No-dangling contract (docstring): every node has out-degree >= 1,
     # so the src column alone spans the node set — one cache pass and
     # half the distinct input vs unioning both endpoint columns (the
     # DuckDB oracle derives nodes the same way).
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .persist()
-    )
+    nodes = persisted(edges.select(F.col("src").alias("node")).distinct())
     n = nodes.count()  # one scalar to the driver — not graph state
-    outdeg = edges.groupBy("src").agg(
+    outdeg = persisted(edges.groupBy("src").agg(
         F.count(F.lit(1)).alias("outdeg")
-    ).persist()
+    ))
     teleport = ((100 - dnum) * _UNIT) // (100 * n)
     # Vertex-scaled loop state must not broadcast past the cliff: ranks
     # and contribs are O(V) rows, and AQE happily broadcasts the small
@@ -149,7 +144,7 @@ def pagerank(edges: DataFrame, damping: float = _DAMP,
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        new_ranks = (
+        new_ranks = persisted(
             nodes.join(payload_side(contribs, vstate_bytes),
                        nodes.node == contribs.dst, "left")
             .select(
@@ -159,7 +154,6 @@ def pagerank(edges: DataFrame, damping: float = _DAMP,
                     f" + ({dnum} * coalesce(s, CAST(0 AS BIGINT))) DIV 100"
                 ).alias("rank_units"),
             )
-            .persist()
         )
         new_ranks.count()  # materialize BEFORE dropping the predecessor
         if k > 0:  # iteration 0 reads the unpersisted seed frame
@@ -304,7 +298,7 @@ def graph_triangles(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
     )
-    edges = (
+    edges = persisted(
         items.select(
             F.explode(
                 F.expr(
@@ -318,7 +312,6 @@ def graph_triangles(spark: SparkSession, sf: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") >= 2)
         .select("u", "v")
-        .persist()
     )
     e1 = edges.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = edges.select(F.col("u").alias("b"), F.col("v").alias("c"))
@@ -425,23 +418,21 @@ def graph_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
     re-runs the whole basket-bounded pair expansion (measured 5.55 →
     3.45 s min-cold at sf0.1, identical output — the pagerank
     loop-invariant discipline)."""
-    edges = copurchase_edges(spark, sf).persist()
-    frontier = (
+    edges = persisted(copurchase_edges(spark, sf))
+    frontier = persisted(
         edges.groupBy()
         .agg(F.min("u").alias("node"))
         .select("node", F.lit(0).alias("hops"))
-        .persist()
     )
     dist = frontier
     for step in range(1, 5):
-        nxt = (
+        nxt = persisted(
             frontier.join(edges, frontier.node == edges.u)
             .select(F.col("v").alias("node"))
             .distinct()
             .withColumn("hops", F.lit(step))
             .join(dist, "node", "left_anti")
             .select("node", "hops")
-            .persist()
         )
         dist = dist.unionAll(nxt)
         frontier = nxt

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import query, t, table_rows
+from xml_hive_spark.operators import persisted, query, t, table_rows
 
 # lowercased whitespace tokens, empties dropped — the one tokenizer all
 # three queries and both engines share
@@ -278,13 +278,12 @@ def bpe_learn(spark: SparkSession, sf: str, n_merges: int = 6) -> DataFrame:
       iteration's cache is dropped once the next is materialized.
     Measured at the 10x corpus: hang (killed at 7 min) -> ~11 s."""
     docs = t(spark, sf, "documents")
-    wf = (
+    wf = persisted(
         docs.select(F.explode(F.expr(_SPARK_TOKENS)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .withColumn("syms", F.split("w", ""))
         .repartition(spark.sparkContext.defaultParallelism, "w")
-        .persist()
     )
     prev = wf
     merges = []
@@ -316,9 +315,9 @@ def bpe_learn(spark: SparkSession, sf: str, n_merges: int = 6) -> DataFrame:
         if prev is not wf:
             prev.unpersist()  # rank r-1 cache: all consumers done
         prev = wf
-        wf = wf.withColumn(
+        wf = persisted(wf.withColumn(
             "syms", F.expr(_MERGE_EXPR.format(a=f"'{la}'", b=f"'{lb}'"))
-        ).persist()
+        ))
     out = spark.createDataFrame(
         merges, "rank INT, left STRING, right STRING, merged STRING, n BIGINT"
     )

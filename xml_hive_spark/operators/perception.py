@@ -28,7 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import band_pairs, fan_out, map_rows, query, t
+from xml_hive_spark.operators import (band_pairs, fan_out, map_rows, persisted,
+                                      query, t)
 from xml_hive_spark.operators.gif import gif_decode_frames, gif_encode_animation
 from xml_hive_spark.operators.multimodal import sum_dot, synth_png
 from xml_hive_spark.operators.png import png_decode, png_encode
@@ -165,8 +166,9 @@ def image_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     collisions (quadratic at the fixed 65 536-bucket band space, the r11
     byte-audit finding in SCALE.md) never reach an exchange."""
     docs = t(spark, sf, "documents").select("doc_id")
-    bands = map_rows(fan_out(docs), "doc_id long, b0 int, b1 int, b2 int, b3 int",
-                     synth_pair_png, phash_fingerprint).persist()
+    bands = persisted(map_rows(
+        fan_out(docs), "doc_id long, b0 int, b1 int, b2 int, b3 int",
+        synth_pair_png, phash_fingerprint))
     fp_cols = ("b0", "b1", "b2", "b3")
     hamming = sum(
         F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b"))) for c in fp_cols

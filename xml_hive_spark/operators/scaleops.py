@@ -853,6 +853,11 @@ def spatial_grid_join(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+#: sf -> file_stamp of the orders/lineitem pair whose bucketed tables
+#: this process wrote
+_BUCKETED: dict[str, tuple | None] = {}
+
+
 @query(
     "bucketed_join_colocated",
     oracle="""
@@ -879,27 +884,31 @@ def bucketed_join_colocated(spark: SparkSession, sf: str) -> DataFrame:
 
     The bucket layout is Spark's own (murmur3 on the key mod buckets),
     registered through the session catalog with explicit external
-    paths. Both tables and their directory are named from ``sf`` and
-    rewritten in place on every build, so a session holds one pair per
-    sf however often the query runs (the returned plan is lazy, so the
-    catalog entries stay for the session — in-memory catalog, nothing
-    persists past it)."""
+    paths. Both tables and their directory are named from ``sf``, so a
+    session holds one pair per sf (in-memory catalog, nothing persists
+    past it); the pair is written once per process and
+    :func:`~xml_hive_spark.session.file_stamp` of the two source
+    tables, and rewritten in place when either changes."""
     import hashlib
 
     from xml_hive_spark.operators.storage import _roundtrip_dir
+    from xml_hive_spark.session import file_stamp
 
     key = hashlib.md5(sf.encode()).hexdigest()[:8]
-    d = _roundtrip_dir("bkt", sf)
-    orders = t(spark, sf, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    li = t(spark, sf, "lineitem").select("l_orderkey", "l_extendedprice")
-    (orders.write.mode("overwrite").bucketBy(8, "o_orderkey")
-     .sortBy("o_orderkey").option("path", d + "/orders")
-     .saveAsTable(f"bkt_orders_{key}"))
-    (li.write.mode("overwrite").bucketBy(8, "l_orderkey")
-     .sortBy("l_orderkey").option("path", d + "/lineitem")
-     .saveAsTable(f"bkt_lineitem_{key}"))
+    stamp = file_stamp([f"{sf}/orders.parquet", f"{sf}/lineitem.parquet"])
+    if stamp is None or _BUCKETED.get(sf) != stamp:
+        d = _roundtrip_dir("bkt", sf)
+        orders = t(spark, sf, "orders").select(
+            "o_orderkey", "o_orderpriority"
+        )
+        li = t(spark, sf, "lineitem").select("l_orderkey", "l_extendedprice")
+        (orders.write.mode("overwrite").bucketBy(8, "o_orderkey")
+         .sortBy("o_orderkey").option("path", d + "/orders")
+         .saveAsTable(f"bkt_orders_{key}"))
+        (li.write.mode("overwrite").bucketBy(8, "l_orderkey")
+         .sortBy("l_orderkey").option("path", d + "/lineitem")
+         .saveAsTable(f"bkt_lineitem_{key}"))
+        _BUCKETED[sf] = stamp
     ob = spark.table(f"bkt_orders_{key}")
     lb = spark.table(f"bkt_lineitem_{key}")
     out = (

@@ -13,8 +13,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from xml_hive_spark.operators import (band_pairs, fan_out, payload_side, query, t,
-                                      table_rows)
+from xml_hive_spark.operators import (band_pairs, fan_out, payload_side, persisted,
+                                      query, t, table_rows)
 
 
 def _dot(a, b):
@@ -497,9 +497,9 @@ def embedding_cosine_pairs(
     the vectors instead of attaching them to every candidate pair."""
     if n is None:
         n = emb.count()  # sizes the vector source
-    sigs = banded_signatures(emb, id_col, vec_col, bands=bands,
-                             rows_per_band=rows_per_band) \
-        .select("id", "sig").persist()
+    sigs = persisted(banded_signatures(emb, id_col, vec_col, bands=bands,
+                                       rows_per_band=rows_per_band)
+                     .select("id", "sig"))
     pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(bands)])
     return score_candidates(pairs, emb.select(id_col, vec_col), n, vec_path,
                             threshold=threshold)
@@ -567,8 +567,9 @@ def cosine_pair_kernel(pairs: DataFrame, *, threshold: float | None = None,
             xa = ca.to_numpy(zero_copy_only=False)
             xb = cb.to_numpy(zero_copy_only=False)
             if vec_path is None:
-                qa = _quantize20(_vector_matrix(batch.column(2), cols[2]))
-                qb = _quantize20(_vector_matrix(batch.column(3), cols[3]))
+                qa, qb = (_quantize20(fixed_dim_matrix(batch.column(i), 64,
+                                                       np.float64, cols[i]))
+                          for i in (2, 3))
                 na = np.sqrt(np.einsum("ij,ij->i", qa, qa).astype(np.float64))
                 nb = np.sqrt(np.einsum("ij,ij->i", qb, qb).astype(np.float64))
             else:
@@ -595,15 +596,6 @@ def cosine_pair_kernel(pairs: DataFrame, *, threshold: float | None = None,
     return sel.mapInArrow(fn, out_schema)
 
 
-def _vector_matrix(col, what: str):
-    """(n, 64) float64 matrix of an Arrow list column; raises on null,
-    ragged or wrong-length rows (see :func:`fixed_dim_matrix`)."""
-    m = fixed_dim_matrix(col, 64)
-    if m is None:
-        raise ValueError(f"{what}: every vector must be non-null and 64 long")
-    return m
-
-
 def _sideload_vectors(vec_path: str):
     """(vec_id sorted, quantized vectors, their norms) of the parquet
     table at ``vec_path``; raises on a duplicate vec_id, which the attach
@@ -614,7 +606,8 @@ def _sideload_vectors(vec_path: str):
     tab = ds.dataset(vec_path).to_table(columns=["vec_id", "embedding"])
     vid = np.asarray(tab.column("vec_id").to_numpy(zero_copy_only=False),
                      dtype=np.int64)
-    m = _vector_matrix(tab.column("embedding").combine_chunks(), vec_path)
+    m = fixed_dim_matrix(tab.column("embedding").combine_chunks(), 64,
+                         np.float64, vec_path)
     vmat = _quantize20(m.astype(np.float32))
     order = np.argsort(vid, kind="stable")
     vid, vmat = vid[order], vmat[order]
@@ -816,25 +809,19 @@ def cosine_topk_ivf(spark: SparkSession, sf: str) -> DataFrame:
     return exact_top5(pairs)
 
 
-def fixed_dim_matrix(col, dim: int):
-    """(n, dim) float64 matrix from an Arrow list column, or None when
-    any row is null or not exactly ``dim`` long. The naive check
-    ``len(flat) == n*dim`` passes for RAGGED batches whose lengths merely
-    sum right (e.g. 63 + 65), silently splitting values across row
-    boundaries — so row lengths are verified via the offsets buffer."""
+def fixed_dim_matrix(col, dim: int, dtype, what: str):
+    """(n, dim) ``dtype`` matrix of the Arrow list column ``col``; raises
+    a ValueError naming the column ``what`` when a row is null or not
+    exactly ``dim`` long. Row lengths are read from the offsets buffer:
+    ``len(flat) == n*dim`` also holds for ragged rows whose lengths
+    merely sum right (63 + 65), which would split values across rows."""
     import numpy as np
 
-    if col.null_count != 0:
-        return None
-    try:
-        offs = col.offsets.to_numpy(zero_copy_only=False)
-    except AttributeError:
-        return None
-    lens = np.diff(offs)
-    if len(lens) != len(col) or not (lens == dim).all():
-        return None
+    lens = np.diff(col.offsets.to_numpy(zero_copy_only=False))
+    if col.null_count or not (lens == dim).all():
+        raise ValueError(f"{what}: every vector must be non-null and {dim} long")
     flat = col.flatten().to_numpy(zero_copy_only=False)
-    return flat.astype(np.float64).reshape(-1, dim)
+    return flat.reshape(-1, dim).astype(dtype, copy=False)
 
 
 def _int_argmax_cosine(q, centroids):
@@ -914,9 +901,9 @@ def train_kmeans_centroids(
         .limit(k)
         .collect()
     )
-    centroids = _quantize20(
-        np.stack([np.asarray(r[0], dtype=np.float64) for r in first])
-    )
+    centroids = _quantize20(fixed_dim_matrix(
+        pa.array([r[0] for r in first], pa.list_(pa.float64())), dim,
+        np.float64, vec_col))
     vecs = fan_out(emb.select(vec_col))
     # a DataType, not DDL: each iteration would parse the string in the JVM
     partial = StructType([StructField("cluster", IntegerType()),
@@ -930,14 +917,8 @@ def train_kmeans_centroids(
             for batch in batches:
                 if batch.num_rows == 0:
                     continue
-                col = batch.column(0)
-                m = fixed_dim_matrix(col, dim)
-                if m is None:  # ragged/null rows: exact slow path
-                    m = np.stack([
-                        np.asarray(v, dtype=np.float64)
-                        for v in col.to_pylist()
-                    ])
-                q = _quantize20(m)
+                q = _quantize20(fixed_dim_matrix(batch.column(0), dim,
+                                                 np.float64, vec_col))
                 a = _int_argmax_cosine(q, cents)
                 np.add.at(sums, a, q)  # means are over quantized values
                 cnts += np.bincount(a, minlength=k)
@@ -1889,9 +1870,9 @@ def ann_join_topk(spark: SparkSession, sf: str) -> DataFrame:
     # caching `vec` stored 64 floats/row (~10× the signature) that no
     # consumer read; now the cache matches the "16 ints per vector"
     # claim above
-    sigs = banded_signatures(emb, "vec_id", "embedding",
-                             bands=16, rows_per_band=r) \
-        .select("id", "sig").persist()
+    sigs = persisted(banded_signatures(emb, "vec_id", "embedding",
+                                       bands=16, rows_per_band=r)
+                     .select("id", "sig"))
     # each UNDIRECTED pair once (band_pairs); the fused partial top-k
     # folds each scored pair into both endpoints' heaps
     pairs = band_pairs(sigs, "id", [F.col("sig")[i] for i in range(16)]) \
@@ -2190,7 +2171,7 @@ def hybrid_rank_fusion_rrf(spark: SparkSession, sf: str) -> DataFrame:
     n = fan_out(emb.filter(F.col("vec_id") != 0)).select(
         F.col("vec_id").alias("nid"), F.col("embedding").alias("ne")
     )
-    scored = q.crossJoin(n).select(
+    scored = persisted(q.crossJoin(n).select(
         "nid",
         F.round(
             _dot(F.col("qe"), F.col("ne"))
@@ -2198,7 +2179,7 @@ def hybrid_rank_fusion_rrf(spark: SparkSession, sf: str) -> DataFrame:
             4,
         ).alias("cos_s"),
         F.round(_dot(F.col("qe"), F.col("ne")), 4).alias("dot_s"),
-    ).persist()  # both scorers' shortlists consume it — score once
+    ))  # both scorers' shortlists consume it — score once
     # per-scorer shortlist FIRST (TakeOrderedAndProject — partial top-k
     # per partition, never a full-corpus single-partition window); the
     # rank window then runs over only the 50 survivors

@@ -36,7 +36,7 @@ import json
 import re
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 _NAME_RX = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -115,13 +115,3 @@ def drop_xml_table(spark: SparkSession, name: str) -> None:
     side = _sidecar_dir(spark) / f"{name}.json"
     if side.exists():
         side.unlink()
-
-
-def read_xml_table(spark: SparkSession, name: str) -> DataFrame:
-    """Read a persistent xmlhive table by name, attaching its view if the
-    session hasn't yet (covers qualified access after session restart
-    without requiring an explicit attach call)."""
-    side = _sidecar_dir(spark) / f"{name}.json"
-    if side.exists():
-        _attach_view(spark, name, json.loads(side.read_text()))
-    return spark.table(name)

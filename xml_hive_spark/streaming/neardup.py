@@ -42,7 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from xml_hive_spark.operators import map_rows, query
+from xml_hive_spark.operators import map_rows, persisted, query
 from xml_hive_spark.session import scratch_dir
 from xml_hive_spark.streaming import drain
 
@@ -281,7 +281,7 @@ def batch_neardup_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.col("doc_id").alias("seq"), "text"
     )
-    bb = map_rows(docs, _BUCKETS, band_buckets).cache()
+    bb = persisted(map_rows(docs, _BUCKETS, band_buckets))
     earlier = bb.select(
         "band", "bucket", F.col("seq").alias("prev_seq")
     )
