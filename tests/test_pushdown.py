@@ -165,28 +165,38 @@ def _conditions():
     ]
 
 
-def _xml_df(spark, tmp_path, schema):
-    from xml_hive_spark.reader import read_xml
+def _xmlhive(spark, path, schema):
+    """A fresh ``format("xmlhive")`` load — the entry whose scan Spark
+    pushes filters into (``read_xml`` pushes none). Fresh per query: a
+    filterless re-scan of one loaded frame reuses the last pushed plan
+    (test_upstream_plan_reuse_leaks_pushed_filters)."""
+    from xml_hive_spark.sources.xml_datasource import register
 
-    p = tmp_path / "data.xml"
-    p.write_bytes(FLAT_XML)
-    return read_xml(spark, str(p), "row", schema=schema)
+    register(spark)
+    return (spark.read.format("xmlhive").schema(schema)
+            .option("rowTag", "row").option("path", str(path)).load())
 
 
 @pytest.mark.parametrize("schema", [SCHEMA, NESTED_SCHEMA],
                          ids=["flat-arrow-path", "exact-et-path"])
 def test_pushdown_equals_catalyst(spark, tmp_path, schema):
-    xml = _xml_df(spark, tmp_path, schema)
+    p = tmp_path / "data.xml"
+    p.write_bytes(FLAT_XML)
     # parquet round-trip of the SAME rows: Catalyst evaluates every
     # condition itself there — the semantics oracle
     pq = str(tmp_path / f"oracle-{len(schema)}.parquet")
-    xml.write.mode("overwrite").parquet(pq)
+    _xmlhive(spark, p, schema).write.mode("overwrite").parquet(pq)
     oracle = spark.read.parquet(pq)
-    assert xml.count() == 6
+    assert _xmlhive(spark, p, schema).count() == 6
     for cond in _conditions():
+        xml = _xmlhive(spark, p, schema)
         got = sorted(r["id"] for r in xml.filter(cond).select("id").collect())
         want = sorted(r["id"] for r in oracle.filter(cond).select("id").collect())
         assert got == want, f"filter {cond} pushed={got} oracle={want}"
+    # the scan accepted the filter: Spark plans no Filter node above it
+    plan = (_xmlhive(spark, p, schema).filter(F.col("id") > 2)
+            ._jdf.queryExecution().executedPlan().toString())
+    assert "BatchScan xmlhive" in plan and "Filter (" not in plan
 
 
 def test_reader_accepts_and_returns_by_reference(tmp_path):
@@ -354,8 +364,6 @@ def test_float32_rounding_matches_catalyst(spark, tmp_path):
     rounding, and the arrow mask, via native f32 promotion)."""
     from pyspark.sql.types import FloatType as FT
 
-    from xml_hive_spark.reader import read_xml
-
     sch = StructType(
         [
             StructField("id", IntegerType(), True,
@@ -372,13 +380,12 @@ def test_float32_rounding_matches_catalyst(spark, tmp_path):
         b'<row id="3"><v></v></row>'
         b"</r>"
     )
-    xml = read_xml(spark, str(p), "row", schema=sch)
     pq = str(tmp_path / "f32.parquet")
-    xml.write.mode("overwrite").parquet(pq)
+    _xmlhive(spark, p, sch).write.mode("overwrite").parquet(pq)
     oracle = spark.read.parquet(pq)
     for cond in [F.col("v") > 0.1, F.col("v") <= 0.1, F.col("v") == 0.2,
                  F.col("v").eqNullSafe(0.2)]:
-        got = sorted(r["id"] for r in xml.filter(cond).collect())
+        got = sorted(r["id"] for r in _xmlhive(spark, p, sch).filter(cond).collect())
         want = sorted(r["id"] for r in oracle.filter(cond).collect())
         assert got == want, (cond, got, want)
 

@@ -308,6 +308,26 @@ def test_kmeans_training_rejects_a_ragged_batch(spark):
         train_kmeans_centroids(df, k=4, iters=1)
 
 
+def test_kmeans_assign_rejects_a_ragged_batch(spark):
+    """63 + 65 values sum to two 64-rows: assignment must raise a
+    ValueError naming the column, not reshape values across the row
+    boundary; well-formed rows go to their nearest centroid."""
+    import numpy as np
+
+    from xml_hive_spark.operators.similarity import kmeans_assign
+
+    cents = np.eye(4, 64, dtype=np.int64) * 1000
+    good = spark.createDataFrame([(0, [0.0, 2.0] + [0.0] * 62), (1, [3.0] + [0.0] * 63)],
+                                 "vec_id long, emb_vec array<float>")
+    assert [r.cluster for r in kmeans_assign(good, "emb_vec", cents)
+            .orderBy("vec_id").collect()] == [1, 0]
+    ragged = spark.createDataFrame([(0, [1.0] * 63), (1, [1.0] * 65)],
+                                   "vec_id long, emb_vec array<float>").coalesce(1)
+    with pytest.raises(Exception,
+                       match="ValueError: emb_vec: every vector must be non-null and 64 long"):
+        kmeans_assign(ragged, "emb_vec", cents).collect()
+
+
 class TestPQ:
     def test_pq_recall_and_exact_rerank(self, spark, sf_dir):
         """IVF-PQ: ADC shortlist + exact re-rank must recover most of the

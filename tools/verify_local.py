@@ -2,13 +2,21 @@
 query on Spark and its oracle on DuckDB at the given SF, compare
 row-count, column names, and order-insensitive values.
 
-Usage: python tools/verify_local.py [sf_dir] [query ...]
+Usage: python tools/verify_local.py [--timeout S] [sf_dir] [query ...]
+
+Each query gets ``--timeout`` seconds (default 600) on each engine: past
+it, the Spark jobs are cancelled or DuckDB is interrupted, the query is
+reported as a TIMEOUT failure, and the run moves on. The Spark session
+takes every core this process may run on.
 """
 
 from __future__ import annotations
 
+import argparse
 import math
+import os
 import sys
+import threading
 from datetime import date, datetime
 from decimal import Decimal
 from pathlib import Path
@@ -65,14 +73,42 @@ def canon_rows(cols, rows):
     return sorted("|".join(_norm(r[i]) for i in order) for r in rows)
 
 
+class Deadline:
+    """Context manager that calls ``cancel`` once ``seconds`` pass inside
+    the block; ``fired`` tells whether it did."""
+
+    def __init__(self, seconds: float, cancel):
+        self.fired = False
+
+        def fire():
+            self.fired = True
+            cancel()
+
+        self._timer = threading.Timer(seconds, fire)
+
+    def __enter__(self):
+        self._timer.start()
+        return self
+
+    def __exit__(self, *exc):
+        self._timer.cancel()
+        return False
+
+
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("queries", nargs="*", help="names to check (default: all)")
+    ap.add_argument("--timeout", type=float, default=600.0,
+                    help="seconds per query on each engine")
+    args = ap.parse_args()
+    sf_dir, only = args.sf_dir, set(args.queries)
 
     from xml_hive_spark.operators import all_queries
     from xml_hive_spark.session import get_spark
 
-    spark = get_spark(app_name="verify-local", cpus=8, shuffle_partitions=8)
+    cpus = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="verify-local", cpus=cpus, shuffle_partitions=cpus)
     con = duckdb.connect()
     for tname in TABLES:
         con.sql(
@@ -84,32 +120,38 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            df = qd.fn(spark, sf_dir)
-            s_cols = df.columns
-            # toPandas, NOT collect: the driver canonicalizes the Spark
-            # side through pandas too, so nulls in numeric columns become
-            # NaN on BOTH engines (collect's None vs fetchdf's NaN was a
-            # local-gate-only asymmetry the driver never sees)
-            s_rows = list(df.toPandas().itertuples(index=False, name=None))
+            with Deadline(args.timeout, spark.sparkContext.cancelAllJobs) as dl:
+                df = qd.fn(spark, sf_dir)
+                s_cols = df.columns
+                # toPandas, NOT collect: the driver canonicalizes the Spark
+                # side through pandas too, so nulls in numeric columns become
+                # NaN on BOTH engines (collect's None vs fetchdf's NaN was a
+                # local-gate-only asymmetry the driver never sees)
+                s_rows = list(df.toPandas().itertuples(index=False, name=None))
         except Exception as e:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL  {name}: spark error: {str(e).splitlines()[0][:200]}")
+            why = (f"TIMEOUT after {args.timeout:g} s" if dl.fired
+                   else f"error: {str(e).splitlines()[0][:200]}")
+            print(f"FAIL  {name}: spark {why}")
             continue
         if qd.oracle is None:
             print(f"ok*   {name}: rows-only ({len(s_rows)} rows)")
             continue
         try:
-            res = con.sql(qd.oracle)
-            d_cols = [c for c in res.columns]
-            # go through pandas like the driver's canonicalizer does — this
-            # is what surfaced the r5/r6 misses (DuckDB HUGEINT → pandas
-            # float64 renders "7712.0" while Spark's long renders "7712");
-            # fetchall() hid that class of mismatch
-            pdf = res.fetchdf()
-            d_rows = list(pdf.itertuples(index=False, name=None))
+            with Deadline(args.timeout, con.interrupt) as dl:
+                res = con.sql(qd.oracle)
+                d_cols = [c for c in res.columns]
+                # go through pandas like the driver's canonicalizer does —
+                # this is what surfaced the r5/r6 misses (DuckDB HUGEINT →
+                # pandas float64 renders "7712.0" while Spark's long renders
+                # "7712"); fetchall() hid that class of mismatch
+                pdf = res.fetchdf()
+                d_rows = list(pdf.itertuples(index=False, name=None))
         except Exception as e:  # noqa: BLE001
             failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {str(e).splitlines()[0][:200]}")
+            why = (f"TIMEOUT after {args.timeout:g} s" if dl.fired
+                   else f"error: {str(e).splitlines()[0][:200]}")
+            print(f"FAIL  {name}: duckdb {why}")
             continue
         problems = []
         if len(s_rows) != len(d_rows):

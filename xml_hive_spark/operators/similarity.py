@@ -10,6 +10,7 @@ Two paths per BASELINE.md north_star:
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -844,18 +845,16 @@ def kmeans_assign(df: DataFrame, vec_col: str, centroids) -> DataFrame:
     Arrow-batched int64 matmul per batch; executors never see a
     collect). Exact arithmetic end to end (see _int_argmax_cosine)."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import IntegerType
 
     cents = np.asarray(centroids, dtype=np.int64)
+    dim = cents.shape[1]
 
-    @pandas_udf(IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int32")
-        q = _quantize20(np.stack([np.asarray(v, dtype=np.float64)
-                                  for v in vecs]))
-        return pd.Series(_int_argmax_cosine(q, cents).astype("int32"))
+    @arrow_udf(IntegerType())
+    def assign(vecs: pa.Array) -> pa.Array:
+        q = _quantize20(fixed_dim_matrix(vecs, dim, np.float64, vec_col))
+        return pa.array(_int_argmax_cosine(q, cents), pa.int32())
 
     return df.withColumn("cluster", assign(F.col(vec_col)))
 

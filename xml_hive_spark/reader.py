@@ -1166,21 +1166,25 @@ def plan_annotated_splits(
     return out
 
 
-def pack_small_files(spark: SparkSession, items: list, partition_bytes: int) -> list[list]:
+def pack_params(spark: SparkSession) -> tuple[int, int]:
+    """``(spark.sql.files.openCostInBytes, defaultParallelism)``: the two
+    session numbers the small-file rule packs by."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return conf.filesOpenCostInBytes(), spark.sparkContext.defaultParallelism
+
+
+def pack_runs(items: list, partition_bytes: int, open_cost: int,
+              parallelism: int) -> list[list]:
     """Group ``items`` — ``(item, nbytes, whole_file)`` triples in read
     order — into read tasks by Spark's small-file rule
     (``FilePartition.getFilePartitions``): each file costs its size plus
-    ``spark.sql.files.openCostInBytes``, and runs of whole files are
-    packed next-fit up to ``min(partition_bytes, max(open_cost,
-    total / defaultParallelism))``. Items that are not whole files
-    (byte-range splits) stay one per task. Order is kept, so the rows of
-    the packed read come out in the unpacked order."""
-    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    ``open_cost``, and runs of whole files are packed next-fit up to
+    ``min(partition_bytes, max(open_cost, total / parallelism))``. Items
+    that are not whole files (byte-range splits) stay one per task. Order
+    is kept, so the rows of the packed read come out in the unpacked
+    order."""
     total = sum(n + open_cost for _, n, _ in items)
-    max_bytes = min(
-        partition_bytes,
-        max(open_cost, total // spark.sparkContext.defaultParallelism),
-    )
+    max_bytes = min(partition_bytes, max(open_cost, total // parallelism))
     groups: list[list] = []
     run: list = []
     run_bytes = 0
@@ -1196,6 +1200,29 @@ def pack_small_files(spark: SparkSession, items: list, partition_bytes: int) -> 
     if run:
         groups.append(run)
     return groups
+
+
+def pack_small_files(spark: SparkSession, items: list, partition_bytes: int) -> list[list]:
+    """:func:`pack_runs` with the session's :func:`pack_params`."""
+    return pack_runs(items, partition_bytes, *pack_params(spark))
+
+
+def plan_tasks(paths: list[str], row_tag: str, partition_bytes: int,
+               pack: tuple[int, int] | None) -> list[tuple]:
+    """Read tasks over ``paths``: each a tuple of annotated splits read in
+    order. A file cut into byte ranges gives one task per split; whole
+    files are packed into shared tasks by :func:`pack_runs` with ``pack``
+    = :func:`pack_params`, or read one file per task when ``pack`` is
+    None."""
+    splits = plan_annotated_splits(paths, row_tag, partition_bytes)
+    if pack is None:
+        return [(s,) for s in splits]
+    splits_per_file = Counter(s[0] for s in splits)
+    return [tuple(t) for t in pack_runs([
+        (s, os.path.getsize(s[0]) if s[2] == GZIP_SPLIT_END else s[2] - s[1],
+         splits_per_file[s[0]] == 1)
+        for s in splits
+    ], partition_bytes, *pack)]
 
 
 def strip_file_uri(s: str) -> str:
@@ -1323,16 +1350,21 @@ def read_xml(
     semantics; the reference just drops bad records with a console
     warning, AvroTransormer.scala:185).
 
-    ``columns`` is EXPLICIT projection pushdown: narrow the scan to the
-    named top-level fields (schema order preserved). Unrequested fields
-    are parsed past but never captured, converted, or shipped across
-    the Python→JVM Arrow boundary — the column-pruning win Spark's own
-    sources get from Catalyst automatically. The Python DataSource API
-    (pyspark 4.1.2) has no pruneColumns hook (a ``.select()`` on the
-    loaded frame still scans the full declared schema; probe pinned in
-    tests), so callers that know their projection pass it here — the
-    same contract as the reference's Hive table, where the declared
-    Avro schema IS the projection (AvroFromXmlSerde.scala:13-26).
+    ``columns`` is the projection: narrow the scan to the named top-level
+    fields (schema order preserved). Unrequested fields are parsed past
+    but never captured, converted, or shipped across the Python→JVM
+    Arrow boundary. A ``.select()`` on the returned frame cannot do this:
+    the scan is a Python function Catalyst cannot prune into, so callers
+    that know their projection pass it here — the same contract as the
+    reference's Hive table, where the declared Avro schema IS the
+    projection (AvroFromXmlSerde.scala:13-26). Filters are not pushed:
+    Catalyst applies them after the scan.
+
+    Splits are planned once, here on the driver, and read by one
+    ``mapInArrow`` over ``spark.range(n)``: Spark task *i* reads the
+    *i*-th planned group of splits with
+    :class:`~xml_hive_spark.sources.xml_datasource.XmlHiveReader`, the
+    reader behind ``spark.read.format("xmlhive")``.
     """
     if schema is None:
         if xsd is not None and sep_tag_type is not None:
@@ -1362,23 +1394,9 @@ def read_xml(
     if corrupt_column is not None:
         schema = tag_corrupt_field(schema, corrupt_column)
 
-    paths = resolve_paths(path)
-    splits = plan_annotated_splits(paths, row_tag, partition_bytes)
+    from xml_hive_spark.sources.xml_datasource import XmlHiveReader, scan
 
-    from xml_hive_spark.sources.xml_datasource import register
-
-    register(spark)
-    splits_per_file = Counter(s[0] for s in splits)
-    tasks = pack_small_files(spark, [
-        (s, os.path.getsize(s[0]) if s[2] == GZIP_SPLIT_END else s[2] - s[1],
-         splits_per_file[s[0]] == 1)
-        for s in splits
-    ], partition_bytes)
-    return (
-        spark.read.format("xmlhive")
-        .schema(schema)
-        .option("rowTag", row_tag)
-        .option("mode", mode)
-        .option("splits", json.dumps(tasks))
-        .load()
-    )
+    tasks = plan_tasks(resolve_paths(path), row_tag, partition_bytes,
+                       pack_params(spark))
+    return scan(spark, XmlHiveReader(schema, {"rowTag": row_tag, "mode": mode}),
+                tasks)

@@ -1,17 +1,19 @@
-"""``xmlhive`` Python DataSource (Spark 4 DataSource API).
+"""``xmlhive`` Python DataSource (Spark 4 DataSource API) and the scan
+``read_xml`` builds on the same reader.
 
 Spark-idiomatic equivalent of the reference's Hadoop integration pair
 (``AvroFromXmlInputFormat.scala`` split planning + ``AvroFromXmlSerde.scala``
 catalog shim): ``partitions()`` plays the role of ``FileInputFormat``
 split planning (but split-SAFE, unlike the reference —
 AvroFromXmlInputFormat.scala:49 opens every split at byte 0), and
-``read(partition)`` is the per-task ``RecordReader``
-(AvroFromXmlInputFormat.scala:62-76), yielding rows the engine moves to
-the JVM in Arrow batches instead of per-record Writables.
+``XmlHiveReader.read(partition)`` is the per-task ``RecordReader``
+(AvroFromXmlInputFormat.scala:62-76), yielding Arrow batches instead of
+per-record Writables. :func:`scan` runs the same ``read`` over tasks
+planned on the driver, through one ``mapInArrow`` (``read_xml``).
 
 Usage::
 
-    spark.dataSource.register(XmlHiveDataSource)
+    register(spark)
     df = (spark.read.format("xmlhive")
           .schema(struct)                       # or pass xsd= options
           .option("rowTag", "book")
@@ -27,21 +29,28 @@ AvroFromXmlSerde.scala:21-23):
 - ``sepTagTypeNs``     — row type namespace (``xml.separator.tag.type.ns``)
 - ``paths`` / ``path`` — newline-separated files, a dir, or a glob
 - ``partitionBytes``   — target bytes per input partition
+- ``splits``           — JSON list of annotated splits planned by the
+  caller, one per task, in place of ``paths``
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass
+from functools import partial
+from itertools import islice
 
+from pyspark.sql import DataFrame
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from xml_hive_spark.reader import (
     DEFAULT_PARTITION_BYTES,
     _read_split,
-    plan_annotated_splits,
+    pack_params,
+    plan_tasks,
     resolve_paths,
+    tag_corrupt_field,
 )
 
 
@@ -109,32 +118,36 @@ class XmlHiveDataSource(DataSource):
             == "true",
         )
 
+    # (spark.sql.files.openCostInBytes, defaultParallelism) of the
+    # session :func:`register` bound this class to: partitions() packs
+    # small files by them, like read_xml. None reads one file per task.
+    pack = None
+
     def reader(self, schema: StructType) -> "XmlHiveReader":
-        return XmlHiveReader(schema, self.options)
+        return XmlHiveReader(schema, self.options, pack=self.pack)
 
 
 class XmlHiveReader(DataSourceReader):
-    def __init__(self, schema: StructType, options):
+    """The per-task record reader of both entries: ``read(partition)``
+    is what ``spark.read.format("xmlhive")`` runs in its read tasks and
+    what :func:`scan` runs for ``read_xml``. ``partitions()`` is the
+    DataSource's planner: the ``splits`` option (annotated splits planned
+    by the caller, one per task) or the splits of ``paths``/``path``."""
+
+    def __init__(self, schema: StructType, options, pack=None):
         self._schema = schema
         self._pushed = []  # compiled tri-valued predicates (pushdown.py)
         self._pushed_raw = []  # the accepted Filter objects themselves
+        self._pack = pack
         self._row_tag = _opt(options, "rowTag", "rowtag")
         if not self._row_tag:
             raise ValueError("xmlhive: rowTag option is required")
-        # splits read_xml planned and annotated on the driver: one entry
-        # per read task, either a list of annotated splits (a packed run
-        # of small files) or a bare annotated split
         raw_splits = _opt(options, "splits")
         self._tasks = None
+        self._paths = None
         if raw_splits:
-            self._tasks = [
-                tuple(map(tuple, t)) if isinstance(t[0], list) else (tuple(t),)
-                for t in json.loads(raw_splits)
-            ]
-        else:
-            raw_paths = _opt(options, "paths") or _opt(options, "path")
-            if not raw_paths:
-                raise ValueError("xmlhive: no input path given")
+            self._tasks = [(tuple(s),) for s in json.loads(raw_splits)]
+        elif raw_paths := _opt(options, "paths") or _opt(options, "path"):
             self._paths = (
                 raw_paths.split("\n") if "\n" in raw_paths else resolve_paths(raw_paths)
             )
@@ -147,11 +160,9 @@ class XmlHiveReader(DataSourceReader):
         corrupt = _opt(options, "columnNameOfCorruptRecord",
                        "columnnameofcorruptrecord")
         if corrupt:
-            # bare-DataSource path: the scan schema is fixed by Spark, so
-            # the sink column must already be declared — tag it (read_xml
-            # appends it before the schema reaches the source)
-            from xml_hive_spark.reader import tag_corrupt_field
-
+            # the scan schema is fixed by Spark, so the sink column must
+            # already be declared — tag it (read_xml appends it before
+            # the schema reaches the reader)
             if corrupt not in self._schema.fieldNames():
                 raise ValueError(
                     f"xmlhive: columnNameOfCorruptRecord={corrupt!r} is not "
@@ -159,6 +170,10 @@ class XmlHiveReader(DataSourceReader):
                     "field (the scan cannot widen a fixed schema)"
                 )
             self._schema = tag_corrupt_field(self._schema, corrupt)
+
+    @property
+    def schema(self) -> StructType:
+        return self._schema
 
     def pushFilters(self, filters):
         """Spark 4.1 filter pushdown: accept predicates we can evaluate
@@ -182,23 +197,21 @@ class XmlHiveReader(DataSourceReader):
     def partitions(self):
         tasks = self._tasks
         if tasks is None:
-            # bare .format("xmlhive") use: the same driver-side plan as
-            # read_xml, one split per task (read_xml also packs small
-            # files, which needs the session)
-            tasks = [(s,) for s in plan_annotated_splits(
-                self._paths, self._row_tag, self._partition_bytes
-            )]
+            if self._paths is None:
+                raise ValueError("xmlhive: no input path given")
+            tasks = plan_tasks(self._paths, self._row_tag,
+                               self._partition_bytes, self._pack)
         # Spark requires at least one partition (all-empty inputs would
         # otherwise surface as read(None) on the executor)
         return [XmlInputPartition(t) for t in tasks] or [XmlInputPartition(())]
 
     def read(self, partition: XmlInputPartition):
+        """Arrow batches of the partition's splits, read in order."""
         splits = [s for s in partition.splits if s[2] > s[1]]
         if not splits:
             return
-        # flat scalar schemas take the columnar regex fast path and ship
-        # Arrow RecordBatches straight through the DataSource worker;
-        # nested schemas yield tuples (worker converts per value)
+        # flat scalar schemas take the columnar regex fast path; nested
+        # schemas assemble tuples, converted to Arrow here
         from xml_hive_spark.flat import FlatAssembler
         from xml_hive_spark.sources.pushdown import (
             compile_conjunction,
@@ -207,26 +220,69 @@ class XmlHiveReader(DataSourceReader):
 
         keep = compile_conjunction(self._pushed)
         asm = FlatAssembler.try_create(self._schema, self._mode)
+        if asm is None:
+            rows = (row for s in splits
+                    for row in _read_split(s, self._row_tag, self._schema, self._mode))
+            yield from rows_to_batches(
+                rows if keep is None else filter(keep, rows), self._schema)
+            return
         # fused scan: template matched against the split buffer in
         # place — no per-record slice/fullmatch on uniform runs. Pushed
         # filters ride the columnar kernel as one vectorized Kleene mask
         # per batch when every filter arrow-compiles.
-        arrow_keep = (
-            compile_conjunction_arrow(self._pushed_raw, self._schema)
-            if asm is not None and keep is not None else None
-        )
+        arrow_keep = (compile_conjunction_arrow(self._pushed_raw, self._schema)
+                      if keep is not None else None)
         for split in splits:
-            if asm is not None:
-                yield from asm.fused_split_batches(
-                    split, self._row_tag, predicate=keep,
-                    arrow_predicate=arrow_keep,
-                )
-            elif keep is None:
-                yield from _read_split(split, self._row_tag, self._schema, self._mode)
-            else:
-                for row in _read_split(split, self._row_tag, self._schema, self._mode):
-                    if keep(row):
-                        yield row
+            yield from asm.fused_split_batches(
+                split, self._row_tag, predicate=keep, arrow_predicate=arrow_keep)
+
+
+# rows per Arrow batch of the tuple path: Spark's default
+# spark.sql.execution.arrow.maxRecordsPerBatch, the size the DataSource
+# worker cut tuples into
+ROW_BATCH = 10_000
+
+
+def rows_to_batches(rows, schema: StructType):
+    """Arrow batches of value tuples, converted per field by pyspark's
+    ``LocalDataToArrowConversion`` — the converter the DataSource worker
+    applies to tuples (pyspark/sql/worker/plan_data_source_read.py), so
+    values read the same on both entries."""
+    import pyarrow as pa
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    aschema = to_arrow_schema(schema)
+    convs = [LocalDataToArrowConversion._create_converter(
+        f.dataType, none_on_identity=True) for f in schema.fields]
+    rows = iter(rows)
+    while chunk := list(islice(rows, ROW_BATCH)):
+        yield pa.RecordBatch.from_arrays(
+            [list(c if conv is None else map(conv, c))
+             for c, conv in zip(zip(*chunk), convs)],
+            schema=aschema)
+
+
+def _read_tasks(reader: XmlHiveReader, tasks, batches):
+    for ids in batches:
+        for i in ids.column(0).to_pylist():
+            yield from reader.read(XmlInputPartition(tasks.value[i]))
+
+
+def scan(spark, reader: XmlHiveReader, tasks: list) -> DataFrame:
+    """A DataFrame of ``reader`` over read tasks planned on the driver:
+    one ``mapInArrow`` over ``spark.range(n, numPartitions=n)``, where
+    Spark task *i* reads ``tasks[i]``. The tasks travel in a broadcast,
+    so the pickled command does not grow with them. No Python
+    DataSource is planned, so nothing is pushed into the scan and no
+    planner process starts; an all-empty input is one empty task, like
+    ``partitions()``."""
+    ship_package(spark)
+    tasks = tasks or [()]
+    kernel = partial(_read_tasks, reader, spark.sparkContext.broadcast(tasks))
+    kernel.__name__ = "xmlhive_scan"  # the MapInArrow node's label
+    return spark.range(len(tasks), numPartitions=len(tasks)).mapInArrow(
+        kernel, reader.schema)
 
 
 _REGISTERED_SESSIONS: set[int] = set()
@@ -271,8 +327,8 @@ def check_worker_cwd(cwd, pkg_root, digest: str) -> None:
 
 def ship_package(spark) -> None:
     """Make ``xml_hive_spark`` importable in Python workers regardless of
-    the driver process's cwd/sys.path: the DataSource class is pickled by
-    reference, so the data-source worker must be able to import the
+    the driver process's cwd/sys.path: the reader and the DataSource are
+    pickled by reference, so their workers must be able to import the
     package. ``addPyFile`` puts the zipped package on every worker's
     path, once per Spark application; on a local master the JVM's working
     directory is checked first (:func:`check_worker_cwd`). The zip is
@@ -324,5 +380,8 @@ def register(spark) -> None:
                 "re-enabled",
                 stacklevel=2,
             )
-        spark.dataSource.register(XmlHiveDataSource)
+        # a subclass made here is pickled by value, so the planner
+        # process sees this session's packing numbers
+        spark.dataSource.register(type(XmlHiveDataSource.__name__, (XmlHiveDataSource,),
+                                       {"pack": pack_params(spark)}))
         _REGISTERED_SESSIONS.add(key)
