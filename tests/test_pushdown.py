@@ -204,7 +204,8 @@ def test_reader_accepts_and_returns_by_reference(tmp_path):
 
     p = tmp_path / "d.xml"
     p.write_bytes(FLAT_XML)
-    reader = XmlHiveReader(SCHEMA, {"rowtag": "row", "path": str(p)})
+    reader = XmlHiveReader(SCHEMA, {"rowtag": "row", "path": str(p)},
+                           pack=(4 << 20, 1))
     supported = EqualTo(("name",), "alpha")
     unsupported = EqualTo(("nope",), 1)
     leftover = list(reader.pushFilters([supported, unsupported]))

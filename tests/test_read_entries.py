@@ -8,6 +8,9 @@ filter) can be reused by a later query of the same frame."""
 from __future__ import annotations
 
 import gzip
+import json
+from datetime import date, datetime, timedelta, timezone
+from decimal import Context, Decimal
 
 import pytest
 from pyspark.sql.types import (
@@ -18,7 +21,11 @@ from pyspark.sql.types import (
 )
 
 from xml_hive_spark.reader import read_xml
-from xml_hive_spark.sources.xml_datasource import register
+from xml_hive_spark.sources.xml_datasource import (
+    XmlHiveDataSource,
+    register,
+    task_frame,
+)
 
 
 def _field(name, dtype, kind="element"):
@@ -47,6 +54,42 @@ XSD = """<?xml version="1.0" encoding="UTF-8"?>
   </xs:complexType>
 </xs:schema>
 """
+
+
+RICH_XSD = """<?xml version="1.0" encoding="UTF-8"?>
+<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+  <xs:complexType name="itemType">
+    <xs:sequence>
+      <xs:element name="price" type="xs:decimal"/>
+      <xs:element name="shipped" type="xs:date" minOccurs="0"/>
+      <xs:element name="at" type="xs:dateTime" minOccurs="0"/>
+    </xs:sequence>
+    <xs:attribute name="no" type="xs:int"/>
+  </xs:complexType>
+  <xs:complexType name="saleType">
+    <xs:sequence>
+      <xs:element name="placed" type="xs:date"/>
+      <xs:element name="stamp" type="xs:dateTime"/>
+      <xs:element name="total" type="xs:decimal"/>
+      <xs:element name="item" type="itemType" maxOccurs="unbounded"/>
+    </xs:sequence>
+    <xs:attribute name="id" type="xs:long"/>
+  </xs:complexType>
+</xs:schema>
+"""
+
+# (placed, stamp, total, [(price, shipped, at)]): zoned, offset, naive
+# and fractional-second stamps; decimals at DecimalType(38, 18)'s edges
+RICH_SALES = [
+    ("2024-02-29", "2024-02-29T23:59:59Z", "12.5",
+     [("0.10", "2024-03-01", "2024-03-01T08:00:00+05:30")]),
+    ("1999-12-31", "1999-12-31T12:00:00.123456", "-0.000000000000000001",
+     [("1", None, None), ("2.000000000000000001", "2000-01-01", None)]),
+    ("1970-01-01", "1970-01-01T00:00:00-08:00",
+     "99999999999999999999.999999999999999999",
+     [("-3.25", None, "1969-12-31T23:59:59.5Z")]),
+    ("2038-01-19", "2038-01-19T03:14:08", "0", []),
+]
 
 
 def _flat_doc(ids, value=lambda i: f"x{i}") -> bytes:
@@ -82,6 +125,29 @@ def _nested_xsd(d):
     xsd = str(d / "o.xsd")
     return str(d / "o.xml"), "order", {"xsd": xsd, "sep_tag_type": "orderType"}, \
         {"xsd": xsd, "sepTagType": "orderType"}, None
+
+
+def _sales_doc() -> bytes:
+    def opt(tag, v):
+        return "" if v is None else f"<{tag}>{v}</{tag}>"
+
+    body = []
+    for i, (placed, stamp, total, items) in enumerate(RICH_SALES):
+        lines = "".join(f'<item no="{k}"><price>{price}</price>'
+                        f'{opt("shipped", shipped)}{opt("at", at)}</item>'
+                        for k, (price, shipped, at) in enumerate(items))
+        body.append(f'<sale id="{i}"><placed>{placed}</placed><stamp>{stamp}</stamp>'
+                    f'<total>{total}</total>{lines}</sale>')
+    return ("<sales>" + "".join(body) + "</sales>").encode()
+
+
+def _nested_rich(d):
+    (d / "s.xml").write_bytes(_sales_doc())
+    (d / "s.xsd").write_text(RICH_XSD)
+    xsd = str(d / "s.xsd")
+    return str(d / "s.xml"), "sale", \
+        {"xsd": xsd, "sep_tag_type": "saleType", "rich_types": True}, \
+        {"xsd": xsd, "sepTagType": "saleType", "richTypes": "true"}, None
 
 
 def _inferred(d):
@@ -120,6 +186,7 @@ CASES = {
     "flat-columnar": (_flat_columnar, 400),
     "flat-entities": (_flat_entities, 300),
     "nested-xsd": (_nested_xsd, 60),
+    "nested-rich-types": (_nested_rich, len(RICH_SALES)),
     "inferred": (_inferred, 40),
     "gzip": (_gzip, 200),
     "packed-small-files": (_packed, 120),
@@ -147,6 +214,51 @@ def test_entries_return_same_rows_and_partitions(spark, tmp_path, case):
     assert by_read_xml.rdd.getNumPartitions() == by_source.rdd.getNumPartitions()
 
 
+def _micros(stamp):
+    """Epoch microseconds of an xs:dateTime; a stamp without a zone is
+    local time, as pyspark's Arrow conversion reads a naive datetime."""
+    if stamp is None:
+        return None
+    at = datetime.fromisoformat(stamp.replace("Z", "+00:00"))
+    return (at.astimezone(timezone.utc) - EPOCH) // timedelta(microseconds=1)
+
+
+def _decimal(text):
+    return format(Decimal(text).quantize(Decimal(1).scaleb(-18),
+                                         context=Context(prec=38)), "f")
+
+
+def _day(text):
+    return None if text is None else date.fromisoformat(text)
+
+
+EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+
+
+def test_rich_types_values_on_both_entries(spark, tmp_path):
+    """Dates, timestamps and decimals, top-level and nested, read the
+    same values on both entries: the values the Python DataSource
+    worker's own tuple conversion gave the ``format("xmlhive")`` entry."""
+    path, row_tag, kwargs, options, _ = _nested_rich(tmp_path)
+    register(spark)
+    reader = spark.read.format("xmlhive")
+    for k, v in {"rowTag": row_tag, "path": path, **options}.items():
+        reader = reader.option(k, v)
+    want = [
+        (i, _day(placed), _micros(stamp), _decimal(total),
+         [(k, _decimal(price), _day(shipped), _micros(at))
+          for k, (price, shipped, at) in enumerate(items)])
+        for i, (placed, stamp, total, items) in enumerate(RICH_SALES)
+    ]
+    canon = ["id", "placed", "unix_micros(stamp)", "cast(total AS string)",
+             "transform(item, i -> struct(i.no, cast(i.price AS string),"
+             " i.shipped, unix_micros(i.at)))"]
+    for df in (reader.load(), read_xml(spark, path, row_tag, **kwargs)):
+        got = [(r[0], r[1], r[2], r[3], [tuple(x) for x in r[4]])
+               for r in df.selectExpr(*canon).collect()]
+        assert got == want
+
+
 def test_filtered_then_full_count_on_one_frame(spark, tmp_path):
     """One ``read_xml`` frame answers a filtered count and then a full
     count: 3 then 10. A Python DataSource scan reuses the filtered
@@ -167,8 +279,27 @@ def test_filtered_then_full_count_on_one_frame(spark, tmp_path):
     assert "MapInArrow xmlhive_scan" in plan
 
 
+def test_each_partition_carries_only_its_task(spark):
+    """``scan``'s input: partition *i* holds one row, task *i*."""
+    tasks = [((f"/d/f{i}.xml", 0, 10 + i, "TEXT", 0),) for i in range(7)]
+    frame = task_frame(spark, tasks)
+    assert frame.rdd.getNumPartitions() == 7
+    parts = frame.rdd.glom().collect()
+    assert [[json.loads(r.task) for r in p] for p in parts] == \
+        [[[list(s) for s in t]] for t in tasks]
+
+
+def test_unbound_source_refuses_to_plan_paths(tmp_path):
+    """Planning packs small files by a session's numbers, so a source
+    that ``register`` did not bind to a session refuses a path read."""
+    (tmp_path / "a.xml").write_bytes(_flat_doc(range(3)))
+    reader = XmlHiveDataSource({"rowTag": "r", "path": str(tmp_path)}).reader(FLAT)
+    with pytest.raises(ValueError, match="register"):
+        reader.partitions()
+
+
 def test_scan_command_does_not_grow_with_tasks(spark, tmp_path):
-    """The read tasks reach each Spark task through a broadcast: the
+    """Each read task reaches its Spark task through its input row: the
     pickled Python command of a 40-file read is the size of a 1-file
     read's."""
     for i in range(40):

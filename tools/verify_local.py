@@ -2,10 +2,10 @@
 query on Spark and its oracle on DuckDB at the given SF, compare
 row-count, column names, and order-insensitive values.
 
-Usage: python tools/verify_local.py [--timeout S] [sf_dir] [query ...]
+Usage: python tools/verify_local.py [sf_dir] [query ...]
 
-Each query gets ``--timeout`` seconds (default 600) on each engine: past
-it, the Spark jobs are cancelled or DuckDB is interrupted, the query is
+Each query gets ``QUERY_TIMEOUT_S`` seconds on each engine: past it,
+the Spark jobs are cancelled or DuckDB is interrupted, the query is
 reported as a TIMEOUT failure, and the run moves on. The Spark session
 takes every core this process may run on.
 """
@@ -73,6 +73,10 @@ def canon_rows(cols, rows):
     return sorted("|".join(_norm(r[i]) for i in order) for r in rows)
 
 
+# seconds a query may run on each engine before it is reported as TIMEOUT
+QUERY_TIMEOUT_S = 600
+
+
 class Deadline:
     """Context manager that calls ``cancel`` once ``seconds`` pass inside
     the block; ``fired`` tells whether it did."""
@@ -99,8 +103,6 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
     ap.add_argument("queries", nargs="*", help="names to check (default: all)")
-    ap.add_argument("--timeout", type=float, default=600.0,
-                    help="seconds per query on each engine")
     args = ap.parse_args()
     sf_dir, only = args.sf_dir, set(args.queries)
 
@@ -120,7 +122,7 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            with Deadline(args.timeout, spark.sparkContext.cancelAllJobs) as dl:
+            with Deadline(QUERY_TIMEOUT_S, spark.sparkContext.cancelAllJobs) as dl:
                 df = qd.fn(spark, sf_dir)
                 s_cols = df.columns
                 # toPandas, NOT collect: the driver canonicalizes the Spark
@@ -130,7 +132,7 @@ def main() -> int:
                 s_rows = list(df.toPandas().itertuples(index=False, name=None))
         except Exception as e:  # noqa: BLE001
             failures.append(name)
-            why = (f"TIMEOUT after {args.timeout:g} s" if dl.fired
+            why = (f"TIMEOUT after {QUERY_TIMEOUT_S:g} s" if dl.fired
                    else f"error: {str(e).splitlines()[0][:200]}")
             print(f"FAIL  {name}: spark {why}")
             continue
@@ -138,7 +140,7 @@ def main() -> int:
             print(f"ok*   {name}: rows-only ({len(s_rows)} rows)")
             continue
         try:
-            with Deadline(args.timeout, con.interrupt) as dl:
+            with Deadline(QUERY_TIMEOUT_S, con.interrupt) as dl:
                 res = con.sql(qd.oracle)
                 d_cols = [c for c in res.columns]
                 # go through pandas like the driver's canonicalizer does —
@@ -149,7 +151,7 @@ def main() -> int:
                 d_rows = list(pdf.itertuples(index=False, name=None))
         except Exception as e:  # noqa: BLE001
             failures.append(name)
-            why = (f"TIMEOUT after {args.timeout:g} s" if dl.fired
+            why = (f"TIMEOUT after {QUERY_TIMEOUT_S:g} s" if dl.fired
                    else f"error: {str(e).splitlines()[0][:200]}")
             print(f"FAIL  {name}: duckdb {why}")
             continue

@@ -1208,15 +1208,12 @@ def pack_small_files(spark: SparkSession, items: list, partition_bytes: int) -> 
 
 
 def plan_tasks(paths: list[str], row_tag: str, partition_bytes: int,
-               pack: tuple[int, int] | None) -> list[tuple]:
+               pack: tuple[int, int]) -> list[tuple]:
     """Read tasks over ``paths``: each a tuple of annotated splits read in
     order. A file cut into byte ranges gives one task per split; whole
     files are packed into shared tasks by :func:`pack_runs` with ``pack``
-    = :func:`pack_params`, or read one file per task when ``pack`` is
-    None."""
+    = :func:`pack_params`."""
     splits = plan_annotated_splits(paths, row_tag, partition_bytes)
-    if pack is None:
-        return [(s,) for s in splits]
     splits_per_file = Counter(s[0] for s in splits)
     return [tuple(t) for t in pack_runs([
         (s, os.path.getsize(s[0]) if s[2] == GZIP_SPLIT_END else s[2] - s[1],
@@ -1361,8 +1358,8 @@ def read_xml(
     Catalyst applies them after the scan.
 
     Splits are planned once, here on the driver, and read by one
-    ``mapInArrow`` over ``spark.range(n)``: Spark task *i* reads the
-    *i*-th planned group of splits with
+    ``mapInArrow`` over one row per planned task: Spark task *i* reads
+    the *i*-th planned group of splits with
     :class:`~xml_hive_spark.sources.xml_datasource.XmlHiveReader`, the
     reader behind ``spark.read.format("xmlhive")``.
     """

@@ -10,6 +10,8 @@ AvroFromXmlInputFormat.scala:49 opens every split at byte 0), and
 (AvroFromXmlInputFormat.scala:62-76), yielding Arrow batches instead of
 per-record Writables. :func:`scan` runs the same ``read`` over tasks
 planned on the driver, through one ``mapInArrow`` (``read_xml``).
+:func:`register` binds the session's small-file packing numbers to the
+source, so a ``paths``/``path`` read needs a registered source.
 
 Usage::
 
@@ -29,8 +31,6 @@ AvroFromXmlSerde.scala:21-23):
 - ``sepTagTypeNs``     — row type namespace (``xml.separator.tag.type.ns``)
 - ``paths`` / ``path`` — newline-separated files, a dir, or a glob
 - ``partitionBytes``   — target bytes per input partition
-- ``splits``           — JSON list of annotated splits planned by the
-  caller, one per task, in place of ``paths``
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ from itertools import islice
 
 from pyspark.sql import DataFrame
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from xml_hive_spark.reader import (
     DEFAULT_PARTITION_BYTES,
@@ -120,7 +120,7 @@ class XmlHiveDataSource(DataSource):
 
     # (spark.sql.files.openCostInBytes, defaultParallelism) of the
     # session :func:`register` bound this class to: partitions() packs
-    # small files by them, like read_xml. None reads one file per task.
+    # small files by them, like read_xml
     pack = None
 
     def reader(self, schema: StructType) -> "XmlHiveReader":
@@ -131,8 +131,8 @@ class XmlHiveReader(DataSourceReader):
     """The per-task record reader of both entries: ``read(partition)``
     is what ``spark.read.format("xmlhive")`` runs in its read tasks and
     what :func:`scan` runs for ``read_xml``. ``partitions()`` is the
-    DataSource's planner: the ``splits`` option (annotated splits planned
-    by the caller, one per task) or the splits of ``paths``/``path``."""
+    DataSource's planner over ``paths``/``path``, packing small files by
+    ``pack`` (:func:`~xml_hive_spark.reader.pack_params`)."""
 
     def __init__(self, schema: StructType, options, pack=None):
         self._schema = schema
@@ -199,6 +199,10 @@ class XmlHiveReader(DataSourceReader):
         if tasks is None:
             if self._paths is None:
                 raise ValueError("xmlhive: no input path given")
+            if self._pack is None:
+                raise ValueError(
+                    "xmlhive: the source is not bound to a session; load it "
+                    "after xml_hive_spark.sources.xml_datasource.register(spark)")
             tasks = plan_tasks(self._paths, self._row_tag,
                                self._partition_bytes, self._pack)
         # Spark requires at least one partition (all-empty inputs would
@@ -238,8 +242,9 @@ class XmlHiveReader(DataSourceReader):
 
 
 # rows per Arrow batch of the tuple path: Spark's default
-# spark.sql.execution.arrow.maxRecordsPerBatch, the size the DataSource
-# worker cut tuples into
+# spark.sql.execution.arrow.maxRecordsPerBatch. Like the flat path's
+# batch size, it is the reader's own, so a session's setting of that
+# conf does not change it; it changes batching only, never values
 ROW_BATCH = 10_000
 
 
@@ -263,26 +268,42 @@ def rows_to_batches(rows, schema: StructType):
             schema=aschema)
 
 
-def _read_tasks(reader: XmlHiveReader, tasks, batches):
-    for ids in batches:
-        for i in ids.column(0).to_pylist():
-            yield from reader.read(XmlInputPartition(tasks.value[i]))
+_TASK_SCHEMA = StructType([StructField("task", StringType(), False)])
+
+
+def task_frame(spark, tasks: list) -> DataFrame:
+    """One row per read task, one task per partition: row *i* is
+    ``tasks[i]`` as JSON. The rows are parallelized by the driver and
+    turned into Spark rows in the JVM (what ``createDataFrame`` does
+    with a local list, without its partition count), so each partition
+    holds only its own task and no Python worker runs to build them."""
+    sc = spark.sparkContext
+    rows = sc.parallelize([(json.dumps(t),) for t in tasks], len(tasks))
+    jvm = sc._jvm
+    jrdd = jvm.SerDeUtil.toJavaArray(jvm.SerDeUtil.pythonToJava(rows._jrdd, True))
+    return DataFrame(spark._jsparkSession.applySchemaToPythonRDD(
+        jrdd.rdd(), _TASK_SCHEMA.json()), spark)
+
+
+def _read_tasks(reader: XmlHiveReader, batches):
+    for batch in batches:
+        for task in batch.column(0).to_pylist():
+            splits = tuple(tuple(s) for s in json.loads(task))
+            yield from reader.read(XmlInputPartition(splits))
 
 
 def scan(spark, reader: XmlHiveReader, tasks: list) -> DataFrame:
     """A DataFrame of ``reader`` over read tasks planned on the driver:
-    one ``mapInArrow`` over ``spark.range(n, numPartitions=n)``, where
-    Spark task *i* reads ``tasks[i]``. The tasks travel in a broadcast,
-    so the pickled command does not grow with them. No Python
+    one ``mapInArrow`` over :func:`task_frame`, where Spark task *i*
+    reads ``tasks[i]`` from its input row, so neither the pickled
+    command nor any one task carries the whole task list. No Python
     DataSource is planned, so nothing is pushed into the scan and no
     planner process starts; an all-empty input is one empty task, like
     ``partitions()``."""
     ship_package(spark)
-    tasks = tasks or [()]
-    kernel = partial(_read_tasks, reader, spark.sparkContext.broadcast(tasks))
+    kernel = partial(_read_tasks, reader)
     kernel.__name__ = "xmlhive_scan"  # the MapInArrow node's label
-    return spark.range(len(tasks), numPartitions=len(tasks)).mapInArrow(
-        kernel, reader.schema)
+    return task_frame(spark, tasks or [()]).mapInArrow(kernel, reader.schema)
 
 
 _REGISTERED_SESSIONS: set[int] = set()
