@@ -87,34 +87,54 @@ class TestArtifactRecovery:
         """A half-reaped/corrupt artifact occupying the cache slot must
         not poison queries: the rebuild's rename fails (destination
         non-empty), _load fails (garbage model), and the fresh build is
-        served from its tmp dir — model and lists from ONE build."""
+        served from its tmp dir — model and lists from ONE build. Two
+        corpses: a garbage model with no lists (``_load`` stops at the
+        lists check), and real list parquet beside a truncated model
+        (``_load`` reaches ``np.load`` and its ``except``)."""
+        import io
         import shutil
+        import zipfile
         from pathlib import Path
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
         from xml_hive_spark.operators import t
 
         key = ann_index._corpus_key(sf_dir, 16, 3)
         out = ann_index._index_dir(key)
-        ann_index._MEM_CACHE.clear()
-        shutil.rmtree(out, ignore_errors=True)
-        for stray in out.parent.glob(f"{out.name}.tmp*"):
-            shutil.rmtree(stray, ignore_errors=True)  # pre-fix leftovers
-        out.mkdir(parents=True)
-        (out / "model.npz").write_bytes(b"this is not a numpy archive")
-        (out / "junk").write_text("reaper leftovers")  # rename must fail
+        npz = io.BytesIO()
+        np.savez(npz, centroids=np.zeros((2, 4)), books=np.zeros((1, 2, 4)))
+        for with_lists in (False, True):
+            ann_index._MEM_CACHE.clear()
+            shutil.rmtree(out, ignore_errors=True)
+            for stray in out.parent.glob(f"{out.name}.tmp*"):
+                shutil.rmtree(stray, ignore_errors=True)  # pre-fix leftovers
+            out.mkdir(parents=True)
+            if with_lists:
+                (out / "lists" / "cluster=0").mkdir(parents=True)
+                pq.write_table(pa.table({"vec_id": [0], "hx": ["00"]}),
+                               out / "lists" / "cluster=0" / "part-0.parquet")
+                (out / "model.npz").write_bytes(npz.getvalue()[:len(npz.getvalue()) // 2])
+                with pytest.raises(zipfile.BadZipFile):
+                    np.load(out / "model.npz")
+                assert ann_index._load(out) is None
+            else:
+                (out / "model.npz").write_bytes(b"this is not a numpy archive")
+            (out / "junk").write_text("reaper leftovers")  # rename must fail
 
-        idx = ann_index.ivf_pq_index(spark, sf_dir)
-        n = t(spark, sf_dir, "embeddings").count()
-        assert Path(idx.lists_path).exists()
-        assert idx.lists(spark).count() == n
-        # the slot must have been REPAIRED: the fresh build now occupies
-        # the cache path itself (no stranded tmp index)
-        assert Path(idx.lists_path).parent == out
-        leftovers = [p for p in out.parent.glob(f"{out.name}.tmp*")]
-        assert not leftovers, leftovers
-        # and the query built on it still answers
-        got = all_queries()["cosine_topk_ivf_pq_probed"].fn(spark, sf_dir)
-        assert got.count() == 25
+            idx = ann_index.ivf_pq_index(spark, sf_dir)
+            n = t(spark, sf_dir, "embeddings").count()
+            assert Path(idx.lists_path).exists()
+            assert idx.lists(spark).count() == n
+            # the slot must have been REPAIRED: the fresh build now occupies
+            # the cache path itself (no stranded tmp index)
+            assert Path(idx.lists_path).parent == out
+            leftovers = [p for p in out.parent.glob(f"{out.name}.tmp*")]
+            assert not leftovers, leftovers
+            # and the query built on it still answers
+            got = all_queries()["cosine_topk_ivf_pq_probed"].fn(spark, sf_dir)
+            assert got.count() == 25
         # reset so later tests rebuild a clean artifact
         ann_index._MEM_CACHE.clear()
         shutil.rmtree(out, ignore_errors=True)

@@ -88,6 +88,21 @@ def test_file_roundtrip(tmp_path):
         assert tuple(got) == tuple(orig)
 
 
+def test_blocks_with_byte_sizes_decode():
+    """An array or map may come in several blocks, and a negative block
+    count is followed by the block's byte size: the spec allows both,
+    though this module's writer emits one plain block."""
+    from xml_hive_spark.sources.avro_ocf import _raw_decoder, _Reader
+
+    # [1, 2] as one sized block (-2, 2 bytes) and [3] as a plain block
+    arr = _Reader(bytes([3, 4, 2, 4, 2, 6, 0]))
+    assert _raw_decoder(ArrayType(LongType(), False))(arr) == [1, 2, 3]
+    assert arr.pos == 7
+    # {"a": 1} as a sized block (-1, 3 bytes): key length 1, "a", 1
+    m = _Reader(bytes([1, 6, 2]) + b"a" + bytes([2, 0]))
+    assert _raw_decoder(MapType(StringType(), LongType(), False))(m) == {"a": 1}
+
+
 def test_container_layout(tmp_path):
     p = str(tmp_path / "t.avro")
     write_ocf_file(iter(ROWS), WIDE, p, codec="null")
@@ -123,6 +138,7 @@ def test_spark_roundtrip_distributed(spark, tmp_path):
     parts = [f for f in os.listdir(out) if f.endswith(".avro")]
     assert len(parts) == 4  # one file per partition, executor-written
     back = read_avro_ocf(spark, out, df.schema)
+    assert "MapInArrow avro_ocf_scan" in back._jdf.queryExecution().executedPlan().toString()
     assert back.count() == 1000
     assert back.agg(F.sum("a"), F.sum("c")).collect() == df.agg(
         F.sum("a"), F.sum("c")
@@ -130,6 +146,21 @@ def test_spark_roundtrip_distributed(spark, tmp_path):
     assert sorted(r.b for r in back.select("b").collect()) == sorted(
         f"s{i}" for i in range(1000)
     )
+
+    # every type, with nulls, through both Arrow conversions: rows out of
+    # Spark into the writer's tuples, and the reader's tuples back in
+    wide = spark.createDataFrame(ROWS, WIDE).repartition(2)
+    write_avro_ocf(wide, str(tmp_path / "wide"))
+    back = read_avro_ocf(spark, str(tmp_path / "wide"), WIDE)
+    assert back.schema == WIDE
+    assert sorted(map(tuple, back.collect()), key=repr) == sorted(
+        map(tuple, wide.collect()), key=repr)
+
+    # an empty frame writes no part file and reads back as 0 rows
+    empty = str(tmp_path / "empty")
+    write_avro_ocf(spark.createDataFrame([], WIDE), empty)
+    assert not [f for f in os.listdir(empty) if f.endswith(".avro")]
+    assert read_avro_ocf(spark, empty, WIDE).collect() == []
 
 
 def test_write_avro_wrapper_falls_back(spark, tmp_path):

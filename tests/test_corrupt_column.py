@@ -5,7 +5,9 @@ null. The reference just warns-and-drops (AvroTransormer.scala:185)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql.types import (
+    BinaryType,
     IntegerType,
     StringType,
     StructField,
@@ -237,3 +239,31 @@ def test_gzip_pushdown_and_corrupt_capture_compose(spark, tmp_path):
     # filter FOR the corrupt rows: the quarantine query
     q = load().filter("_corrupt_record IS NOT NULL").collect()
     assert len(q) == 1 and q[0].name is None
+
+
+def test_only_malformed_records_are_dropped_or_nulled(monkeypatch):
+    """DROPMALFORMED and PERMISSIVE absorb a malformed record (a parse
+    or coercion error), nothing else: a reader bug, or a schema type the
+    coercers do not cover, raises under every mode instead of becoming
+    dropped or null rows."""
+    from xml_hive_spark import reader
+
+    good = b"<item><name>x</name><qty>5</qty></item>"
+    assert reader.parse_record_safe(
+        b"<item><name>x</name><qty>five</qty></item>", _schema(), "DROPMALFORMED") is None
+    assert reader.parse_record_safe(b"<item><name>x", _schema(), "PERMISSIVE") == (None, None)
+
+    def reader_bug(elem, struct):
+        raise RuntimeError("reader bug")
+
+    with monkeypatch.context() as m:
+        m.setattr(reader, "assemble_row", reader_bug)
+        for mode in ("PERMISSIVE", "DROPMALFORMED", "FAILFAST"):
+            with pytest.raises(RuntimeError, match="reader bug"):
+                reader.parse_record_safe(good, _schema(), mode)
+
+    untyped = StructType([StructField("qty", BinaryType(), True,
+                                      metadata={"xmlKind": "element", "xmlName": "qty"})])
+    for mode in ("PERMISSIVE", "DROPMALFORMED"):
+        with pytest.raises(TypeError, match="unsupported scalar type"):
+            reader.parse_record_safe(good, untyped, mode)

@@ -1,7 +1,7 @@
 """Small-file packing: ``read_xml`` and ``read_avro_ocf`` group runs of
 small whole files into one read task by Spark's small-file rule
-(``reader.pack_small_files``), while byte-range splits of a multi-split
-file stay one per task. A packed read must return exactly the rows of
+(``reader.pack_runs`` with the session's ``pack_params``), while
+byte-range splits of a multi-split file stay one per task. A packed read must return exactly the rows of
 the unpacked read, in the same order."""
 
 from __future__ import annotations
@@ -21,7 +21,8 @@ from pyspark.sql.types import (
 
 from xml_hive_spark.reader import (
     _read_split,
-    pack_small_files,
+    pack_params,
+    pack_runs,
     plan_annotated_splits,
     read_xml,
     resolve_paths,
@@ -74,16 +75,17 @@ def test_rule_packs_whole_files_and_keeps_ranges_alone(spark):
     # 4 tasks of 3; a byte-range split closes the run and stays alone
     assert spark.sparkContext.defaultParallelism == 4
     whole = [(f"f{i}", 100, True) for i in range(12)]
-    assert pack_small_files(spark, whole, 128 << 20) == [
+    pack = pack_params(spark)
+    assert pack_runs(whole, 128 << 20, *pack) == [
         [f"f{i}" for i in range(j, j + 3)] for j in range(0, 12, 3)
     ]
-    groups = pack_small_files(
-        spark, whole[:1] + [("big@0", 100, False), ("big@100", 100, False)] + whole[1:],
-        128 << 20)
+    groups = pack_runs(
+        whole[:1] + [("big@0", 100, False), ("big@100", 100, False)] + whole[1:],
+        128 << 20, *pack)
     assert groups == [["f0"], ["big@0"], ["big@100"], ["f1", "f2", "f3", "f4"],
                       ["f5", "f6", "f7", "f8"], ["f9", "f10", "f11"]]
     # partition_bytes caps a task: every whole file alone
-    assert len(pack_small_files(spark, whole, 1024)) == 12
+    assert len(pack_runs(whole, 1024, *pack)) == 12
 
 
 def test_mixed_dir_same_rows_same_order(spark, tmp_path):

@@ -15,6 +15,7 @@ path."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     EqualNullSafe,
@@ -490,8 +491,11 @@ def test_upstream_plan_reuse_leaks_pushed_filters(spark, tmp_path):
     reader's state: the planning worker builds a FRESH DataSourceReader
     per pushdown run (pyspark/sql/worker/data_source_pushdown_filters.py
     creates `data_source.reader(schema)` each invocation); the stale
-    reuse is JVM-side. Mitigations documented in README: re-`load()`
-    per query, or disable spark.sql.python.filterPushdown.enabled.
+    reuse is JVM-side. A ``USING xmlhive`` temp view leaks the same way
+    (count 3 then 3, sum 3 where the answer is 45), and turning
+    spark.sql.python.filterPushdown.enabled off is no way out: Spark
+    then refuses every read of a reader that implements pushFilters.
+    The README's mitigation is re-`load()` per query, or `read_xml`.
     STRICT pin: if an upstream fix lands, this test FAILS and the
     README caveat comes out."""
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
@@ -536,4 +540,26 @@ def test_upstream_plan_reuse_leaks_pushed_filters(spark, tmp_path):
     # a query WITH a pushable filter re-plans and is correct
     assert df.filter("qty < 3").count() == 3
     # a fresh load is always correct
+    assert load().count() == 10
+
+    # the SQL entry: a temp view's filterless queries reuse the filtered
+    # plan too (right answers: 10 and 45)
+    spark.sql(f"CREATE OR REPLACE TEMPORARY VIEW leak_v (name STRING, qty INT) "
+              f"USING xmlhive OPTIONS (rowTag 'item', path '{p}')")
+    try:
+        assert spark.sql("SELECT count(*) FROM leak_v WHERE qty < 3").first()[0] == 3
+        assert spark.sql("SELECT count(*) FROM leak_v").first()[0] == 3
+        assert spark.sql("SELECT sum(qty) FROM leak_v").first()[0] == 3
+    finally:
+        spark.catalog.dropTempView("leak_v")
+
+    # with pushdown off, Spark refuses to read through this reader at all
+    key = "spark.sql.python.filterPushdown.enabled"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(AnalysisException, match="DATA_SOURCE_PUSHDOWN_DISABLED"):
+            load().count()
+    finally:
+        spark.conf.set(key, was)
     assert load().count() == 10

@@ -3,14 +3,18 @@ one reader, ``xml_datasource.XmlHiveReader``. Over one input they must
 return the same rows, in the same order, in the same number of
 partitions. ``read_xml`` plans its splits on the driver and scans them
 through one ``mapInArrow``, so no Python DataSource plan (and no pushed
-filter) can be reused by a later query of the same frame."""
+filter) can be reused by a later query of the same frame. The same
+harness, ``xml_datasource.scan``, reads Avro containers, and a lint
+keeps the package off the RDD API."""
 
 from __future__ import annotations
 
+import ast
 import gzip
 import json
 from datetime import date, datetime, timedelta, timezone
 from decimal import Context, Decimal
+from pathlib import Path
 
 import pytest
 from pyspark.sql.types import (
@@ -314,3 +318,59 @@ def test_scan_command_does_not_grow_with_tasks(spark, tmp_path):
     many, df = command_bytes(str(tmp_path))
     assert df.rdd.getNumPartitions() > 1
     assert many == one
+
+
+_RDD_CALLS = {"parallelize", "mapPartitions", "mapPartitionsWithIndex", "flatMap",
+              "foreachPartition", "foreach", "textFile", "wholeTextFiles",
+              "binaryFiles", "emptyRDD"}
+
+
+def rdd_api_sites(src: str) -> set[tuple[str, str]]:
+    """(enclosing function, name) of every RDD-API use in ``src``: an
+    ``.rdd`` attribute, or a call of an RDD method or RDD source."""
+    sites = set()
+
+    def visit(node, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr == "rdd":
+                sites.add((fn, "rdd"))
+            elif (isinstance(child, ast.Call) and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in _RDD_CALLS):
+                sites.add((fn, child.func.attr))
+            visit(child, fn)
+
+    visit(ast.parse(src), "<module>")
+    return sites
+
+
+def test_no_rdd_api_outside_task_frame_lint():
+    """Package code makes no RDD-API Python call, so every Python task
+    runs in one worker pool: scans go through ``xml_datasource.scan`` and
+    writes through ``mapInArrow``. ``task_frame`` alone parallelizes, and
+    its RDD becomes rows in the JVM. Red on a seeded violation, green on
+    the package."""
+    seeded = (
+        "def write(df):\n"
+        "    df.rdd.mapPartitionsWithIndex(lambda i, rows: iter(())).count()\n"
+        "def read(spark, groups):\n"
+        "    rdd = spark.sparkContext.parallelize(groups).flatMap(list)\n"
+        "    return spark.createDataFrame(rdd)\n"
+        "sink = lambda df: df.foreachPartition(print)\n"
+    )
+    assert rdd_api_sites(seeded) == {
+        ("write", "rdd"), ("write", "mapPartitionsWithIndex"),
+        ("read", "parallelize"), ("read", "flatMap"),
+        ("<module>", "foreachPartition"),
+    }
+
+    pkg = Path(__file__).resolve().parent.parent / "xml_hive_spark"
+    found = {
+        (str(p.relative_to(pkg)), fn, name)
+        for p in sorted(pkg.rglob("*.py"))
+        for fn, name in rdd_api_sites(p.read_text())
+    }
+    assert found == {("sources/xml_datasource.py", "task_frame", "parallelize"),
+                     ("sources/xml_datasource.py", "task_frame", "rdd")}

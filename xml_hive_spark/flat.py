@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from xml_hive_spark.reader import parse_record_safe
+from xml_hive_spark.reader import MALFORMED_ERRORS, parse_record_safe
 
 
 def strip_metadata(struct: StructType) -> StructType:
@@ -176,7 +176,7 @@ def _compile_extractor(groups, n_fields: int):
     Equivalence with the generic loop is pinned property-style in
     tests/test_fused_scan.py.
     """
-    ns = {"_dec": _decode}
+    ns = {"_dec": _decode, "_MALFORMED": MALFORMED_ERRORS}
     L = ["def _ex(g):", "    try:"]
     out = ["None"] * n_fields
     for j, (fi, conv, is_elem) in enumerate(groups):
@@ -208,7 +208,7 @@ def _compile_extractor(groups, n_fields: int):
             ns[f"c{j}"] = conv
             L.append(f"{ind}v{fi} = c{j}({dec})")
     L.append(f"        return ({', '.join(out)}{',' if n_fields == 1 else ''})")
-    L.append("    except (ValueError, ArithmeticError, UnicodeDecodeError):")
+    L.append("    except _MALFORMED:")
     L.append("        return None")
     exec("\n".join(L), ns)  # noqa: S102 — source built only from literals
     return ns["_ex"]
@@ -395,7 +395,7 @@ class _Template:
                 vals[fi] = conv(
                     raw.decode("utf-8") if b"&" not in raw else _decode(raw)
                 )
-        except (ValueError, ArithmeticError, UnicodeDecodeError):
+        except MALFORMED_ERRORS:
             return None
         return tuple(vals)
 
@@ -531,7 +531,7 @@ class FlatAssembler:
                     if "<" in t:
                         return None  # matched across structure; be exact
                     vals.append(conv(t))
-        except (ValueError, ArithmeticError, UnicodeDecodeError):
+        except MALFORMED_ERRORS:
             return None  # exact path re-raises under the mode policy
         return tuple(vals)
 

@@ -35,6 +35,7 @@ import hashlib
 import json
 import os
 import shutil
+import zipfile
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -166,8 +167,8 @@ def _load(out: Path) -> IvfPqIndex | None:
     try:
         with np.load(out / "model.npz") as model:
             return IvfPqIndex(model["centroids"], model["books"], str(lists))
-    except Exception:  # truncated zip, bad pickle, missing key, IO error —
-        return None  # any unloadable artifact means: rebuild
+    except (OSError, ValueError, KeyError, EOFError, zipfile.BadZipFile):
+        return None  # truncated zip, not an archive, missing key: rebuild
 
 
 def ivf_pq_index(spark: SparkSession, sf_dir: str, k: int = 16,

@@ -201,10 +201,10 @@ def avro_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     container writer, TestAvroTranformer.scala:53-66; this container has
     no spark-avro jar, so the executable path is our own
     spec-conformant OCF implementation): executors each write one
-    deflate-block container per partition, the read fans out one task
-    per file, and the oracle is the ORIGINAL table row-for-row — any
-    encode/decode divergence (varint zigzag, block framing, sync
-    markers, deflate) breaks the value hash."""
+    deflate-block container per partition, the read packs the part
+    files into read tasks, and the oracle is the ORIGINAL table
+    row-for-row — any encode/decode divergence (varint zigzag, block
+    framing, sync markers, deflate) breaks the value hash."""
     from xml_hive_spark.sources.avro_ocf import read_avro_ocf, write_avro_ocf
 
     out = _roundtrip_dir("avro", sf)

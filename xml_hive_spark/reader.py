@@ -58,6 +58,7 @@ import xml.etree.ElementTree as ET
 from collections import Counter
 from datetime import date, datetime
 from decimal import Decimal
+from functools import partial
 from pathlib import Path
 from typing import BinaryIO, Callable, Iterator
 
@@ -950,6 +951,14 @@ def _bind_unbound_prefixes(record_bytes: bytes) -> bytes:
     return record_bytes[:i] + decls + record_bytes[i:]
 
 
+# what a malformed record raises while it is parsed or its text coerced:
+# ElementTree's ParseError, and ValueError (bad number, date, boolean or
+# utf-8) or ArithmeticError (bad decimal) from a coercion. Anything else
+# (a schema the coercers do not cover, a reader bug) is not the record's
+# fault and propagates under every mode
+MALFORMED_ERRORS = (ET.ParseError, ValueError, ArithmeticError, UnicodeDecodeError)
+
+
 def parse_record(record_bytes: bytes, struct: StructType) -> tuple:
     try:
         elem = ET.fromstring(record_bytes)
@@ -1010,10 +1019,12 @@ def parse_record_safe(record_bytes: bytes, struct: StructType, mode: str):
       corrupt-record sink (``xmlKind: corrupt``), the raw record text
       lands there so downstream can count/route/repair corrupt records
       (spark-xml's ``columnNameOfCorruptRecord`` semantics).
-    Returns the row tuple, None to drop, or raises."""
+    Returns the row tuple, None to drop, or raises. Only
+    :data:`MALFORMED_ERRORS` make a record malformed; any other error
+    raises under every mode."""
     try:
         return parse_record(record_bytes, struct)
-    except Exception:
+    except MALFORMED_ERRORS:
         if mode == "DROPMALFORMED":
             return None
         if mode == "PERMISSIVE":
@@ -1047,7 +1058,7 @@ def plan_splits(
 ) -> list[tuple[str, int, int]]:
     """(file, start, end) byte-range splits (:func:`byte_ranges`).
     ``read_xml`` gives each split of a multi-split file its own task and
-    packs whole-file splits into shared tasks (:func:`pack_small_files`).
+    packs whole-file splits into shared tasks (:func:`pack_runs`).
 
     At 100 TB this is what keeps parallelism = data size / partition_bytes
     rather than = file count (the reference is one task per HDFS split but
@@ -1200,11 +1211,6 @@ def pack_runs(items: list, partition_bytes: int, open_cost: int,
     if run:
         groups.append(run)
     return groups
-
-
-def pack_small_files(spark: SparkSession, items: list, partition_bytes: int) -> list[list]:
-    """:func:`pack_runs` with the session's :func:`pack_params`."""
-    return pack_runs(items, partition_bytes, *pack_params(spark))
 
 
 def plan_tasks(paths: list[str], row_tag: str, partition_bytes: int,
@@ -1391,9 +1397,10 @@ def read_xml(
     if corrupt_column is not None:
         schema = tag_corrupt_field(schema, corrupt_column)
 
-    from xml_hive_spark.sources.xml_datasource import XmlHiveReader, scan
+    from xml_hive_spark.sources.xml_datasource import XmlHiveReader, read_splits, scan
 
     tasks = plan_tasks(resolve_paths(path), row_tag, partition_bytes,
                        pack_params(spark))
-    return scan(spark, XmlHiveReader(schema, {"rowTag": row_tag, "mode": mode}),
-                tasks)
+    reader = XmlHiveReader(schema, {"rowTag": row_tag, "mode": mode})
+    return scan(spark, partial(read_splits, reader), tasks, reader.schema,
+                "xmlhive_scan")

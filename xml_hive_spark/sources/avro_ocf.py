@@ -15,11 +15,14 @@ is implemented here directly:
   float/double, length-prefixed utf8/bytes, union index + value,
   block-encoded arrays/maps
 
-Spark integration is one output file per partition via
-``foreachPartition`` (no driver materialization — the same layout every
-Spark file sink produces) and a distributed ``flatMap`` decode on read.
-Logical types follow spark-avro's mapping: date → int/date, timestamp →
-long/timestamp-micros, DecimalType → bytes/decimal(p,s).
+Spark integration runs on the harness ``read_xml`` uses, one
+``mapInArrow`` per read or write. The sink writes one output file per
+partition from its task (no driver materialization — the same layout
+every Spark file sink produces); the source packs part files into read
+tasks by the reader's small-file rule and decodes each task's files in
+``xml_datasource.scan``. Logical types follow spark-avro's mapping:
+date → int/date, timestamp → long/timestamp-micros, DecimalType →
+bytes/decimal(p,s).
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ import struct
 import zlib
 from datetime import date, datetime, timedelta
 from decimal import Decimal
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -51,6 +55,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from xml_hive_spark.reader import DEFAULT_PARTITION_BYTES, pack_params, pack_runs
+from xml_hive_spark.sources.xml_datasource import rows_to_batches, scan, ship_package
 
 _MAGIC = b"Obj\x01"
 _EPOCH_D = date(1970, 1, 1)
@@ -276,6 +283,16 @@ class _Reader:
         self.pos += k
         return b
 
+    def items(self):
+        """One step per item of an array or map, block by block, up to
+        its 0 terminator (a negative block count is followed by the
+        block's byte size)."""
+        while n := self.long():
+            if n < 0:
+                n = -n
+                self.long()
+            yield from range(n)
+
 
 def _decoder_for(dt, nullable: bool):
     dec = _raw_decoder(dt)
@@ -315,37 +332,10 @@ def _raw_decoder(dt):
         return dec_dec
     if isinstance(dt, ArrayType):
         item = _decoder_for(dt.elementType, dt.containsNull)
-
-        def dec_arr(r):
-            out = []
-            while True:
-                n = r.long()
-                if n == 0:
-                    return out
-                if n < 0:  # block with byte-size prefix
-                    n = -n
-                    r.long()
-                for _ in range(n):
-                    out.append(item(r))
-
-        return dec_arr
+        return lambda r: [item(r) for _ in r.items()]
     if isinstance(dt, MapType):
         val = _decoder_for(dt.valueType, dt.valueContainsNull)
-
-        def dec_map(r):
-            out = {}
-            while True:
-                n = r.long()
-                if n == 0:
-                    return out
-                if n < 0:
-                    n = -n
-                    r.long()
-                for _ in range(n):
-                    k = r.take(r.long()).decode("utf-8")
-                    out[k] = val(r)
-
-        return dec_map
+        return lambda r: {r.take(r.long()).decode("utf-8"): val(r) for _ in r.items()}
     if isinstance(dt, StructType):
         fields = [_decoder_for(f.dataType, f.nullable) for f in dt.fields]
         return lambda r: tuple(d(r) for d in fields)
@@ -411,33 +401,21 @@ def write_ocf_file(
     return n_total
 
 
-def read_ocf_file(path: str, struct: StructType | None = None):
-    """Yield row tuples from one OCF file (codec null/deflate). When
-    ``struct`` is given it drives decoding (names/positions must match
-    the embedded writer schema, which is asserted)."""
+def read_ocf_file(path: str, struct: StructType):
+    """Yield row tuples from one OCF file (codec null/deflate), decoded
+    by ``struct`` (its field names must match the embedded writer
+    schema's, which is asserted)."""
     with open(path, "rb") as f:
         data = f.read()
     if data[:4] != _MAGIC:
         raise ValueError(f"{path}: not an Avro object container file")
     r = _Reader(data, 4)
-    meta: dict[str, bytes] = {}
-    while True:
-        n = r.long()
-        if n == 0:
-            break
-        if n < 0:
-            n = -n
-            r.long()
-        for _ in range(n):
-            k = r.take(r.long()).decode()
-            meta[k] = r.take(r.long())
+    meta = {r.take(r.long()).decode(): r.take(r.long()) for _ in r.items()}
     sync = r.take(16)
     codec = meta.get("avro.codec", b"null").decode()
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported Avro codec: {codec}")
     embedded = json.loads(meta["avro.schema"].decode())
-    if struct is None:
-        raise ValueError("read_ocf_file requires the target StructType")
     ours = struct_to_avro_schema(struct)
     if [f["name"] for f in embedded.get("fields", [])] != [
         f["name"] for f in ours["fields"]
@@ -462,11 +440,29 @@ def read_ocf_file(path: str, struct: StructType | None = None):
 # ----------------------------------------------------------- Spark surface
 
 
+def _write_part(path: str, struct: StructType, codec: str, batches):
+    """One write task: its partition's rows into ``part-NNNNN.avro``
+    under ``path``, named by the partition id; yields ``(part, rows)``."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    part = os.path.join(path, f"part-{TaskContext.get().partitionId():05d}.avro")
+    rows = (row for batch in batches
+            for row in ArrowTableToRowsConversion.convert(
+                pa.Table.from_batches([batch]), struct, return_as_tuples=True))
+    n = write_ocf_file(rows, struct, part, codec=codec)
+    if n == 0:
+        os.remove(part)  # skip empty partitions, like Spark sinks
+    yield pa.RecordBatch.from_pydict({"part": [part], "rows": [n]})
+
+
 def write_avro_ocf(
     df: DataFrame, path: str, mode: str = "overwrite", codec: str = "deflate"
 ) -> None:
     """Distributed Avro sink: one ``part-NNNNN.avro`` per partition,
-    written by executor tasks (driver never sees the data)."""
+    written by its task in one ``mapInArrow`` (the driver sees only each
+    part's name and row count)."""
     if os.path.exists(path):
         if mode == "overwrite":
             import shutil
@@ -475,35 +471,25 @@ def write_avro_ocf(
         elif mode == "error":
             raise FileExistsError(path)
     os.makedirs(path, exist_ok=True)
-    struct = df.schema
-    from xml_hive_spark.sources.xml_datasource import ship_package
-
     ship_package(df.sparkSession)
+    kernel = partial(_write_part, path, df.schema, codec)
+    kernel.__name__ = "avro_ocf_write"
+    df.mapInArrow(kernel, "part string, rows long").collect()
 
-    def write_part(idx: int, rows):
-        part = os.path.join(path, f"part-{idx:05d}.avro")
-        n = write_ocf_file(rows, struct, part, codec=codec)
-        if n == 0:
-            os.remove(part)  # skip empty partitions, like Spark sinks
-        return iter(())
 
-    df.rdd.mapPartitionsWithIndex(write_part).count()  # force execution
+def _read_files(schema: StructType, files):
+    """One read task: Arrow batches of its files' records, in order."""
+    return rows_to_batches(
+        (rec for p in files for rec in read_ocf_file(p, schema)), schema)
 
 
 def read_avro_ocf(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Distributed Avro source: small part files are packed into tasks by
-    the reader's small-file rule, read in file order."""
+    the reader's small-file rule and read in file order, one task per
+    packed group."""
     files = sorted(
         os.path.join(path, f) for f in os.listdir(path) if f.endswith(".avro")
     ) if os.path.isdir(path) else [path]
-    from xml_hive_spark.reader import DEFAULT_PARTITION_BYTES, pack_small_files
-    from xml_hive_spark.sources.xml_datasource import ship_package
-
-    ship_package(spark)
-    groups = pack_small_files(
-        spark, [(f, os.path.getsize(f), True) for f in files], DEFAULT_PARTITION_BYTES
-    )
-    rdd = spark.sparkContext.parallelize(groups, max(1, len(groups))).flatMap(
-        lambda group: (rec for p in group for rec in read_ocf_file(p, schema))
-    )
-    return spark.createDataFrame(rdd, schema)
+    groups = pack_runs([(f, os.path.getsize(f), True) for f in files],
+                       DEFAULT_PARTITION_BYTES, *pack_params(spark))
+    return scan(spark, partial(_read_files, schema), groups, schema, "avro_ocf_scan")

@@ -8,8 +8,9 @@ split planning (but split-SAFE, unlike the reference —
 AvroFromXmlInputFormat.scala:49 opens every split at byte 0), and
 ``XmlHiveReader.read(partition)`` is the per-task ``RecordReader``
 (AvroFromXmlInputFormat.scala:62-76), yielding Arrow batches instead of
-per-record Writables. :func:`scan` runs the same ``read`` over tasks
-planned on the driver, through one ``mapInArrow`` (``read_xml``).
+per-record Writables. :func:`scan` runs read tasks planned on the
+driver through one ``mapInArrow``: ``read_xml`` runs the same ``read``
+there, and ``avro_ocf.read_avro_ocf`` its container decoder.
 :func:`register` binds the session's small-file packing numbers to the
 source, so a ``paths``/``path`` read needs a registered source.
 
@@ -285,25 +286,31 @@ def task_frame(spark, tasks: list) -> DataFrame:
         jrdd.rdd(), _TASK_SCHEMA.json()), spark)
 
 
-def _read_tasks(reader: XmlHiveReader, batches):
+def _run_tasks(read_task, batches):
     for batch in batches:
         for task in batch.column(0).to_pylist():
-            splits = tuple(tuple(s) for s in json.loads(task))
-            yield from reader.read(XmlInputPartition(splits))
+            yield from read_task(json.loads(task))
 
 
-def scan(spark, reader: XmlHiveReader, tasks: list) -> DataFrame:
-    """A DataFrame of ``reader`` over read tasks planned on the driver:
-    one ``mapInArrow`` over :func:`task_frame`, where Spark task *i*
-    reads ``tasks[i]`` from its input row, so neither the pickled
-    command nor any one task carries the whole task list. No Python
-    DataSource is planned, so nothing is pushed into the scan and no
-    planner process starts; an all-empty input is one empty task, like
+def scan(spark, read_task, tasks: list, schema: StructType, name: str) -> DataFrame:
+    """A DataFrame of read tasks planned on the driver: one
+    ``mapInArrow`` (labelled ``name`` in the plan) over
+    :func:`task_frame`, where Spark task *i* runs ``read_task`` on
+    ``tasks[i]`` (as JSON gives it back) from its input row and yields
+    Arrow batches of ``schema``, so neither the pickled command nor any
+    one task carries the whole task list. No Python DataSource is
+    planned, so nothing is pushed into the scan and no planner process
+    starts; an empty task list runs one empty task, like
     ``partitions()``."""
     ship_package(spark)
-    kernel = partial(_read_tasks, reader)
-    kernel.__name__ = "xmlhive_scan"  # the MapInArrow node's label
-    return task_frame(spark, tasks or [()]).mapInArrow(kernel, reader.schema)
+    kernel = partial(_run_tasks, read_task)
+    kernel.__name__ = name
+    return task_frame(spark, tasks or [()]).mapInArrow(kernel, schema)
+
+
+def read_splits(reader: XmlHiveReader, splits):
+    """``reader`` over one task of annotated splits (a :func:`scan` task)."""
+    return reader.read(XmlInputPartition(tuple(tuple(s) for s in splits)))
 
 
 _REGISTERED_SESSIONS: set[int] = set()
