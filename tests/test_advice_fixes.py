@@ -1,9 +1,10 @@
 """Regression tests for the round-2 advisor findings (ADVICE.md):
 
 1. EqualNullSafe with a NaN literal must be deferred to Spark (Spark's
-   ``<=>`` treats NaN as equal to NaN; Python ``==`` does not).
-2. ``xmlhive`` schema(): passing exactly one of xsd=/sepTagType= must be
-   an explicit error, never a silent fall-back to sampled inference.
+   ``<=>`` treats NaN as equal to NaN; Arrow's ``equal`` does not).
+2. Every XML entry's schema resolution: passing exactly one of
+   xsd=/sepTagType= must be an explicit error, never a silent fall-back
+   to sampled inference.
 3. The cross-process plan cache is per-user, version-stamped, and
    rejects tampered/stale-format entries instead of mis-parsing them.
 4. ``register()`` respects an explicit user opt-out of
@@ -20,41 +21,59 @@ import os
 import pytest
 from pyspark.sql.datasource import EqualNullSafe
 
-from xml_hive_spark.sources.pushdown import compile_filter
+from xml_hive_spark.sources.pushdown import compile_filter_arrow
 
-from tests.test_pushdown import SCHEMA
+from tests.test_pushdown import SCHEMA, mask
 
 
 class TestEqualNullSafeNaN:
     def test_nan_literal_deferred(self):
-        # col <=> NaN: Spark yields TRUE for NaN rows; Python == cannot —
-        # the compiler must refuse so Spark evaluates it
-        assert compile_filter(EqualNullSafe(("score",), float("nan")), SCHEMA) is None
+        # col <=> NaN: Spark yields TRUE for NaN rows; Arrow's equal
+        # cannot — the compiler must refuse so Spark evaluates it
+        assert compile_filter_arrow(
+            EqualNullSafe(("score",), float("nan")), SCHEMA) is None
 
     def test_non_nan_literal_still_compiled(self):
-        p = compile_filter(EqualNullSafe(("score",), 2.0), SCHEMA)
-        assert p((1, "a", 2.0)) is True
-        assert p((1, "a", 3.0)) is False
-        assert p((1, "a", None)) is False
+        rows = [(1, "a", 2.0), (1, "a", 3.0), (1, "a", None),
+                (1, "a", float("nan"))]
         # NaN row vs non-NaN literal: False in both engines
-        assert p((1, "a", float("nan"))) is False
+        assert mask(EqualNullSafe(("score",), 2.0), rows) == [True, False, False, False]
 
 
 class TestSchemaOptionPairing:
-    def _ds(self, options):
+    """Exactly one of xsd=/sepTagType= is an error on every entry:
+    ``format("xmlhive")``, ``read_xml`` and ``xmlhive-stream``. No Spark
+    session is needed: each entry resolves its schema first."""
+
+    def _entries(self, fixtures_dir, tmp_path, option, value):
+        """Each entry's schema resolution given ``option`` alone."""
+        from pyspark.sql.types import StringType, StructField, StructType
+
+        from xml_hive_spark.reader import read_xml
         from xml_hive_spark.sources.xml_datasource import XmlHiveDataSource
+        from xml_hive_spark.sources.xml_stream import XmlHiveStreamDataSource
 
-        return XmlHiveDataSource(options=options)
+        arg = {"xsd": "xsd", "sepTagType": "sep_tag_type"}[option]
+        stream = XmlHiveStreamDataSource(
+            {option: value, "rowTag": "book", "path": str(tmp_path)})
+        return [
+            XmlHiveDataSource(options={option: value, "path": "/nope.xml"}).schema,
+            lambda: read_xml(None, str(fixtures_dir / "books" / "data.xml"), "book",
+                             **{arg: value}),
+            stream.schema,
+            lambda: stream.streamReader(StructType([StructField("title", StringType())])),
+        ]
 
-    def test_xsd_alone_raises(self, fixtures_dir):
-        ds = self._ds({"xsd": str(fixtures_dir / "books"), "path": "/nope.xml"})
-        with pytest.raises(ValueError, match="must be passed together"):
-            ds.schema()
+    def test_xsd_alone_raises(self, fixtures_dir, tmp_path):
+        for resolve in self._entries(fixtures_dir, tmp_path, "xsd",
+                                     str(fixtures_dir / "books")):
+            with pytest.raises(ValueError, match="must be passed together"):
+                resolve()
 
-    def test_septagtype_alone_raises(self):
-        ds = self._ds({"sepTagType": "BookType", "path": "/nope.xml"})
-        with pytest.raises(ValueError, match="must be passed together"):
-            ds.schema()
+    def test_septagtype_alone_raises(self, fixtures_dir, tmp_path):
+        for resolve in self._entries(fixtures_dir, tmp_path, "sepTagType", "BookType"):
+            with pytest.raises(ValueError, match="must be passed together"):
+                resolve()
 
 
 class TestPlanCacheHardening:

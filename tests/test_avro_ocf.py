@@ -171,3 +171,64 @@ def test_write_avro_wrapper_falls_back(spark, tmp_path):
     write_avro(df, out)  # no spark-avro jar here → OCF fallback
     back = read_avro_ocf(spark, out, df.schema)
     assert sorted((r.a, r.b) for r in back.collect()) == [(1, "x"), (2, "y")]
+
+
+def _ids(spark, path):
+    schema = StructType([StructField("id", LongType(), False)])
+    return sorted(r.id for r in read_avro_ocf(spark, path, schema).collect())
+
+
+def test_append_keeps_earlier_parts(spark, tmp_path):
+    """Each write names its parts apart, so an append of a one-partition
+    frame sits beside the earlier one-partition write."""
+    out = str(tmp_path / "t")
+    write_avro_ocf(spark.range(3).coalesce(1), out)
+    write_avro_ocf(spark.range(10, 12).coalesce(1), out, mode="append")
+    assert _ids(spark, out) == [0, 1, 2, 10, 11]
+    write_avro_ocf(spark.range(5, 7).coalesce(1), out, mode="overwrite")
+    assert _ids(spark, out) == [5, 6]
+    with pytest.raises(FileExistsError):
+        write_avro_ocf(spark.range(1), out, mode="errorifexists")
+
+
+def test_ignore_leaves_existing_path(spark, tmp_path):
+    out = str(tmp_path / "t")
+    write_avro_ocf(spark.range(3).coalesce(1), out)
+    write_avro_ocf(spark.range(20, 22), out, mode="ignore")
+    assert _ids(spark, out) == [0, 1, 2]
+    write_avro_ocf(spark.range(2), str(tmp_path / "new"), mode="ignore")
+    assert _ids(spark, str(tmp_path / "new")) == [0, 1]
+
+
+def test_unknown_save_mode_raises(spark, tmp_path):
+    with pytest.raises(ValueError, match="save mode"):
+        write_avro_ocf(spark.range(1), str(tmp_path / "t"), mode="apend")
+    assert not (tmp_path / "t").exists()
+
+
+def test_timestamp_holds_the_instant_off_utc(tmp_path, monkeypatch):
+    """pyspark hands the writer naive local times; the part file holds
+    the UTC instant (timestamp-micros), and the reader gives the same
+    naive local time back."""
+    import time
+    from datetime import timezone
+
+    import pyarrow as pa
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    try:
+        struct = StructType([StructField("ts", TimestampType(), True)])
+        table = pa.table({"ts": pa.array([datetime(2023, 7, 1, 12, tzinfo=timezone.utc)],
+                                         pa.timestamp("us", tz="UTC"))})
+        rows = ArrowTableToRowsConversion.convert(table, struct, return_as_tuples=True)
+        assert rows == [(datetime(2023, 7, 1, 5),)]  # naive local
+        p = str(tmp_path / "ts.avro")
+        write_ocf_file(rows, struct, p)
+        raw = StructType([StructField("ts", LongType(), True)])
+        assert list(read_ocf_file(p, raw)) == [(1688212800000000,)]
+        assert list(read_ocf_file(p, struct)) == rows
+    finally:
+        monkeypatch.undo()
+        time.tzset()

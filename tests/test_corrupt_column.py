@@ -119,6 +119,31 @@ class TestBareDataSource:
         with pytest.raises(Exception, match="columnNameOfCorruptRecord"):
             missing.collect()
 
+    def test_stream_captures_corrupt_records(self, spark, tmp_path):
+        """``xmlhive-stream`` reads through the same reader, so the
+        option fills the sink column there too."""
+        from xml_hive_spark.sources.xml_stream import register_stream
+        from xml_hive_spark.streaming import drain
+
+        register_stream(spark)
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        _write(landing)
+        schema = _schema().add(StructField("_corrupt_record", StringType(), True))
+        stream = (
+            spark.readStream.format("xmlhive-stream")
+            .schema(schema)
+            .option("rowTag", "item")
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt_record")
+            .option("path", str(landing))
+            .load()
+        )
+        rows = drain(stream, "append").collect()
+        assert len(rows) == 5
+        bad = sorted(r._corrupt_record for r in rows if r._corrupt_record is not None)
+        assert len(bad) == 2 and "five" in bad[0] and "unclosed" in bad[1]
+
 
 class TestFusedPathKeepsCorruptCapture:
     def test_flat_assembler_accepts_corrupt_sink(self, spark, tmp_path):

@@ -111,7 +111,7 @@ def _doc(records):
     return b"<root>\n" + b"\n".join(records) + b"\n</root>\n"
 
 
-def _scan_batches(asm, tmp_path, records, batch_rows, predicate=None):
+def _scan_batches(asm, tmp_path, records, batch_rows):
     """fused_split_batches over the records written one per line inside
     a root element; the exact span scan must find exactly these records."""
     data = _doc(records)
@@ -121,8 +121,7 @@ def _scan_batches(asm, tmp_path, records, batch_rows, predicate=None):
     p = tmp_path / "recs.xml"
     p.write_bytes(data)
     return list(asm.fused_split_batches((str(p), 0, len(data), "TEXT", 0),
-                                        "r", batch_rows=batch_rows,
-                                        predicate=predicate))
+                                        "r", batch_rows=batch_rows))
 
 
 def _batch_rows(batches):
@@ -209,30 +208,28 @@ GUARDED += [rec.replace(b"</r>", b"<score>1.5</score></r>") for rec in GUARDED]
 def test_batches_with_no_template_learned(tmp_path, pushed):
     """A split whose records all fail fast_row never learns a template:
     every batch holds exact rows only and takes the per-row branch (the
-    bool column), with and without a row predicate (a float In has no
-    Arrow twin). Rows equal the exact span path."""
+    bool column), with and without a pushed filter (a float In, one
+    Arrow mask per batch in the reader). Rows equal the exact span
+    path."""
     from pyspark.sql.datasource import In
 
     from tests.test_fused_scan import _span_path_rows
-    from xml_hive_spark.sources.pushdown import (
-        compile_conjunction,
-        compile_conjunction_arrow,
-        compile_filter,
-    )
+    from tests.test_pushdown import read_pushed
 
     st = _schema()
     asm = FlatAssembler.try_create(st, "PERMISSIVE")
     assert all(asm.fast_row(rec) is None for rec in GUARDED)
-    keep = None
-    if pushed:
-        flts = [In(("score",), (1.5,))]
-        assert compile_conjunction_arrow(flts, st) is None
-        keep = compile_conjunction([compile_filter(f, st) for f in flts])
-    out = _scan_batches(asm, tmp_path, GUARDED, batch_rows=3, predicate=keep)
     data = _doc(GUARDED)
+    if pushed:
+        p = tmp_path / "recs.xml"
+        p.write_bytes(data)
+        out = read_pushed(st, [In(("score",), (1.5,))],
+                          (str(p), 0, len(data), "TEXT", 0), "r", batch_rows=3)
+    else:
+        out = _scan_batches(asm, tmp_path, GUARDED, batch_rows=3)
     want = _span_path_rows(asm, data, "r", [("", 0, len(data))])
-    if keep is not None:
-        want = [r for r in want if keep(r)]
+    if pushed:
+        want = [r for r in want if r[2] == 1.5]
     assert len(want) == (4 if pushed else 8)
     assert all(b.num_rows for b in out)
     assert _batch_rows(out) == want

@@ -5,7 +5,9 @@ partitions. ``read_xml`` plans its splits on the driver and scans them
 through one ``mapInArrow``, so no Python DataSource plan (and no pushed
 filter) can be reused by a later query of the same frame. The same
 harness, ``xml_datasource.scan``, reads Avro containers, and a lint
-keeps the package off the RDD API."""
+keeps the package off the RDD API. Another lint keeps one read dispatch
+(``XmlHiveReader.read``) and one schema resolver
+(``reader.resolve_schema``) behind every XML entry."""
 
 from __future__ import annotations
 
@@ -374,3 +376,72 @@ def test_no_rdd_api_outside_task_frame_lint():
     }
     assert found == {("sources/xml_datasource.py", "task_frame", "parallelize"),
                      ("sources/xml_datasource.py", "task_frame", "rdd")}
+
+
+_ONE_READER_CALLS = {"try_create", "_read_split", "xsd_to_struct", "infer_xml_schema"}
+
+
+def one_reader_sites(src: str) -> set[tuple[str, str, str]]:
+    """(enclosing class, enclosing function, name) of every call in
+    ``src`` of the flat/nested read dispatch (``FlatAssembler.try_create``,
+    ``_read_split``) or a schema derivation (``xsd_to_struct``,
+    ``infer_xml_schema``); the class is "" outside one."""
+    sites = set()
+
+    def visit(node, cls, fn):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, child.name, fn)
+                continue
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, cls, child.name)
+                continue
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in _ONE_READER_CALLS:
+                    sites.add((cls, fn, name))
+            visit(child, cls, fn)
+
+    visit(ast.parse(src), "", "<module>")
+    return sites
+
+
+def test_one_reader_lint():
+    """Every XML entry reads through ``XmlHiveReader.read``, the one
+    flat/nested dispatch, and resolves a schema through
+    ``reader.resolve_schema``: no other package code calls
+    ``FlatAssembler.try_create``, ``_read_split``, ``xsd_to_struct`` or
+    ``infer_xml_schema``. Red on a seeded copy of a second dispatch and
+    resolver, green on the package."""
+    seeded = (
+        "class XmlStreamSource:\n"
+        "    def _rich_schema(self):\n"
+        "        return xsd_to_struct(self.xsd, self.sep_type)\n"
+        "class XmlStreamReader:\n"
+        "    def read(self, part):\n"
+        "        asm = FlatAssembler.try_create(self._schema, self._mode)\n"
+        "        if asm is None:\n"
+        "            yield from _read_split(part, self._row_tag, self._schema)\n"
+        "def schema(path, tag):\n"
+        "    return infer.infer_xml_schema(path, tag)\n"
+    )
+    assert one_reader_sites(seeded) == {
+        ("XmlStreamSource", "_rich_schema", "xsd_to_struct"),
+        ("XmlStreamReader", "read", "try_create"),
+        ("XmlStreamReader", "read", "_read_split"),
+        ("", "schema", "infer_xml_schema"),
+    }
+
+    pkg = Path(__file__).resolve().parent.parent / "xml_hive_spark"
+    found = {
+        (str(p.relative_to(pkg)), *site)
+        for p in sorted(pkg.rglob("*.py"))
+        for site in one_reader_sites(p.read_text())
+    }
+    assert found == {
+        ("sources/xml_datasource.py", "XmlHiveReader", "read", "try_create"),
+        ("sources/xml_datasource.py", "XmlHiveReader", "read", "_read_split"),
+        ("reader.py", "", "resolve_schema", "xsd_to_struct"),
+        ("reader.py", "", "resolve_schema", "infer_xml_schema"),
+    }

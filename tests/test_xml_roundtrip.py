@@ -109,6 +109,77 @@ class TestXmlStreamSource:
         finally:
             q.stop()
 
+    def _books_stream(self, spark, tmp_path, fixtures_dir, **options):
+        register_stream(spark)
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        shutil.copy(fixtures_dir / "books" / "data.xml", landing / "books.xml")
+        reader = (spark.readStream.format("xmlhive-stream")
+                  .option("xsd", str(fixtures_dir / "books" / "schema.xsd"))
+                  .option("sepTagType", "bookType")
+                  .option("rowTag", "book")
+                  .option("path", str(landing)))
+        for k, v in options.items():
+            reader = reader.option(k, v)
+        return landing, reader.load()
+
+    def test_nested_stream_rows_equal_read_xml(self, spark, tmp_path, fixtures_dir):
+        """The books schema's ``tag`` array makes it nested: the stream
+        reads it through the batch reader's nested path, as Arrow
+        batches, and returns read_xml's rows."""
+        from xml_hive_spark.streaming import drain
+
+        landing, stream = self._books_stream(spark, tmp_path, fixtures_dir)
+        got = drain(stream, "append").orderBy("title").collect()
+        want = read_xml(spark, str(landing), "book",
+                        xsd=fixtures_dir / "books" / "schema.xsd",
+                        sep_tag_type="bookType").orderBy("title").collect()
+        assert [r["tag"] for r in want] == [None, ["spark", "olap"], ["streaming"]]
+        assert got == want
+
+    def test_stream_honours_rich_types(self, spark, tmp_path, fixtures_dir):
+        """``richTypes=true`` types ``publish_date`` as a date on the
+        stream too, as it does for read_xml."""
+        from xml_hive_spark.streaming import drain
+
+        _, stream = self._books_stream(spark, tmp_path, fixtures_dir, richTypes="true")
+        assert stream.schema["publish_date"].dataType.simpleString() == "date"
+        years = {r.publish_date.year for r in drain(stream, "append").collect()}
+        assert years == {2014, 2011, 2019}
+
+    def test_planner_side_needs_no_package(self, spark, tmp_path, fixtures_dir):
+        """The stream's planner process gets no addPyFile path: the source
+        as register_stream pickles it resolves its schema and plans a
+        batch in an interpreter that imports no xml_hive_spark module."""
+        import os
+        import subprocess
+        import sys
+
+        from pyspark import cloudpickle
+
+        from xml_hive_spark.sources.xml_stream import XmlHiveStreamDataSource
+
+        register_stream(spark)
+        landing = tmp_path / "landing"
+        landing.mkdir()
+        shutil.copy(fixtures_dir / "books" / "data.xml", landing / "books.xml")
+        src = XmlHiveStreamDataSource({
+            "xsd": str(fixtures_dir / "books" / "schema.xsd"), "sepTagType": "bookType",
+            "rowTag": "book", "path": str(landing), "richTypes": "true"})
+        script = (
+            "import pickle, sys\n"
+            "src = pickle.loads(sys.stdin.buffer.read())\n"
+            "reader = src.streamReader(src.schema())\n"
+            "parts = reader.partitions(reader.initialOffset(), reader.latestOffset())\n"
+            "assert not [m for m in sys.modules if m.startswith('xml_hive_spark')]\n"
+            "print(len(parts), src.schema()['publish_date'].dataType.simpleString())\n"
+        )
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        out = subprocess.run([sys.executable, "-c", script], input=cloudpickle.dumps(src),
+                             cwd=tmp_path, env=env, capture_output=True)
+        assert out.returncode == 0, out.stderr.decode()[-2000:]
+        assert out.stdout.split() == [b"1", b"date"]
+
     def test_stream_requires_rowtag(self, spark, tmp_path):
         register_stream(spark)
         import pytest

@@ -8,8 +8,9 @@ exports; the reference's own fixtures are flat — TestAvroTranformer.scala).
 
 This module extracts flat records with a handful of C-level regex
 operations per record, accumulates values column-wise, and emits
-``pyarrow.RecordBatch`` directly — which the Spark Python DataSource
-ships to the JVM as-is (no per-value converter, no per-row tuple;
+``pyarrow.RecordBatch`` directly. ``XmlHiveReader.read``
+(sources/xml_datasource.py) applies the pushed-filter mask to each batch
+and hands it to Spark as-is (no per-value converter, no per-row tuple;
 pyspark/sql/worker/plan_data_source_read.py yields RecordBatches
 untouched).
 
@@ -776,8 +777,7 @@ class FlatAssembler:
                 buf.compact(pos)
 
     def fused_split_batches(self, split: tuple, row_tag: str,
-                            batch_rows: int = 32768, predicate=None,
-                            arrow_predicate=None, raw_limit=None):
+                            batch_rows: int = 32768, raw_limit=None):
         """Arrow batches (schema = Spark's Arrow image of the StructType,
         so the DataSource worker passes them through) for one annotated
         split — the one read path of every flat schema, batch and
@@ -788,26 +788,19 @@ class FlatAssembler:
         compute does the utf8-validate/trim/cast per column in C. A batch
         is converted per row (``_run_rows``) instead when the bulk checks
         flag it (entities, information-separator whitespace, cast
-        failures, '<' inside an attribute value), when the schema has a
-        bool/decimal/date field, or when a pushed ``predicate`` has no
-        ``arrow_predicate`` twin (``pushdown.compile_conjunction_arrow``);
-        then the tri-valued row predicate filters the tuples. Otherwise a
-        pushed filter is one vectorized Kleene mask per converted batch.
-        Empty batches are not yielded. Equivalence with the exact span
-        path is property-tested in tests/test_fused_scan.py.
+        failures, '<' inside an attribute value) or when the schema has a
+        bool/decimal/date field. Empty batches are not yielded; pushed
+        filters are applied by the reader to each batch. Equivalence with
+        the exact span path is property-tested in tests/test_fused_scan.py.
 
         32k-row batches measured ~14% faster end-to-end than 8k on the
         1 GiB bench (fewer pa.array calls + fewer worker→JVM frames)."""
-        row_pred = predicate if arrow_predicate is None else None
-        for batch in self._scan_batches(split, row_tag, batch_rows,
-                                        row_pred, raw_limit):
-            if arrow_predicate is not None:
-                batch = batch.filter(arrow_predicate(batch))
+        for batch in self._scan_batches(split, row_tag, batch_rows, raw_limit):
             if batch.num_rows:
                 yield batch
 
     def _scan_batches(self, split: tuple, row_tag: str, batch_rows: int,
-                      predicate, raw_limit):
+                      raw_limit):
         from xml_hive_spark.reader import ST_TEXT, open_xml
 
         path, a, b = split[0], split[1], split[2]
@@ -841,9 +834,7 @@ class FlatAssembler:
                     # before runs of the new one land in the same batch
                     if caps:
                         yield self._flush_columnar(
-                            caps, spans, exacts, n, reread, cur_tmpl,
-                            predicate,
-                        )
+                            caps, spans, exacts, n, reread, cur_tmpl)
                         caps, spans, exacts, n = [], [], [], 0
                     cur_tmpl = item.tmpl
                     continue
@@ -862,13 +853,11 @@ class FlatAssembler:
                         n += 1
                 if n >= batch_rows:
                     yield self._flush_columnar(
-                        caps, spans, exacts, n, reread, cur_tmpl, predicate
-                    )
+                        caps, spans, exacts, n, reread, cur_tmpl)
                     caps, spans, exacts, n = [], [], [], 0
             if n:
                 yield self._flush_columnar(
-                    caps, spans, exacts, n, reread, cur_tmpl, predicate
-                )
+                    caps, spans, exacts, n, reread, cur_tmpl)
 
     def _arrow_schema(self):
         """Arrow image of the StructType, computed once per assembler
@@ -884,16 +873,15 @@ class FlatAssembler:
         return cached
 
     def _flush_columnar(self, caps: list, spans: list, exacts: list,
-                        n: int, reread, tmpl, predicate):
+                        n: int, reread, tmpl):
         """One batch from the pending captures and exact-path rows.
-        ``reread()`` returns the split's handle for span re-reads; a row
-        ``predicate`` forces per-row conversion and filters the tuples."""
+        ``reread()`` returns the split's handle for span re-reads."""
         import numpy as np
         import pyarrow as pa
 
         aschema, atypes = self._arrow_schema()
         try:
-            if not self._columnar_ok or predicate is not None:
+            if not self._columnar_ok:
                 raise _NeedRowPath
             run_cols = self._convert_run_columns(caps, atypes, tmpl)
         except _NeedRowPath:
@@ -908,8 +896,6 @@ class FlatAssembler:
                 rows = [next(run) if v is None else v for v in slots]
             if None in rows:
                 rows = [v for v in rows if v is not None]
-            if predicate is not None:
-                rows = list(filter(predicate, rows))
             return self._tuples_to_batch(rows, aschema, atypes)
 
         if not exacts:

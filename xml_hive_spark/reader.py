@@ -81,6 +81,7 @@ from pyspark.sql.types import (
 )
 
 from xml_hive_spark.session import file_stamp, owned_store
+from xml_hive_spark.xsd import xsd_to_struct
 
 log = logging.getLogger("xml_hive_spark.reader")
 
@@ -1324,6 +1325,32 @@ def _read_split(
 # -------------------------------------------------------------- public API
 
 
+def resolve_schema(path, row_tag: str | None, xsd=None, sep_tag_type=None,
+                   ns: str | None = None, rich_types: bool = False) -> StructType:
+    """The schema of an XML read that declares none, for every entry:
+    type ``sep_tag_type`` of the XSD file/dir ``xsd`` (the reference's
+    ``xml.schema.location`` + ``xml.separator.tag.type`` table
+    properties, AvroFromXmlSerde.scala:15-17), or, given neither, one
+    inferred from a sample of the ``row_tag`` records under ``path`` (the
+    reference cannot read schema-less XML at all). Exactly one of the
+    pair is an error: a typo'd option must not swap the user's XSD for
+    sampled inference."""
+    if bool(xsd) != bool(sep_tag_type):
+        raise ValueError(
+            "xmlhive: xsd= and sepTagType= must be passed together "
+            f"(got {'xsd' if xsd else 'sepTagType'} alone)")
+    if xsd:
+        return xsd_to_struct(xsd, sep_tag_type, ns, rich_types=rich_types)
+    if not (row_tag and path):
+        raise ValueError(
+            "xmlhive: pass .schema(...), options xsd= and sepTagType=, "
+            "or rowTag= and path= for sampled inference")
+    from xml_hive_spark.infer import infer_xml_schema
+
+    log.info("no schema or XSD given; inferring one from a sample")
+    return infer_xml_schema(path, row_tag)
+
+
 def read_xml(
     spark: SparkSession,
     path: str | list[str],
@@ -1340,11 +1367,11 @@ def read_xml(
 ) -> DataFrame:
     """Read XML files into a DataFrame, one row per ``row_tag`` record.
 
-    Schema comes from an explicit ``schema``, or from an XSD file/dir +
-    ``sep_tag_type`` (the reference's ``xml.schema.location`` +
-    ``xml.separator.tag.type`` table properties,
-    AvroTransormer.scala:54-57), mirroring
-    ``spark.read.format("xmlhive")`` options.
+    Schema comes from an explicit ``schema``, else from
+    :func:`resolve_schema`: an XSD file/dir + ``sep_tag_type`` (the
+    reference's ``xml.schema.location`` + ``xml.separator.tag.type``
+    table properties, AvroTransormer.scala:54-57), or, given neither,
+    sampled inference — as for ``spark.read.format("xmlhive")``.
 
     ``corrupt_column`` (with ``mode="PERMISSIVE"``) appends/tags a string
     sink column that carries the raw text of each record that failed to
@@ -1370,18 +1397,7 @@ def read_xml(
     reader behind ``spark.read.format("xmlhive")``.
     """
     if schema is None:
-        if xsd is not None and sep_tag_type is not None:
-            from xml_hive_spark.xsd import xsd_to_struct
-
-            schema = xsd_to_struct(xsd, sep_tag_type, ns, rich_types=rich_types)
-        else:
-            # no XSD: sampled inference (infer.py) — the reference can't
-            # read schema-less XML at all (xml.schema.location required,
-            # AvroTransormer.scala:35,57)
-            from xml_hive_spark.infer import infer_xml_schema
-
-            log.info("read_xml: no schema/XSD given; inferring from a sample")
-            schema = infer_xml_schema(path, row_tag)
+        schema = resolve_schema(path, row_tag, xsd, sep_tag_type, ns, rich_types)
 
     if columns is not None:
         names = schema.fieldNames()

@@ -505,8 +505,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # let the xmlhive DataSource evaluate pushed predicates before
-        # rows cross the Python→JVM boundary (sources/pushdown.py)
+        # let the xmlhive DataSource take pushed predicates: each is one
+        # Arrow mask on the reader's batches, so dropped rows never cross
+        # the Python→JVM boundary (sources/pushdown.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory",

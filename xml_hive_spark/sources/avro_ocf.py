@@ -32,8 +32,9 @@ import io
 import json
 import os
 import struct
+import uuid
 import zlib
-from datetime import date, datetime, timedelta
+from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
 from functools import partial
 
@@ -61,7 +62,7 @@ from xml_hive_spark.sources.xml_datasource import rows_to_batches, scan, ship_pa
 
 _MAGIC = b"Obj\x01"
 _EPOCH_D = date(1970, 1, 1)
-_EPOCH_TS = datetime(1970, 1, 1)
+_EPOCH_TS = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 # ------------------------------------------------------------ schema mapping
@@ -203,9 +204,9 @@ def _raw_encoder(dt):
     if isinstance(dt, TimestampType):
 
         def enc_ts(out, v):
-            # exact integer micros (float .timestamp() loses precision)
-            base = v.replace(tzinfo=None) if v.tzinfo else v
-            td = base - _EPOCH_TS
+            # exact integer micros (float .timestamp() loses precision);
+            # a naive value is local time, as pyspark hands it to Python
+            td = v.astimezone(timezone.utc) - _EPOCH_TS
             _wlong(out, (td.days * 86400 + td.seconds) * 1_000_000 + td.microseconds)
 
         return enc_ts
@@ -321,7 +322,9 @@ def _raw_decoder(dt):
     if isinstance(dt, DateType):
         return lambda r: _EPOCH_D + timedelta(days=r.long())
     if isinstance(dt, TimestampType):
-        return lambda r: _EPOCH_TS + timedelta(microseconds=r.long())
+        # naive local time, as pyspark gives a TimestampType value
+        return lambda r: (_EPOCH_TS + timedelta(microseconds=r.long())
+                          ).astimezone().replace(tzinfo=None)
     if isinstance(dt, DecimalType):
         scale = dt.scale
 
@@ -440,14 +443,16 @@ def read_ocf_file(path: str, struct: StructType):
 # ----------------------------------------------------------- Spark surface
 
 
-def _write_part(path: str, struct: StructType, codec: str, batches):
-    """One write task: its partition's rows into ``part-NNNNN.avro``
-    under ``path``, named by the partition id; yields ``(part, rows)``."""
+def _write_part(path: str, struct: StructType, codec: str, write_id: str, batches):
+    """One write task: its partition's rows into
+    ``part-NNNNN-<write_id>.avro`` under ``path``, named by the partition
+    id and the write; yields ``(part, rows)``."""
     import pyarrow as pa
     from pyspark import TaskContext
     from pyspark.sql.conversion import ArrowTableToRowsConversion
 
-    part = os.path.join(path, f"part-{TaskContext.get().partitionId():05d}.avro")
+    part = os.path.join(
+        path, f"part-{TaskContext.get().partitionId():05d}-{write_id}.avro")
     rows = (row for batch in batches
             for row in ArrowTableToRowsConversion.convert(
                 pa.Table.from_batches([batch]), struct, return_as_tuples=True))
@@ -457,22 +462,32 @@ def _write_part(path: str, struct: StructType, codec: str, batches):
     yield pa.RecordBatch.from_pydict({"part": [part], "rows": [n]})
 
 
+_SAVE_MODES = ("overwrite", "append", "ignore", "error", "errorifexists", "default")
+
+
 def write_avro_ocf(
     df: DataFrame, path: str, mode: str = "overwrite", codec: str = "deflate"
 ) -> None:
-    """Distributed Avro sink: one ``part-NNNNN.avro`` per partition,
-    written by its task in one ``mapInArrow`` (the driver sees only each
-    part's name and row count)."""
+    """Distributed Avro sink: one ``part-NNNNN-<write id>.avro`` per
+    partition, written by its task in one ``mapInArrow`` (the driver sees
+    only each part's name and row count). ``mode`` is one of Spark's save
+    modes; parts of an ``append`` sit beside the ones already there."""
+    mode = mode.lower()
+    if mode not in _SAVE_MODES:
+        raise ValueError(f"write_avro_ocf: unknown save mode {mode!r}; "
+                         f"expected one of {', '.join(_SAVE_MODES)}")
     if os.path.exists(path):
+        if mode == "ignore":
+            return
         if mode == "overwrite":
             import shutil
 
             shutil.rmtree(path)
-        elif mode == "error":
+        elif mode != "append":
             raise FileExistsError(path)
     os.makedirs(path, exist_ok=True)
     ship_package(df.sparkSession)
-    kernel = partial(_write_part, path, df.schema, codec)
+    kernel = partial(_write_part, path, df.schema, codec, uuid.uuid4().hex)
     kernel.__name__ = "avro_ocf_write"
     df.mapInArrow(kernel, "part string, rows long").collect()
 

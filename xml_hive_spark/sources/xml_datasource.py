@@ -8,9 +8,13 @@ split planning (but split-SAFE, unlike the reference —
 AvroFromXmlInputFormat.scala:49 opens every split at byte 0), and
 ``XmlHiveReader.read(partition)`` is the per-task ``RecordReader``
 (AvroFromXmlInputFormat.scala:62-76), yielding Arrow batches instead of
-per-record Writables. :func:`scan` runs read tasks planned on the
-driver through one ``mapInArrow``: ``read_xml`` runs the same ``read``
-there, and ``avro_ocf.read_avro_ocf`` its container decoder.
+per-record Writables, each filtered by the pushed filters' Arrow mask.
+:func:`scan` runs read tasks planned on the driver through one
+``mapInArrow``: ``read_xml`` runs the same ``read`` there, the
+``xmlhive-stream`` source runs it in its read tasks, and
+``avro_ocf.read_avro_ocf`` runs its container decoder on :func:`scan`.
+All three XML entries resolve a missing schema with
+:func:`~xml_hive_spark.reader.resolve_schema`.
 :func:`register` binds the session's small-file packing numbers to the
 source, so a ``paths``/``path`` read needs a registered source.
 
@@ -30,6 +34,7 @@ AvroFromXmlSerde.scala:21-23):
 - ``xsd``              — XSD file/dir (``xml.schema.location``)
 - ``sepTagType``       — row type name (``xml.separator.tag.type``)
 - ``sepTagTypeNs``     — row type namespace (``xml.separator.tag.type.ns``)
+- ``richTypes``        — ``true``: XSD temporals and decimals keep their types
 - ``paths`` / ``path`` — newline-separated files, a dir, or a glob
 - ``partitionBytes``   — target bytes per input partition
 """
@@ -49,8 +54,8 @@ from xml_hive_spark.reader import (
     DEFAULT_PARTITION_BYTES,
     _read_split,
     pack_params,
-    plan_tasks,
     resolve_paths,
+    resolve_schema,
     tag_corrupt_field,
 )
 
@@ -73,6 +78,23 @@ def _opt(options, *names, default=None):
     return default
 
 
+def _path_option(options):
+    """The ``paths``/``path`` option: a list when newline-separated,
+    else the one path, dir or glob as given; None when absent."""
+    raw = _opt(options, "paths") or _opt(options, "path")
+    return raw.split("\n") if raw and "\n" in raw else raw
+
+
+def options_schema(options) -> StructType:
+    """:func:`~xml_hive_spark.reader.resolve_schema` over a source's
+    options."""
+    return resolve_schema(
+        _path_option(options), _opt(options, "rowTag", "rowtag"),
+        _opt(options, "xsd"), _opt(options, "sepTagType", "septagtype"),
+        _opt(options, "sepTagTypeNs", "septagtypens"),
+        str(_opt(options, "richTypes", default="false")).lower() == "true")
+
+
 class XmlHiveDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -82,42 +104,7 @@ class XmlHiveDataSource(DataSource):
         # only consulted when the user didn't pass .schema(...) —
         # the reference's DDL-side schema determination
         # (AvroFromXmlSerde.scala:15-17 → XmlAvroHelper.schema)
-        from xml_hive_spark.xsd import xsd_to_struct
-
-        xsd = _opt(self.options, "xsd")
-        sep_type = _opt(self.options, "sepTagType", "septagtype")
-        if bool(xsd) != bool(sep_type):
-            # exactly one of the pair: a typo'd option must not silently
-            # swap the user's XSD for head-of-file sampled inference
-            raise ValueError(
-                "xmlhive: xsd= and sepTagType= must be passed together "
-                f"(got {'xsd' if xsd else 'sepTagType'} alone)"
-            )
-        if not xsd:
-            # no XSD: sampled inference (infer.py), like JSON/CSV
-            # inferSchema — the reference mandates an XSD here
-            row_tag = _opt(self.options, "rowTag", "rowtag")
-            raw_paths = _opt(self.options, "paths") or _opt(self.options, "path")
-            if row_tag and raw_paths:
-                from xml_hive_spark.infer import infer_xml_schema
-
-                paths = (
-                    raw_paths.split("\n")
-                    if "\n" in raw_paths
-                    else resolve_paths(raw_paths)
-                )
-                return infer_xml_schema(paths, row_tag)
-            raise ValueError(
-                "xmlhive: pass .schema(...), options xsd= and sepTagType=, "
-                "or rowTag= and path= for sampled inference"
-            )
-        return xsd_to_struct(
-            xsd,
-            sep_type,
-            _opt(self.options, "sepTagTypeNs", "septagtypens"),
-            rich_types=str(_opt(self.options, "richTypes", default="false")).lower()
-            == "true",
-        )
+        return options_schema(self.options)
 
     # (spark.sql.files.openCostInBytes, defaultParallelism) of the
     # session :func:`register` bound this class to: partitions() packs
@@ -129,30 +116,24 @@ class XmlHiveDataSource(DataSource):
 
 
 class XmlHiveReader(DataSourceReader):
-    """The per-task record reader of both entries: ``read(partition)``
-    is what ``spark.read.format("xmlhive")`` runs in its read tasks and
-    what :func:`scan` runs for ``read_xml``. ``partitions()`` is the
-    DataSource's planner over ``paths``/``path``, packing small files by
-    ``pack`` (:func:`~xml_hive_spark.reader.pack_params`)."""
+    """The one record reader of every XML entry: ``read(partition)`` is
+    what ``spark.read.format("xmlhive")`` and ``xmlhive-stream`` run in
+    their read tasks and what :func:`scan` runs for ``read_xml``.
+    ``partitions()`` is the DataSource's planner over ``paths``/``path``,
+    packing small files by ``pack``
+    (:func:`~xml_hive_spark.reader.pack_params`)."""
 
     def __init__(self, schema: StructType, options, pack=None):
         self._schema = schema
-        self._pushed = []  # compiled tri-valued predicates (pushdown.py)
-        self._pushed_raw = []  # the accepted Filter objects themselves
+        self._pushed = []  # the accepted Filter objects (pushdown.py)
         self._pack = pack
-        self._row_tag = _opt(options, "rowTag", "rowtag")
-        if not self._row_tag:
+        self._paths = _path_option(options)  # resolved by partitions()
+        self.row_tag = _opt(options, "rowTag", "rowtag")
+        if not self.row_tag:
             raise ValueError("xmlhive: rowTag option is required")
         raw_splits = _opt(options, "splits")
-        self._tasks = None
-        self._paths = None
-        if raw_splits:
-            self._tasks = [(tuple(s),) for s in json.loads(raw_splits)]
-        elif raw_paths := _opt(options, "paths") or _opt(options, "path"):
-            self._paths = (
-                raw_paths.split("\n") if "\n" in raw_paths else resolve_paths(raw_paths)
-            )
-        self._partition_bytes = int(
+        self._tasks = [(tuple(s),) for s in json.loads(raw_splits)] if raw_splits else None
+        self.partition_bytes = int(
             _opt(options, "partitionBytes", "partitionbytes", default=DEFAULT_PARTITION_BYTES)
         )
         self._mode = str(_opt(options, "mode", default="FAILFAST")).upper()
@@ -177,69 +158,73 @@ class XmlHiveReader(DataSourceReader):
         return self._schema
 
     def pushFilters(self, filters):
-        """Spark 4.1 filter pushdown: accept predicates we can evaluate
-        with exact SQL semantics on top-level scalar fields (the
+        """Spark 4.1 filter pushdown: accept the predicates
+        :func:`~xml_hive_spark.sources.pushdown.compile_filter_arrow`
+        compiles — exact SQL semantics on top-level scalar fields (the
         reference filters only after full deserialization in Hive —
         SURVEY.md §4.1); everything else goes back to Spark. Accepted
-        filters run executor-side BEFORE rows enter an Arrow batch, so
-        filtered records never cross the Python→JVM boundary."""
-        from xml_hive_spark.sources.pushdown import compile_filter
+        filters run executor-side as one Arrow mask on each batch the
+        scan builds, so filtered records never cross the Python→JVM
+        boundary."""
+        from xml_hive_spark.sources.pushdown import compile_filter_arrow
 
         unsupported = []
         for f in filters:
-            pred = compile_filter(f, self._schema)
-            if pred is None:
+            if compile_filter_arrow(f, self._schema) is None:
                 unsupported.append(f)
             else:
-                self._pushed.append(pred)
-                self._pushed_raw.append(f)
+                self._pushed.append(f)
         return unsupported
 
     def partitions(self):
         tasks = self._tasks
         if tasks is None:
-            if self._paths is None:
+            if not self._paths:
                 raise ValueError("xmlhive: no input path given")
             if self._pack is None:
                 raise ValueError(
                     "xmlhive: the source is not bound to a session; load it "
                     "after xml_hive_spark.sources.xml_datasource.register(spark)")
-            tasks = plan_tasks(self._paths, self._row_tag,
-                               self._partition_bytes, self._pack)
+            # imported here, not at module level: the plan cache reaches
+            # xml_hive_spark.session, which the stream's planner process
+            # cannot import (register_stream pickles this class by value)
+            from xml_hive_spark.reader import plan_tasks
+
+            paths = (self._paths if isinstance(self._paths, list)
+                     else resolve_paths(self._paths))
+            tasks = plan_tasks(paths, self.row_tag, self.partition_bytes, self._pack)
         # Spark requires at least one partition (all-empty inputs would
         # otherwise surface as read(None) on the executor)
         return [XmlInputPartition(t) for t in tasks] or [XmlInputPartition(())]
 
-    def read(self, partition: XmlInputPartition):
-        """Arrow batches of the partition's splits, read in order."""
+    def read(self, partition: XmlInputPartition, raw_limit: int | None = None):
+        """Arrow batches of the partition's splits, read in order, each
+        filtered by the pushed filters. ``raw_limit`` caps the compressed
+        bytes read (the stream's admitted size of a gzip member)."""
         splits = [s for s in partition.splits if s[2] > s[1]]
         if not splits:
             return
-        # flat scalar schemas take the columnar regex fast path; nested
-        # schemas assemble tuples, converted to Arrow here
         from xml_hive_spark.flat import FlatAssembler
-        from xml_hive_spark.sources.pushdown import (
-            compile_conjunction,
-            compile_conjunction_arrow,
-        )
+        from xml_hive_spark.sources.pushdown import compile_conjunction_arrow
 
-        keep = compile_conjunction(self._pushed)
+        # flat scalar schemas take the columnar regex fast path (fused
+        # scan: template matched against the split buffer in place);
+        # nested schemas assemble tuples, converted to Arrow here
         asm = FlatAssembler.try_create(self._schema, self._mode)
         if asm is None:
-            rows = (row for s in splits
-                    for row in _read_split(s, self._row_tag, self._schema, self._mode))
-            yield from rows_to_batches(
-                rows if keep is None else filter(keep, rows), self._schema)
-            return
-        # fused scan: template matched against the split buffer in
-        # place — no per-record slice/fullmatch on uniform runs. Pushed
-        # filters ride the columnar kernel as one vectorized Kleene mask
-        # per batch when every filter arrow-compiles.
-        arrow_keep = (compile_conjunction_arrow(self._pushed_raw, self._schema)
-                      if keep is not None else None)
-        for split in splits:
-            yield from asm.fused_split_batches(
-                split, self._row_tag, predicate=keep, arrow_predicate=arrow_keep)
+            batches = rows_to_batches(
+                (row for s in splits for row in _read_split(
+                    s, self.row_tag, self._schema, self._mode, raw_limit)),
+                self._schema)
+        else:
+            batches = (batch for s in splits for batch in asm.fused_split_batches(
+                s, self.row_tag, raw_limit=raw_limit))
+        keep = compile_conjunction_arrow(self._pushed, self._schema)
+        for batch in batches:
+            if keep is not None:
+                batch = batch.filter(keep(batch))
+            if batch.num_rows:
+                yield batch
 
 
 # rows per Arrow batch of the tuple path: Spark's default

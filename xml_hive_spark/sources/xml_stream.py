@@ -45,17 +45,19 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from xml_hive_spark.flat import FlatAssembler, strip_metadata
+from xml_hive_spark.flat import strip_metadata
 from xml_hive_spark.reader import (
-    DEFAULT_PARTITION_BYTES,
     GZIP_SPLIT_END,
-    _read_split,
     _reject_utf16,
     byte_ranges,
     chain_splits,
 )
-from xml_hive_spark.sources.xml_datasource import _opt
-from xml_hive_spark.xsd import xsd_to_struct
+from xml_hive_spark.sources.xml_datasource import (
+    XmlHiveReader,
+    XmlInputPartition,
+    _opt,
+    options_schema,
+)
 
 
 @dataclass
@@ -76,15 +78,15 @@ class XmlHiveStreamDataSource(DataSource):
     def name(cls) -> str:
         return "xmlhive-stream"
 
-    def _rich_schema(self) -> StructType | None:
-        xsd = _opt(self.options, "xsd")
-        sep_type = _opt(self.options, "sepTagType", "septagtype")
-        if not xsd or not sep_type:
-            return None
-        return xsd_to_struct(xsd, sep_type, _opt(self.options, "sepTagTypeNs"))
+    def _xsd_schema(self) -> StructType | None:
+        # the batch source's resolver, without sampled inference: a
+        # landing directory may hold no file to sample yet
+        if _opt(self.options, "xsd") or _opt(self.options, "sepTagType"):
+            return options_schema(self.options)
+        return None
 
     def schema(self) -> StructType:
-        rich = self._rich_schema()
+        rich = self._xsd_schema()
         if rich is None:
             raise ValueError(
                 "xmlhive-stream: pass .schema(...) or options xsd= and sepTagType="
@@ -97,23 +99,18 @@ class XmlHiveStreamDataSource(DataSource):
         # prefer the XSD-derived schema (carries attribute/element kind
         # metadata) for assembly; fall back to the user schema + the
         # assembler's attribute-name heuristics
-        return XmlStreamReader(self._rich_schema() or schema, self.options)
+        return XmlStreamReader(self._xsd_schema() or schema, self.options)
 
 
 class XmlStreamReader(DataSourceStreamReader):
+    """Offset planning over a landing directory; each partition is read
+    by the batch source's :class:`XmlHiveReader`."""
+
     def __init__(self, schema: StructType, options):
-        self._schema = schema
         self._dir = _opt(options, "path", "paths")
         if not self._dir:
             raise ValueError("xmlhive-stream: path option is required")
-        self._row_tag = _opt(options, "rowTag", "rowtag")
-        if not self._row_tag:
-            raise ValueError("xmlhive-stream: rowTag option is required")
-        self._partition_bytes = int(
-            _opt(options, "partitionBytes", "partitionbytes",
-                 default=DEFAULT_PARTITION_BYTES)
-        )
-        self._mode = str(_opt(options, "mode", default="FAILFAST")).upper()
+        self._reader = XmlHiveReader(schema, options)
         # rate limiting: admit at most this many NEW files into each
         # offset advance (0 = unbounded). The batch-size control every
         # production file stream needs — a backlog of landed files
@@ -196,7 +193,7 @@ class XmlStreamReader(DataSourceStreamReader):
         for p, size in target.items():
             if p in seen or not os.path.exists(p):
                 continue
-            ranges = byte_ranges(p, size, self._partition_bytes)
+            ranges = byte_ranges(p, size, self._reader.partition_bytes)
             if ranges == [(0, GZIP_SPLIT_END)]:
                 parts.append(
                     XmlStreamPartition(p, 0, GZIP_SPLIT_END, "TEXT", 0,
@@ -206,21 +203,16 @@ class XmlStreamReader(DataSourceStreamReader):
                 # phase A+B boundary reconciliation (driver-side: new files
                 # only, one extra byte scan for multi-split files)
                 bounds = [0] + [b for _, b in ranges]
-                ann = chain_splits(lambda p=p: open(p, "rb"), bounds, self._row_tag, p)
+                ann = chain_splits(lambda p=p: open(p, "rb"), bounds,
+                                   self._reader.row_tag, p)
                 parts += [XmlStreamPartition(p, a, b, st, d) for a, b, st, d in ann]
         return parts
 
     def read(self, partition: XmlStreamPartition):
         split = (partition.path, partition.start, partition.end,
                  partition.state, partition.depth)
-        limit = partition.raw_limit or None
-        asm = FlatAssembler.try_create(self._schema, self._mode)
-        if asm is not None:
-            yield from asm.fused_split_batches(split, self._row_tag,
-                                               raw_limit=limit)
-        else:
-            yield from _read_split(split, self._row_tag, self._schema,
-                                   self._mode, raw_limit=limit)
+        return self._reader.read(XmlInputPartition((split,)),
+                                 raw_limit=partition.raw_limit or None)
 
     def commit(self, end: dict) -> None:
         self._absorb(end)  # keep the admission floor current (restart case)
@@ -230,8 +222,9 @@ def register_stream(spark) -> None:
     """Register the streaming source. Unlike batch data-source workers,
     the streaming source runner process does NOT receive addPyFile paths
     (observed: ModuleNotFoundError in python_streaming_source_runner), so
-    the whole module chain the stream touches is pickled BY VALUE via
-    cloudpickle — the runner needs no importable xml_hive_spark."""
+    the whole module chain its planner side touches (schema resolution,
+    offsets, split planning) is pickled BY VALUE via cloudpickle — the
+    runner needs no importable xml_hive_spark."""
     import xml_hive_spark.flat as _flat_mod
     import xml_hive_spark.reader as _reader_mod
     import xml_hive_spark.sources.xml_datasource as _ds_mod
